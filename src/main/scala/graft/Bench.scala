@@ -128,9 +128,6 @@ object Bench {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B flag for the Pregel 2-rounds-per-plan unrolling experiment
-    sys.env.get("SPARK_GRAFT_PREGEL_UNROLL")
-      .foreach(v => spark.conf.set("spark.graft.pregel.unroll", v))
     // unpersisting a superseded localCheckpoint is deliberate (CheckpointGC,
     // the between-run sweep): silence the per-RDD lineage warning
     try org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -6,10 +6,9 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
-/** Hadoop-FileSystem coordination shared by the incremental sinks
-  * (RollupSink, TopKSink, GraphSink, RankSink, CusumSink,
-  * ActiveUsersSink), the kv streaming sink, and the kv DSv2 connector's
-  * manifest IO.
+/** Hadoop-FileSystem coordination shared by the maintained views'
+  * snapshot protocol ([[VersionedState]]), the kv streaming sink's
+  * high-water mark, and the kv DSv2 connector's manifest IO.
   *
   * All snapshot/manifest coordination resolves the warehouse path's OWN
   * FileSystem — HDFS, S3A, or local — exactly like the parquet data the
@@ -19,13 +18,13 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * Pattern follows KVDeltaStore/KVStoreManager, which already speak
   * hadoop.fs.
   *
-  * Single-writer discipline (one streaming query owns a sink directory —
-  * Structured Streaming's own guarantee) is assumed, as before: the
-  * atomic piece is `_SUCCESS`-gated snapshot visibility plus
-  * FileContext's overwrite-rename for small marker files (atomic on
-  * HDFS and posix; best-effort copy-replace on stores without rename).
+  * The atomic piece here is FileContext's overwrite-rename for small
+  * marker files (atomic on HDFS and posix; best-effort copy-replace on
+  * stores without rename).
   */
 object GraftFs {
+
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def fs(dir: String, conf: Configuration): FileSystem =
     new Path(dir).getFileSystem(conf)
@@ -38,34 +37,6 @@ object GraftFs {
     val path = new Path(p)
     path.getFileSystem(conf).exists(path)
   }
-
-  /** Is `dirPath` a `_SUCCESS`-complete snapshot directory? */
-  def complete(conf: Configuration, dirPath: String): Boolean =
-    exists(conf, child(dirPath, "_SUCCESS"))
-
-  /** Complete (`_SUCCESS`-marked) versioned children `prefix<id>` of
-    * `dir` with id <= upTo, version-ascending, as (id, absolute path). */
-  def versioned(conf: Configuration, dir: String, prefix: String,
-                upTo: Long): Seq[(Long, String)] = {
-    val d = new Path(dir)
-    val f = d.getFileSystem(conf)
-    if (!f.exists(d)) return Nil
-    f.listStatus(d).iterator
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .flatMap(p => p.getName.stripPrefix(prefix).toLongOption.map(v => (v, p)))
-      .filter { case (v, p) => v <= upTo && f.exists(new Path(p, "_SUCCESS")) }
-      .toSeq.sortBy(_._1)
-      .map { case (v, p) => (v, p.toString) }
-  }
-
-  /** Latest complete snapshot `prefix<id>` with id strictly below
-    * `beforeId` (callers pass their own batchId to fold onto lineage,
-    * Long.MaxValue to read). */
-  def latest(conf: Configuration, dir: String, prefix: String,
-             beforeId: Long): Option[String] =
-    versioned(conf, dir, prefix, beforeId - 1).lastOption.map(_._2)
 
   /** Read a small text file. If `p` is absent but the non-atomic
     * replace's `.<name>.old` backup survives (a crash landed between
@@ -86,7 +57,7 @@ object GraftFs {
       else {
         val bak = new Path(path.getParent, s".${path.getName}.old")
         if (f.exists(bak)) {
-          System.err.println(
+          logger.warn(
             s"GraftFs: $path missing but backup $bak exists " +
               "(crash mid-replace); serving the backup's content")
           Some(bak)
@@ -126,7 +97,7 @@ object GraftFs {
       // the window leaves `.<name>.old` on disk instead of nothing,
       // which for the kv manifest means every committed segment stays
       // reachable by restoring the backup.
-      System.err.println(
+      logger.warn(
         s"GraftFs: atomic rename unavailable for $path " +
           s"(${e.getMessage}); using backup-then-rename replace")
       val bak = new Path(parent, s".${path.getName}.old")
@@ -136,7 +107,7 @@ object GraftFs {
         throw new IOException(s"moving $path aside to $bak failed", e)
       if (!f.rename(tmp, path)) {
         if (hadOld && !f.rename(bak, path)) // restore; best effort
-          System.err.println(s"GraftFs: restore of $bak to $path failed " +
+          logger.warn(s"GraftFs: restore of $bak to $path failed " +
             "after replace failure; readText serves the backup")
         throw new IOException(s"replacing $path via $tmp failed", e)
       }

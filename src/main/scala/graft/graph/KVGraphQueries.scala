@@ -502,12 +502,10 @@ object KVGraphQueries {
     // nations ARE this graph's hub keys (every customer/supplier of a
     // nation rides ONE mirror-family store key), so this reverse hop is
     // the declared supernode path: run it through the salted hop join
-    // (Traversal honors spark.graft.hop.saltBuckets; see saltedHop) —
-    // identical rows by SaltedJoin's contract, hub cells spread over the
-    // salt buckets instead of one reducer per nation. Conf restored after.
-    val prevSalt = s.conf.getOption("spark.graft.hop.saltBuckets")
-    s.conf.set("spark.graft.hop.saltBuckets", "4")
-    try Traversal.V(g)
+    // (G.saltBuckets; see saltedHop) — identical rows by SaltedJoin's
+    // contract, hub cells spread over the salt buckets instead of one
+    // reducer per nation.
+    Traversal.V(g.copy(saltBuckets = 4))
       .hasLabel("nation")
       .has("name", Traversal.P.within(RevNations: _*))
       .value("name", "n_name").as("n_vid")
@@ -517,10 +515,6 @@ object KVGraphQueries {
       .select("n_vid", "n_name", "s_vid")
       .df
       .localCheckpoint(true)
-    finally prevSalt match {
-      case Some(v) => s.conf.set("spark.graft.hop.saltBuckets", v)
-      case None => s.conf.unset("spark.graft.hop.saltBuckets")
-    }
   }
 
   val gKvDslRevSql: String =

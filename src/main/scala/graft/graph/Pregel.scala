@@ -58,17 +58,6 @@ private[graph] object CheckpointGC {
 }
 
 object Pregel {
-  /** How many rounds fuse into one materialized plan/job. 1 (default) =
-    * one checkpoint + one job per round; 2 halves the job count by
-    * composing two rounds lazily before the single checkpoint — the
-    * round-1 join subtree appears twice in the fused plan (its shuffle
-    * exchanges are reused, the post-shuffle join recomputes), so this
-    * trades compute for scheduling and only pays off when per-round job
-    * latency dominates, i.e. tiny frontiers on a busy driver. Runtime
-    * flag, session-scoped: `spark.conf.set("spark.graft.pregel.unroll", "2")`. */
-  private def unrollOf(df: DataFrame): Int =
-    math.max(1, df.sparkSession.conf.get("spark.graft.pregel.unroll", "1").toInt)
-
   def minPropagate(state0: DataFrame, frontier0: DataFrame => DataFrame,
                    edges0: DataFrame, msg: Column,
                    maxIter: Int): DataFrame = {
@@ -79,56 +68,39 @@ object Pregel {
     // the (small) frontier side — without it the FULL edge list shuffles
     // once per round, which is the dominant cost at any scale
     val edges = edges0.repartition(F.col("src")).localCheckpoint()
-    val unroll = unrollOf(state0)
     var state = state0.localCheckpoint()
     // the checkpoint superseded once the current round's is materialized
     var prevCkpt = state
     var frontier = frontier0(state)
     val improved =
       (F.col("x").isNull && F.col("cand").isNotNull) || F.col("cand") < F.col("x")
-    // one lazily-composed round: (state, frontier) → (vid, x, cand).
-    // outer join: a vid that appears only as an edge destination (not in
-    // state0) still materializes — it enters the state at its first
-    // message's value and joins the frontier, matching the
-    // union+groupBy formulation this loop replaced.
-    def round(st: DataFrame, fr: DataFrame): DataFrame = {
-      val cand = edges
-        .join(fr, edges("src") === fr("vid"))
-        .select(F.col("dst").as("vid"), msg.as("x"))
-        .groupBy("vid").agg(F.min("x").as("cand"))
-      st.join(cand, Seq("vid"), "outer")
-        .select(F.col("vid"), F.col("x"), F.col("cand"))
-    }
-    def stateOf(j: DataFrame): DataFrame =
-      j.select(F.col("vid"), F.least(F.col("x"), F.col("cand")).as("x"))
-    def frontierOf(j: DataFrame): DataFrame =
-      j.filter(improved).select(F.col("vid"), F.col("cand").as("x"))
     var done = false
     var i = 0
     while (!done && i < maxIter) {
+      val cand = edges
+        .join(frontier, edges("src") === frontier("vid"))
+        .select(F.col("dst").as("vid"), msg.as("x"))
+        .groupBy("vid").agg(F.min("x").as("cand"))
+      // outer join: a vid that appears only as an edge destination (not in
+      // state0) still materializes — it enters the state at its first
+      // message's value and joins the frontier, matching the
+      // union+groupBy formulation this loop replaced.
       // LAZY localCheckpoint + count probe = ONE job per materialization:
       // the count computes every partition (unlike isEmpty, which can stop
       // at the first hit and leave the checkpoint cache partial), so the
       // same job that answers convergence also materializes the cache and
       // truncates lineage. The eager form ran a second, checkpoint-only job.
-      var j = round(state, frontier)
-      var steps = 1
-      while (steps < unroll && i + steps < maxIter) {
-        // fuse the next round on top of the previous one's lazy projections
-        j = round(stateOf(j), frontierOf(j))
-        steps += 1
-      }
-      val joined = j.localCheckpoint(false)
-      state = stateOf(joined)
-      frontier = frontierOf(joined)
-      // checking only the LAST fused round is sound: an earlier fused
-      // round reaching the fixpoint makes every later one a no-op
+      val joined = state.join(cand, Seq("vid"), "outer")
+        .select(F.col("vid"), F.col("x"), F.col("cand"))
+        .localCheckpoint(false)
+      state = joined.select(F.col("vid"), F.least(F.col("x"), F.col("cand")).as("x"))
+      frontier = joined.filter(improved).select(F.col("vid"), F.col("cand").as("x"))
       done = joined.filter(improved).count() == 0L
       // this round's state/frontier read joined's blocks only — the
       // previous round's checkpoint has no remaining consumer
       CheckpointGC.unpersist(prevCkpt)
       prevCkpt = joined
-      i += steps
+      i += 1
     }
     state
   }

@@ -102,12 +102,17 @@ object PropertyGraph {
     * on the scan's own store key and the connector prunes segments for
     * `in()` exactly as it does for `out()`. None on frame graphs and
     * single-direction stores (reverse hops then scan the primary
-    * family, unpruned but correct). */
+    * family, unpruned but correct).
+    *
+    * `saltBuckets`: b > 0 runs every kv-keyed traversal hop over this
+    * graph as the supernode-safe salted join (see Traversal's hop); 0
+    * keeps the plain key-partitioned join. */
   final case class G(vertices: DataFrame, edges: DataFrame,
                      edgeIndex: Option[EdgeIndex] = None,
                      revEdges: Option[DataFrame] = None,
                      vertexIndex: Option[VertexIndex] = None,
-                     vertexProps: Option[VertexPropSource] = None) {
+                     vertexProps: Option[VertexPropSource] = None,
+                     saltBuckets: Int = 0) {
     /** Symmetrized distinct edge list for undirected algorithms. */
     def undirected: DataFrame = {
       val e = edges.select("src", "dst")

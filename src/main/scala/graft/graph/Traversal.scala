@@ -473,17 +473,15 @@ final class Traversal private (
     // SUPERNODE-SAFE variant (KVGraphQueries.saltedHop's contract, wired
     // into the DSL): all of a hub vertex's cells share ONE store key, so
     // a key-partitioned hop puts the whole celebrity adjacency in one
-    // task. With spark.graft.hop.saltBuckets = b > 0, the adjacency side
+    // task. With the graph's saltBuckets = b > 0, the adjacency side
     // fans out over (key, salt = xxhash64(dst) % b) — each cell has a
     // unique dst, so a hub's cells spread EVENLY over b reducers — and
     // the (small) frontier replicates b times. Identical rows to the
     // plain join (SaltedJoin's contract; the salt is deterministic, never
     // rand()). Off by default; a caller whose frontier hits hub-degree
-    // keys turns it on around the hop (g_kv_dsl_rev's nation frontier).
-    def saltBuckets: Int =
-      g.edges.sparkSession.conf.get("spark.graft.hop.saltBuckets", "0").toInt
+    // keys traverses a salted graph (g_kv_dsl_rev's nation frontier).
     def kvJoin(left: DataFrame, keyName: String): DataFrame = {
-      val b = saltBuckets
+      val b = g.saltBuckets
       if (b > 0) {
         val salted = e0.select(F.col(Traversal.KvKeyCol), F.col("__from"),
             F.col("__to").as(nxt))

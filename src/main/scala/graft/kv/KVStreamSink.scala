@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BinaryType, BooleanType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.{GraftFs, Version, VersionedState}
 
 /** Streaming mutation ingestion for the KV store — the reference's
   * `mutateMany` (ClickhouseStoreManager.java:49) fed from an unbounded
@@ -19,17 +19,9 @@ import graft.GraftFs
   * streaming path provably agrees with the batch path cell for cell
   * (the spec asserts it).
   *
-  * Exactly-once across failures rides on two properties:
-  *   - idempotence per batchId: a replayed batch finds its snapshot
-  *     already complete (parquet `_SUCCESS`) and skips; an interrupted
-  *     write left no `_SUCCESS`, is invisible to readers/lineage, and is
-  *     overwritten by the replay;
-  *   - lineage: batch N folds onto the latest COMPLETE snapshot with
-  *     version < N, so a reordered/duplicated delivery cannot skip state.
-  * Readers (`read`) always see the latest complete snapshot — a crash
-  * mid-write never corrupts the readable view. At cluster scale the
-  * snapshot dirs live on the shared store and old versions are retention
-  * candidates, exactly like MergeTree part generations.
+  * Exactly-once, crash safety and retention of the snapshots are
+  * [[graft.VersionedState]]'s: superseded snapshots are dropped like
+  * MergeTree part generations.
   */
 object KVStreamSink {
   val MutationSchema: StructType = StructType(Seq(
@@ -38,41 +30,26 @@ object KVStreamSink {
 
   /** Start the ingestion query (micro-batch foreachBatch sink). */
   def start(mutations: DataFrame, dir: String): StreamingQuery =
-    mutations.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(mutations)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch into snapshot_v{batchId}. Idempotent. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"snapshot_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val store = latestSnapshot(conf, dir, batchId) match {
-      case Some(p) => s.read.parquet(p)
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(MutationSchema.fields.take(3)))
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "snapshot").fold(batch, batchId) { prev =>
+      val adds = batch.filter(!F.col("is_delete")).select("k", "c", "v")
+      val dels = batch.filter(F.col("is_delete")).select("k", "c")
+      KVStore.mutate(stored(batch.sparkSession, prev), adds, dels)
     }
-    val adds = batch.filter(!F.col("is_delete")).select("k", "c", "v")
-    val dels = batch.filter(F.col("is_delete")).select("k", "c")
-    KVStore.mutate(store, adds, dels)
-      .write.mode("overwrite").parquet(target)
-  }
-
-  /** The latest complete snapshot (strictly before `beforeId` when the
-    * caller is batch `beforeId` computing its own input). */
-  private def latestSnapshot(conf: Configuration, dir: String,
-                             beforeId: Long): Option[String] =
-    GraftFs.latest(conf, dir, "snapshot_v", beforeId)
 
   /** The current readable store: latest complete snapshot. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    latestSnapshot(spark.sparkContext.hadoopConfiguration, dir,
-        Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    stored(spark, VersionedState(dir, "snapshot").latest(spark))
+
+  /** A snapshot's cells, or an empty store before the first one. */
+  private def stored(s: SparkSession, snapshot: Option[Version]): DataFrame =
+    snapshot match {
+      case Some(p) => s.read.parquet(p.path)
+      case None => s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(MutationSchema.fields.take(3)))
     }
 

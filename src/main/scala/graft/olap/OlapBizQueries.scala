@@ -87,7 +87,7 @@ object OlapBizQueries {
     * revenue state is MAINTAINED incrementally (ParetoSink) instead of
     * recomputed — orders arrive as three micro-batches (one replayed to
     * prove exactly-once), each folding mergeable per-customer partials
-    * onto versioned `_SUCCESS`-gated snapshots; the read runs the shared
+    * onto graft.VersionedState snapshots; the read runs the shared
     * two-level concentrate over the snapshot. Gated under q_pareto's own
     * batch oracle: maintained state must equal the batch groupBy. */
   def qParetoInc(s: SparkSession, dir: String): DataFrame = synchronized {

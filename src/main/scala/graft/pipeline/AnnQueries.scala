@@ -34,6 +34,8 @@ import graft.Tables
 object AnnQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Ordered-fold dot product of two float vectors, in double — a custom
     * codegen'd Catalyst expression (graft.functions.FloatVecDot); the
     * fold order matches the oracle's list_reduce exactly. */
@@ -320,7 +322,7 @@ object AnnQueries {
       // at the 30× scale point, where bits=12 wants 319 tables), so a
       // capped run never reads as "recall target held"
       if (want > MaxTables)
-        println(s"[ann-lsh] geometry capped: bits=$bits wants $want tables, " +
+        logger.warn(s"[ann-lsh] geometry capped: bits=$bits wants $want tables, " +
           s"MaxTables=$MaxTables gives union recall " +
           f"${1.0 - math.pow(1.0 - perTable, MaxTables)}%.3f " +
           f"vs target $PairRecallTarget%.2f — the IVF tier is the next step")
@@ -1101,7 +1103,7 @@ object AnnQueries {
       // the sampled s_knn_graph_lsh gate instead). Say so out loud
       // rather than letting a larger-SF driver run read the guaranteed
       // hash mismatch as a regression (r11 advice #3).
-      println(s"[s_knn_graph] n=$n > ExactPairTierMaxN=$ExactPairTierMaxN: " +
+      logger.warn(s"[s_knn_graph] n=$n > ExactPairTierMaxN=$ExactPairTierMaxN: " +
         "tier=lsh, exact oracle inapplicable (see s_knn_graph_lsh gate)")
       sKnnGraphLsh(s, dir, Some(n))
     }

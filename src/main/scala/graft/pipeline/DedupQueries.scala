@@ -18,6 +18,8 @@ import graft.Tables
 object DedupQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Distinct 3-word shingles per doc. Spark 0-based i in [0, size-3]
     * ≡ oracle's 1-based i in [1, len-2]. */
   def wordShingles(docs: DataFrame): DataFrame =
@@ -586,7 +588,7 @@ object DedupQueries {
       // past the envelope the registered n² oracle is inapplicable by
       // design (semantics pinned by the d_embed_dup_lsh sampled gate) —
       // announce the tier swap instead of presenting as a hash mismatch
-      println(s"[d_embed_dup] n=$n > ExactPairTierMaxN=" +
+      logger.warn(s"[d_embed_dup] n=$n > ExactPairTierMaxN=" +
         s"${AnnQueries.ExactPairTierMaxN}: tier=lsh, exact oracle " +
         "inapplicable (see d_embed_dup_lsh gate)")
       dEmbedDupLsh(s, dir, Some(n))

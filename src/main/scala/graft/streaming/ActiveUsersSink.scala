@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.VersionedState
 import graft.operators.BitmapDistinct
 
 /** Incrementally-maintained DAU/WAU/MAU — q_active_users' documented
@@ -14,44 +14,33 @@ import graft.operators.BitmapDistinct
   * snapshot per day, and the read derives every rolling window by
   * OR-merging 7/28 daily bitmaps — no raw history is ever re-read, and
   * a day's state size is the compressed user set, independent of event
-  * volume. Exactly-once follows the RollupSink scheme: versioned
-  * `_SUCCESS`-gated snapshots, replayed batchIds skipped, each batch
-  * folding onto the latest complete snapshot before it.
+  * volume. Exactly-once and retention are [[graft.VersionedState]]'s.
   */
 object ActiveUsersSink {
 
   /** Start maintenance: events must carry (user_id, ts). */
   def start(events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(events)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch into days_v{batchId}. Idempotent. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"days_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val partial = batch
-      .select(F.expr("unix_micros(ts) div 86400000000").as("day"),
-        F.col("user_id"))
-      .groupBy("day")
-      .agg(BitmapDistinct.buildAgg(F.col("user_id")).as("bm"))
-    val merged = GraftFs.latest(conf, dir, "days_v", batchId) match {
-      case Some(p) => s.read.parquet(p).unionByName(partial)
-        .groupBy("day").agg(BitmapDistinct.orAgg(F.col("bm")).as("bm"))
-      case None => partial
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "days").fold(batch, batchId) { prev =>
+      val partial = batch
+        .select(F.expr("unix_micros(ts) div 86400000000").as("day"),
+          F.col("user_id"))
+        .groupBy("day")
+        .agg(BitmapDistinct.buildAgg(F.col("user_id")).as("bm"))
+      prev.fold(partial)(p => batch.sparkSession.read.parquet(p.path)
+        .unionByName(partial)
+        .groupBy("day").agg(BitmapDistinct.orAgg(F.col("bm")).as("bm")))
     }
-    merged.write.mode("overwrite").parquet(target)
-  }
 
   /** The maintained rolling counts: per day present in the state,
     * DAU / WAU (7-day) / MAU (28-day) — each window an OR-merge of the
     * daily bitmaps, bitmap algebra only. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val days = GraftFs.latest(conf, dir, "days_v", Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
+    val days = VersionedState(dir, "days").latest(spark) match {
+      case Some(p) => spark.read.parquet(p.path)
       case None => return spark.emptyDataFrame
     }
     val present = days.select(F.col("day").as("d")).distinct()
@@ -75,9 +64,8 @@ object ActiveUsersSink {
     * joins/fan-outs are |weeks|² — calendar-bounded, never user- or
     * event-bounded; per-week state is one compressed user set. */
   def cohortRead(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val days = GraftFs.latest(conf, dir, "days_v", Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
+    val days = VersionedState(dir, "days").latest(spark) match {
+      case Some(p) => spark.read.parquet(p.path)
       case None => return spark.emptyDataFrame
     }
     val wk = days.withColumn("wk", F.expr("day div 7"))

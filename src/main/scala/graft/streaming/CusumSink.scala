@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.VersionedState
 
 /** Incrementally-maintained CUSUM change-detection monitor — the streaming
   * form of q_cusum (OlapSeriesQueries.cusumOverDaily): an unbounded event
@@ -24,45 +24,31 @@ import graft.GraftFs
   * plan-identical to the batch q_cusum over full history — the spec
   * proves equality and replay idempotence.
   *
-  * Exactly-once follows the KVStreamSink scheme (KVStreamSink.scala:24):
-  * versioned snapshots, `_SUCCESS` completeness gating, replayed batchIds
-  * skipped, lineage always folding onto the latest complete snapshot with
-  * version < batchId.
+  * Exactly-once and retention are [[graft.VersionedState]]'s.
   */
 object CusumSink {
 
   /** Start the maintenance query: events must carry (ts, event_type, value). */
   def start(events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(events)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch of raw events into daily_v{batchId}. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"daily_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val partial = batch
-      .select(F.col("event_type"),
-        F.expr("unix_micros(ts) div 86400000000").as("d"),
-        F.expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("vc"))
-      .groupBy("event_type", "d").agg(F.sum("vc").as("x"))
-    val merged = GraftFs.latest(conf, dir, "daily_v", batchId) match {
-      case Some(p) => s.read.parquet(p).unionByName(partial)
-        .groupBy("event_type", "d").agg(F.sum("x").as("x"))
-      case None => partial
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "daily").fold(batch, batchId) { prev =>
+      val partial = batch
+        .select(F.col("event_type"),
+          F.expr("unix_micros(ts) div 86400000000").as("d"),
+          F.expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("vc"))
+        .groupBy("event_type", "d").agg(F.sum("vc").as("x"))
+      prev.fold(partial)(p => batch.sparkSession.read.parquet(p.path)
+        .unionByName(partial)
+        .groupBy("event_type", "d").agg(F.sum("x").as("x")))
     }
-    merged.write.mode("overwrite").parquet(target)
-  }
 
   /** The maintained daily series: latest complete snapshot. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    GraftFs.latest(spark.sparkContext.hadoopConfiguration, dir, "daily_v",
-        Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    VersionedState(dir, "daily").latest(spark)
+      .fold(spark.emptyDataFrame)(p => spark.read.parquet(p.path))
 
   /** The monitor read: CUSUM per event_type over the maintained series —
     * the exact fold of the batch q_cusum, on state the stream keeps

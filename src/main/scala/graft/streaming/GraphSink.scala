@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
-
+import graft.VersionedState
 import graft.graph.GraphAlgs
 
 /** Incremental connected components over streaming edge ingestion — the
@@ -21,44 +20,34 @@ import graft.graph.GraphAlgs
   * (vid ↔ comp) are component-connectivity-preserving, so the union
   * graph's components provably equal the components of the full edge
   * history (the spec asserts exactly that, against batch CC over all
-  * edges). Snapshot/versioning/idempotence follow the KVStreamSink
-  * `_SUCCESS` scheme.
+  * edges). Exactly-once and retention are [[graft.VersionedState]]'s.
   */
 object GraphSink {
 
   /** Start the maintenance query: `edges` rows carry (src, dst). */
   def start(edges: DataFrame, dir: String): StreamingQuery =
-    edges.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(edges)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch of new edges into cc_v{batchId}. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"cc_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val newEdges = batch.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    val carried = GraftFs.latest(conf, dir, "cc_v", batchId) match {
-      case Some(p) =>
-        val prev = s.read.parquet(p)
-        prev.select(F.col("vid").as("src"), F.col("comp").as("dst"))
-      case None => s.emptyDataFrame
-        .select(F.lit(0L).as("src"), F.lit(0L).as("dst")).limit(0)
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "cc").fold(batch, batchId) { prev =>
+      val s = batch.sparkSession
+      val newEdges = batch.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+      val carried = prev match {
+        case Some(p) => s.read.parquet(p.path)
+          .select(F.col("vid").as("src"), F.col("comp").as("dst"))
+        case None => s.emptyDataFrame
+          .select(F.lit(0L).as("src"), F.lit(0L).as("dst")).limit(0)
+      }
+      val union = carried.unionByName(newEdges)
+      val undirected = union.unionByName(
+        union.select(F.col("dst").as("src"), F.col("src").as("dst"))).distinct()
+      val vertices = undirected.select(F.col("src").as("vid")).distinct()
+      GraphAlgs.connectedComponents(vertices, undirected)
     }
-    val union = carried.unionByName(newEdges)
-    val undirected = union.unionByName(
-      union.select(F.col("dst").as("src"), F.col("src").as("dst"))).distinct()
-    val vertices = undirected.select(F.col("src").as("vid")).distinct()
-    GraphAlgs.connectedComponents(vertices, undirected)
-      .write.mode("overwrite").parquet(target)
-  }
 
   /** The current readable labeling: latest complete snapshot. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    GraftFs.latest(spark.sparkContext.hadoopConfiguration, dir, "cc_v",
-        Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    VersionedState(dir, "cc").latest(spark)
+      .fold(spark.emptyDataFrame)(p => spark.read.parquet(p.path))
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.{Version, VersionedState}
 
 /** STREAMING session journeys — q_journey live: sessionize each user's
   * event stream by the 30-minute inactivity gap and emit the session's
@@ -106,10 +106,8 @@ object JourneyStream {
   def start(events: DataFrame, dir: String, topkDir: String,
             capacity: Int = 512,
             delayMs: Long = DefaultDelayMs): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, dir, batchId, topkDir, capacity, delayMs))
-      .start()
+    VersionedState.start(events)(
+      applyBatch(_, dir, _, topkDir, capacity, delayMs))
 
   /** One 'a>b>c' path row per session of a [[SessionFold.sessionized]]
     * frame. */
@@ -130,10 +128,10 @@ object JourneyStream {
     * paths to TopKSink. Idempotent (both folds skip replayed ids).
     *
     * State per snapshot: the still-open event buffer plus the
-    * high-watermark (persisted in the `_SUCCESS` marker text — the
-    * buffer's max µs can shrink when sessions close, so the watermark
-    * needs its own carry). A session closes once
-    * `wm > end + GapUs` with wm = max(µs seen) − delay: any admissible
+    * high-watermark (the version marker's text — the buffer's max µs can
+    * shrink when sessions close, so the watermark needs its own carry).
+    * A session closes once `wm > end + GapUs` with
+    * wm = max(µs seen) − delay: any admissible
     * future event has t ≥ wm > end + gap, so nothing can extend or
     * merge into it — the same rule as the flatMapGroupsWithState
     * variant, so both paths share the oracle by construction. Arrivals
@@ -144,19 +142,21 @@ object JourneyStream {
     * underflow to ~+2⁶³ and seal the stream forever). */
   def applyBatch(batch: DataFrame, dir: String, batchId: Long,
                  topkDir: String, capacity: Int = 512,
-                 delayMs: Long = DefaultDelayMs): Unit = {
+                 delayMs: Long = DefaultDelayMs): Unit =
+    VersionedState(dir, "journey").foldTables(batch, batchId)(
+      fold(batch, batchId, topkDir, capacity, delayMs))
+
+  private def fold(batch: DataFrame, batchId: Long, topkDir: String,
+                   capacity: Int, delayMs: Long)(
+      prev: Option[Version], target: Version): String = {
     val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"journey_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
     val arrivals = batch.select(F.col("user_id").cast("long"),
       F.unix_micros(F.col("ts")).as("us"), F.col("event_id").cast("long"),
       F.col("event_type"))
-    val (prevBuf, prevWm) = GraftFs.latest(conf, dir, "journey_v", batchId) match {
+    val (prevBuf, prevWm) = prev match {
       case Some(p) => (
-        s.read.schema(bufSchema).parquet(GraftFs.child(p, "buf")),
-        GraftFs.readText(conf, GraftFs.child(p, "_SUCCESS"))
-          .flatMap(_.trim.toLongOption).getOrElse(Long.MinValue))
+        s.read.schema(bufSchema).parquet(p.table("buf")),
+        p.marker(s).trim.toLongOption.getOrElse(Long.MinValue))
       case None => (
         s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           bufSchema), Long.MinValue)
@@ -168,14 +168,13 @@ object JourneyStream {
     val open = sess.filter(F.col("end_us") + GapUs >= wm)
     // the top-k fold and the buffer flush are independent plans over the
     // checkpointed sessions — overlap them (guide §2.6); the marker
-    // below still gates on both
+    // still gates on both, and carries the watermark
     graft.Par.jobs(
       () => TopKSink.applyBatch(pathsOf(closed), topkDir, batchId, capacity,
         "path"),
       () => open.select("user_id", "us", "event_id", "event_type")
-        .write.mode("overwrite").parquet(GraftFs.child(target, "buf")))
-    // marker AFTER both folds; carries the watermark
-    GraftFs.writeTextAtomic(conf, GraftFs.child(target, "_SUCCESS"), wm.toString)
+        .write.mode("overwrite").parquet(target.table("buf")))
+    wm.toString
   }
 
   /** The maintained top journeys in q_journey's output shape: TopKSink's
@@ -187,13 +186,11 @@ object JourneyStream {
     * (journey alphabets are ≤ |types|+|types|²+|types|³). */
   def readTop(spark: SparkSession, dir: String, topkDir: String,
               k: Int = 20): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val closed = TopKSink.read(spark, topkDir)
       .select(F.col("term").as("path"), F.col("w").as("n_sess"))
-    val tail = GraftFs.latest(conf, dir, "journey_v", Long.MaxValue) match {
+    val tail = VersionedState(dir, "journey").latest(spark) match {
       case Some(p) =>
-        val buf = spark.read.schema(bufSchema)
-          .parquet(GraftFs.child(p, "buf"))
+        val buf = spark.read.schema(bufSchema).parquet(p.table("buf"))
         pathsOf(SessionFold.sessionized(buf))
           .groupBy("path").agg(F.count(F.lit(1)).as("n_sess"))
       case None => closed.limit(0)

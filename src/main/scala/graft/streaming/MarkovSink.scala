@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.{Version, VersionedState}
 
 /** Incrementally-maintained event-type TRANSITION MATRIX — q_markov
   * live: an unbounded event stream keeps the per-(event_type,
@@ -41,11 +41,8 @@ import graft.GraftFs
   * batch q_markov answer over everything received, while the durable
   * pair counts only ever contain seal-finalized history.
   *
-  * Exactly-once follows the RollupSink scheme: versioned snapshots with
-  * an EXPLICIT root `_SUCCESS` written (via GraftFs, so it deploys on
-  * any Hadoop FileSystem) only after all three state tables landed;
-  * replayed batchIds skip; lineage folds onto the latest complete
-  * snapshot.
+  * Exactly-once and retention are [[graft.VersionedState]]'s: a
+  * version's marker lands only after all three state tables.
   */
 object MarkovSink {
 
@@ -63,10 +60,7 @@ object MarkovSink {
     * event_type). */
   def start(events: DataFrame, dir: String,
             delayMs: Long = DefaultDelayMs): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, dir, batchId, delayMs))
-      .start()
+    VersionedState.start(events)(applyBatch(_, dir, _, delayMs))
 
   private def empty(s: SparkSession, schema: StructType): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -85,23 +79,23 @@ object MarkovSink {
 
   /** Fold one micro-batch into markov_v{batchId}. Idempotent. */
   def applyBatch(batch: DataFrame, dir: String, batchId: Long,
-                 delayMs: Long = DefaultDelayMs): Unit = {
+                 delayMs: Long = DefaultDelayMs): Unit =
+    VersionedState(dir, "markov").foldTables(batch, batchId)(fold(batch, delayMs))
+
+  private def fold(batch: DataFrame, delayMs: Long)(
+      prev: Option[Version], target: Version): String = {
     val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"markov_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
     val arrivals = batch.select(F.col("user_id").cast("long"),
       F.unix_micros(F.col("ts")).as("tu"), F.col("event_id").cast("long"),
       F.col("event_type"))
-    val (prevPairs, prevLast, prevBuf) =
-      GraftFs.latest(conf, dir, "markov_v", batchId) match {
-        case Some(p) => (
-          s.read.schema(pairSchema).parquet(GraftFs.child(p, "pairs")),
-          s.read.schema(evSchema).parquet(GraftFs.child(p, "last")),
-          s.read.schema(evSchema).parquet(GraftFs.child(p, "buf")))
-        case None =>
-          (empty(s, pairSchema), empty(s, evSchema), empty(s, evSchema))
-      }
+    val (prevPairs, prevLast, prevBuf) = prev match {
+      case Some(p) => (
+        s.read.schema(pairSchema).parquet(p.table("pairs")),
+        s.read.schema(evSchema).parquet(p.table("last")),
+        s.read.schema(evSchema).parquet(p.table("buf")))
+      case None =>
+        (empty(s, pairSchema), empty(s, evSchema), empty(s, evSchema))
+    }
     // beyond-watermark late: at or behind the user's sealed frontier —
     // dropping (standard watermark semantics) beats folding it BEFORE
     // the carry row, which would both lose its boundary pair and
@@ -138,14 +132,12 @@ object MarkovSink {
         F.col("m.event_type").as("event_type"))
     // the three state tables are independent plans over the checkpointed
     // pool — write them concurrently (guide §2.6); the completeness
-    // marker below still gates on ALL three having landed
+    // marker still gates on ALL three having landed
     graft.Par.jobs(
-      () => pairs.write.mode("overwrite").parquet(GraftFs.child(target, "pairs")),
-      () => last.write.mode("overwrite").parquet(GraftFs.child(target, "last")),
-      () => buf.write.mode("overwrite").parquet(GraftFs.child(target, "buf")))
-    // completeness marker AFTER all three tables: a crash in between
-    // leaves an incomplete version invisible to lineage and readers
-    GraftFs.writeTextAtomic(conf, GraftFs.child(target, "_SUCCESS"), "")
+      () => pairs.write.mode("overwrite").parquet(target.table("pairs")),
+      () => last.write.mode("overwrite").parquet(target.table("last")),
+      () => buf.write.mode("overwrite").parquet(target.table("buf")))
+    ""
   }
 
   /** The maintained matrix, row-normalized exactly like q_markov. The
@@ -153,13 +145,11 @@ object MarkovSink {
     * counts never include it, but the served answer does, so reads are
     * exact over everything received, not everything sealed. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pairs = GraftFs.latest(conf, dir, "markov_v", Long.MaxValue) match {
+    val pairs = VersionedState(dir, "markov").latest(spark) match {
       case Some(p) =>
-        val durable = spark.read.schema(pairSchema)
-          .parquet(GraftFs.child(p, "pairs"))
-        val last = spark.read.schema(evSchema).parquet(GraftFs.child(p, "last"))
-        val buf = spark.read.schema(evSchema).parquet(GraftFs.child(p, "buf"))
+        val durable = spark.read.schema(pairSchema).parquet(p.table("pairs"))
+        val last = spark.read.schema(evSchema).parquet(p.table("last"))
+        val buf = spark.read.schema(evSchema).parquet(p.table("buf"))
         val tail = foldPairs(buf.withColumn("is_new", F.lit(true))
           .unionByName(last.withColumn("is_new", F.lit(false))))
         durable.unionByName(tail)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.VersionedState
 
 /** Incrementally-maintained per-customer revenue partials — the state
   * behind a LIVE revenue-concentration (Pareto / ABC) dashboard: an
@@ -15,9 +15,8 @@ import graft.GraftFs
   * Same maintenance contract as RollupSink (the AggregatingMergeTree
   * analogue): the folded state is the MERGEABLE partial (one exact BIGINT
   * sum per customer — O(|customers|), independent of stream length);
-  * exactly-once via versioned snapshots, `_SUCCESS` completeness gating,
-  * replayed batchIds skipped, lineage always folding onto the latest
-  * complete snapshot with version < batchId. The concentration read stays
+  * exactly-once and retention are [[graft.VersionedState]]'s. The
+  * concentration read stays
   * the scale-safe two-level prefix sum — maintaining the state changes
   * WHEN revenue is folded, never the plan shape of the read.
   */
@@ -25,36 +24,25 @@ object ParetoSink {
 
   /** Start the maintenance query: orders must carry (o_custkey, o_totalprice). */
   def start(orders: DataFrame, dir: String): StreamingQuery =
-    orders.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(orders)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch of raw orders into pareto_v{batchId}. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"pareto_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val partial = batch
-      .select(F.col("o_custkey"),
-        F.expr("cast(cast(o_totalprice as decimal(18,2)) * 100 as bigint)").as("vc"))
-      .groupBy("o_custkey")
-      .agg(F.sum("vc").as("rc"))
-    val merged = GraftFs.latest(conf, dir, "pareto_v", batchId) match {
-      case Some(p) => s.read.parquet(p).unionByName(partial)
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "pareto").fold(batch, batchId) { prev =>
+      val partial = batch
+        .select(F.col("o_custkey"),
+          F.expr("cast(cast(o_totalprice as decimal(18,2)) * 100 as bigint)").as("vc"))
         .groupBy("o_custkey")
-        .agg(F.sum("rc").as("rc"))
-      case None => partial
+        .agg(F.sum("vc").as("rc"))
+      prev.fold(partial)(p => batch.sparkSession.read.parquet(p.path)
+        .unionByName(partial)
+        .groupBy("o_custkey")
+        .agg(F.sum("rc").as("rc")))
     }
-    merged.write.mode("overwrite").parquet(target)
-  }
 
   /** The current readable per-customer revenue frame: latest complete
     * snapshot, (o_custkey, rc). */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    GraftFs.latest(spark.sparkContext.hadoopConfiguration, dir, "pareto_v",
-        Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    VersionedState(dir, "pareto").latest(spark)
+      .fold(spark.emptyDataFrame)(p => spark.read.parquet(p.path))
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.conf.Configuration
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.VersionedState
 import graft.graph.GraphAlgs
 
 /** Incrementally-maintained PageRank over streaming edge ingestion — the
@@ -21,9 +19,9 @@ import graft.graph.GraphAlgs
   * RefreshIters·|E| with the edge side partitioned once per batch; at
   * 100 TB the edge accumulation is a bucketed table appended per batch
   * and the rank join exchanges only the rank side (see
-  * GraphAlgs.pagerankFrom). Snapshots/idempotence follow the
-  * KVStreamSink `_SUCCESS` scheme: a replayed batch that already has a
-  * complete snapshot is a no-op.
+  * GraphAlgs.pagerankFrom). Exactly-once and retention of the `pr_v`
+  * ranks are [[graft.VersionedState]]'s. The `edges_v` deltas are a log
+  * read whole, not snapshots, so retention never touches them.
   */
 object RankSink {
 
@@ -37,48 +35,36 @@ object RankSink {
 
   /** Start the maintenance query: `edges` rows carry (src, dst). */
   def start(edges: DataFrame, dir: String): StreamingQuery =
-    edges.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(edges)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch of new edges into pr_v{batchId}. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"pr_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    // land the delta first (idempotent: per-batch directory)
-    val edgeDir = GraftFs.child(dir, s"edges_v$batchId")
-    if (!GraftFs.complete(conf, edgeDir))
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "pr").fold(batch, batchId) { prevRanks =>
+      val s = batch.sparkSession
+      // land the delta first (a replay rewrites the same rows)
+      val log = VersionedState(dir, "edges")
       batch.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .write.mode("overwrite").parquet(edgeDir)
-    val edges = s.read.parquet(
-      GraftFs.versioned(conf, dir, "edges_v", batchId).map(_._2): _*)
-    val vertices = edges.select(F.col("src").as("vid"))
-      .unionByName(edges.select(F.col("dst").as("vid"))).distinct()
-    val n = vertices.count()
-    val init = 1000000000000L / n
-    // previous fixed point where known; uniform mass for new vertices
-    val (pr0, iters) = latest(conf, dir, batchId) match {
-      case Some(p) =>
-        val prev = s.read.parquet(p).select(F.col("vid"), F.col("pr").as("prev"))
-        (vertices.join(prev, Seq("vid"), "left")
-          .select(F.col("vid"), F.coalesce(F.col("prev"), F.lit(init)).as("pr")),
-          RefreshIters)
-      case None => (vertices.select(F.col("vid"), F.lit(init).as("pr")), ColdIters)
+        .write.mode("overwrite").parquet(log.path(batchId))
+      val edges = s.read.parquet(
+        log.complete(s.sparkContext.hadoopConfiguration, batchId).map(_.path): _*)
+      val vertices = edges.select(F.col("src").as("vid"))
+        .unionByName(edges.select(F.col("dst").as("vid"))).distinct()
+      val n = vertices.count()
+      val init = 1000000000000L / n
+      // previous fixed point where known; uniform mass for new vertices
+      val (pr0, iters) = prevRanks match {
+        case Some(p) =>
+          val prev = s.read.parquet(p.path).select(F.col("vid"), F.col("pr").as("prev"))
+          (vertices.join(prev, Seq("vid"), "left")
+            .select(F.col("vid"), F.coalesce(F.col("prev"), F.lit(init)).as("pr")),
+            RefreshIters)
+        case None => (vertices.select(F.col("vid"), F.lit(init).as("pr")), ColdIters)
+      }
+      GraphAlgs.pagerankFrom(vertices, pr0, edges.select("src", "dst"), iters)
     }
-    GraphAlgs.pagerankFrom(vertices, pr0, edges.select("src", "dst"), iters)
-      .write.mode("overwrite").parquet(target)
-  }
 
   /** The current readable ranking: latest complete snapshot. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    latest(spark.sparkContext.hadoopConfiguration, dir, Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
-
-  private def latest(conf: Configuration, dir: String,
-                     before: Long): Option[String] =
-    GraftFs.latest(conf, dir, "pr_v", before)
+    VersionedState(dir, "pr").latest(spark)
+      .fold(spark.emptyDataFrame)(p => spark.read.parquet(p.path))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.VersionedState
 
 /** Incrementally-maintained materialized aggregate — the ClickHouse
   * `MATERIALIZED VIEW ... AggregatingMergeTree` analogue: an unbounded
@@ -16,46 +16,32 @@ import graft.GraftFs
   * groupBy of the batch plus a groupBy-merge against the previous
   * snapshot: the rollup's size is O(|keys|), independent of stream
   * length, and the merge is associative exactly like an
-  * AggregateFunction state column. Exactly-once follows the KVStreamSink
-  * scheme (KVStreamSink.scala:24): versioned snapshots, `_SUCCESS`
-  * completeness gating, replayed batchIds skipped, lineage always folding
-  * onto the latest complete snapshot with version < batchId. The spec
-  * proves stream-maintained state ≡ the batch groupBy over all events,
-  * and replay-idempotence.
+  * AggregateFunction state column. Exactly-once and retention are
+  * [[graft.VersionedState]]'s. The spec proves stream-maintained state ≡
+  * the batch groupBy over all events, and replay-idempotence.
   */
 object RollupSink {
 
   /** Start the maintenance query: events must carry (event_type, value). */
   def start(events: DataFrame, dir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, dir, batchId))
-      .start()
+    VersionedState.start(events)(applyBatch(_, dir, _))
 
   /** Fold one micro-batch of raw events into rollup_v{batchId}. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"rollup_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val partial = batch
-      .select(F.col("event_type"),
-        F.expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("vc"))
-      .groupBy("event_type")
-      .agg(F.count(F.lit(1)).as("n"), F.sum("vc").as("sum_c"))
-    val merged = GraftFs.latest(conf, dir, "rollup_v", batchId) match {
-      case Some(p) => s.read.parquet(p).unionByName(partial)
+  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VersionedState(dir, "rollup").fold(batch, batchId) { prev =>
+      val partial = batch
+        .select(F.col("event_type"),
+          F.expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("vc"))
         .groupBy("event_type")
-        .agg(F.sum("n").as("n"), F.sum("sum_c").as("sum_c"))
-      case None => partial
+        .agg(F.count(F.lit(1)).as("n"), F.sum("vc").as("sum_c"))
+      prev.fold(partial)(p => batch.sparkSession.read.parquet(p.path)
+        .unionByName(partial)
+        .groupBy("event_type")
+        .agg(F.sum("n").as("n"), F.sum("sum_c").as("sum_c")))
     }
-    merged.write.mode("overwrite").parquet(target)
-  }
 
   /** The current readable rollup: latest complete snapshot. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    GraftFs.latest(spark.sparkContext.hadoopConfiguration, dir, "rollup_v",
-        Long.MaxValue) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    VersionedState(dir, "rollup").latest(spark)
+      .fold(spark.emptyDataFrame)(p => spark.read.parquet(p.path))
 }

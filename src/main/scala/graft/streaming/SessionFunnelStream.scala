@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.GraftFs
+import graft.{Version, VersionedState}
 
 /** STREAMING session funnel — q_session_funnel live: sessionize each
   * user's click/view/purchase stream by a 30-minute inactivity gap and
@@ -96,13 +96,14 @@ object SessionFunnelStream {
 
   // ── foreachBatch fold (q_session_funnel_inc) ─────────────────────────
   //
-  // The DataFrame sibling of [[levels]], maintained RollupSink-style:
-  // snapshot = the durable per-level session histogram + the still-open
-  // event buffer + the `_SUCCESS`-carried watermark (JourneyStream's
-  // scheme exactly — the buffer's max µs can shrink when sessions close,
-  // and an empty pool must keep wm rather than underflow it). Works in
-  // MICROSECONDS like the batch q_session_funnel (the streaming variant
-  // above keeps ms for its own spec lineage).
+  // The DataFrame sibling of [[levels]], maintained through
+  // graft.VersionedState: snapshot = the durable per-level session
+  // histogram + the still-open event buffer + the marker-carried
+  // watermark (JourneyStream's scheme exactly — the buffer's max µs can
+  // shrink when sessions close, and an empty pool must keep wm rather
+  // than underflow it). Works in MICROSECONDS like the batch
+  // q_session_funnel (the streaming variant above keeps ms for its own
+  // spec lineage).
 
   val GapUs: Long = SessionFold.GapUs
   val DefaultDelayMs: Long = SessionFold.DefaultDelayMs
@@ -132,11 +133,12 @@ object SessionFunnelStream {
     * behind the previous watermark drop (they may belong to an
     * already-counted session); an empty pool keeps wm = prevWm. */
   def applyBatch(batch: DataFrame, dir: String, batchId: Long,
-                 delayMs: Long = DefaultDelayMs): Unit = {
+                 delayMs: Long = DefaultDelayMs): Unit =
+    VersionedState(dir, "funnel").foldTables(batch, batchId)(fold(batch, delayMs))
+
+  private def fold(batch: DataFrame, delayMs: Long)(
+      prev: Option[Version], target: Version): String = {
     val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"funnel_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
     val arrivals = batch
       .filter(F.col("event_type").isin("click", "view", "purchase"))
       .select(F.col("user_id").cast("long"),
@@ -146,15 +148,13 @@ object SessionFunnelStream {
           .otherwise("p").as("st"))
     def empty(schema: StructType) = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val (prevCnt, prevBuf, prevWm) =
-      GraftFs.latest(conf, dir, "funnel_v", batchId) match {
-        case Some(p) => (
-          s.read.schema(cntSchema).parquet(GraftFs.child(p, "counts")),
-          s.read.schema(bufSchema).parquet(GraftFs.child(p, "buf")),
-          GraftFs.readText(conf, GraftFs.child(p, "_SUCCESS"))
-            .flatMap(_.trim.toLongOption).getOrElse(Long.MinValue))
-        case None => (empty(cntSchema), empty(bufSchema), Long.MinValue)
-      }
+    val (prevCnt, prevBuf, prevWm) = prev match {
+      case Some(p) => (
+        s.read.schema(cntSchema).parquet(p.table("counts")),
+        s.read.schema(bufSchema).parquet(p.table("buf")),
+        p.marker(s).trim.toLongOption.getOrElse(Long.MinValue))
+      case None => (empty(cntSchema), empty(bufSchema), Long.MinValue)
+    }
     val (pool, wm) =
       SessionFold.poolAndWatermark(arrivals, prevBuf, prevWm, delayMs)
     val sess = SessionFold.sessionized(pool).localCheckpoint()
@@ -166,33 +166,29 @@ object SessionFunnelStream {
     // output file, not shuffle.partitions near-empty ones — the fold's
     // snapshot I/O is task-count-bound, not byte-bound (r13 verdict #5)
     // the two state tables are independent plans over the checkpointed
-    // sessions — write them concurrently (guide §2.6); the marker below
-    // still gates on both having landed
+    // sessions — write them concurrently (guide §2.6); the marker still
+    // gates on both having landed, and carries the watermark
     graft.Par.jobs(
       () => counts.coalesce(1)
-        .write.mode("overwrite").parquet(GraftFs.child(target, "counts")),
+        .write.mode("overwrite").parquet(target.table("counts")),
       () => open.select("user_id", "us", "event_id", "st")
-        .write.mode("overwrite").parquet(GraftFs.child(target, "buf")))
-    GraftFs.writeTextAtomic(conf, GraftFs.child(target, "_SUCCESS"), wm.toString)
+        .write.mode("overwrite").parquet(target.table("buf")))
+    wm.toString
   }
 
   /** The maintained funnel histogram in q_session_funnel's output shape:
     * durable counts + an on-the-fly fold of the still-open buffer
     * (MarkovSink.read's residual-tail rule), so the served answer equals
     * the batch query over everything received. */
-  def readLevels(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    GraftFs.latest(conf, dir, "funnel_v", Long.MaxValue) match {
+  def readLevels(spark: SparkSession, dir: String): DataFrame =
+    VersionedState(dir, "funnel").latest(spark) match {
       case Some(p) =>
-        val durable = spark.read.schema(cntSchema)
-          .parquet(GraftFs.child(p, "counts"))
-        val buf = spark.read.schema(bufSchema)
-          .parquet(GraftFs.child(p, "buf"))
+        val durable = spark.read.schema(cntSchema).parquet(p.table("counts"))
+        val buf = spark.read.schema(bufSchema).parquet(p.table("buf"))
         durable.unionByName(levelCounts(SessionFold.sessionized(buf)))
           .groupBy("level").agg(F.sum("n_sessions").as("n_sessions"))
       case None => // keep the (level, n_sessions) schema even pre-snapshot
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cntSchema)
     }
-  }
 }

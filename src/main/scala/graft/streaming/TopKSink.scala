@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.GraftFs
+import graft.VersionedState
 
 /** Incrementally-maintained GLOBAL heavy hitters — the stream-lifetime
   * topK (the windowed Misra-Gries aggregate in EventStream covers
@@ -23,8 +23,7 @@ import graft.GraftFs
   * both regimes. Snapshot size is O(capacity) forever; the batch work is
   * one map-side-combined aggregate.
   *
-  * Exactly-once follows the KVStreamSink scheme: versioned snapshots,
-  * `_SUCCESS` completeness gating, replayed batchIds skipped.
+  * Exactly-once and retention are [[graft.VersionedState]]'s.
   */
 object TopKSink {
 
@@ -36,36 +35,27 @@ object TopKSink {
     * column (default `user_id` — JourneyStream composes with "path"). */
   def start(events: DataFrame, dir: String, capacity: Int = 64,
             termCol: String = "user_id"): StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, dir, batchId, capacity, termCol))
-      .start()
+    VersionedState.start(events)(applyBatch(_, dir, _, capacity, termCol))
 
   /** Fold one micro-batch of raw events into topk_v{batchId}. */
   def applyBatch(batch: DataFrame, dir: String, batchId: Long,
-                 capacity: Int, termCol: String = "user_id"): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = GraftFs.child(dir, s"topk_v$batchId")
-    if (GraftFs.complete(conf, target)) return // replayed batch
-    val incoming = batch
-      .select(F.col(termCol).cast("string").as("term"), F.lit(1L).as("w"))
-    val prev = GraftFs.latest(conf, dir, "topk_v", batchId) match {
-      case Some(p) => s.read.schema(snapSchema).parquet(p).select("term", "w")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(snapSchema.fields.filter(_.name != "rnk")))
+                 capacity: Int, termCol: String = "user_id"): Unit =
+    VersionedState(dir, "topk").fold(batch, batchId) { prevVersion =>
+      val s = batch.sparkSession
+      val incoming = batch
+        .select(F.col(termCol).cast("string").as("term"), F.lit(1L).as("w"))
+      val prev = prevVersion match {
+        case Some(p) => s.read.schema(snapSchema).parquet(p.path).select("term", "w")
+        case None => s.createDataFrame(
+          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(snapSchema.fields.filter(_.name != "rnk")))
+      }
+      graft.operators.FreqItems
+        .globalWeighted(incoming.unionByName(prev), F.col("term"), F.col("w"), capacity)
     }
-    graft.operators.FreqItems
-      .globalWeighted(incoming.unionByName(prev), F.col("term"), F.col("w"), capacity)
-      .write.mode("overwrite").parquet(target)
-  }
 
   /** The current heavy-hitter list: (rnk, term, w) by weight DESC. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    GraftFs.latest(spark.sparkContext.hadoopConfiguration, dir, "topk_v",
-        Long.MaxValue) match {
-      case Some(p) => spark.read.schema(snapSchema).parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    VersionedState(dir, "topk").latest(spark)
+      .fold(spark.emptyDataFrame)(p => spark.read.schema(snapSchema).parquet(p.path))
 }

@@ -33,17 +33,15 @@ class GraftFsSpec extends SparkSpec {
     GraftFs.writeTextAtomic(conf, GraftFs.child(dir, "hwm"), "42") // replace
     assert(GraftFs.readText(conf, GraftFs.child(dir, "hwm")) === Some("42"))
     // versioned listing honors _SUCCESS gating and ordering
+    val state = VersionedState(dir, "snap")
     for (v <- Seq(0L, 2L, 1L)) {
-      GraftFs.mkdirs(conf, GraftFs.child(dir, s"snap_v$v"))
+      GraftFs.mkdirs(conf, state.path(v))
       if (v != 1L)
-        GraftFs.writeTextAtomic(conf,
-          GraftFs.child(GraftFs.child(dir, s"snap_v$v"), "_SUCCESS"), "")
+        GraftFs.writeTextAtomic(conf, GraftFs.child(state.path(v), "_SUCCESS"), "")
     }
-    assert(GraftFs.versioned(conf, dir, "snap_v", Long.MaxValue).map(_._1)
-      === Seq(0L, 2L))
-    assert(GraftFs.latest(conf, dir, "snap_v", 2L).get.endsWith("snap_v0"))
-    assert(GraftFs.latest(conf, dir, "snap_v", Long.MaxValue)
-      .get.endsWith("snap_v2"))
+    assert(state.complete(conf, Long.MaxValue).map(_.id) === Seq(0L, 2L))
+    assert(state.complete(conf, 1L).last.path.endsWith("snap_v0"))
+    assert(state.latest(spark).get.path.endsWith("snap_v2"))
   }
 
   test("readText serves the .old backup's content after a crash mid-replace") {

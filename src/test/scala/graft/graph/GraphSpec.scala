@@ -44,27 +44,6 @@ class GraphSpec extends SparkSpec {
     assert(arrival == Map(1L -> 0L, 2L -> 5L, 3L -> 9L, 10L -> 12L))
   }
 
-  test("Pregel unroll=2 reaches the identical fixpoint (flag is plan-only)") {
-    import spark.implicits._
-    // a 6-hop path plus a shortcut: odd round count, so the fused final
-    // round runs once as a no-op — the convergence probe must still fire
-    val vs = (1L to 7L).toDF("vid")
-    val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (1L, 4L))
-      .toDF("src", "dst")
-    val INF = Int.MaxValue.toLong
-    def run(): Map[Long, Long] = Pregel.minPropagate(
-      vs.select(F.col("vid"), F.when(F.col("vid") === 1L, 0L).otherwise(INF).as("x")),
-      _.filter(F.col("x") < INF), es, F.col("x") + 1L, 10)
-      .filter(F.col("x") < INF)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val plain = run()
-    spark.conf.set("spark.graft.pregel.unroll", "2")
-    try assert(run() == plain)
-    finally spark.conf.unset("spark.graft.pregel.unroll")
-    assert(plain == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 1L,
-      5L -> 2L, 6L -> 3L, 7L -> 4L))
-  }
-
   test("Pregel keeps vertices that appear only as edge destinations") {
     import spark.implicits._
     // vertex 99 exists only as a dst; it must still get a distance

@@ -101,9 +101,9 @@ class KVSupernodeSpec extends SparkSpec {
     }
   }
 
-  test("the DSL hop under spark.graft.hop.saltBuckets returns identical rows") {
-    // the declared supernode path (g_kv_dsl_rev sets the conf around its
-    // reverse hop): same traversal, salt on vs off, row-identical
+  test("the DSL hop over a graph with saltBuckets returns identical rows") {
+    // the declared supernode path (g_kv_dsl_rev salts its reverse hop):
+    // same traversal, salt on vs off, row-identical
     import graft.kv.KVStore.encLong
     val e = PropertyGraph(spark, SF).edges
     val seg = java.nio.file.Files.createTempDirectory("graft_saltdsl").toString
@@ -112,15 +112,13 @@ class KVSupernodeSpec extends SparkSpec {
         .unionByName(KVGraphMutations.edgeRevAdditions(e)),
       seg, 8)
     val g = KVGraphQueries.kvBackedGraphBoth(spark, SF, seg)
-    def run(): Seq[String] = Traversal.V(g)
+    def run(g: PropertyGraph.G): Seq[String] = Traversal.V(g)
       .hasLabel("nation").value("name", "n_name").as("n_vid")
       .in("in_nation").hasLabel("supplier").as("s_vid")
       .select("n_vid", "n_name", "s_vid")
       .df.collect().map(_.toString).sorted.toSeq
-    val plain = run()
-    spark.conf.set("spark.graft.hop.saltBuckets", "4")
-    val salted = try run()
-      finally spark.conf.unset("spark.graft.hop.saltBuckets")
+    val plain = run(g)
+    val salted = run(g.copy(saltBuckets = 4))
     assert(plain.nonEmpty && salted == plain)
   }
 

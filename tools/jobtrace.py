@@ -4,10 +4,13 @@
 Usage: jobtrace.py <eventlog-file-or-dir> [query-name-filter]
 
 Bench reps label jobs via setJobDescription("<name> repN") (guide §1.5);
-this prints, for each matching job: duration, gap since the previous
-job's end (driver planning/placement time), and the job's call site.
-Summary line: wall span, sum of job times, job count — the wall-minus-sum
-difference is the driver-gap total the optimization rounds chase.
+this prints, for each matching job in submission order: duration, gap
+since the latest end of any earlier job (driver planning/placement time,
+0 while jobs run concurrently), the part of the job that overlaps earlier
+jobs (Par.jobs runs several at once), and the job's call site.
+Summary line: wall span, sum of job times, overlap total, gap total, job
+count — span = sum − overlap + gaps, and the gap total is the driver time
+the optimization rounds chase.
 """
 import json, sys, glob, os
 
@@ -45,17 +48,22 @@ with fh as f:
             if j is not None:
                 j['t1'] = ev['Completion Time']
 
-sel = [j for _, j in sorted(jobs.items())
-       if j['t1'] is not None and (want is None or want in j['desc'])]
+sel = sorted((j for j in jobs.values()
+              if j['t1'] is not None and (want is None or want in j['desc'])),
+             key=lambda j: j['t0'])
 if not sel:
     print('no matching jobs'); sys.exit(0)
-prev_end = None
-tot = 0.0
+prev_end = sel[0]['t0']  # latest end of any earlier job
+tot = gaps = overlaps = 0.0
 for j in sel:
     dur = (j['t1'] - j['t0']) / 1000.0
-    gap = (j['t0'] - prev_end) / 1000.0 if prev_end is not None else 0.0
-    prev_end = j['t1']
+    gap = max(0, j['t0'] - prev_end) / 1000.0
+    overlap = max(0, min(j['t1'], prev_end) - j['t0']) / 1000.0
+    prev_end = max(prev_end, j['t1'])
     tot += dur
-    print(f"  {dur:6.3f}s  gap {gap:6.3f}s  {j['site']}")
-span = (sel[-1]['t1'] - sel[0]['t0']) / 1000.0
-print(f"# wall span {span:.2f}s, sum of job times {tot:.2f}s, jobs {len(sel)}")
+    gaps += gap
+    overlaps += overlap
+    print(f"  {dur:6.3f}s  gap {gap:6.3f}s  overlap {overlap:6.3f}s  {j['site']}")
+span = (prev_end - sel[0]['t0']) / 1000.0
+print(f"# wall span {span:.2f}s, sum of job times {tot:.2f}s, "
+      f"overlap {overlaps:.2f}s, gaps {gaps:.2f}s, jobs {len(sel)}")
