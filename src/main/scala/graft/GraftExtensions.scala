@@ -47,8 +47,8 @@ object GraftExtensions {
   /** Session-conf defaults graft's operators are designed against.
     *
     * `objectHashAggregate.sortBased.fallbackThreshold`: all of graft's
-    * TypedImperativeAggregates (TopKPairs, Misra-Gries, theta/KMV,
-    * Roaring bitmaps, uniqUpTo) carry BOUNDED per-group state, so hash
+    * TypedImperativeAggregates (TopKPairs, Misra-Gries, Roaring
+    * bitmaps, uniqUpTo) carry BOUNDED per-group state, so hash
     * aggregation is safe at any group count — Spark's default threshold
     * (128 groups) silently falls back to SORT-based aggregation and
     * sorts the whole fact stream (measured: s_knn_graph 44.8 s → 19.7 s
@@ -162,23 +162,7 @@ object GraftExtensions {
     (new FunctionIdentifier("freq_items_weighted"),
       new ExpressionInfo(classOf[graft.operators.FreqItemsWeightedSketch].getName, "freq_items_weighted"),
       (args: Seq[Expression]) => graft.operators.FreqItemsWeightedSketch(
-        args(0), args(1), intLiteral(args(2), "freq_items_weighted(term, weight, capacity)"))),
-    (new FunctionIdentifier("theta_sketch"),
-      new ExpressionInfo(classOf[graft.operators.ThetaSketchAgg].getName, "theta_sketch"),
-      (args: Seq[Expression]) => graft.operators.ThetaSketchAgg(
-        args(0), intLiteral(args(1), "theta_sketch(ids, k)"))),
-    (new FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[graft.operators.ThetaEstimate].getName, "theta_estimate"),
-      (args: Seq[Expression]) => graft.operators.ThetaEstimate(
-        args(0), intLiteral(args(1), "theta_estimate(sketch, k)"))),
-    (new FunctionIdentifier("theta_union_estimate"),
-      new ExpressionInfo(classOf[graft.operators.ThetaUnionEstimate].getName, "theta_union_estimate"),
-      (args: Seq[Expression]) => graft.operators.ThetaUnionEstimate(
-        args(0), args(1), intLiteral(args(2), "theta_union_estimate(a, b, k)"))),
-    (new FunctionIdentifier("theta_intersect_estimate"),
-      new ExpressionInfo(classOf[graft.operators.ThetaIntersectEstimate].getName, "theta_intersect_estimate"),
-      (args: Seq[Expression]) => graft.operators.ThetaIntersectEstimate(
-        args(0), args(1), intLiteral(args(2), "theta_intersect_estimate(a, b, k)"))))
+        args(0), args(1), intLiteral(args(2), "freq_items_weighted(term, weight, capacity)"))))
 
   private def intLiteral(e: Expression, usage: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v

@@ -4,19 +4,22 @@ import java.nio.file.{Files, Path}
 
 /** JVM-local snapshot directories for the scenario-driven driver
   * entries (the `*_inc` maintained surfaces and the kv store
-  * scenarios): each entry keeps ONE live temp dir between invocations
+  * scenarios): each tag keeps ONE live temp dir between invocations
   * (Bench REPS>1 and Verify re-run entries in the same JVM), sweeping
-  * the previous run's dir on entry. This helper is that
-  * sweep-and-recreate in one place — 18 inline copies of the
-  * walk-and-delete block predate it — plus a shutdown hook so the
-  * FINAL dir of each entry no longer outlives the JVM. */
+  * the tag's previous dir when a fresh one is handed out, plus a
+  * shutdown hook so the FINAL dir of each tag does not outlive the JVM.
+  *
+  * Callers hold their entry's own lock across `fresh` and the reads of
+  * the dir it returns, so a second call of an entry cannot sweep a dir
+  * the first call still reads. Entries that share a tag share that lock
+  * too (they live in one object). */
 object ScenarioDirs {
 
-  private val live = scala.collection.mutable.Set.empty[Path]
+  private val live = scala.collection.mutable.Map.empty[String, Path]
 
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      live.toSeq.foreach(d => try delete(d) catch { case _: Throwable => () })))
+      live.values.toSeq.foreach(d => try delete(d) catch { case _: Throwable => () })))
   }
 
   /** Depth-first recursive delete (children before parents). */
@@ -29,11 +32,14 @@ object ScenarioDirs {
     } finally walk.close()
   }
 
-  /** Sweep `prev` (if any) and hand out a fresh temp dir under `tag`. */
-  def fresh(tag: String, prev: Option[Path]): Path = synchronized {
-    prev.foreach { d => delete(d); live -= d }
+  /** Sweep `tag`'s previous dir (if any) and hand out a fresh one. */
+  def fresh(tag: String): Path = synchronized {
+    live.remove(tag).foreach(delete)
     val p = Files.createTempDirectory(tag)
-    live += p
+    live(tag) = p
     p
   }
+
+  /** `tag`'s live dir: the one the latest `fresh(tag)` handed out. */
+  private[graft] def current(tag: String): Option[Path] = synchronized(live.get(tag))
 }

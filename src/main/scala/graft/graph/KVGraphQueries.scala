@@ -54,8 +54,22 @@ object KVGraphQueries {
   private[graph] def labelLo(id: Long) = F.concat(encLong(F.lit(id)), encLong(F.lit(0L)))
   private[graph] def labelHi(id: Long) = F.concat(encLong(F.lit(id + 1)), encLong(F.lit(0L)))
 
-  private var lastAdj1: Option[java.nio.file.Path] = None
-  private var lastAdj2: Option[java.nio.file.Path] = None
+  /** The onehop read back off an adjacency store: `store`'s in_nation
+    * label slice (a pushed c range) joined to `start` (k, c_vid) on k
+    * (runtime key pruning), dst decoded, nation names broadcast from
+    * `vertices` — (c_vid, n_name). */
+  private def inNationHop(store: DataFrame, start: DataFrame,
+                          vertices: DataFrame): DataFrame = {
+    val inNation = LabelIds.toMap.apply("in_nation")
+    val nations = vertices.filter(F.col("vlabel") === "nation")
+      .select(F.col("vid").as("dst_vid"), F.col("name"))
+    store
+      .filter(F.col("c") >= labelLo(inNation) && F.col("c") < labelHi(inNation))
+      .join(start, Seq("k"))
+      .select(F.col("c_vid"), decLong(F.col("c"), 9).as("dst_vid"))
+      .join(F.broadcast(nations), "dst_vid")
+      .select(F.col("c_vid"), F.col("name").as("n_name"))
+  }
 
   /** g_kv_onehop: g_onehop's traversal driven through the KCV
     * adjacency store — BUILDING customers sliced against the
@@ -64,22 +78,13 @@ object KVGraphQueries {
     * (zone-map pruning), and the nation names resolve exactly as the
     * frame entry does. Shares g_onehop's oracle hash-for-hash. */
   def gKvOneHop(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvadj1", lastAdj1)
-    lastAdj1 = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvadj1")
     KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
     val g = PropertyGraph(s, dir)
     val start = g.vertices
       .filter(F.col("vlabel") === "customer" && F.col("mktsegment") === "BUILDING")
       .select(encLong(F.col("vid")).as("k"), F.col("vid").as("c_vid"))
-    val inNation = LabelIds.toMap.apply("in_nation")
-    val adj = s.read.format("graft-kv").load(seg.toString)
-      .filter(F.col("c") >= labelLo(inNation) && F.col("c") < labelHi(inNation))
-    val nations = g.vertices.filter(F.col("vlabel") === "nation")
-      .select(F.col("vid").as("dst_vid"), F.col("name"))
-    adj.join(start, Seq("k"))
-      .select(F.col("c_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-      .join(F.broadcast(nations), "dst_vid")
-      .select(F.col("c_vid"), F.col("name").as("n_name"))
+    inNationHop(s.read.format("graft-kv").load(seg.toString), start, g.vertices)
       .localCheckpoint(true)
   }
 
@@ -88,8 +93,7 @@ object KVGraphQueries {
     * is hop 1's endpoint set, exactly the reference's repeated
     * multi-key getSlice). Shares g_twohop's oracle. */
   def gKvTwoHop(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvadj2", lastAdj2)
-    lastAdj2 = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvadj2")
     KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
     val g = PropertyGraph(s, dir)
     val adj = s.read.format("graft-kv").load(seg.toString)
@@ -143,8 +147,6 @@ object KVGraphQueries {
     PropertyGraph.G(PropertyGraph(s, dir).vertices, edges)
   }
 
-  private var lastAdj3: Option[java.nio.file.Path] = None
-
   /** g_kv_dsl_motif: the traversal DSL running over the KV-BACKED
     * graph — g_motif's as()/where() shape (supplier peers compared on
     * acctbal, hop to the nation) with every edge read coming off the
@@ -152,8 +154,7 @@ object KVGraphQueries {
     * frame-shaped graph operator) storage-model-portable; shares
     * g_motif's oracle hash-for-hash. */
   def gKvDslMotif(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvadj3", lastAdj3)
-    lastAdj3 = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvadj3")
     KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
     val g = kvBackedGraph(s, dir, seg.toString)
     // the EXACT chain gDslMotif writes — same DSL shape, different
@@ -200,8 +201,6 @@ object KVGraphQueries {
         encLong(F.col("dst"))).as("c"),
       encLong(F.col("w")).as("v"))
 
-  private var lastVci: Option[java.nio.file.Path] = None
-
   /** g_kv_vci: g_dsl_edge_w's query (`outE("peer").has("w", lte(2))`)
     * served FROM the vertex-centric index — the w ≤ 2 predicate is the
     * pushed c range [(peer, 1, ·), (peer, 3, ·)), so segment zone maps
@@ -213,8 +212,7 @@ object KVGraphQueries {
     * every peer edge and filters afterwards. Shares g_dsl_edge_w's
     * full-SQL oracle hash-for-hash. */
   def gKvVci(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvci", lastVci)
-    lastVci = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvvci")
     KVSegmentStore.write(vciAdjacency(s, dir), seg.toString, 0)
     val peer = LabelIds.toMap.apply("peer")
     // w <= 2 with w >= 1 by derivation: c in [(peer,0,0), (peer,3,0))
@@ -322,8 +320,6 @@ object KVGraphQueries {
     base.copy(edgeIndex = Some(index))
   }
 
-  private var lastDslVci: Option[java.nio.file.Path] = None
-
   /** g_kv_dsl_vci: VCI INDEX SELECTION INSIDE THE DSL (r13 verdict #2 —
     * the step past g_kv_vci_pick's hand-called choice rule): the entry
     * is g_dsl_edge_w's PLAIN traversal, verbatim, over the dual-layout
@@ -336,8 +332,7 @@ object KVGraphQueries {
     * offsets) breaks the gate; KVDslVciSpec proves the route both ways
     * (index rows flow through, non-bound predicates fall back). */
   def gKvDslVci(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvdslvci", lastDslVci)
-    lastDslVci = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvdslvci")
     KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
     val g = kvBackedGraphDual(s, dir, seg.toString)
     Traversal.V(g)
@@ -349,8 +344,6 @@ object KVGraphQueries {
       .localCheckpoint(true)
   }
 
-  private var lastDslVciRng: Option[java.nio.file.Path] = None
-
   /** g_kv_dsl_vci_rng: RANGE routing through the DSL's index rule —
     * `outE("peer").has("w", gte(2)).has("w", lte(3))` combines both
     * bounds into ONE inclusive interval [2, 3] and routes it to the
@@ -361,8 +354,7 @@ object KVGraphQueries {
     * combining rule behaviorally (range, equality, pure lower bound,
     * contradictory-interval emptiness). */
   def gKvDslVciRng(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvcirng", lastDslVciRng)
-    lastDslVciRng = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvvcirng")
     KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
     val g = kvBackedGraphDual(s, dir, seg.toString)
     Traversal.V(g)
@@ -385,8 +377,6 @@ object KVGraphQueries {
        |WHERE a.vlabel = 'supplier' AND e.elabel = 'peer'
        | AND e.w BETWEEN 2 AND 3""".stripMargin
 
-  private var lastDslBoth: Option[java.nio.file.Path] = None
-
   /** g_kv_dsl_both: the direction-blind hop PRUNED — `both()` over the
     * dual-adjacency adapter walks BOTH keyed families (forward keyed on
     * the primary store key, backward on the mirror key), so even a
@@ -398,8 +388,7 @@ object KVGraphQueries {
     * both() exists for). Own full-SQL oracle; KVGraphRevSpec asserts
     * the runtime key filter + row equality with the frame both(). */
   def gKvDslBoth(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvboth", lastDslBoth)
-    lastDslBoth = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvboth")
     val e = PropertyGraph(s, dir).edges
     KVSegmentStore.write(
       KVGraphMutations.edgeAdditions(e)
@@ -425,8 +414,6 @@ object KVGraphQueries {
        |FROM verts r JOIN ue ON ue.src = r.vid
        |WHERE r.vlabel = 'region' AND r.name IN ('ASIA', 'EUROPE', 'AFRICA')""".stripMargin
 
-  private var lastVciPick: Option[java.nio.file.Path] = None
-
   /** g_kv_vci_pick: g_kv_vci's query answered by the CHOICE RULE over
     * the dual-layout store — the caller states `peer edges with w ≤ 2`
     * and [[edgeSlice]] routes it to the w-sorted family (a plain hop
@@ -434,8 +421,7 @@ object KVGraphQueries {
     * full-SQL oracle hash-for-hash, so a wrong routing (double-counted
     * families, wrong decode offsets) breaks the gate. */
   def gKvVciPick(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvcipk", lastVciPick)
-    lastVciPick = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvvcipk")
     KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
     edgeSlice(s.read.format("graft-kv").load(seg.toString), "peer", Some(2L))
       .localCheckpoint(true)
@@ -468,8 +454,6 @@ object KVGraphQueries {
     base.copy(revEdges = Some(rev))
   }
 
-  private var lastDslRev: Option[java.nio.file.Path] = None
-
   /** The selective nation frontier of the reverse-hop entries. A bare
     * hasLabel cannot drive runtime pruning: vlabel is a per-branch
     * LITERAL in the vertex union, so the filter constant-folds away and
@@ -491,8 +475,7 @@ object KVGraphQueries {
     * runtime key filter + segment drop on the reverse hop and row
     * equality with the frame traversal. */
   def gKvDslRev(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvrev", lastDslRev)
-    lastDslRev = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvrev")
     val e = PropertyGraph(s, dir).edges
     KVSegmentStore.write(
       KVGraphMutations.edgeAdditions(e)
@@ -526,8 +509,6 @@ object KVGraphQueries {
        |WHERE n.vlabel = 'nation' AND s.vlabel = 'supplier'
        | AND n.name IN ('NATION_3','NATION_7','NATION_11','NATION_18','NATION_21')""".stripMargin
 
-  private var lastVpropSeg: Option[java.nio.file.Path] = None
-
   /** g_kv_vprops: VERTEX PROPERTIES READ FROM THE STORE — JanusGraph
     * keeps each vertex property as its own cell in the vertex family
     * (property-key id as the qualifier), so a property read IS a
@@ -549,8 +530,7 @@ object KVGraphQueries {
     * what graft's named-store KVStoreManager already models. Own
     * full-SQL oracle (dec2 string bytes keep the value oracle-stable). */
   def gKvVprops(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvprop", lastVpropSeg)
-    lastVpropSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvvprop")
     val g = PropertyGraph(s, dir)
     KVSegmentStore.write(
       KVGraphMutations.vertexAdditions(g.vertices)
@@ -574,8 +554,6 @@ object KVGraphQueries {
       | CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS VARCHAR) AS bal_str
       |FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin
 
-  private var lastSplitWh: Option[java.nio.file.Path] = None
-
   /** g_kv_vprops_split: the PER-FAMILY NAMED-STORE split (r13 verdict
     * #1 — the one admitted scale gap): g_kv_vprops' own scale note says
     * the mixed k-ranged store provably cannot segment-prune a vertex-
@@ -597,8 +575,7 @@ object KVGraphQueries {
     * read over 10¹² vertices touches ~1/|props| of the property
     * store's segments and none of the (much larger) edgestore. */
   def gKvVpropsSplit(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvsplit", lastSplitWh)
-    lastSplitWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvsplit")
     val mgr = new graft.kv.KVStoreManager(s, wh.toString)
     val g = PropertyGraph(s, dir)
     // only the property store is written here: the entry never reads the
@@ -622,9 +599,6 @@ object KVGraphQueries {
       .select(decLong(F.col("k"), 1).as("c_vid"), F.col("bal_str"))
       .localCheckpoint(true)
   }
-
-  private var lastMutWh: Option[java.nio.file.Path] = None
-  private var lastMutSeg: Option[java.nio.file.Path] = None
 
   /** g_kv_mutate_hop: the GRAPH WRITE LOOP end-to-end (r12 verdict #1 —
     * the last uncomposed reference behavior). JanusGraph commits
@@ -652,8 +626,7 @@ object KVGraphQueries {
     * snapshot rewrite — and the read is the store's merge-on-read;
     * KVGraphMutateSpec asserts log path ≡ snapshot path cell for cell. */
   def gKvMutateHop(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvgmut", lastMutWh)
-    lastMutWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvgmut")
     val ds = new graft.kv.KVDeltaStore(s, wh.toString)
     val g = PropertyGraph(s, dir)
     val e = g.edges
@@ -680,8 +653,7 @@ object KVGraphQueries {
     // g_kv_onehop path — start-set runtime key pruning + the in_nation
     // label slice as a pushed c range. "Mutate, then re-read by the
     // existing g_kv_* plans", literally.
-    val seg = graft.ScenarioDirs.fresh("graft_kvgmseg", lastMutSeg)
-    lastMutSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvgmseg")
     KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
     val store = s.read.format("graft-kv").load(seg.toString)
     val lid = decLong(F.col("c"), 1)
@@ -689,18 +661,10 @@ object KVGraphQueries {
       F.sum(F.when(lid === 3L, decLong(F.col("v"), 1))).as("peer_w_sum"),
       F.count(F.when(lid === 2L, F.lit(1))).as("rem_region_edges"),
       F.count(F.when(lid === 0L, F.lit(1))).as("n_vertex_cells"))
-    val inNation = LabelIds.toMap.apply("in_nation")
     val start = g.vertices
       .filter(F.col("vlabel") === "customer" && F.col("mktsegment") === "BUILDING")
       .select(encLong(F.col("vid")).as("k"), F.col("vid").as("c_vid"))
-    val nations = g.vertices.filter(F.col("vlabel") === "nation")
-      .select(F.col("vid").as("dst_vid"), F.col("name"))
-    store
-      .filter(F.col("c") >= labelLo(inNation) && F.col("c") < labelHi(inNation))
-      .join(start, Seq("k"))
-      .select(F.col("c_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-      .join(F.broadcast(nations), "dst_vid")
-      .select(F.col("c_vid"), F.col("name").as("n_name"))
+    inNationHop(store, start, g.vertices)
       .crossJoin(F.broadcast(scalars))
       .localCheckpoint(true)
   }
@@ -715,9 +679,6 @@ object KVGraphQueries {
        |JOIN edges e ON e.src = a.vid AND e.elabel = 'in_nation'
        |JOIN verts nv ON nv.vid = e.dst
        |WHERE a.vlabel = 'customer' AND a.mktsegment = 'BUILDING'""".stripMargin
-
-  private var lastDslMutWh: Option[java.nio.file.Path] = None
-  private var lastDslMutSeg: Option[java.nio.file.Path] = None
 
   /** g_kv_dsl_mutate: the DSL WRITE VOCABULARY end-to-end (r13 verdict
     * #6 — Gremlin users mutate IN-TRAVERSAL: addV/property/drop are
@@ -742,8 +703,7 @@ object KVGraphQueries {
     * (zero added shuffles) and the mutation is one bounded delta
     * append — the g_kv_mutate_hop write story, now DSL-authored. */
   def gKvDslMutate(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvdslmut", lastDslMutWh)
-    lastDslMutWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvdslmut")
     val ds = new graft.kv.KVDeltaStore(s, wh.toString)
     val fg = PropertyGraph(s, dir)
     val e = fg.edges
@@ -781,8 +741,7 @@ object KVGraphQueries {
           .unionByName(KVGraphMutations.edgeAdditions(newEdges)),
         KVGraphMutations.edgeDeletions(doomed), wts = 2000L))
     // fold + re-read through the pruned connector path
-    val seg = graft.ScenarioDirs.fresh("graft_kvdslmseg", lastDslMutSeg)
-    lastDslMutSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvdslmseg")
     KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
     val store = s.read.format("graft-kv").load(seg.toString)
     val lid = decLong(F.col("c"), 1)
@@ -795,15 +754,7 @@ object KVGraphQueries {
     val start = store.filter(F.col("c") >= mLo && F.col("c") < mHi)
       .filter(F.col("v").cast("string") === "BUILDING")
       .select(F.col("k"), decLong(F.col("k"), 1).as("c_vid"))
-    val inNation = LabelIds.toMap.apply("in_nation")
-    val nations = fg.vertices.filter(F.col("vlabel") === "nation")
-      .select(F.col("vid").as("dst_vid"), F.col("name"))
-    store
-      .filter(F.col("c") >= labelLo(inNation) && F.col("c") < labelHi(inNation))
-      .join(start, Seq("k"))
-      .select(F.col("c_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-      .join(F.broadcast(nations), "dst_vid")
-      .select(F.col("c_vid"), F.col("name").as("n_name"))
+    inNationHop(store, start, fg.vertices)
       .crossJoin(F.broadcast(scalars))
       .localCheckpoint(true)
   }
@@ -886,8 +837,6 @@ object KVGraphQueries {
         : org.apache.spark.sql.Column = schema.labelExpr(vid)
   }
 
-  private var lastFullSeg: Option[java.nio.file.Path] = None
-
   /** g_kv_full_graph: the WHOLE graph resident in ONE store — vertex
     * existence + properties AND adjacency, with g_onehop's traversal
     * running END-TO-END on stored bytes (the BUILDING predicate
@@ -901,8 +850,7 @@ object KVGraphQueries {
     * equals the source frame and the traversal's scans are store
     * scans only. */
   def gKvFullGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvfull", lastFullSeg)
-    lastFullSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvfull")
     val g0 = PropertyGraph(s, dir)
     KVSegmentStore.write(
       KVGraphMutations.vertexAdditions(g0.vertices)
@@ -921,8 +869,6 @@ object KVGraphQueries {
       .localCheckpoint(true)
   }
 
-  private var lastSpjAdj: Option[java.nio.file.Path] = None
-
   /** g_kv_twohop_spj: the two-hop with a SHUFFLE-FREE STORE SIDE (r13
     * verdict #4 — kv_spj_join's machinery adopted by the graph
     * entries). The adjacency persists HASH-BUCKETED
@@ -939,8 +885,7 @@ object KVGraphQueries {
     * side is O(probed buckets) reads, the exchange cost is O(frontier).
     * Shares g_twohop's oracle hash-for-hash. */
   def gKvTwoHopSpj(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvspjadj", lastSpjAdj)
-    lastSpjAdj = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvspjadj")
     KVSegmentStore.writeBucketed(adjacency(s, dir), seg.toString, 8)
     val g = PropertyGraph(s, dir)
     // snapshot-and-restore the SPJ planning confs (kv_spj_join's
@@ -978,8 +923,6 @@ object KVGraphQueries {
     }
   }
 
-  private var lastDegMvWh: Option[java.nio.file.Path] = None
-
   /** g_kv_degree_mv: an INCREMENTAL GRAPH VIEW following the graph
     * store's CDC feed (r13 verdict #7 — kv_mv_follow composed with the
     * adjacency layout): per-vertex in/out degree maintained LIVE as
@@ -997,8 +940,7 @@ object KVGraphQueries {
     * one O(|vertices-with-degree|) snapshot merge, independent of
     * stream length — the kv_mv_follow cost model on the graph store. */
   def gKvDegreeMv(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdegmv", lastDegMvWh)
-    lastDegMvWh = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvdegmv")
     val wh = whPath.toString
     val ds = new graft.kv.KVDeltaStore(s, wh)
     val e = PropertyGraph(s, dir).edges
@@ -1081,8 +1023,6 @@ object KVGraphQueries {
       .unionByName(vciFamily(g.edges))
   }
 
-  private var lastSplitGraphWh: Option[java.nio.file.Path] = None
-
   /** g_kv_split_graph: the PRODUCTION layout end-to-end — JanusGraph's
     * named-store split (edgestore vs vertexprops,
     * ClickhouseStoreManager.java:79) carrying a FULLY-RESIDENT graph:
@@ -1096,8 +1036,7 @@ object KVGraphQueries {
     * in the manager's named stores — the reference's deployment shape,
     * not a single-file demo. Shares g_onehop's oracle hash-for-hash. */
   def gKvSplitGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvsplitg", lastSplitGraphWh)
-    lastSplitGraphWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvsplitg")
     val mgr = new graft.kv.KVStoreManager(s, wh.toString)
     val g0 = PropertyGraph(s, dir)
     // both named stores derive only from the input frames — write them
@@ -1127,8 +1066,6 @@ object KVGraphQueries {
       .localCheckpoint(true)
   }
 
-  private var lastFullDslSeg: Option[java.nio.file.Path] = None
-
   /** g_kv_dsl_full: ONE traversal exercising every storage hook in one
     * plan — five nations (predicate on STORED name bytes) pulled
     * backwards along in_nation through the MIRROR family, the reached
@@ -1139,8 +1076,7 @@ object KVGraphQueries {
     * Own full-SQL oracle (peer edges exist from sf0.01 up; the sf0.001
     * gate holds on emptiness). */
   def gKvDslFull(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvfulldsl", lastFullDslSeg)
-    lastFullDslSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvfulldsl")
     KVSegmentStore.write(fullStoreCells(s, dir), seg.toString, 0)
     val g = kvBackedGraphFull(s, dir, seg.toString)
     Traversal.V(g)
@@ -1253,8 +1189,6 @@ object KVGraphQueries {
       }
   }
 
-  private var lastIdxWh: Option[java.nio.file.Path] = None
-
   /** g_kv_index_graph: the BUILDING start set served FROM the
     * graphindex — g_onehop's traversal, fully store-resident, over the
     * three-named-store production layout (edgestore + qualifier-major
@@ -1268,8 +1202,7 @@ object KVGraphQueries {
     * the runtime key filter on the vertex store, and row equality with
     * the eager plan. */
   def gKvIndexGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvidx", lastIdxWh)
-    lastIdxWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvidx")
     val mgr = new graft.kv.KVStoreManager(s, wh.toString)
     val g0 = PropertyGraph(s, dir)
     // the three named stores derive only from the input frames — write
@@ -1301,10 +1234,6 @@ object KVGraphQueries {
       .localCheckpoint(true)
   }
 
-  private var lastIdxMutWh: Option[java.nio.file.Path] = None
-  private var lastIdxMutSeg: Option[java.nio.file.Path] = None
-  private var lastIdxMutIdxSeg: Option[java.nio.file.Path] = None
-
   /** g_kv_idx_mutate: the graphindex COMPOSED WITH MUTATION (r14
     * verdict #8) — index cells ride the same delete-before-add batches
     * the property cells do, or a re-valued vertex resurrects under its
@@ -1322,8 +1251,7 @@ object KVGraphQueries {
     * the mutation is two bounded delta appends; the index store's
     * delta is O(re-valued vertices). */
   def gKvIdxMutate(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvidxmut", lastIdxMutWh)
-    lastIdxMutWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvidxmut")
     val ds = new graft.kv.KVDeltaStore(s, wh.toString)
     val fg = PropertyGraph(s, dir)
     val customers = fg.vertices.filter(F.col("vlabel") === "customer")
@@ -1360,10 +1288,8 @@ object KVGraphQueries {
         KVGraphMutations.indexDeletions(auto, "mktsegment"), wts = 2000L))
     // fold both stores and serve the start set FROM the index; the two
     // folds are independent of each other — overlap them too
-    val seg = graft.ScenarioDirs.fresh("graft_kvidxmseg", lastIdxMutSeg)
-    lastIdxMutSeg = Some(seg)
-    val idxSeg = graft.ScenarioDirs.fresh("graft_kvidxmidx", lastIdxMutIdxSeg)
-    lastIdxMutIdxSeg = Some(idxSeg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvidxmseg")
+    val idxSeg = graft.ScenarioDirs.fresh("graft_kvidxmidx")
     graft.Par.jobs(
       () => KVSegmentStore.writeFamilyRanged(
         ds.openDatabase("graph"), seg.toString, 0),
@@ -1397,9 +1323,6 @@ object KVGraphQueries {
       |FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
       |WHERE c.c_mktsegment IN ('BUILDING', 'AUTOMOBILE')""".stripMargin
 
-  private var lastDropVWh: Option[java.nio.file.Path] = None
-  private var lastDropVSeg: Option[java.nio.file.Path] = None
-
   /** g_kv_dsl_dropv: VERTEX REMOVAL through the DSL — Gremlin's
     * `g.V().has(…).drop()` is JanusGraph's heaviest mutation (the
     * vertex, its properties, AND every incident edge in both adjacency
@@ -1415,8 +1338,7 @@ object KVGraphQueries {
     * Scale: the doomed⋈edges joins are doomed-sized; the mutation is
     * one bounded delta append. */
   def gKvDslDropV(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvdropv", lastDropVWh)
-    lastDropVWh = Some(wh)
+    val wh = graft.ScenarioDirs.fresh("graft_kvdropv")
     val ds = new graft.kv.KVDeltaStore(s, wh.toString)
     val fg = PropertyGraph(s, dir)
     val e = fg.edges
@@ -1434,8 +1356,7 @@ object KVGraphQueries {
         noAdd.select("k", "c"), wts = 1000L),
       () => ds.appendMutationAt("graph", 2L, noAdd,
         KVGraphMutations.vertexDeletions(doomed, e), wts = 2000L))
-    val seg = graft.ScenarioDirs.fresh("graft_kvdropvseg", lastDropVSeg)
-    lastDropVSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvdropvseg")
     KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
     val store = s.read.format("graft-kv").load(seg.toString)
     val existQ = F.concat(encLong(F.lit(0L)), encLong(F.lit(0L)))
@@ -1450,15 +1371,7 @@ object KVGraphQueries {
     val start = store.filter(F.col("c") === existQ)
       .filter(kMod === 0L)
       .select(F.col("k"), decLong(F.col("k"), 1).as("c_vid"))
-    val inNation = LabelIds.toMap.apply("in_nation")
-    val nations = fg.vertices.filter(F.col("vlabel") === "nation")
-      .select(F.col("vid").as("dst_vid"), F.col("name"))
-    store
-      .filter(F.col("c") >= labelLo(inNation) && F.col("c") < labelHi(inNation))
-      .join(start, Seq("k"))
-      .select(F.col("c_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-      .join(F.broadcast(nations), "dst_vid")
-      .select(F.col("c_vid"), F.col("name").as("n_name"))
+    inNationHop(store, start, fg.vertices)
       .crossJoin(F.broadcast(scalars))
       .localCheckpoint(true)
   }

@@ -167,11 +167,6 @@ object KVQueries {
     * = the same deletions+upserts, then the SAME slice read against the
     * merge-on-read view. Shares kv_mutate's oracle — the log and the
     * snapshot path must agree cell-for-cell. */
-  // this JVM's previous kv_deltalog warehouse — the only one it is safe
-  // to sweep (another process's graft_kvdelta dir may still back a
-  // lazily-read merged view)
-  private var lastDeltaWarehouse: Option[java.nio.file.Path] = None
-
   def kvDeltaLog(s: SparkSession, dir: String): DataFrame =
     deltaScenario(s, dir, compactFirst = false)
 
@@ -187,8 +182,7 @@ object KVQueries {
     // The merged view reads its files lazily, so the CURRENT warehouse
     // must outlive this call; the previous invocation's (fully consumed
     // by now) is swept, bounding accumulation at one warehouse per JVM.
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta", lastDeltaWarehouse)
-    lastDeltaWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
     val ds = new KVDeltaStore(s, whPath.toString)
     val noDel = eventStore(s, dir).select("k", "c").limit(0)
     val (additions, deletions) = mutationScenario(s, dir)
@@ -217,8 +211,7 @@ object KVQueries {
     * path, the batch log path, and the snapshot path all agree cell for
     * cell. */
   def kvStreamDelta(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta", lastDeltaWarehouse)
-    lastDeltaWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
     val wh = whPath.toString
     def asMutations(adds: DataFrame, dels: DataFrame): DataFrame =
       adds.withColumn("is_delete", F.lit(false))
@@ -249,8 +242,7 @@ object KVQueries {
     * kv_mutate's oracle: the feed must carry EVERYTHING the store
     * knows, cell for cell. */
   def kvStreamSource(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta", lastDeltaWarehouse)
-    lastDeltaWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
     val wh = whPath.toString
     val ds = new KVDeltaStore(s, wh)
     val noDel = eventStore(s, dir).select("k", "c").limit(0)
@@ -291,8 +283,7 @@ object KVQueries {
     * completeness dedupe them. Shares kv_mutate's oracle (read back off
     * the REPLICA). */
   def kvCdcReplica(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta", lastDeltaWarehouse)
-    lastDeltaWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
     val wh = whPath.toString
     val ds = new KVDeltaStore(s, wh)
     val noDel = eventStore(s, dir).select("k", "c").limit(0)
@@ -307,16 +298,12 @@ object KVQueries {
       .option("maxSeqsPerBatch", "1")
       .load(s"$wh/events")
       .writeStream
-      // maxSeqsPerBatch=1: every micro-batch is exactly ONE source log
-      // part, so the cross-part foldCdc rank window (a full shuffle+sort
-      // of the store per batch) is unnecessary — the batch passes through
-      // as mutations and the replica's own merge-on-read applies the
-      // identical same-seq resolution (op desc: addition beats deletion),
-      // so the resolved replica is cell-for-cell the same (oracle-gated).
+      // maxSeqsPerBatch=1: every micro-batch is ONE source log part, so
+      // cdcMutations passes it through without foldCdc's rank window (a
+      // full shuffle+sort of the store per batch)
       .foreachBatch((batch: DataFrame, batchId: Long) =>
         KVStreamSink.applyBatchDelta(
-          batch.select(F.col("k"), F.col("c"), F.col("v"),
-            (F.col("op") === 0).as("is_delete")), wh, "replica", batchId))
+          KVStreamSink.cdcMutations(batch), wh, "replica", batchId))
       .option("checkpointLocation", s"$wh/repl_ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -342,8 +329,7 @@ object KVQueries {
     * Scale: each micro-batch folds O(batch) plus one O(|keys|) snapshot
     * merge, independent of stream length. */
   def kvMvFollow(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta", lastDeltaWarehouse)
-    lastDeltaWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
     val wh = whPath.toString
     val ds = new KVDeltaStore(s, wh)
     val noDel = eventStore(s, dir).select("k", "c").limit(0)
@@ -437,9 +423,6 @@ object KVQueries {
       |  ON t.user_id = e.user_id
       |WHERE e.user_id < 50""".stripMargin
 
-  // this JVM's previous kv_timetravel warehouse (same sweep lifecycle)
-  private var lastTravelWarehouse: Option[java.nio.file.Path] = None
-
   /** kv_timetravel: version-pinned read of the mutation log
     * (KVDeltaStore.openDatabaseAsOf) — the capability the append-only log
     * buys over the reference's in-place MergeTree mutations: batch 1 =
@@ -450,8 +433,7 @@ object KVQueries {
     * cell (while kv_deltalog gates the post-mutation view of the very
     * same log). */
   def kvTimetravel(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvtravel", lastTravelWarehouse)
-    lastTravelWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvtravel")
     val ds = new KVDeltaStore(s, whPath.toString)
     val noDel = eventStore(s, dir).select("k", "c").limit(0)
     val (additions, deletions) = mutationScenario(s, dir)
@@ -469,10 +451,6 @@ object KVQueries {
       | CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) AS v_str
       |FROM events WHERE user_id < 5""".stripMargin
 
-  // this JVM's previous kv_ttl warehouse (same sweep lifecycle as
-  // lastDeltaWarehouse)
-  private var lastTtlWarehouse: Option[java.nio.file.Path] = None
-
   /** kv_ttl: MergeTree-style TTL (`TTL ts + INTERVAL ...`) as a
     * driver-checked query — the KVDeltaStore.expire path end-to-end.
     * Scenario: the event store lands in TWO ingestion batches split by
@@ -483,8 +461,7 @@ object KVQueries {
     * 0..19 must see precisely the young half. Oracle = the plain time
     * filter, so expiry exactness is hash-gated cell for cell. */
   def kvTtl(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvttl", lastTtlWarehouse)
-    lastTtlWarehouse = Some(whPath)
+    val whPath = graft.ScenarioDirs.fresh("graft_kvttl")
     val ds = new KVDeltaStore(s, whPath.toString)
     val es = eventStore(s, dir)
     val cut = colBound("2024-01-15 00:00:00")
@@ -512,10 +489,6 @@ object KVQueries {
       |WHERE user_id < 20
       |  AND epoch_us(ts) >= epoch_us(TIMESTAMP '2024-01-15 00:00:00')""".stripMargin
 
-  // this JVM's previous kv_dsv2 segment dir (same lifecycle as the delta
-  // warehouse: sweep only our own previous, fully-consumed directory)
-  private var lastSegmentDir: Option[java.nio.file.Path] = None
-
   /** kv_dsv2: the kv_slice read replayed through the graft-kv
     * DataSourceV2 connector — the store persisted as 8 key-range parquet
     * segments (graft.sources.kvconnector.KVSegmentStore), read back via
@@ -525,8 +498,7 @@ object KVQueries {
     * oracle: the connector path must reproduce the direct path cell for
     * cell. */
   def kvDsv2(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvseg", lastSegmentDir)
-    lastSegmentDir = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvseg")
     graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
     val store = s.read.format("graft-kv").load(seg.toString)
       .filter(F.col("k") < encLong(F.lit(10L))) // pushed → manifest pruning
@@ -535,9 +507,6 @@ object KVQueries {
       colBound("2024-01-10 00:00:00"), colBound("2024-01-20 00:00:00"), 50))
       .localCheckpoint(true)
   }
-
-  // previous kv_dsv2_multi segment dir (same sweep lifecycle)
-  private var lastMultiSegDir: Option[java.nio.file.Path] = None
 
   /** kv_dsv2_multi: the kv_multislice key set driven through the DSv2
     * connector as an IN-set — the reference's multi-key getSlice takes an
@@ -555,8 +524,7 @@ object KVQueries {
     * purely to carry the pushdown — both forms express the same SPI
     * call. */
   def kvDsv2Multi(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegm", lastMultiSegDir)
-    lastMultiSegDir = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvsegm")
     graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
     val keyIds = Tables(s, dir, "events")
       .select(F.col("user_id")).distinct()
@@ -573,10 +541,6 @@ object KVQueries {
       .localCheckpoint(true)
   }
 
-  // previous kv_spj_join store dirs (same sweep lifecycle)
-  private var lastSpjCells: Option[java.nio.file.Path] = None
-  private var lastSpjRoll: Option[java.nio.file.Path] = None
-
   /** kv_spj_join: the STORAGE-PARTITIONED join (r11 verdict #5) —
     * kv_bucket_join's zero-exchange co-location made native to the DSv2
     * connector. Both stores persist hash-bucketed by k
@@ -589,10 +553,8 @@ object KVQueries {
     * 100 TB this is the story of two co-bucketed stores joining without
     * moving either — through the connector, not a parquet side-channel. */
   def kvSpjJoin(s: SparkSession, dir: String): DataFrame = synchronized {
-    val cellsDir = graft.ScenarioDirs.fresh("graft_kvspjc", lastSpjCells)
-    val rollDir = graft.ScenarioDirs.fresh("graft_kvspjr", lastSpjRoll)
-    lastSpjCells = Some(cellsDir)
-    lastSpjRoll = Some(rollDir)
+    val cellsDir = graft.ScenarioDirs.fresh("graft_kvspjc")
+    val rollDir = graft.ScenarioDirs.fresh("graft_kvspjr")
     val store = eventStore(s, dir)
     graft.sources.kvconnector.KVSegmentStore.writeBucketed(
       store, cellsDir.toString, numBuckets = 8)
@@ -633,9 +595,6 @@ object KVQueries {
     }
   }
 
-  // previous kv_runtime_prune segment dir (same sweep lifecycle)
-  private var lastRtSegDir: Option[java.nio.file.Path] = None
-
   /** kv_runtime_prune: runtime (join-key) segment pruning through the
     * DSv2 connector (r11 verdict #4) — the star-join shape: the event
     * store read via graft-kv with NO static key predicate, equi-joined
@@ -649,8 +608,7 @@ object KVQueries {
     * hash-gated cell for cell; KVRuntimeFilterSpec asserts the
     * scheduled-segment drop itself. */
   def kvRuntimePrune(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegr", lastRtSegDir)
-    lastRtSegDir = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvsegr")
     graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 16)
     val cells = s.read.format("graft-kv").load(seg.toString)
     val totals = Tables(s, dir, "events")
@@ -667,17 +625,13 @@ object KVQueries {
       .localCheckpoint(true)
   }
 
-  // previous kv_topn segment dir (same sweep lifecycle)
-  private var lastTopnSegDir: Option[java.nio.file.Path] = None
-
   /** kv_topn: the smallest 100 cells of the whole store in (k, c) order
     * through the DSv2 connector's TopN PUSHDOWN — `ORDER BY k, c LIMIT
     * 100` rides the (k, c)-sorted segment layout (each reader returns
     * its first 100 rows, Spark merges: the read-in-order optimization),
     * so the scan decodes ≤ 100 rows per segment at any store size. */
   def kvTopn(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegt", lastTopnSegDir)
-    lastTopnSegDir = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvsegt")
     graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
     decoded(s.read.format("graft-kv").load(seg.toString)
         .orderBy(F.col("k").asc, F.col("c").asc).limit(100))
@@ -691,9 +645,6 @@ object KVQueries {
       |ORDER BY user_id ASC, epoch_us(ts) ASC, event_id ASC
       |LIMIT 100""".stripMargin
 
-  // previous kv_topn_zorder store dir (same sweep lifecycle)
-  private var lastTopnZoDir: Option[java.nio.file.Path] = None
-
   /** kv_topn_zorder: kv_topn's ordered read OVER THE Z-ORDER LAYOUT
     * (r10 verdict #6) — `ORDER BY k, c LIMIT 100` against a store whose
     * segments are Morton curve runs. Segment membership follows the
@@ -705,8 +656,7 @@ object KVQueries {
     * pushed read-in-order on both (KVZOrderSpec asserts the push and
     * the per-segment decode bound). */
   def kvTopnZorder(s: SparkSession, dir: String): DataFrame = synchronized {
-    val zo = graft.ScenarioDirs.fresh("graft_kvsegtz", lastTopnZoDir)
-    lastTopnZoDir = Some(zo)
+    val zo = graft.ScenarioDirs.fresh("graft_kvsegtz")
     val ev = Tables(s, dir, "events")
     graft.sources.kvconnector.KVZOrder.write(
       ev.select(
@@ -722,9 +672,6 @@ object KVQueries {
       .localCheckpoint(true)
   }
 
-  // previous kv_dsv2_write segment dir (same sweep lifecycle)
-  private var lastWriteSegDir: Option[java.nio.file.Path] = None
-
   /** kv_dsv2_write: the kv_slice scenario with the store persisted
     * through the connector's DSv2 WRITE path
     * (`df.write.format("graft-kv")` — RequiresDistributionAndOrdering
@@ -733,8 +680,7 @@ object KVQueries {
     * same manifest-pruned DSv2 read. Shares kv_slice's oracle: the write
     * protocol is hash-gated end to end. */
   def kvDsv2Write(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegw", lastWriteSegDir)
-    lastWriteSegDir = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvsegw")
     eventStore(s, dir).write.format("graft-kv")
       .option("segments", 8).mode("overwrite").save(seg.toString)
     val store = s.read.format("graft-kv").load(seg.toString)
@@ -744,8 +690,6 @@ object KVQueries {
       colBound("2024-01-10 00:00:00"), colBound("2024-01-20 00:00:00"), 50))
       .localCheckpoint(true)
   }
-
-  private var lastBloomDir: Option[java.nio.file.Path] = None
 
   /** kv_bloom_skip: the per-segment key BLOOM skip index end-to-end
     * under the HASH GATE — the store holds only EVEN user ids, and a
@@ -757,8 +701,7 @@ object KVQueries {
     * skipped at PLAN time (KVBloomSpec asserts kept.isEmpty on the
     * same shape). */
   def kvBloomSkip(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvbloom", lastBloomDir)
-    lastBloomDir = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_kvbloom")
     graft.sources.kvconnector.KVSegmentStore.write(
       Tables(s, dir, "events")
         .filter(F.pmod(F.col("user_id"), F.lit(2L)) === 0L)
@@ -777,9 +720,6 @@ object KVQueries {
       .localCheckpoint(true)
   }
 
-  private var lastZLinDir: Option[java.nio.file.Path] = None
-  private var lastZOrdDir: Option[java.nio.file.Path] = None
-
   /** kv_zorder: the Z-ORDER segment layout end-to-end under the HASH
     * GATE (r9 verdict #5) — the SAME event rows written twice through
     * the DSv2 writer, linear (range-by-k, the MergeTree ORDER BY (k,c))
@@ -793,10 +733,8 @@ object KVQueries {
     * thirty days so the time predicate prunes nothing, while zorder's
     * rectangles cut both ways. */
   def kvZorder(s: SparkSession, dir: String): DataFrame = synchronized {
-    val lin = graft.ScenarioDirs.fresh("graft_kvzlin", lastZLinDir)
-    lastZLinDir = Some(lin)
-    val zo = graft.ScenarioDirs.fresh("graft_kvzord", lastZOrdDir)
-    lastZOrdDir = Some(zo)
+    val lin = graft.ScenarioDirs.fresh("graft_kvzlin")
+    val zo = graft.ScenarioDirs.fresh("graft_kvzord")
     val ev = Tables(s, dir, "events")
     eventStore(s, dir).write.format("graft-kv")
       .option("segments", 16).mode("overwrite").save(lin.toString)

@@ -83,40 +83,50 @@ final class KVStoreManager(spark: SparkSession, warehouseDir: String,
   private val lockFile = new Path(warehouseDir, "__graft_lease")
   private val owner = java.util.UUID.randomUUID().toString
 
-  /** Create-then-verify lease acquisition. Plain create(overwrite=false)
-    * is atomic on HDFS but only check-then-act on some FileSystems, so
-    * after writing the lease is read BACK: whoever's owner survives holds
-    * it, the loser retries — a CAS approximation that needs nothing
-    * beyond the FileSystem API. */
-  private def acquireLease(): Unit = {
+  /** Lease acquisition by atomic exclusive create: whoever creates the
+    * lock file holds the lease. On `file:` that is an O_EXCL create
+    * (Hadoop's local create(overwrite = false) checks, then truncates,
+    * so a writer that checked before another created would wipe the
+    * other's lease); elsewhere it is create(overwrite = false), which
+    * HDFS makes atomic. */
+  private[kv] def acquireLease(): Unit = {
     val deadline = System.currentTimeMillis() + acquireTimeoutMs
-    var held = false
-    while (!held) {
-      val wrote =
-        try {
-          val out = fs.create(lockFile, false)
-          out.writeUTF(owner)
-          out.writeLong(System.currentTimeMillis())
-          out.close()
-          true
-        } catch { case _: java.io.IOException => false }
-      if (wrote) held = try readLeaseOwner().contains(owner)
-                        catch { case _: java.io.IOException => false }
-      if (!held) {
-        // stale lease (crashed holder): take over once it exceeds the
-        // timeout — owner+epoch in the file make the takeover auditable
-        try {
-          val st = fs.getFileStatus(lockFile)
-          if (System.currentTimeMillis() - st.getModificationTime > leaseTimeoutMs)
-            fs.delete(lockFile, false)
-        } catch { case _: java.io.IOException => () }
-        if (System.currentTimeMillis() > deadline)
-          throw new IllegalStateException(
-            s"could not acquire warehouse lease $lockFile within ${acquireTimeoutMs}ms " +
-              s"(holder: ${try readLeaseOwner() catch { case _: Throwable => None }})")
-        Thread.sleep(50)
-      }
+    while (!createLease()) {
+      // stale lease (crashed holder): take over once it exceeds the
+      // timeout — owner+epoch in the file make the takeover auditable
+      try {
+        val st = fs.getFileStatus(lockFile)
+        if (System.currentTimeMillis() - st.getModificationTime > leaseTimeoutMs)
+          fs.delete(lockFile, false)
+      } catch { case _: java.io.IOException => () }
+      if (System.currentTimeMillis() > deadline)
+        throw new IllegalStateException(
+          s"could not acquire warehouse lease $lockFile within ${acquireTimeoutMs}ms " +
+            s"(holder: ${try readLeaseOwner() catch { case _: Throwable => None }})")
+      Thread.sleep(50)
     }
+  }
+
+  /** Create the lock file holding owner + epoch; false when it exists. */
+  private def createLease(): Boolean = {
+    val out =
+      try fs match {
+        case l: org.apache.hadoop.fs.LocalFileSystem => exclusive(l.pathToFile(lockFile))
+        case r: org.apache.hadoop.fs.RawLocalFileSystem => exclusive(r.pathToFile(lockFile))
+        case _ => fs.create(lockFile, false)
+      } catch { case _: java.io.IOException => return false }
+    val data = new java.io.DataOutputStream(out)
+    try {
+      data.writeUTF(owner)
+      data.writeLong(System.currentTimeMillis())
+    } finally data.close()
+    true
+  }
+
+  private def exclusive(f: java.io.File): java.io.OutputStream = {
+    java.nio.file.Files.createDirectories(f.toPath.getParent)
+    java.nio.file.Files.newOutputStream(f.toPath, java.nio.file.StandardOpenOption.CREATE_NEW,
+      java.nio.file.StandardOpenOption.WRITE)
   }
 
   private def readLeaseOwner(): Option[String] =
@@ -126,7 +136,7 @@ final class KVStoreManager(spark: SparkSession, warehouseDir: String,
       try Some(in.readUTF()) finally in.close()
     }
 
-  private def releaseLease(): Unit =
+  private[kv] def releaseLease(): Unit =
     try if (readLeaseOwner().contains(owner)) fs.delete(lockFile, false)
     catch { case _: java.io.IOException => () }
 

@@ -126,6 +126,28 @@ object KVStreamSink {
         (F.col("op") === 0).as("is_delete"))
   }
 
+  /** A graft-kv-log CDC micro-batch as applyBatchDelta's mutations. A
+    * batch read from one log seq passes through: the replica's
+    * merge-on-read applies the same same-seq resolution (op desc:
+    * addition beats deletion), with no rank window. Any other batch
+    * goes through [[foldCdc]]. The seqs come from the batch's planned
+    * input partitions, so deciding runs no job. */
+  def cdcMutations(batch: DataFrame): DataFrame =
+    if (plannedSeqs(batch.queryExecution.toRdd).size == 1)
+      batch.select(F.col("k"), F.col("c"), F.col("v"),
+        (F.col("op") === 0).as("is_delete"))
+    else foldCdc(batch)
+
+  /** The log seqs of the graft-kv-log input partitions in `rdd`'s lineage. */
+  private def plannedSeqs(rdd: org.apache.spark.rdd.RDD[_]): Set[Long] =
+    rdd.partitions.iterator.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+        p.inputPartitions.collect {
+          case l: graft.sources.kvconnector.KVLogFilePartition => l.seq
+        }
+      case _ => Nil
+    }.toSet ++ rdd.dependencies.flatMap(d => plannedSeqs(d.rdd))
+
   private def hwmFile(warehouseDir: String, name: String): String =
     GraftFs.child(GraftFs.child(warehouseDir, name), "_stream_hwm")
 

@@ -81,8 +81,6 @@ object OlapBizQueries {
           F.expr("(cast(cum as decimal(38,0)) * 1000000) div total_c"))).as("top10_ppm"))
   }
 
-  private var lastParetoDir: Option[java.nio.file.Path] = None
-
   /** q_pareto_inc: the SAME concentration answer, but the per-customer
     * revenue state is MAINTAINED incrementally (ParetoSink) instead of
     * recomputed — orders arrive as three micro-batches (one replayed to
@@ -91,8 +89,7 @@ object OlapBizQueries {
     * two-level concentrate over the snapshot. Gated under q_pareto's own
     * batch oracle: maintained state must equal the batch groupBy. */
   def qParetoInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_pareto", lastParetoDir)
-    lastParetoDir = Some(snap)
+    val snap = graft.ScenarioDirs.fresh("graft_pareto")
     val o = Tables(s, dir, "orders").select("o_custkey", "o_totalprice")
     val b0 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 0L)
     val b1 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 1L)
@@ -253,8 +250,6 @@ object OlapBizQueries {
       |FROM paths GROUP BY 1
       |ORDER BY n_sess DESC, path ASC LIMIT 20""".stripMargin
 
-  private var lastJourneyDir: Option[java.nio.file.Path] = None
-
   /** q_journey_inc: the SAME top-20 journeys, but MAINTAINED by the
     * JourneyStream.applyBatch → TopKSink composition instead of
     * recomputed — events replayed as three TIME-SPLIT batches (so
@@ -268,8 +263,7 @@ object OlapBizQueries {
     * ≤ 155 distinct paths ≪ the 512 sketch capacity, so Misra-Gries is
     * in its exact regime). */
   def qJourneyInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_journey", lastJourneyDir)
-    lastJourneyDir = Some(snap)
+    val snap = graft.ScenarioDirs.fresh("graft_journey")
     val jDir = snap.resolve("journey").toString
     val tDir = snap.resolve("topk").toString
     val ev = Tables(s, dir, "events")

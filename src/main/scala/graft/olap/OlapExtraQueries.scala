@@ -873,8 +873,6 @@ object OlapExtraQueries {
       .groupBy("level").agg(F.count(F.lit(1)).as("n_sessions"))
   }
 
-  private var lastFunnelDir: Option[java.nio.file.Path] = None
-
   /** q_session_funnel_inc: the SAME per-level session histogram, but
     * MAINTAINED by SessionFunnelStream.applyBatch (watermark-buffered
     * close rule, durable per-level counts, open-buffer tail folded at
@@ -883,8 +881,7 @@ object OlapExtraQueries {
     * the final batch (the q_journey_inc scenario exactly). Gated under
     * q_session_funnel's own batch oracle. */
   def qSessionFunnelInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_funnel", lastFunnelDir)
-    lastFunnelDir = Some(snap)
+    val snap = graft.ScenarioDirs.fresh("graft_funnel")
     val fDir = snap.resolve("funnel").toString
     val ev = Tables(s, dir, "events")
       .select("user_id", "ts", "event_id", "event_type")

@@ -1026,11 +1026,6 @@ object OlapSeriesQueries {
       | CAST(wau AS BIGINT) AS wau, CAST(mau AS BIGINT) AS mau
       |FROM dau JOIN wau ON wau.d = dau.d JOIN mau ON mau.d = dau.d""".stripMargin
 
-  // previous q_active_users_inc snapshot dir (swept on next invocation —
-  // the kv-entry lifecycle discipline)
-  private var lastAuDir: Option[java.nio.file.Path] = None
-  private var lastCohortDir: Option[java.nio.file.Path] = None
-
   /** q_cohort_inc: the cohort-retention matrix MAINTAINED incrementally —
     * the SAME per-day Roaring-bitmap state ActiveUsersSink already keeps
     * for DAU/WAU/MAU serves the retention read too (no second
@@ -1039,8 +1034,7 @@ object OlapSeriesQueries {
     * cell one AND-cardinality. Gated under q_cohort_matrix's batch
     * oracle with time-split batches + a replayed batch. */
   def qCohortInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_cohort", lastCohortDir)
-    lastCohortDir = Some(snap)
+    val snap = graft.ScenarioDirs.fresh("graft_cohort")
     val ev = Tables(s, dir, "events").select("user_id", "ts")
     val Array(lo, hi) = ev.stat.approxQuantile("user_id", Array(0.33, 0.66), 0.0)
     val b0 = ev.filter(F.col("user_id") <= lo)
@@ -1062,8 +1056,7 @@ object OlapSeriesQueries {
     * maintenance path and the batch explode path must agree count for
     * count. */
   def qActiveUsersInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_ausnap", lastAuDir)
-    lastAuDir = Some(snap)
+    val snap = graft.ScenarioDirs.fresh("graft_ausnap")
     val ev = Tables(s, dir, "events").select("user_id", "ts")
     val Array(lo, hi) = ev.stat.approxQuantile("user_id", Array(0.33, 0.66), 0.0)
     val b0 = ev.filter(F.col("user_id") <= lo)
@@ -1465,10 +1458,6 @@ object OlapSeriesQueries {
       | CAST(SUM((1000000 * abs(vc - pred)) // greatest(abs(vc), 1)) AS BIGINT) AS sape6
       |FROM p WHERE pred IS NOT NULL GROUP BY 1""".stripMargin
 
-  // previous q_markov_inc snapshot dir (same sweep lifecycle as
-  // q_active_users_inc)
-  private var lastMkDir: Option[java.nio.file.Path] = None
-
   /** q_markov_inc: the transition matrix MAINTAINED incrementally
     * (MarkovSink) and gated under q_markov's own batch oracle — events
     * replayed as three TIME-SPLIT batches (so per-user sequences SPAN
@@ -1480,8 +1469,7 @@ object OlapSeriesQueries {
     * which pins the watermark drop semantics under the hash gate, not
     * just in MarkovSinkSpec. */
   def qMarkovInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_mksnap", lastMkDir)
-    lastMkDir = Some(snap)
+    val snap = graft.ScenarioDirs.fresh("graft_mksnap")
     val ev = Tables(s, dir, "events")
       .select("user_id", "ts", "event_id", "event_type")
     val Array(lo, hi, top) = ev.select(F.unix_micros(F.col("ts")).as("tu"))

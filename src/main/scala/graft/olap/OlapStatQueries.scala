@@ -552,7 +552,7 @@ object OlapStatQueries {
       |       / CAST(n * least(nr - 1, nc - 1) AS DOUBLE)) AS v
       |FROM agg""".stripMargin
 
-  /** q_theta_sketch: the q_bitmap audience analysis through KMV theta
+  /** q_theta_sketch: the q_bitmap audience analysis through theta
     * sketches (ClickHouse uniqTheta / DataSketches family), ORACLE-
     * BACKED since r10 (r9 verdict #2) on the slice q_theta_sketch_err
     * does NOT cover — the set DIFFERENCE |A \ purchase| (est(A) −
@@ -560,9 +560,9 @@ object OlapStatQueries {
     * audience and difference counts ride the oracle hash, ok_est gates
     * the audience estimate at 3σ (20%) and ok_diff gates the difference
     * at the compounded bound 20%·|A| + 30%·|A ∪ P| (difference error ≤
-    * estimate error + intersection error; KMV K=256 → rsd ≈ 6.3%, and
-    * the k-smallest-hashes state is order- and partition-invariant so
-    * the flags are stable). Below-capacity groups are exact by
+    * estimate error + intersection error; K=256 → rse ≈ 6.3%, and
+    * the sketch state is order- and partition-invariant so the flags
+    * are stable). Below-capacity groups are exact by
     * construction. */
   def qThetaSketch(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.ThetaSketch
@@ -615,9 +615,9 @@ object OlapStatQueries {
       | CAST(1 AS BIGINT) AS ok_est, CAST(1 AS BIGINT) AS ok_diff
       |FROM a JOIN u ON u.event_type = a.event_type""".stripMargin
 
-  /** q_theta_sketch_err: the KMV path under the HASH GATE — per type,
+  /** q_theta_sketch_err: the theta path under the HASH GATE — per type,
     * ok flags for the audience estimate and the union-with-purchase
-    * estimate vs their exact twins (KMV K=256 → rsd 1/√(K−1) ≈ 6.3%;
+    * estimate vs their exact twins (K=256 → rse ≈ 1/√K ≈ 6.3%;
     * gate at 20% ≈ 3σ; below-capacity groups are exact so their flag is
     * trivially true), and an intersection flag at the looser
     * |est − exact| ≤ 30% of the exact UNION (inclusion-exclusion

@@ -1,241 +1,41 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.graftbridge.GraftSqlBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{functions => F}
 
-/** KMV (k-minimum-values) theta sketch — the ClickHouse
-  * `uniqTheta`/DataSketches family: a mergeable distinct-count sketch
-  * whose state is the k SMALLEST hash values seen (k·8 bytes however
-  * many distinct ids pass through), supporting not just cardinality
-  * estimation but SET ALGEBRA over sketches (union / intersection
-  * estimates) — the piece HLL (q_approx_distinct) cannot do and the
-  * exact Roaring path (q_bitmap) does at O(distinct) state.
+/** Theta sketches — the ClickHouse `uniqTheta`/DataSketches family: a
+  * mergeable distinct-count sketch with bounded state that also supports
+  * SET ALGEBRA over sketches (union / intersection estimates) — the piece
+  * HLL (q_approx_distinct) cannot do and the exact Roaring path
+  * (q_bitmap) does at O(distinct) state.
   *
   * Where it sits in the family: exact bitmap (small domains) →
   * uniqUpTo (bounded questions) → HLL (cardinality only) → theta
-  * (cardinality + set ops, provable error ~1/√k).
+  * (cardinality + set ops, error ~1/√k).
   *
-  * Determinism: the state is a well-defined SET (the k smallest of a
-  * deterministic per-id scramble), so partial aggregation, partition
-  * order and merge order cannot change it — unlike sampling sketches
-  * keyed on arrival order. The estimator is the standard unbiased KMV
-  * (k−1)/U(k) with U(k) the k-th smallest hash as a fraction of the
-  * hash space; values below k distinct are EXACT (the set holds all of
-  * them).
-  *
-  * State is a sorted long array in UNSIGNED hash order (stored
-  * sign-flipped so signed order == unsigned order), bounded at k.
+  * Spark ships the family as built-ins (`theta_sketch_agg`,
+  * `theta_sketch_estimate`, `theta_union`, `theta_intersection`, all
+  * callable from SQL too); these helpers keep graft's capacity-`k`
+  * signatures over them. A sketch holds all of its ids below `k`
+  * distinct, so estimates there are exact, and its state does not
+  * depend on partitioning or merge order.
   */
 object ThetaSketch {
-  /** splitmix64 finalizer — the per-id scramble (full-avalanche,
-    * deterministic across engines/sessions; never rand()). */
-  def mix(v: Long): Long = {
-    var z = v + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
+
+  /** Spark's `lgNomEntries` for graft's capacity `k` (a power of two). */
+  private def lg(k: Int): Int = {
+    require(k > 0 && Integer.bitCount(k) == 1, s"theta sketch capacity must be a power of two, got $k")
+    Integer.numberOfTrailingZeros(k)
   }
 
-  /** Buffer: sorted (signed order over flipped hashes = unsigned over
-    * raw), distinct, size ≤ k. */
-  type Buf = java.util.TreeSet[java.lang.Long]
+  /** Sketch-building aggregate over ids → serialized sketch. */
+  def agg(ids: Column, k: Int): Column = F.theta_sketch_agg(ids, lg(k))
 
-  def newBuf(): Buf = new java.util.TreeSet[java.lang.Long]()
-
-  def insert(buf: Buf, k: Int, flipped: Long): Unit = {
-    if (buf.size < k) buf.add(flipped): Unit
-    else if (flipped < buf.last()) {
-      buf.add(flipped): Unit
-      while (buf.size > k) buf.pollLast(): Unit
-    }
-  }
-
-  def serialize(buf: Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.forEach(v => out.writeLong(v))
-    out.flush()
-    bos.toByteArray
-  }
-
-  def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = newBuf()
-    val n = in.readInt()
-    var i = 0
-    while (i < n) { buf.add(in.readLong()): Unit; i += 1 }
-    buf
-  }
-
-  /** KMV estimate for a sketch built with capacity `k`. Exact below k;
-    * else (k−1)/U(k), U(k) = (kth smallest + 2⁶³ + 1) / 2⁶⁴ over the
-    * unsigned hash space. Rounded to a BIGINT estimate. */
-  def estimate(buf: Buf, k: Int): Long =
-    if (buf.size < k) buf.size.toLong
-    else {
-      // flipped kth value back to unsigned position in [1, 2^64]
-      val u = (buf.last().toDouble + 9.223372036854776e18 + 1.0) / 1.8446744073709552e19
-      math.rint((k - 1).toDouble / u).toLong
-    }
-
-  /** Union: merge both states, trim to k (the union sketch is exactly
-    * the sketch of the concatenated streams — KMV is closed under
-    * union). */
-  def union(a: Buf, b: Buf, k: Int): Buf = {
-    val out = newBuf()
-    out.addAll(a): Unit
-    b.forEach(v => insert(out, k, v))
-    while (out.size > k) out.pollLast(): Unit
-    out
-  }
-
-  /** Intersection estimate: θ = min of the two kth values; count common
-    * hashes below θ; estimate = |common<θ| / θ-fraction. Exact when both
-    * sides are below capacity (sketches ARE the sets). */
-  def intersectEstimate(a: Buf, b: Buf, k: Int): Long = {
-    if (a.size < k && b.size < k) {
-      val c = newBuf(); c.addAll(a): Unit; c.retainAll(b): Unit
-      return c.size.toLong
-    }
-    val thetaA = if (a.size < k) java.lang.Long.MAX_VALUE else a.last().longValue()
-    val thetaB = if (b.size < k) java.lang.Long.MAX_VALUE else b.last().longValue()
-    val theta = math.min(thetaA, thetaB)
-    var common = 0L
-    val it = a.iterator()
-    while (it.hasNext) {
-      val v = it.next()
-      if (v < theta && b.contains(v)) common += 1
-    }
-    val uf = (theta.toDouble + 9.223372036854776e18 + 1.0) / 1.8446744073709552e19
-    math.rint(common.toDouble / uf).toLong
-  }
-
-  /** Sketch-building aggregate over BIGINT ids → serialized sketch. */
-  def agg(ids: Column, k: Int): Column =
-    GraftSqlBridge.column(
-      ThetaSketchAgg(GraftSqlBridge.expression(ids), k).toAggregateExpression())
-
-  def estimateCol(sketch: Column, k: Int): Column =
-    GraftSqlBridge.column(ThetaEstimate(GraftSqlBridge.expression(sketch), k))
+  def estimateCol(sketch: Column, k: Int): Column = F.theta_sketch_estimate(sketch)
 
   def unionEstimateCol(a: Column, b: Column, k: Int): Column =
-    GraftSqlBridge.column(
-      ThetaUnionEstimate(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b), k))
+    F.theta_sketch_estimate(F.theta_union(a, b, lg(k)))
 
   def intersectEstimateCol(a: Column, b: Column, k: Int): Column =
-    GraftSqlBridge.column(
-      ThetaIntersectEstimate(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b), k))
-}
-
-case class ThetaSketchAgg(
-    child: Expression,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaSketch.Buf] {
-
-  require(k >= 16, "theta sketch capacity must be >= 16")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"theta_sketch requires BIGINT ids, got ${child.dataType.catalogString}")
-
-  override def createAggregationBuffer(): ThetaSketch.Buf = ThetaSketch.newBuf()
-
-  override def update(buf: ThetaSketch.Buf, input: InternalRow): ThetaSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null)
-      ThetaSketch.insert(buf, k, ThetaSketch.mix(v.asInstanceOf[Long]) ^ Long.MinValue)
-    buf
-  }
-
-  override def merge(buf: ThetaSketch.Buf, other: ThetaSketch.Buf): ThetaSketch.Buf =
-    ThetaSketch.union(buf, other, k)
-
-  override def eval(buf: ThetaSketch.Buf): Any = ThetaSketch.serialize(buf)
-
-  override def serialize(buf: ThetaSketch.Buf): Array[Byte] = ThetaSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): ThetaSketch.Buf = ThetaSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
-  override def prettyName: String = s"theta_sketch($k)"
-}
-
-/** Cardinality estimate of a serialized theta sketch (post-aggregation
-  * scalar — rows here are group-level, never fact-stream-level). */
-case class ThetaEstimate(child: Expression, k: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"theta_estimate requires a serialized sketch (BINARY), got ${child.dataType.catalogString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    ThetaSketch.estimate(ThetaSketch.deserialize(input.asInstanceOf[Array[Byte]]), k)
-
-  override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
-    copy(child = newChild)
-  override def prettyName: String = "theta_estimate"
-}
-
-/** Union-cardinality estimate of two serialized theta sketches. */
-case class ThetaUnionEstimate(left: Expression, right: Expression, k: Int)
-  extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_union_estimate requires two BINARY sketches")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ThetaSketch.estimate(
-      ThetaSketch.union(
-        ThetaSketch.deserialize(a.asInstanceOf[Array[Byte]]),
-        ThetaSketch.deserialize(b.asInstanceOf[Array[Byte]]), k), k)
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "theta_union_estimate"
-}
-
-/** Intersection-cardinality estimate of two serialized theta sketches. */
-case class ThetaIntersectEstimate(left: Expression, right: Expression, k: Int)
-  extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("theta_intersect_estimate requires two BINARY sketches")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ThetaSketch.intersectEstimate(
-      ThetaSketch.deserialize(a.asInstanceOf[Array[Byte]]),
-      ThetaSketch.deserialize(b.asInstanceOf[Array[Byte]]), k)
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "theta_intersect_estimate"
+    F.theta_sketch_estimate(F.theta_intersection(a, b))
 }

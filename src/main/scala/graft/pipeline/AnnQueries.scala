@@ -1257,8 +1257,6 @@ object AnnQueries {
   def sAnnPqChecked(s: SparkSession, dir: String): DataFrame =
     annPerQuery(sAnnPq(s, dir), sAnnTopk(s, dir), PqPerQueryMinHits)
 
-  private[pipeline] var lastIvfSeg: Option[java.nio.file.Path] = None
-
   /** s_ann_ivf_kv: the INVERTED FILE PERSISTED IN THE KV STORE — the
     * ANN twin of the g_kv_* composition (how a FAISS/DiskANN-style
     * index lives on a disaggregated KV layer): k = centroid id,
@@ -1275,8 +1273,7 @@ object AnnQueries {
     * scheduled fewer segments than the store holds). */
   def sAnnIvfKv(s: SparkSession, dir: String): DataFrame = synchronized {
     import graft.kv.KVStore.{decLong, encLong}
-    val seg = graft.ScenarioDirs.fresh("graft_ivfkv", lastIvfSeg)
-    lastIvfSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_ivfkv")
     val e = withNorm(Tables(s, dir, "embeddings")).localCheckpoint()
     val cents = ivfCentroids(e)
     val postings = e.select(
@@ -1311,8 +1308,6 @@ object AnnQueries {
   def sAnnIvfKvChecked(s: SparkSession, dir: String): DataFrame =
     annPerQuery(sAnnIvfKv(s, dir), sAnnTopk(s, dir), IvfPerQueryMinHits)
 
-  private[pipeline] var lastPqKvSeg: Option[java.nio.file.Path] = None
-
   /** s_ann_pq_kv: PQ CODES IN THE KV VALUE — the DiskANN/IVFADC shape
     * on a disaggregated KV layer (r12 verdict #4 closed s_ann_ivf_kv's
     * one gap: its postings stored EMPTY values and joined back to the
@@ -1332,8 +1327,7 @@ object AnnQueries {
   def sAnnPqKv(s: SparkSession, dir: String): DataFrame = synchronized {
     import graft.kv.KVStore.{decLong, encLong}
     import org.apache.spark.sql.types.DecimalType
-    val seg = graft.ScenarioDirs.fresh("graft_pqkv", lastPqKvSeg)
-    lastPqKvSeg = Some(seg)
+    val seg = graft.ScenarioDirs.fresh("graft_pqkv")
     val e = withNorm(Tables(s, dir, "embeddings")).localCheckpoint()
     val cents = ivfCentroids(e)
     val books = pqBooks(e)

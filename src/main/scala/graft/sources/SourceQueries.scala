@@ -20,14 +20,10 @@ import graft.Tables.{dec2, out2}
 object SourceQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  // this JVM's previous roundtrip dir — swept on the next call, after the
-  // returned (eagerly materialized) DataFrame no longer needs it
-  private var lastDir: Option[java.nio.file.Path] = None
-
   private def roundtrip(s: SparkSession, dir: String,
                         fmt: TableSource.Format): DataFrame = synchronized {
-    val tmp = graft.ScenarioDirs.fresh(s"graft_${fmt.name}", lastDir)
-    lastDir = Some(tmp)
+    // one tag for every roundtrip and qPartitionPrune: one live dir
+    val tmp = graft.ScenarioDirs.fresh("graft_src")
     val subset = Tables(s, dir, "lineitem")
       .filter(F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
       .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
@@ -64,8 +60,7 @@ object SourceQueries {
     * Oracle = the same filter+aggregate straight off the unpartitioned
     * table: pruning must be result-invisible. */
   def qPartitionPrune(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tmp = graft.ScenarioDirs.fresh("graft_part", lastDir)
-    lastDir = Some(tmp)
+    val tmp = graft.ScenarioDirs.fresh("graft_src")
     Tables(s, dir, "lineitem")
       .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
       .write.partitionBy("l_returnflag").parquet(s"$tmp/li")
@@ -99,9 +94,6 @@ object SourceQueries {
       |WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
       |GROUP BY 1""".stripMargin
 
-  // previous q_state_merge dir — same sweep discipline as roundtrip()
-  private var lastStateDir: Option[java.nio.file.Path] = None
-
   /** q_state_merge: the ClickHouse -State/-Merge combinator pattern as a
     * BATCH rollup (AggregatingMergeTree / materialized-view analogue,
     * the batch twin of the streaming RollupSink): per-(type, day)
@@ -112,8 +104,7 @@ object SourceQueries {
     * pattern that lets a 100 TB daily pipeline maintain pre-aggregated
     * state and serve final aggregates from state-sized scans. */
   def qStateMerge(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tmp = graft.ScenarioDirs.fresh("graft_state", lastStateDir)
-    lastStateDir = Some(tmp)
+    val tmp = graft.ScenarioDirs.fresh("graft_state")
     val partials = Tables(s, dir, "events")
       .select(F.col("event_type"),
         F.expr("unix_micros(ts) div 86400000000").as("d"),

@@ -242,14 +242,14 @@ object EventStream {
         F.col("p.term").cast("long").as("user_id"), F.col("p.cnt").as("n_events"))
   }
 
-  /** Streaming windowed distinct users via the KMV theta sketch
+  /** Streaming windowed distinct users via the theta sketch
     * (graft.operators.ThetaSketch) — the third point on the streaming
     * distinct-count curve: HLL (tumblingApproxUsers — cardinality only),
     * Roaring (tumblingExactUsers — exact, state ∝ compressed id set),
-    * theta (THIS — k·8-byte state per window AND downstream set algebra
+    * theta (THIS — O(k) state per window AND downstream set algebra
     * over the emitted sketches: window-over-window overlap is one
-    * intersect_estimate on the sink table). Exact below k distinct
-    * per window, deterministic always (k-smallest-hash state). */
+    * `theta_intersection` on the sink table). Exact below k distinct
+    * per window. */
   def tumblingThetaUsers(events: DataFrame, k: Int = 256): DataFrame =
     events
       .withWatermark("ts", "30 minutes")

@@ -186,9 +186,12 @@ object JourneyStream {
     * (journey alphabets are ≤ |types|+|types|²+|types|³). */
   def readTop(spark: SparkSession, dir: String, topkDir: String,
               k: Int = 20): DataFrame = {
-    val closed = TopKSink.read(spark, topkDir)
+    val journey = VersionedState(dir, "journey").latest(spark)
+    // batch b's top-k fold lands before journey_v<b>'s marker: read the
+    // top-k at the journey's version, never past it (retention keeps it)
+    val closed = TopKSink.read(spark, topkDir, journey.fold(-1L)(_.id))
       .select(F.col("term").as("path"), F.col("w").as("n_sess"))
-    val tail = VersionedState(dir, "journey").latest(spark) match {
+    val tail = journey match {
       case Some(p) =>
         val buf = spark.read.schema(bufSchema).parquet(p.table("buf"))
         pathsOf(SessionFold.sessionized(buf))

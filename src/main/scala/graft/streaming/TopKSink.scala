@@ -54,8 +54,12 @@ object TopKSink {
         .globalWeighted(incoming.unionByName(prev), F.col("term"), F.col("w"), capacity)
     }
 
-  /** The current heavy-hitter list: (rnk, term, w) by weight DESC. */
-  def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    VersionedState(dir, "topk").latest(spark)
-      .fold(spark.emptyDataFrame)(p => spark.read.schema(snapSchema).parquet(p.path))
+  /** The current heavy-hitter list: (rnk, term, w) by weight DESC, at
+    * the latest complete version with id ≤ `upTo` (empty when none). */
+  def read(spark: org.apache.spark.sql.SparkSession, dir: String,
+           upTo: Long = Long.MaxValue): DataFrame =
+    VersionedState(dir, "topk").complete(spark.sparkContext.hadoopConfiguration, upTo)
+      .lastOption.fold(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapSchema))(
+        p => spark.read.schema(snapSchema).parquet(p.path))
 }

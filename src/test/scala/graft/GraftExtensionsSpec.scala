@@ -40,4 +40,13 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(s2.conf.get(
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "512")
   }
+
+  test("no graft SQL function shadows a Spark built-in") {
+    // injectFunction silently replaces a built-in of the same name
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+      .listFunction().map(_.funcName).toSet
+    val ours = GraftExtensions.functions.map(_._1.funcName).toSet
+    assert(ours.nonEmpty && builtin.contains("theta_sketch_agg"))
+    assert((ours intersect builtin).isEmpty)
+  }
 }

@@ -4,6 +4,24 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.SparkSpec
 
+/** A local FileSystem under its own scheme (`leaserace://`) whose
+  * `exists` runs a one-shot hook right after it finds the lease file
+  * absent: inside a check-then-act create, that is the window between
+  * the check and the create. */
+class LeaseRaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("leaserace:///")
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean = {
+    val found = super.exists(f)
+    if (!found && f.getName == "__graft_lease")
+      Option(LeaseRaceFs.afterAbsent.getAndSet(null)).foreach(_())
+    found
+  }
+}
+
+object LeaseRaceFs {
+  val afterAbsent = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+}
+
 class KVStoreManagerSpec extends SparkSpec {
 
   private def kcv(rows: Seq[(Long, Long, Long)]) = {
@@ -96,5 +114,25 @@ class KVStoreManagerSpec extends SparkSpec {
     mgr.mutateMany(Map("s" -> ((kcv(Seq((1, 1, 10))), kcv(Nil).select("k", "c")))))
     assert(readCells(mgr, "s") == Set((1L, 1L, 10L)))
     assert(!java.nio.file.Files.exists(lock))
+  }
+
+  test("transactional mode: the lease stays exclusive when a create lands inside another's") {
+    val local = java.nio.file.Files.createTempDirectory("kvmgr_excl")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.leaserace.impl", classOf[LeaseRaceFs].getName)
+    val wh = s"leaserace://$local"
+    val a = new KVStoreManager(spark, wh, transactional = true, acquireTimeoutMs = 300L)
+    val b = new KVStoreManager(spark, wh, transactional = true, acquireTimeoutMs = 300L)
+    def takes(m: KVStoreManager): Boolean =
+      try { m.acquireLease(); true } catch { case _: IllegalStateException => false }
+    // a takes the lease the instant b's create has found it absent
+    var aHeld: Option[Boolean] = None
+    LeaseRaceFs.afterAbsent.set(() => aHeld = Some(takes(a)))
+    val bHeld = takes(b)
+    LeaseRaceFs.afterAbsent.set(null)
+    // an atomic create has no such instant: a then contends with b's lease
+    val held = Seq(aHeld.getOrElse(takes(a)), bHeld)
+    try assert(held.count(identity) == 1, s"(a, b) hold: $held")
+    finally { a.releaseLease(); b.releaseLease() }
   }
 }

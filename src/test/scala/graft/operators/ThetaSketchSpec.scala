@@ -74,10 +74,10 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("the SQL registration path matches the Column API") {
-    graft.GraftExtensions.register(spark)
     df(5, Seq((1L, 40), (2L, 9000))).createOrReplaceTempView("theta_in")
+    // lgNomEntries 8 = log2(K)
     val viaSql = spark.sql(
-      s"SELECT g, theta_estimate(theta_sketch(uid, $K), $K) AS est " +
+      "SELECT g, theta_sketch_estimate(theta_sketch_agg(uid, 8)) AS est " +
         "FROM theta_in GROUP BY g")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaApi = df(5, Seq((1L, 40), (2L, 9000))).groupBy("g")

@@ -55,7 +55,7 @@ class AnnPqKvSpec extends SparkSpec {
     // force the shared entry run, then re-issue the same IN probe
     // directly (the entry itself localCheckpoints)
     served.count()
-    val store = AnnQueries.lastPqKvSeg.get.toString
+    val store = graft.ScenarioDirs.current("graft_pqkv").get.toString
     val total = KVSegmentStore.readManifest(store).size
     val probe = spark.read.format("graft-kv").load(store)
       .filter(F.col("k").isin(Seq(graft.kv.KVStore.beLong(0L),

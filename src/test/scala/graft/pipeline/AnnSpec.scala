@@ -98,7 +98,7 @@ class AnnSpec extends SparkSpec {
     // the probe's static IN set pruned inverted-list segments at plan
     // time (the whole point: the index read never touches the store).
     // the entry localCheckpoints, so re-run the pruned read directly
-    val store = AnnQueries.lastIvfSeg.get.toString
+    val store = graft.ScenarioDirs.current("graft_ivfkv").get.toString
     val total = KVSegmentStore.readManifest(store).size
     // the SAME multi-key IN shape the entry issues (not a single ===):
     // the claim is that the NProbe probed lists prune as an IN set

@@ -135,6 +135,39 @@ class KVLogSourceSpec extends SparkSpec {
     assert(replica == primary, s"replica $replica != primary $primary")
   }
 
+  test("cdcMutations: a multi-part micro-batch folds, a one-part batch passes through") {
+    import graft.kv.KVStreamSink
+    // key 0 is added in part 1 and deleted in part 2: drained as one
+    // batch (no maxSeqsPerBatch) it must not resurrect on the replica
+    for ((perBatch, folds) <- Seq(None -> Seq(true), Some("1") -> Seq(false, false))) {
+      val wh = Files.createTempDirectory("graft_kvlog7").toString
+      val ds = new KVDeltaStore(spark, wh)
+      ds.appendMutationAt("t", 1L, cells(0, 5), noDel, wts = 8000L)
+      ds.appendMutationAt("t", 2L, noDel.withColumn("v", F.lit(null).cast("binary")),
+        cells(0, 1).select("k", "c"), wts = 9000L)
+      val folded = scala.collection.mutable.Buffer.empty[Boolean]
+      val src = spark.readStream.format("graft-kv-log")
+      val q = perBatch.fold(src)(n => src.option("maxSeqsPerBatch", n))
+        .load(s"$wh/t")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val mutations = KVStreamSink.cdcMutations(batch)
+          folded += mutations.queryExecution.analyzed.exists(
+            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window])
+          KVStreamSink.applyBatchDelta(mutations, wh, "r", batchId)
+        }
+        .option("checkpointLocation", s"$wh/rckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      assert(folded == folds, s"maxSeqsPerBatch $perBatch")
+      def be(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b).getLong
+      val replica = KVStreamSink.readDelta(spark, wh, "r").collect()
+        .map(r => be(r.getAs[Array[Byte]]("k"))).toSet
+      assert(replica == Set(1L, 2L, 3L, 4L), s"maxSeqsPerBatch $perBatch: $replica")
+    }
+  }
+
   test("startingSeq skips history for a NEW consumer; checkpoints still win") {
     val wh = Files.createTempDirectory("graft_kvlog5").toString
     val ds = new KVDeltaStore(spark, wh)

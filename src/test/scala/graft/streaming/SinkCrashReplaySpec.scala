@@ -139,6 +139,17 @@ class SinkCrashReplaySpec extends SparkSpec {
       assert(s.read(r.dir) == r.after4)
     }
   }
+
+  test("JourneyStream: a reader between batch 4's top-k fold and its journey marker reads batch 3") {
+    val s = sinks.find(_.name == "JourneyStream").get
+    val r = run(s)
+    val torn = Files.createTempDirectory("torn_JourneyStream")
+    copyTree(r.dir, torn)
+    // topk_v4 landed, journey_v4's marker did not
+    GraftFs.delete(spark.sparkContext.hadoopConfiguration,
+      Paths.get(torn.toString, "journey", "journey_v4", "_SUCCESS").toString)
+    assert(s.read(torn.toString) == r.after3)
+  }
 }
 
 object SinkCrashReplaySpec {

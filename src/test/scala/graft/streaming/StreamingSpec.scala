@@ -255,10 +255,10 @@ class StreamingSpec extends SparkSpec {
       // the emitted sketch supports downstream set algebra: hour-0 ∩ hour-3
       // audiences share exactly user 9's absence → intersect of hour-0 with
       // itself returns its own cardinality
-      val sk0 = spark.table("theta_out").collect()
-        .find(r => mins(r.getTimestamp(0)) == 0L).get.getAs[Array[Byte]]("sk")
-      val buf = graft.operators.ThetaSketch.deserialize(sk0)
-      assert(graft.operators.ThetaSketch.intersectEstimate(buf, buf, 256) == 3L)
+      val selfOverlap = spark.table("theta_out")
+        .selectExpr("window_start", "theta_sketch_estimate(theta_intersection(sk, sk))")
+        .collect().find(r => mins(r.getTimestamp(0)) == 0L).get.getLong(1)
+      assert(selfOverlap == 3L)
     } finally q.stop()
   }
 
