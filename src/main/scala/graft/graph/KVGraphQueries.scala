@@ -564,7 +564,7 @@ object KVGraphQueries {
     * ClickhouseStoreManager.java:79): KVStoreManager persists the
     * adjacency under `edgestore` and the vertex family under
     * `vertexprops`, and the property store takes the qualifier-major
-    * segment layout (KVSegmentStore.writeFamilyRanged: segments
+    * segment layout (KVSegmentStore.write's `familyranged`: segments
     * range-partition on (c, k)), so the same two pushed property
     * slices gKvVprops runs now DROP the other properties' segments at
     * plan time — KVFamilySplitSpec asserts the drop on this store and
@@ -872,7 +872,7 @@ object KVGraphQueries {
   /** g_kv_twohop_spj: the two-hop with a SHUFFLE-FREE STORE SIDE (r13
     * verdict #4 — kv_spj_join's machinery adopted by the graph
     * entries). The adjacency persists HASH-BUCKETED
-    * (KVSegmentStore.writeBucketed), its scans report
+    * (KVSegmentStore.write's `bucket` layout), its scans report
     * KeyGroupedPartitioning(bucket(8, k)) through the graftkv catalog,
     * and with the one-side-shuffle SPJ conf each hop plans as a
     * storage-partitioned join where ONLY the frontier moves: the
@@ -886,7 +886,7 @@ object KVGraphQueries {
     * Shares g_twohop's oracle hash-for-hash. */
   def gKvTwoHopSpj(s: SparkSession, dir: String): DataFrame = synchronized {
     val seg = graft.ScenarioDirs.fresh("graft_kvspjadj")
-    KVSegmentStore.writeBucketed(adjacency(s, dir), seg.toString, 8)
+    KVSegmentStore.write(adjacency(s, dir), seg.toString, 8, "bucket")
     val g = PropertyGraph(s, dir)
     // snapshot-and-restore the SPJ planning confs (kv_spj_join's
     // discipline: they alter how ANY partition-reporting DSv2 scan joins
@@ -1291,8 +1291,8 @@ object KVGraphQueries {
     val seg = graft.ScenarioDirs.fresh("graft_kvidxmseg")
     val idxSeg = graft.ScenarioDirs.fresh("graft_kvidxmidx")
     graft.Par.jobs(
-      () => KVSegmentStore.writeFamilyRanged(
-        ds.openDatabase("graph"), seg.toString, 0),
+      () => KVSegmentStore.write(
+        ds.openDatabase("graph"), seg.toString, 0, "familyranged"),
       () => KVSegmentStore.write(ds.openDatabase("gidx"), idxSeg.toString, 0))
     val idxStore = s.read.format("graft-kv").load(idxSeg.toString)
     val scalars = idxStore.agg(

@@ -544,10 +544,10 @@ object KVQueries {
   /** kv_spj_join: the STORAGE-PARTITIONED join (r11 verdict #5) —
     * kv_bucket_join's zero-exchange co-location made native to the DSv2
     * connector. Both stores persist hash-bucketed by k
-    * (KVSegmentStore.writeBucketed, 8 buckets each), the scans REPORT
-    * KeyGroupedPartitioning(bucket(8, k)) with per-segment bucket ids,
-    * and the graftkv catalog supplies the shared bucket-function
-    * identity — so the cells⋈totals equi-join plans with ZERO Exchange
+    * (KVSegmentStore.write's `bucket` layout, 8 buckets each), the
+    * scans REPORT KeyGroupedPartitioning(bucket(8, k)) with per-segment
+    * bucket ids, and the graftkv catalog supplies the shared
+    * bucket-function identity — so the cells⋈totals equi-join plans with ZERO Exchange
     * on either side (KVSpjSpec asserts the plan property; this entry
     * hash-gates the joined values against the plain SQL join). At
     * 100 TB this is the story of two co-bucketed stores joining without
@@ -556,12 +556,12 @@ object KVQueries {
     val cellsDir = graft.ScenarioDirs.fresh("graft_kvspjc")
     val rollDir = graft.ScenarioDirs.fresh("graft_kvspjr")
     val store = eventStore(s, dir)
-    graft.sources.kvconnector.KVSegmentStore.writeBucketed(
-      store, cellsDir.toString, numBuckets = 8)
+    graft.sources.kvconnector.KVSegmentStore.write(
+      store, cellsDir.toString, 8, "bucket")
     val roll = store.groupBy("k").agg(F.count(F.lit(1)).as("n"))
       .select(F.col("k"), encLong(F.lit(0L)).as("c"), encLong(F.col("n")).as("v"))
-    graft.sources.kvconnector.KVSegmentStore.writeBucketed(
-      roll, rollDir.toString, numBuckets = 8)
+    graft.sources.kvconnector.KVSegmentStore.write(
+      roll, rollDir.toString, 8, "bucket")
     // snapshot-and-restore the SPJ planning confs: they apply to the
     // whole shared session, and leaking them would silently change the
     // planning environment of every LATER entry in a run (the bucketing

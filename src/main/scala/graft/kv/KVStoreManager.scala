@@ -61,17 +61,14 @@ final class KVStoreManager(spark: SparkSession, warehouseDir: String,
     * PER-FAMILY store split composes (JanusGraph opens edgestore /
     * graphindex as SEPARATE named stores, ClickhouseStoreManager.java:79
     * — one openDatabase per family): each family lands under its own
-    * name, and `familyRanged = true` picks the qualifier-major segment
-    * layout (KVSegmentStore.writeFamilyRanged) so intra-store family/
-    * property slices drop segments too. */
+    * name, and `familyRanged = true` picks the qualifier-major
+    * `familyranged` segment layout of
+    * [[graft.sources.kvconnector.KVSegmentStore.write]] so intra-store
+    * family/property slices drop segments too. */
   def writeSegmentStore(name: String, store: DataFrame, numSegments: Int,
                         familyRanged: Boolean = false): Unit =
-    if (familyRanged)
-      graft.sources.kvconnector.KVSegmentStore.writeFamilyRanged(
-        store, path(name).toString, numSegments)
-    else
-      graft.sources.kvconnector.KVSegmentStore.write(
-        store, path(name).toString, numSegments)
+    graft.sources.kvconnector.KVSegmentStore.write(store, path(name).toString,
+      numSegments, if (familyRanged) "familyranged" else "linear")
 
   /** openDatabase through the connector: the named store read with
     * manifest/zone-map/bloom segment pruning live. */

@@ -27,9 +27,10 @@ import graft.GraftFs
   * same KVTable the format() path builds, plus the function identity
   * both join sides must share: with
   * `spark.sql.sources.v2.bucketing.enabled=true`, two bucketed stores
-  * (KVSegmentStore.writeBucketed, same bucket count) equi-join on k with
-  * ZERO Exchange on either side — the co-location kv_bucket_join proves
-  * through parquet bucketing, made native to the DSv2 path.
+  * (KVSegmentStore.write's `bucket` layout, same bucket count)
+  * equi-join on k with ZERO Exchange on either side — the co-location
+  * kv_bucket_join proves through parquet bucketing, made native to the
+  * DSv2 path.
   *
   * The catalog is deliberately read-oriented: the identifier IS the
   * store path (one quoted name part), loadTable just wraps it, and
@@ -75,9 +76,10 @@ class KVCatalog extends TableCatalog with FunctionCatalog {
       s"graftkv has no function ${ident.toString}")
 }
 
-/** `bucket(n, k)`: the partitioner [[KVSegmentStore.writeBucketed]]
-  * wrote with — pmod(murmur3_42(k), n), i.e. exactly the Spark
-  * partition id `repartition(n, col)` assigns — bound here as a V2
+/** `bucket(n, k)`: the partitioner the `bucket` layout of
+  * [[KVWriteBuilder]] writes with — pmod(murmur3_42(k), n), i.e.
+  * exactly the Spark partition id `repartition(n, col)` assigns — bound
+  * here as a V2
   * ScalarFunction so both sides of a storage-partitioned join resolve
   * the SAME function identity (TransformExpression compares
   * canonicalName). SPJ itself never evaluates it (partition keys come
@@ -86,7 +88,7 @@ class KVCatalog extends TableCatalog with FunctionCatalog {
 object KVBucketFunction extends UnboundFunction {
   override def name(): String = "bucket"
   override def description(): String =
-    "bucket(n, k): pmod(murmur3_42(k), n) — the writeBucketed partitioner"
+    "bucket(n, k): pmod(murmur3_42(k), n) — the graft-kv bucket layout's partitioner"
 
   override def bind(inputType: StructType): BoundFunction = {
     val types = inputType.fields.map(_.dataType)

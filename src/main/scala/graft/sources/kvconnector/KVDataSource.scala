@@ -132,7 +132,7 @@ class KVTable(path: String)
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"graft-kv `$path`"
   override def schema(): StructType = KVDataSource.Schema
-  // a writeBucketed store declares its hash layout (the reported scan
+  // a bucket-layout store declares its hash layout (the reported scan
   // partitioning is what carries the storage-partitioned join; this is
   // the table-level statement of the same fact)
   override def partitioning(): Array[Transform] =
@@ -403,9 +403,9 @@ class KVScan(path: String, protected val required: StructType,
       KVSegmentStore.activeConf))
 }
 
-/** The scan of a [[KVSegmentStore.writeBucketed]] store: identical
-  * pruning and readers, plus the REPORTED hash layout (r11 verdict #5)
-  * — KeyGroupedPartitioning over the catalog-resolved `bucket(n, k)`
+/** The scan of a `bucket`-layout store ([[KVSegmentStore.write]]):
+  * identical pruning and readers, plus the REPORTED hash layout (r11
+  * verdict #5) — KeyGroupedPartitioning over the catalog-resolved `bucket(n, k)`
   * with each segment carrying its bucket id as the partition key, so
   * two same-bucketed stores equi-join on k with zero Exchange
   * (storage-partitioned join; needs the graftkv catalog and
@@ -424,8 +424,8 @@ class KVBucketScan(path: String, required0: StructType, pushed0: Array[Filter],
 
   /** Per-partition ordering: every segment is (k, c)-sorted by the
     * write contract, so while each bucket holds EXACTLY ONE segment
-    * (writeBucketed's one-file-per-bucket shape) the partition read
-    * order IS (k, c) — reported so a storage-partitioned merge join
+    * (the shape one bucketed write produces) the partition read order
+    * IS (k, c) — reported so a storage-partitioned merge join
     * skips its per-partition SortExec on both sides. A bucket with
     * several files would concatenate sorted runs (not sorted), so the
     * claim is withdrawn entirely in that case; pruning only removes

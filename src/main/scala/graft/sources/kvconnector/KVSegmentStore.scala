@@ -3,7 +3,6 @@ package graft.sources.kvconnector
 import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.{functions => F}
 
 import graft.GraftFs
 
@@ -15,7 +14,7 @@ import graft.GraftFs
   *
   * The manifest is driver-sized metadata (one line per segment, like a
   * parts list), NOT data: reads of it never scale with rows. Segment
-  * bounds are computed from the written files themselves — whatever the
+  * bounds are tracked by the task that writes each file — whatever the
   * range partitioner sampled, the manifest states what each file actually
   * holds, so pruning is correct by construction.
   */
@@ -35,153 +34,66 @@ object KVSegmentStore {
   def unhex(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
-  /** Range-partition `store` into `numSegments` parquet segments sorted by
-    * (k, c) within each, and write the key-bounds manifest plus one
-    * `_graft_bloom/<segment>` KEY Bloom sidecar per segment (the
-    * bloom_filter skip index — see graft.operators.KeyBloom): bounds,
-    * counts, zone maps AND blooms all come from ONE read-back aggregate
-    * pass over the written files. Sidecars are segment-sized metadata
-    * (16 KB each), never manifest lines — a million-segment parts list
-    * stays a parts list. */
-  /** Rows per segment when the caller asks for size-derived segmentation
-    * (numSegments = 0): one segment per this many cells — at ~40 B/cell
-    * that is a few-hundred-MB parquet file, the guide §6 target range.
-    * Session-configurable: `spark.graft.kv.segment.rows`. */
-  def targetRowsPerSegment(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.get("spark.graft.kv.segment.rows", "4000000").toLong
-
-  /** numSegments = 0 derives the segment count from the persisted store's
-    * own row count (ceil(n / targetRowsPerSegment), at least 1) — a fixed
-    * count is wrong at BOTH ends of the scale (16 tiny files + 16 bloom
-    * sidecars + a 16-way range shuffle for a 10^5-row store; 16 monster
-    * segments for a 10^10-row one). The sizing count() doubles as the
-    * cache materialization the sampling pass then reads. Explicit counts
-    * behave exactly as before (specs pin layouts with them). */
-  private def sizedSegments(store: DataFrame, numSegments: Int): Int =
-    if (numSegments > 0) numSegments
-    else {
-      val n = store.count() // store is persisted by the callers below
-      math.max(1L, (n + targetRowsPerSegment(store.sparkSession) - 1) /
-        targetRowsPerSegment(store.sparkSession)).toInt
-    }
-
-  def write(store: DataFrame, path: String, numSegments: Int): Unit = {
-    // repartitionByRange SAMPLES its input to pick boundaries, so the
-    // store plan used to be computed twice (sample pass + shuffle pass)
-    // — for merge-on-read views and multi-family unions that is a whole
-    // second window/join. Persist across the two passes: compute once,
-    // sample and shuffle drain the cache (spills to disk when big).
-    store.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      store.repartitionByRange(sizedSegments(store, numSegments), F.col("k"))
-        .sortWithinPartitions("k", "c")
-        .write.mode("overwrite").parquet(path)
-    // blocking unpersist: the read-back pass (and the next entry) must
-    // not compete with this cache's lingering blocks (r15 RSS doubling)
-    } finally store.unpersist(true)
-    manifestFromReadback(store.sparkSession, path)
-  }
-
-  /** QUALIFIER-major segmentation — the layout of a per-family store
-    * (JanusGraph's production split keeps each column family in its own
-    * backend store; ClickhouseStoreManager.java:79 opens stores by
-    * name): segments range-partition on (c, k) instead of k, so the
-    * per-segment qualifier zone maps become NARROW and a family/property
-    * slice `[propId, propId+1)` DROPS whole segments at plan time — the
-    * pruning a k-ranged mixed store provably cannot give that slice
-    * (every vertex writes cells in every family, so every segment's c
-    * zone map spans all families). The trade is stated, not hidden: key
-    * bounds now overlap across segments, so key-point reads prune less —
-    * which is the right trade exactly for the property-majority reads a
-    * family store exists to serve. Rows inside each segment stay
-    * (k, c)-sorted (the read-order contract; `order=kc` in the marker),
-    * and bounds/zone maps/blooms come from the same read-back pass, so
-    * pruning stays correct by construction. */
-  def writeFamilyRanged(store: DataFrame, path: String, numSegments: Int): Unit = {
-    // same persist-across-sample-and-shuffle as [[write]]
-    store.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      store.repartitionByRange(sizedSegments(store, numSegments),
-          F.col("c"), F.col("k"))
-        .sortWithinPartitions("k", "c")
-        .write.mode("overwrite").parquet(path)
-    } finally store.unpersist(true)
-    GraftFs.writeTextAtomic(store.sparkSession.sparkContext.hadoopConfiguration,
-      GraftFs.child(path, LayoutFile), "familyranged\norder=kc")
-    manifestFromReadback(store.sparkSession, path)
-  }
-
-  /** The hash-bucket directory prefix of [[writeBucketed]] stores. */
+  /** The hash-bucket directory prefix of the `bucket` layout. */
   val BucketDirPrefix = "__b="
 
-  /** HASH-bucket `store` into `numBuckets` parquet segment directories —
-    * `__b=<i>/` holds exactly the rows with pmod(murmur3_42(k), n) = i,
-    * (k, c)-sorted inside each file — and declare the layout in the
-    * marker (`bucket\nbuckets=n\norder=kc`), so the read side can REPORT
-    * KeyGroupedPartitioning(bucket(n, k)) and a store-to-store equi-join
-    * on k plans with zero Exchange through the DSv2 path (r11 verdict
-    * #5; the storage-partitioned-join analogue of KVStore.writeBucketed,
-    * native to the connector).
+  /** Persist `store` as a segment store at `path`, replacing whatever
+    * the store held, through the connector's writer
+    * (`format("graft-kv")`, see [[KVWriteBuilder]]): each task writes its
+    * segments and reports key bounds, row count, c zone map and key Bloom
+    * in its commit message, and the driver's commit writes the manifest
+    * and Bloom sidecars from those messages — no second scan of the
+    * data.
     *
-    * The bucket id is carried by the row's own COLUMN VALUE through
-    * `partitionBy` — never by the writing task's partition id: Spark is
-    * free to elide a repartition whose child is already hash-partitioned
-    * and AQE is free to coalesce the surviving shuffle (both observed on
-    * an aggregated input — all rows in one task), and a value-derived
-    * directory stays correct under ANY task arrangement. The repartition
-    * below only shapes file counts (all rows of a bucket in one task =
-    * one file per bucket); the leading sort key __b satisfies the
-    * partitioned-write's required ordering, so no writer-inserted
-    * (order-destroying) sort lands between it and the (k, c) run order.
-    * Pruning metadata (manifest bounds, zone maps, blooms) is written
-    * exactly as for range segments — hash-bucket key bounds overlap,
-    * which prunes less per range predicate but stays CORRECT (bounds
-    * are still true per segment). */
-  def writeBucketed(store: DataFrame, path: String, numBuckets: Int): Unit = {
-    val b = F.pmod(F.hash(F.col("k")), F.lit(numBuckets))
-    store.withColumn("__b", b)
-      .repartition(numBuckets, F.col("__b"))
-      .sortWithinPartitions("__b", "k", "c")
-      .write.mode("overwrite").partitionBy("__b").parquet(path)
-    // marker before manifest: a reader that sees the manifest must
-    // already see the layout that describes it (KVBatchWrite discipline)
-    GraftFs.writeTextAtomic(store.sparkSession.sparkContext.hadoopConfiguration,
-      GraftFs.child(path, LayoutFile), s"bucket\nbuckets=$numBuckets\norder=kc")
-    manifestFromReadback(store.sparkSession, path)
+    * `layout` is one of the writer's layouts:
+    *  - `linear`: segments range-partitioned on k;
+    *  - `familyranged`: QUALIFIER-major segments range-partitioned on
+    *    (c, k) — the per-family store layout (JanusGraph keeps each
+    *    column family in its own backend store, ClickhouseStoreManager
+    *    .java:79), whose narrow c zone maps let a family/property slice
+    *    drop whole segments at plan time; key bounds overlap, so key
+    *    point reads prune less, which is the right trade for the
+    *    property-majority reads such a store serves;
+    *  - `bucket`: `segments` hash buckets, `__b=<i>/` holding exactly the
+    *    rows with pmod(murmur3_42(k), n) = i, which the scan reports as
+    *    KeyGroupedPartitioning (storage-partitioned joins).
+    *
+    * Rows inside every segment are (k, c)-sorted under every layout.
+    * `segments = 0` leaves the segment count to the writer's
+    * AQE-coalesced range shuffle (not valid for `bucket`).
+    *
+    * A range-distributed write samples its input before it shuffles, so
+    * the store is persisted across the two passes: merge-on-read views
+    * and multi-family unions are computed once. The unpersist blocks so
+    * the next entry does not compete with this cache's lingering blocks
+    * (r15 RSS doubling). A hash-bucketed write reads its input once and
+    * needs no cache. */
+  def write(store: DataFrame, path: String, segments: Int,
+            layout: String = "linear"): Unit = {
+    val ranged = layout != "bucket"
+    if (ranged) store.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try store.select("k", "c", "v").write.format("graft-kv")
+      .option("segments", segments).option("layout", layout)
+      .mode("overwrite").save(path)
+    finally if (ranged) store.unpersist(true)
   }
 
-  /** The shared manifest+sidecar read-back pass: bounds, counts, zone
-    * maps AND blooms from ONE aggregate over the written files. Manifest
-    * names are store-relative (`__b=3/part-…` under the bucketed
-    * layout); each sidecar lands in a `_graft_bloom/` BESIDE its file,
-    * which is where readBloom reconstructs it from the file path. */
-  private def manifestFromReadback(
-      s: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val bounds = s.read.parquet(path)
-      .groupBy(F.input_file_name().as("f"))
-      .agg(F.min("k").as("lo"), F.max("k").as("hi"), F.count(F.lit(1)).as("n"),
-        F.min("c").as("clo"), F.max("c").as("chi"),
-        graft.operators.KeyBloom.agg(F.col("k")).as("bloom"))
-      .collect()
-    val conf = s.sparkContext.hadoopConfiguration
-    val lines = bounds.map { r =>
-      val comps = r.getString(0).split('/')
-      val name =
-        if (comps.length >= 2 && comps(comps.length - 2).startsWith(BucketDirPrefix))
-          comps.takeRight(2).mkString("/")
-        else comps.last
-      val rel = name.split('/')
-      GraftFs.writeTextAtomic(conf,
-        GraftFs.child(path, (rel.init :+ BloomDir :+ rel.last).mkString("/")),
-        hex(r.getAs[Array[Byte]](6)))
-      s"$name\t${hex(r.getAs[Array[Byte]](1))}\t${hex(r.getAs[Array[Byte]](2))}\t${r.getLong(3)}" +
-        s"\t${hex(r.getAs[Array[Byte]](4))}\t${hex(r.getAs[Array[Byte]](5))}"
-    }.sorted
-    GraftFs.writeTextAtomic(conf,
-      GraftFs.child(path, ManifestFile), lines.mkString("\n"))
+  /** The Bloom sidecar of the segment `name` (store-relative, e.g.
+    * `part-…` or `__b=3/part-…`): it sits in a `_graft_bloom/` directory
+    * BESIDE its file, so a bucketed segment's sidecar is
+    * `<store>/__b=3/_graft_bloom/part-…`. */
+  def sidecarPath(store: String, name: String): String = {
+    val full = GraftFs.child(store, name)
+    val slash = full.lastIndexOf('/')
+    GraftFs.child(GraftFs.child(full.substring(0, slash), BloomDir),
+      full.substring(slash + 1))
   }
 
-  /** The bucket count of a [[writeBucketed]] store, None for every
+  /** One manifest line: name, key bounds, rows, c zone map. */
+  private[kvconnector] def manifestLine(s: Segment): String =
+    s"${s.file}\t${hex(s.lo)}\t${hex(s.hi)}\t${s.rows}\t${hex(s.cLo)}\t${hex(s.cHi)}"
+
+  /** The bucket count of a `bucket`-layout store, None for every
     * other layout (range/zorder/legacy) — the gate for reporting
     * KeyGroupedPartitioning from the scan. */
   def readBuckets(path: String): Option[Int] =
@@ -213,10 +125,9 @@ object KVSegmentStore {
   /** The segment's key Bloom, if its sidecar exists (absent on stores
     * written before the index — absent prunes nothing). */
   def readBloom(segFile: String): Option[(Array[Long], Int)] = {
-    val name = segFile.split('/').last
-    val dir = segFile.stripSuffix("/" + name)
+    val slash = segFile.lastIndexOf('/')
     GraftFs.readText(activeConf,
-        GraftFs.child(GraftFs.child(dir, BloomDir), name))
+        sidecarPath(segFile.substring(0, slash), segFile.substring(slash + 1)))
       .map(t => graft.operators.KeyBloom.deserialize(unhex(t.trim)))
   }
 
@@ -228,11 +139,10 @@ object KVSegmentStore {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  /** The store's declared layout: "zorder" when the marker exists,
-    * "linear" otherwise (legacy stores have no marker — linear was the
-    * only layout before it existed). Only the FIRST marker line is the
-    * layout name; later lines carry layout attributes (see
-    * [[readSortedKC]]). */
+  /** The store's declared layout: the marker's first line
+    * (zorder/familyranged/bucket), "linear" when there is no marker
+    * (linear and legacy stores carry none). Later marker lines carry
+    * layout attributes (see [[readSortedKC]]). */
   def readLayout(path: String): String =
     GraftFs.readText(activeConf, GraftFs.child(path, LayoutFile))
       // an empty-but-present marker degrades to linear, like no marker
@@ -257,7 +167,9 @@ object KVSegmentStore {
       .getOrElse(throw new java.io.FileNotFoundException(
         s"$path/$ManifestFile"))
     raw.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-      line.split('\t') match {
+      // -1 keeps trailing empty fields: a segment whose cells all have an
+      // empty c has an empty zone map, not a missing one
+      line.split("\t", -1) match {
         case Array(f, lo, hi, n) => // pre-zone-map manifest line
           Segment(s"$path/$f", unhex(lo), unhex(hi), n.toLong)
         case Array(f, lo, hi, n, clo, chi) =>

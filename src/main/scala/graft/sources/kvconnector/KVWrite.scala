@@ -2,11 +2,13 @@ package graft.sources.kvconnector
 
 import java.util
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -16,41 +18,65 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.GraftFs
 
-/** The WRITE half of the graft-kv connector:
-  * `df.write.format("graft-kv").mode("append"|"overwrite").save(dir)`.
+/** The WRITE half of the graft-kv connector, and the only writer of
+  * segment stores:
+  * `df.write.format("graft-kv").mode("append"|"overwrite").save(dir)`
+  * (or [[KVSegmentStore.write]], which wraps it).
   *
   * The write DECLARES its layout needs through DSv2's
-  * `RequiresDistributionAndOrdering` — range-distributed by `k`, sorted
-  * (k, c) within partitions — so SPARK plans the exchange+sort that makes
-  * every task emit one key-range, (k,c)-sorted segment: exactly the
-  * MergeTree-part layout KVSegmentStore.write produces imperatively, but
-  * negotiated through the connector contract (any engine-side smarts —
-  * AQE partition sizing, reuse of an existing ordering — apply for free).
-  * Each task writes its parquet segment and reports (file, key-lo,
-  * key-hi, rows) in its commit message; the driver's commit() assembles
-  * the manifest FROM the messages — no second scan of the data, and a
+  * `RequiresDistributionAndOrdering` — e.g. range-distributed by `k`,
+  * sorted (k, c) within partitions — so SPARK plans the exchange+sort
+  * that makes every task emit (k,c)-sorted segments: the MergeTree-part
+  * layout, negotiated through the connector contract (any engine-side
+  * smarts — AQE partition sizing, reuse of an existing ordering — apply
+  * for free). Each task writes its parquet segments and reports (file,
+  * key bounds, rows, c zone map, key Bloom) in its commit message; the
+  * driver's commit() writes the Bloom sidecars and assembles the
+  * manifest FROM the messages — no second scan of the data, and a
   * failed/speculative task's file never reaches the manifest (readers go
   * through the manifest, so uncommitted files are invisible; abort()
   * additionally deletes them). Overwrite = SupportsTruncate: the commit
   * sweeps previously-manifested segments after the new manifest lands.
+  *
+  * Options:
+  *  - `segments`: the exact segment count (the bucket count under
+  *    `bucket`); 0, the default, lets Spark (incl. AQE coalescing) size
+  *    the range shuffle.
+  *  - `layout`: `linear` (range on k, the default), `familyranged`
+  *    (range on (c, k)), `bucket` (hash buckets on k into `__b=<i>/`)
+  *    or `zorder` (the caller's arrangement, see [[KVZOrder]]).
   */
 class KVWriteBuilder(path: String, info: LogicalWriteInfo)
   extends WriteBuilder with SupportsTruncate {
   require(info.schema().fieldNames.sameElements(Array("k", "c", "v")),
     s"graft-kv write requires (k, c, v) binary columns, got ${info.schema().sql}")
-  // .option("segments", n): exact segment count; default 0 lets Spark
-  // (incl. AQE coalescing) size the range shuffle
   private val segments = info.options().getInt("segments", 0)
-  // .option("layout", "zorder"): the MergeTree multi-column ORDER BY
-  // analogue (ref QueryHelper.java:57 ORDER BY (k,c)) laid out along the
-  // Morton curve of (k, c) instead of lexicographically — see KVZOrder
   private val layout = Option(info.options().get("layout")).getOrElse("linear")
-  require(layout == "linear" || layout == "zorder",
-    s"graft-kv layout must be linear|zorder, got $layout")
+  require(KVWrite.Layouts.contains(layout),
+    s"graft-kv layout must be ${KVWrite.Layouts.mkString("|")}, got $layout")
+  require(layout != "bucket" || segments > 0,
+    "graft-kv layout bucket needs segments = the bucket count (> 0)")
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write =
     new KVWrite(path, doTruncate, segments, layout, info.queryId())
+}
+
+object KVWrite {
+  val Layouts = Seq("linear", "familyranged", "bucket", "zorder")
+
+  /** The `_graft_layout` marker a store written under `layout` carries;
+    * None = linear. The first line names the layout, `order=kc`
+    * declares the intra-segment (k, c) sort every layout of this writer
+    * guarantees (a marker WITHOUT it — a store persisted by the pre-r11
+    * zorder writer, whose segments followed the Morton curve inside —
+    * makes the read side decline the TopN push). */
+  def marker(layout: String, segments: Int): Option[String] = layout match {
+    case "zorder" => Some("zorder\norder=kc")
+    case "familyranged" => Some("familyranged\norder=kc")
+    case "bucket" => Some(s"bucket\nbuckets=$segments\norder=kc")
+    case _ => None
+  }
 }
 
 class KVWrite(path: String, truncate: Boolean, segments: Int, layout: String,
@@ -65,35 +91,47 @@ class KVWrite(path: String, truncate: Boolean, segments: Int, layout: String,
   }
 
   // linear: range-distributed by k — every task emits one key-range
-  // segment. zorder: the DSv2 contract cannot spell a Morton expression
+  // segment. familyranged: range-distributed by (c, k), so a family's
+  // cells share few segments. bucket: clustered by k into exactly
+  // `segments` partitions — Spark's HashPartitioning id is
+  // pmod(murmur3_42(k), n), so every task holds whole buckets and each
+  // bucket lands in one file; the task still derives each row's
+  // directory from the row's own key (KVSegmentWriter), never from its
+  // partition id, so a coalesced or elided shuffle cannot misfile a
+  // row. zorder: the DSv2 contract cannot spell a Morton expression
   // over two binary columns (no function catalog on a path-based
   // table), so the write ACCEPTS the caller's DISTRIBUTION (KVZOrder
   // .write pre-partitions by z) — segment bounds recorded at write time
   // make pruning correct for ANY arrangement; layout only changes how
   // TIGHT the rectangles are. The intra-segment ORDERING is (k, c) for
-  // BOTH layouts (r10 verdict #6): which rows share a segment is the
+  // EVERY layout (r10 verdict #6): which rows share a segment is the
   // curve's business, the order inside is the reader's — (k, c)-sorted
   // runs let every layout serve the TopN read-in-order push, so the
   // layout that prunes best no longer pays a full sort for ordered
   // reads (the ClickHouse optimize_read_in_order analog on MergeTree
   // parts, whose rows are likewise ORDER BY-sorted per part regardless
   // of the partition expression).
-  override def requiredDistribution(): Distribution =
-    if (layout == "zorder") Distributions.unspecified()
-    else Distributions.ordered(Array(asc("k")))
+  override def requiredDistribution(): Distribution = layout match {
+    case "zorder" => Distributions.unspecified()
+    case "familyranged" => Distributions.ordered(Array(asc("c"), asc("k")))
+    case "bucket" => Distributions.clustered(Array(Expressions.column("k")))
+    case _ => Distributions.ordered(Array(asc("k")))
+  }
   override def requiredOrdering(): Array[VSortOrder] = Array(asc("k"), asc("c"))
   override def requiredNumPartitions(): Int =
     if (layout == "zorder") 0 else segments
 
-  override def toBatch: BatchWrite = new KVBatchWrite(path, truncate, layout, queryId)
+  override def toBatch: BatchWrite =
+    new KVBatchWrite(path, truncate, layout, segments, queryId)
 }
 
-case class KVCommit(file: String, loHex: String, hiHex: String, rows: Long,
-                    cLoHex: String = "", cHiHex: String = "")
+/** One task's committed segments, each with its serialized key Bloom;
+  * `file` is store-relative. */
+case class KVCommit(segments: Seq[(KVSegmentStore.Segment, Array[Byte])])
   extends WriterCommitMessage
 
 class KVBatchWrite(path: String, truncate: Boolean, layout: String,
-                   queryId: String)
+                   segments: Int, queryId: String)
   extends BatchWrite {
 
   // captured on the DRIVER at write-plan time: the session's Hadoop conf
@@ -102,7 +140,7 @@ class KVBatchWrite(path: String, truncate: Boolean, layout: String,
   private val confW = new SerializableConfiguration(KVSegmentStore.activeConf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    KVWriterFactory(path, queryId, confW)
+    KVWriterFactory(path, queryId, if (layout == "bucket") segments else 0, confW)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = confW.value
@@ -113,41 +151,36 @@ class KVBatchWrite(path: String, truncate: Boolean, layout: String,
     // name the segments to sweep once the new manifest is live
     val previous: Seq[String] = GraftFs.readText(conf, manifest)
       .map(_.split('\n').toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    val fresh = messages.collect { case m: KVCommit if m.rows > 0 => m }
-    val freshLines =
-      fresh.map(m => s"${m.file}\t${m.loHex}\t${m.hiHex}\t${m.rows}\t${m.cLoHex}\t${m.cHiHex}")
-    val lines = (if (truncate) freshLines.toSeq else previous ++ freshLines).sorted
-    // layout marker BEFORE the manifest. Since r11 both layouts write
-    // (k, c)-sorted segments and declare it via the marker's own
-    // `order=kc` attribute (readSortedKC), so every reader behavior is
-    // CORRECT under either marker state of THIS writer — and a store
-    // persisted by the pre-r11 zorder writer (marker without the
-    // attribute, Morton-ordered rows inside) declines the TopN push
-    // instead of serving wrong prefixes. The write order is kept so
-    // the marker can never describe segments that aren't live yet, and
-    // the linear-truncate delete stays AFTER the manifest, mirrored.
+    val committed = messages.toSeq.flatMap {
+      case m: KVCommit => m.segments
+      case _ => Nil
+    }
+    // the sidecars land with the commit, before the manifest names their
+    // segments: a failed job's tasks never leave one behind
+    committed.foreach { case (seg, bloom) =>
+      GraftFs.writeTextAtomic(conf, KVSegmentStore.sidecarPath(path, seg.file),
+        KVSegmentStore.hex(bloom))
+    }
+    val fresh = committed.map(_._1)
+    val lines =
+      ((if (truncate) Nil else previous) ++ fresh.map(KVSegmentStore.manifestLine)).sorted
+    // The layout marker holds for EVERY live segment whenever it is
+    // present: a marker the commit changes falls BEFORE the manifest
+    // swap and the new one lands AFTER it, so a reader sees either a
+    // true marker or none (none = linear, which every segment satisfies:
+    // its bounds are exact and its rows (k, c)-sorted). The bucket
+    // marker is load-bearing for partition planning — a stale one over
+    // segments of another bucket count would mis-group a
+    // storage-partitioned join. An append keeps the store's marker only
+    // when it writes the same layout; any other append (a linear
+    // segment has no __b= directory, a second bucket count follows
+    // another bucket function) demotes the store to linear. SPJ
+    // reporting is lost by design then: the layout no longer holds.
     val layoutFile = GraftFs.child(path, KVSegmentStore.LayoutFile)
-    if (layout == "zorder")
-      // `order=kc` declares the intra-segment (k, c) sort this writer
-      // guarantees; a marker WITHOUT it (a store persisted by the
-      // pre-r11 writer, whose segments followed the Morton curve
-      // inside) makes the read side decline the TopN push
-      GraftFs.writeTextAtomic(conf, layoutFile, "zorder\norder=kc")
-    else if (GraftFs.readText(conf, layoutFile)
-        .exists(_.linesIterator.nextOption().exists(_.trim == "bucket")))
-      // a LINEAR commit into a hash-bucketed store breaks the bucket
-      // invariant (an appended file has no __b= directory, and its rows
-      // follow no bucket function): DEMOTE the marker before the
-      // manifest changes, so no reader ever plans bucket partitions
-      // over a non-bucket segment — the store degrades to linear
-      // pruning, which every segment satisfies, and stays (k, c)-sorted
-      // inside (no marker = linear = order-kc), so the TopN push
-      // survives. SPJ reporting is lost by design: the layout no
-      // longer holds. (Unlike the zorder marker — which only claims
-      // pruning tightness and is safe to reconcile after the manifest —
-      // the bucket marker is load-bearing for partition planning, so
-      // it must fall FIRST in both append and truncate.)
-      GraftFs.delete(conf, layoutFile)
+    val current = GraftFs.readText(conf, layoutFile)
+    val wanted = KVWrite.marker(layout, segments)
+    val next = if (truncate || previous.isEmpty || current == wanted) wanted else None
+    if (current.isDefined && current != next) GraftFs.delete(conf, layoutFile)
     // atomic replacement: stage the full manifest next to the live one,
     // then overwrite-rename it into place — a crash mid-write leaves the
     // old manifest intact and a concurrent reader sees either the old or
@@ -155,88 +188,100 @@ class KVBatchWrite(path: String, truncate: Boolean, layout: String,
     GraftFs.writeTextAtomic(conf, manifest, lines.mkString("\n"))
     // SINGLE-WRITER assumption (matches the reference's lease semantics,
     // ClickhouseStoreManager's store-level locking): two concurrent
-    // TRUNCATING writers racing here can interleave so a linear writer's
-    // marker delete lands after a zorder writer's marker write, leaving a
-    // live Morton manifest without its marker. Concurrent writers already
-    // corrupt each other's truncate sweep below (each deletes the other's
-    // fresh segments), so the marker adds no NEW hazard — but the ordering
-    // guarantee documented above holds for one committing writer at a time.
-    if (layout != "zorder" && truncate)
-      GraftFs.delete(conf, layoutFile)
+    // committers can interleave their marker and manifest steps, and
+    // already corrupt each other's truncate sweep below (each deletes
+    // the other's fresh segments), so the marker discipline above holds
+    // for one committing writer at a time.
+    next.filter(m => !current.contains(m)).foreach(GraftFs.writeTextAtomic(conf, layoutFile, _))
     if (truncate) {
       // old segments left the manifest atomically with the rename above;
       // sweeping their files (and bloom sidecars) afterwards is
       // invisible to manifest readers
       val freshNames = fresh.map(_.file).toSet
       previous.map(_.split('\t')(0)).filterNot(freshNames.contains)
-        .foreach { f =>
-          val full = GraftFs.child(path, f)
-          GraftFs.delete(conf, full)
-          // the sidecar sits BESIDE its file (readBloom's derivation):
-          // a bucketed manifest name is "__b=N/<file>", whose sidecar
-          // is path/__b=N/_graft_bloom/<file> — deriving from the
-          // manifest name put it under path/_graft_bloom/__b=N/<file>,
-          // a path that never existed, orphaning every bucketed
-          // sidecar on truncate (r12 second review)
-          val base = full.split('/').last
-          val dir = full.stripSuffix("/" + base)
-          GraftFs.delete(conf,
-            GraftFs.child(GraftFs.child(dir, KVSegmentStore.BloomDir), base))
-        }
+        .foreach(deleteSegment(conf, _))
     }
   }
 
+  /** A segment file and the Bloom sidecar beside it. */
+  private def deleteSegment(conf: Configuration, name: String): Unit = {
+    GraftFs.delete(conf, GraftFs.child(path, name))
+    GraftFs.delete(conf, KVSegmentStore.sidecarPath(path, name))
+  }
+
+  // a committed TASK already wrote its segments, and a commit that
+  // failed midway some sidecars; a job-level abort sweeps both, or failed
+  // writes leak them
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: KVCommit =>
-        GraftFs.delete(confW.value, GraftFs.child(path, m.file))
-        // a committed TASK already wrote its bloom sidecar; a job-level
-        // abort must sweep it too or failed writes leak sidecars
-        GraftFs.delete(confW.value,
-          GraftFs.child(GraftFs.child(path, KVSegmentStore.BloomDir), m.file))
+      case m: KVCommit => m.segments.foreach { case (seg, _) => deleteSegment(confW.value, seg.file) }
       case _ => ()
     }
 }
 
-case class KVWriterFactory(path: String, queryId: String,
+case class KVWriterFactory(path: String, queryId: String, buckets: Int,
                            confW: SerializableConfiguration)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KVSegmentWriter(path, partitionId, taskId, queryId, confW)
+    new KVSegmentWriter(path, partitionId, taskId, queryId, buckets, confW)
 }
 
-/** One task = one (k,c)-sorted key-range parquet segment, bounds tracked
-  * inline during the write (no re-read). */
+/** One task's segments: one (k,c)-sorted parquet segment, or under the
+  * bucket layout (`buckets` > 0) one per bucket the task sees, at
+  * `__b=<KVBucketFunction.bucketOf(k, buckets)>/` — the directory comes
+  * from each row's own key. Bounds and the key Bloom are tracked inline
+  * during the write (no re-read) and reported in the commit message. */
 class KVSegmentWriter(path: String, partitionId: Int, taskId: Long,
-                      queryId: String, confW: SerializableConfiguration)
+                      queryId: String, buckets: Int,
+                      confW: SerializableConfiguration)
   extends DataWriter[InternalRow] {
 
   // (partitionId, taskId) is unique only within one Spark application;
   // the per-write queryId keeps appends from a LATER application from
   // colliding with (and clobbering) a committed segment
   private val fileName = f"part-$partitionId%05d-$taskId-$queryId.parquet"
-  private val schema = MessageTypeParser.parseMessageType(
-    "message graft_kv { required binary k; required binary c; required binary v; }")
-  private val factory = new SimpleGroupFactory(schema)
-  private val writer = {
-    GraftFs.mkdirs(confW.value, path)
-    ExampleParquetWriter.builder(new Path(path, fileName))
-      .withConf(confW.value).withType(schema).build()
+  // opened on a bucket's first row: an empty partition writes no file
+  private val open = new Array[KVSegmentFile](math.max(buckets, 1))
+
+  override def write(row: InternalRow): Unit = {
+    require(!row.isNullAt(0) && !row.isNullAt(1),
+      s"graft-kv write: a cell with a null k or c cannot be stored ($path)")
+    val k = row.getBinary(0)
+    val b = if (buckets > 0) KVBucketFunction.bucketOf(k, buckets) else 0
+    if (open(b) == null)
+      open(b) = new KVSegmentFile(path,
+        if (buckets > 0) s"${KVSegmentStore.BucketDirPrefix}$b/$fileName" else fileName,
+        confW.value)
+    open(b).write(k, row.getBinary(1), if (row.isNullAt(2)) null else row.getBinary(2))
   }
+
+  override def commit(): WriterCommitMessage =
+    KVCommit(open.toSeq.filter(_ != null).map(_.finish()))
+
+  override def abort(): Unit = open.foreach(f => if (f != null) f.discard())
+
+  override def close(): Unit = ()
+}
+
+/** One parquet segment being written: `name` is store-relative. */
+private[kvconnector] class KVSegmentFile(store: String, name: String, conf: Configuration) {
+  private val factory = new SimpleGroupFactory(KVSegmentFile.Schema)
+  // SNAPPY, as Spark's own parquet writer: parquet-mr's default is
+  // UNCOMPRESSED, about twice the bytes for the same cells
+  private val writer = ExampleParquetWriter.builder(new Path(store, name))
+    .withConf(conf).withType(KVSegmentFile.Schema)
+    .withCompressionCodec(CompressionCodecName.SNAPPY).build()
   private var lo: Array[Byte] = _
   private var hi: Array[Byte] = _
   private var cLo: Array[Byte] = _
   private var cHi: Array[Byte] = _
   private var rows = 0L
-  // the segment's KEY Bloom skip index, built inline during the write
-  // (no re-read — the imperative KVSegmentStore.write path pays one
-  // read-back aggregate instead)
+  // the segment's KEY Bloom skip index, built inline during the write;
+  // the driver's commit writes it as the segment's sidecar
   private val bloomBits =
     new Array[Long](graft.operators.KeyBloom.DefaultBits / 64)
 
-  override def write(row: InternalRow): Unit = {
-    val k = row.getBinary(0)
-    val c = row.getBinary(1)
+  def write(k: Array[Byte], c: Array[Byte], v: Array[Byte]): Unit = {
     if (lo == null || util.Arrays.compareUnsigned(k, lo) < 0) lo = k.clone()
     if (hi == null || util.Arrays.compareUnsigned(k, hi) > 0) hi = k.clone()
     if (cLo == null || util.Arrays.compareUnsigned(c, cLo) < 0) cLo = c.clone()
@@ -246,36 +291,27 @@ class KVSegmentWriter(path: String, partitionId: Int, taskId: Long,
     val g = factory.newGroup()
     g.append("k", Binary.fromConstantByteArray(k))
     g.append("c", Binary.fromConstantByteArray(c))
-    g.append("v", Binary.fromConstantByteArray(row.getBinary(2)))
+    if (v != null) g.append("v", Binary.fromConstantByteArray(v))
     writer.write(g)
     rows += 1
   }
 
-  private def bloomPath: String =
-    GraftFs.child(GraftFs.child(path, KVSegmentStore.BloomDir), fileName)
-
-  override def commit(): WriterCommitMessage = {
+  /** Close the file: its manifest entry and serialized Bloom. */
+  def finish(): (KVSegmentStore.Segment, Array[Byte]) = {
     writer.close()
-    if (rows == 0) { // empty partition: no segment, nothing to manifest
-      GraftFs.delete(confW.value, GraftFs.child(path, fileName))
-      KVCommit(fileName, "", "", 0L)
-    } else {
-      // sidecar lands with the task; readers only consult it for
-      // segments the manifest names, so an aborted task's sidecar is
-      // invisible (and swept by abort())
-      GraftFs.writeTextAtomic(confW.value, bloomPath,
-        KVSegmentStore.hex(graft.operators.KeyBloom.serialize(bloomBits,
-          graft.operators.KeyBloom.DefaultHashes)))
-      KVCommit(fileName, KVSegmentStore.hex(lo), KVSegmentStore.hex(hi), rows,
-        KVSegmentStore.hex(cLo), KVSegmentStore.hex(cHi))
-    }
+    (KVSegmentStore.Segment(name, lo, hi, rows, cLo, cHi),
+      graft.operators.KeyBloom.serialize(bloomBits, graft.operators.KeyBloom.DefaultHashes))
   }
 
-  override def abort(): Unit = {
+  def discard(): Unit = {
     writer.close()
-    GraftFs.delete(confW.value, GraftFs.child(path, fileName))
-    GraftFs.delete(confW.value, bloomPath)
+    GraftFs.delete(conf, GraftFs.child(store, name))
   }
+}
 
-  override def close(): Unit = ()
+private[kvconnector] object KVSegmentFile {
+  // v is optional: a null value is stored as an absent field, which the
+  // reader returns as null
+  val Schema: MessageType = MessageTypeParser.parseMessageType(
+    "message graft_kv { required binary k; required binary c; optional binary v; }")
 }

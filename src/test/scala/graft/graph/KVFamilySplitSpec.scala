@@ -38,7 +38,7 @@ class KVFamilySplitSpec extends SparkSpec {
     val mixed = java.nio.file.Files.createTempDirectory("graft_splm").toString
     val famed = java.nio.file.Files.createTempDirectory("graft_splf").toString
     KVSegmentStore.write(vertexCells, mixed, 16)
-    KVSegmentStore.writeFamilyRanged(vertexCells, famed, 16)
+    KVSegmentStore.write(vertexCells, famed, 16, "familyranged")
     val (mixedPlanned, mixedTotal) = slicePlanned(mixed)
     val (famPlanned, famTotal) = slicePlanned(famed)
     // mixed store: every vertex writes all its cells, so every segment's

@@ -70,8 +70,8 @@ class KVSpjHopSpec extends SparkSpec {
     // plan property is asserted on a rebuilt (pre-checkpoint) plan: the
     // entry consumes its own plan via localCheckpoint, so rebuild here
     val seg = java.nio.file.Files.createTempDirectory("graft_spjhopspec").toString
-    graft.sources.kvconnector.KVSegmentStore.writeBucketed(
-      KVGraphQueries.adjacency(spark, SF), seg, 8)
+    graft.sources.kvconnector.KVSegmentStore.write(
+      KVGraphQueries.adjacency(spark, SF), seg, 8, "bucket")
     val saved = Seq("spark.sql.catalog.graftkv",
       "spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled",

@@ -53,7 +53,7 @@ class KVBloomSpec extends SparkSpec {
 
   test("absent key inside the range schedules zero segments; present key keeps its rows") {
     val dir = Files.createTempDirectory("graft_kvbloom").toString
-    KVSegmentStore.write(store, dir, numSegments = 8)
+    KVSegmentStore.write(store, dir, segments = 8)
     // an odd key inside a segment's [lo, hi] but NOT stored
     val absent = absentInRange(dir)
     assert(scanOf(probe(dir, absent)).kept.isEmpty,
@@ -90,7 +90,7 @@ class KVBloomSpec extends SparkSpec {
 
   test("legacy store without sidecars degrades to range pruning; range scans skip bloom reads") {
     val dir = Files.createTempDirectory("graft_kvbloom_l").toString
-    KVSegmentStore.write(store, dir, numSegments = 4)
+    KVSegmentStore.write(store, dir, segments = 4)
     // simulate a pre-bloom store
     graft.GraftFs.delete(spark.sparkContext.hadoopConfiguration,
       graft.GraftFs.child(dir, KVSegmentStore.BloomDir))

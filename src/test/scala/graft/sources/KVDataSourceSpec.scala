@@ -21,7 +21,7 @@ class KVDataSourceSpec extends SparkSpec {
 
   private def written: String = {
     val dir = Files.createTempDirectory("graft_kvdsv2").toString
-    KVSegmentStore.write(store, dir, numSegments = 8)
+    KVSegmentStore.write(store, dir, segments = 8)
     dir
   }
 
@@ -160,7 +160,7 @@ class KVDataSourceSpec extends SparkSpec {
         KVStore.encLong(F.expr("id div 250")).as("k"),
         KVStore.encLong(F.col("id")).as("c"),
         F.concat(F.lit("v"), F.col("id").cast("string")).cast("binary").as("v"))
-    KVSegmentStore.write(corr, dir, numSegments = 8)
+    KVSegmentStore.write(corr, dir, segments = 8)
     val segs = KVSegmentStore.readManifest(dir)
     assert(segs.forall(s => s.cLo != null && s.cHi != null), "c bounds missing")
     val narrow = spark.read.format("graft-kv").load(dir)

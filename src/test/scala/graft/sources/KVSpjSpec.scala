@@ -24,8 +24,10 @@ class KVSpjSpec extends SparkSpec {
     body
   }
 
-  private def cellsDf = {
-    spark.range(0, 2000)
+  private def cellsDf = cells(0, 2000)
+
+  private def cells(from: Long, until: Long) = {
+    spark.range(from, until)
       .select(
         KVStore.encLong(F.col("id") % 100).as("k"),
         KVStore.encLong(F.col("id")).as("c"),
@@ -39,11 +41,11 @@ class KVSpjSpec extends SparkSpec {
     withSpjConf {
       val cellsDir = Files.createTempDirectory("graft_spjc").toString
       val rollDir = Files.createTempDirectory("graft_spjr").toString
-      KVSegmentStore.writeBucketed(cellsDf, cellsDir, numBuckets = 8)
+      KVSegmentStore.write(cellsDf, cellsDir, 8, "bucket")
       val roll = cellsDf.groupBy("k").agg(F.count(F.lit(1)).as("n"))
         .select(F.col("k"), KVStore.encLong(F.lit(0L)).as("c"),
           KVStore.encLong(F.col("n")).as("v"))
-      KVSegmentStore.writeBucketed(roll, rollDir, numBuckets = 8)
+      KVSegmentStore.write(roll, rollDir, 8, "bucket")
 
       val cells = spark.table(s"graftkv.`$cellsDir`")
       val totals = spark.table(s"graftkv.`$rollDir`")
@@ -68,7 +70,7 @@ class KVSpjSpec extends SparkSpec {
   test("bucket ids on disk match the declared bucket function") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spjb").toString
-      KVSegmentStore.writeBucketed(cellsDf, dir, numBuckets = 8)
+      KVSegmentStore.write(cellsDf, dir, 8, "bucket")
       assert(KVSegmentStore.readBuckets(dir).contains(8))
       // sortedness marker survives: TopN read-in-order still applies
       assert(KVSegmentStore.readSortedKC(dir))
@@ -103,7 +105,7 @@ class KVSpjSpec extends SparkSpec {
   test("connector truncate over a bucketed store sweeps bloom sidecars") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spjt").toString
-      KVSegmentStore.writeBucketed(cellsDf, dir, numBuckets = 4)
+      KVSegmentStore.write(cellsDf, dir, 4, "bucket")
       def sidecars(): Seq[java.io.File] = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -126,7 +128,7 @@ class KVSpjSpec extends SparkSpec {
   test("a range/zorder store reports no bucket layout and still reads") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spjl").toString
-      KVSegmentStore.write(cellsDf, dir, numSegments = 8)
+      KVSegmentStore.write(cellsDf, dir, segments = 8)
       assert(KVSegmentStore.readBuckets(dir).isEmpty)
       // joining two RANGE stores through the connector still shuffles —
       // the property being native-to-bucketed, not universal
@@ -137,9 +139,13 @@ class KVSpjSpec extends SparkSpec {
   test("ordering claim is withdrawn when a bucket holds several files") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spjm").toString
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", "100")
-      try KVSegmentStore.writeBucketed(cellsDf, dir, numBuckets = 8)
-      finally spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
+      // a second bucketed append of the same bucket count keeps the
+      // marker and gives every bucket a second file
+      KVSegmentStore.write(cells(0, 1000), dir, 8, "bucket")
+      cells(1000, 2000).write.format("graft-kv")
+        .option("layout", "bucket").option("segments", 8)
+        .mode("append").save(dir)
+      assert(KVSegmentStore.readBuckets(dir).contains(8))
       val segs = KVSegmentStore.readManifest(dir)
       assert(segs.size > 8, s"expected several files per bucket, got ${segs.size}")
       val scan = new KVBucketScan(dir, KVDataSource.Schema,
@@ -156,7 +162,7 @@ class KVSpjSpec extends SparkSpec {
   test("a rogue non-bucket segment degrades the scan instead of failing it") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spjrg").toString
-      KVSegmentStore.writeBucketed(cellsDf, dir, numBuckets = 8)
+      KVSegmentStore.write(cellsDf, dir, 8, "bucket")
       // simulate the race: a root-level segment lands in the manifest
       // while the bucket marker is still up (marker demotion and
       // manifest rewrite are not one atomic step for a concurrent
@@ -190,7 +196,7 @@ class KVSpjSpec extends SparkSpec {
   test("a linear append DEMOTES the bucket marker instead of breaking reads") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spja").toString
-      KVSegmentStore.writeBucketed(cellsDf, dir, numBuckets = 8)
+      KVSegmentStore.write(cellsDf, dir, 8, "bucket")
       assert(KVSegmentStore.readBuckets(dir).contains(8))
       // an ordinary connector append has no __b= directory — the bucket
       // invariant no longer holds, so the marker must fall (r12 review:
@@ -216,7 +222,7 @@ class KVSpjSpec extends SparkSpec {
   test("static key pruning composes with the bucket layout") {
     withSpjConf {
       val dir = Files.createTempDirectory("graft_spjp").toString
-      KVSegmentStore.writeBucketed(cellsDf, dir, numBuckets = 8)
+      KVSegmentStore.write(cellsDf, dir, 8, "bucket")
       // a point probe keeps only the segments whose bloom/bounds can
       // hold the key — on a hash layout that is bloom work, and at most
       // a couple of buckets survive

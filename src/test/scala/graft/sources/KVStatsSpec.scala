@@ -24,7 +24,7 @@ class KVStatsSpec extends SparkSpec {
         KVStore.encLong(F.col("id") % 100).as("k"),
         KVStore.encLong(F.col("id")).as("c"),
         F.concat(F.lit("v"), F.col("id").cast("string")).cast("binary").as("v"))
-    KVSegmentStore.write(store, dir, numSegments = 16)
+    KVSegmentStore.write(store, dir, segments = 16)
     dir
   }
 
