@@ -128,7 +128,7 @@ object Bench {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // unpersisting a superseded localCheckpoint is deliberate (CheckpointGC,
+    // unpersisting a superseded localCheckpoint is deliberate (Superstep,
     // the between-run sweep): silence the per-RDD lineage warning
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)

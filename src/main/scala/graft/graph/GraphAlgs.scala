@@ -1,18 +1,15 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
-/** Iterative graph algorithms as DataFrame Pregel loops.
-  *
-  * Shape shared by all three: state(vid, x) joined with the edge list,
-  * messages aggregated by dst, state updated — one shuffle per iteration,
-  * keyed on vid throughout so a vid-bucketed graph never re-partitions.
-  * `localCheckpoint` every iteration truncates lineage (without it the
-  * plan doubles per iteration and Catalyst analysis dominates runtime);
-  * at cluster scale this becomes `checkpoint` to a reliable store every
-  * N iterations. Convergence checks are driver-side counts on the small
-  * changed-set, not collects of state.
+/** Iterative graph algorithms as DataFrame Pregel loops: state(vid, x)
+  * joined with the edge list, messages aggregated by dst, state updated —
+  * one shuffle per iteration, keyed on vid throughout so a vid-bucketed
+  * graph never re-partitions. Every loop runs under the [[Superstep]]
+  * driver, which owns its checkpoint cadence and release; a loop states
+  * its per-round plan and, if it has one, its convergence probe — a
+  * driver-side count or sum over the checkpoint, not a collect of state.
   *
   * PageRank runs in scaled *integer* arithmetic (units of 1e-12): floor
   * division is bit-identical across Spark, DuckDB and any partition
@@ -32,15 +29,17 @@ object GraphAlgs {
       F.col("x"), maxIter)
       .select(F.col("vid"), F.col("x").as("comp"))
 
+  /** 1.0 in rank units (1e-12). */
+  private val One = 1000000000000L
+
   /** PageRank, `iters` fixed iterations, d = 0.85, dangling mass dropped
     * (both engines drop it identically). pr is a BIGINT in 1e-12 units:
     * pr0 = 1e12/N;  pr'(v) = (15*(1e12/N))/100 + (85*Σ_in pr(u)/deg(u))/100
     * with every division an integer floor division. */
   def pagerank(vertices: DataFrame, edges: DataFrame, iters: Int = 10): DataFrame = {
-    val n = vertices.count()
-    val init = 1000000000000L / n
-    pagerankFrom(vertices,
-      vertices.select(F.col("vid"), F.lit(init).as("pr")), edges, iters)
+    val init = One / vertices.count()
+    rank(vertices, vertices.select(F.col("vid"), F.lit(init).as("pr")), edges,
+      F.lit((15L * init) / 100L), iters)
   }
 
   /** The [[pagerank]] recurrence warm-started from an arbitrary rank
@@ -49,40 +48,8 @@ object GraphAlgs {
     * point re-converge instead of restarting from uniform (the recurrence
     * is a contraction toward the same fixed point from any start). */
   def pagerankFrom(vertices: DataFrame, pr0: DataFrame, edges: DataFrame,
-                   iters: Int): DataFrame = {
-    val n = vertices.count()
-    val init = 1000000000000L / n
-    val base = (15L * init) / 100L
-    val outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
-    // (src, dst, deg) — static across iterations; repartition by src so
-    // the captured partitioning makes every iteration's pr-join exchange
-    // only the rank side, never the edge list (see Pregel)
-    val withDeg = edges.select("src", "dst").join(outdeg, "src")
-      .repartition(F.col("src")).localCheckpoint()
-    var pr = pr0.select("vid", "pr")
-    val zeros = vertices.select(F.col("vid"), F.lit(0L).as("m")).localCheckpoint()
-    var prevCkpt: DataFrame = null
-    for (it <- 1 to iters) {
-      // messages ∪ a zero row per vertex, then ONE groupBy — replaces the
-      // groupBy(dst) + left-join(vertices) pair (two shuffles → one; the
-      // zero rows also restore dangling vertices' base rank)
-      val msgs = withDeg
-        .join(pr, withDeg("src") === pr("vid"))
-        .select(F.col("dst").as("vid"), F.expr("pr div deg").as("m"))
-      pr = zeros.unionByName(msgs)
-        .groupBy("vid").agg(F.sum("m").as("m"))
-        .select(F.col("vid"), (F.lit(base) + F.expr("(85 * m) div 100")).as("pr"))
-      // truncate lineage every 2nd iteration (and at the end): plans stay
-      // shallow while halving the materialization barriers; each eager
-      // checkpoint supersedes the previous one's blocks
-      if (it % 2 == 0 || it == iters) {
-        pr = pr.localCheckpoint()
-        if (prevCkpt != null) CheckpointGC.unpersist(prevCkpt)
-        prevCkpt = pr
-      }
-    }
-    pr
-  }
+                   iters: Int): DataFrame =
+    rank(vertices, pr0, edges, F.lit((15L * (One / vertices.count())) / 100L), iters)
 
   /** Personalized PageRank: teleport mass returns to `srcVid` only —
     * pr0 = 1e12·e_src; pr'(v) = [v = src]·(15·1e12)/100 + (85·Σ_in pr(u)
@@ -90,45 +57,52 @@ object GraphAlgs {
     * reproducibility argument as [[pagerank]]). Returns every vertex's
     * rank in 1e-12 units (zero until mass reaches it). */
   def personalizedPagerank(vertices: DataFrame, edges: DataFrame, srcVid: Long,
-                           iters: Int = 10): DataFrame = {
-    val init = 1000000000000L
-    val base = (15L * init) / 100L
+                           iters: Int = 10): DataFrame =
+    rank(vertices,
+      vertices.select(F.col("vid"), F.when(F.col("vid") === srcVid, One).otherwise(0L).as("pr")),
+      edges, F.when(F.col("vid") === srcVid, (15L * One) / 100L).otherwise(0L), iters)
+
+  /** The loop under every PageRank variant: pr'(v) = teleport(v) +
+    * (85·Σ_in pr(u) div deg(u)) div 100, `iters` rounds from `pr0`;
+    * `teleport` is a column over vid. */
+  private def rank(vertices: DataFrame, pr0: DataFrame, edges: DataFrame,
+                   teleport: Column, iters: Int): DataFrame = Superstep.run { loop =>
     val outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
-    val withDeg = edges.select("src", "dst").join(outdeg, "src")
-      .repartition(F.col("src")).localCheckpoint()
-    var pr = vertices.select(F.col("vid"),
-      F.when(F.col("vid") === srcVid, init).otherwise(0L).as("pr"))
-    val zeros = vertices.select(F.col("vid"), F.lit(0L).as("m")).localCheckpoint()
-    val baseOf = F.when(F.col("vid") === srcVid, base).otherwise(0L)
-    var prevCkpt: DataFrame = null
-    for (it <- 1 to iters) {
+    // (src, dst, deg) — static across iterations; repartition by src so
+    // the captured partitioning makes every iteration's pr-join exchange
+    // only the rank side, never the edge list (see Pregel)
+    val withDeg = loop.input(edges.select("src", "dst").join(outdeg, "src")
+      .repartition(F.col("src")))
+    val zeros = loop.input(vertices.select(F.col("vid"), F.lit(0L).as("m")))
+    loop.fixed(pr0.select("vid", "pr"), iters) { pr =>
+      // messages ∪ a zero row per vertex, then ONE groupBy — replaces the
+      // groupBy(dst) + left-join(vertices) pair (two shuffles → one; the
+      // zero rows also restore dangling vertices' base rank)
       val msgs = withDeg
         .join(pr, withDeg("src") === pr("vid"))
         .select(F.col("dst").as("vid"), F.expr("pr div deg").as("m"))
-      pr = zeros.unionByName(msgs)
+      zeros.unionByName(msgs)
         .groupBy("vid").agg(F.sum("m").as("m"))
-        .select(F.col("vid"), (baseOf + F.expr("(85 * m) div 100")).as("pr"))
-      if (it % 2 == 0 || it == iters) {
-        pr = pr.localCheckpoint()
-        if (prevCkpt != null) CheckpointGC.unpersist(prevCkpt)
-        prevCkpt = pr
-      }
+        .select(F.col("vid"), (teleport + F.expr("(85 * m) div 100")).as("pr"))
     }
-    pr
   }
 
   /** BFS hop count from `sourceVid` over an undirected edge list;
     * returns reachable (vid, d). Frontier form: round k's senders are
     * exactly the vertices first reached at hop k. */
   def sssp(vertices: DataFrame, undirected0: DataFrame, sourceVid: Long,
-           maxIter: Int = 10): DataFrame = {
+           maxIter: Int = 10): DataFrame =
+    distances(vertices, undirected0.select("src", "dst"),
+      F.col("vid") === sourceVid, F.lit(1L), maxIter)
+
+  /** Reachable (vid, d): the least Σ `step` over paths from any vertex
+    * matching `isSource`, by the frontier Pregel. */
+  private def distances(vertices: DataFrame, edges: DataFrame, isSource: Column,
+                        step: Column, maxIter: Int): DataFrame = {
     val INF = Int.MaxValue.toLong
     Pregel.minPropagate(
-      vertices.select(F.col("vid"),
-        F.when(F.col("vid") === sourceVid, 0L).otherwise(INF).as("x")),
-      _.filter(F.col("x") < INF),
-      undirected0.select("src", "dst"),
-      F.col("x") + 1L, maxIter)
+      vertices.select(F.col("vid"), F.when(isSource, 0L).otherwise(INF).as("x")),
+      _.filter(F.col("x") < INF), edges, F.col("x") + step, maxIter)
       .filter(F.col("x") < INF)
       .select(F.col("vid"), F.col("x").as("d"))
   }
@@ -163,7 +137,6 @@ object GraphAlgs {
       F.struct((F.col("x.d") + 1L).as("d"), F.col("src").as("p")), maxIter)
       .filter(F.col("x").isNotNull)
       .select(F.col("vid"), F.col("x.d").as("d"), F.col("x.p").as("p"))
-      .localCheckpoint()
     val maxD = res.agg(F.max("d")).head().getLong(0)
     // the level chain is only `diameter` joins deep over the checkpointed
     // tree — one lazy plan, no per-level materialization barrier
@@ -189,17 +162,9 @@ object GraphAlgs {
     * the frontier-empty check exits as soon as no relaxation fires.
     * Returns reachable (vid, d). */
   def weightedSssp(vertices: DataFrame, weighted0: DataFrame, sourceVid: Long,
-                   maxIter: Int = 60): DataFrame = {
-    val INF = Int.MaxValue.toLong
-    Pregel.minPropagate(
-      vertices.select(F.col("vid"),
-        F.when(F.col("vid") === sourceVid, 0L).otherwise(INF).as("x")),
-      _.filter(F.col("x") < INF),
-      weighted0.select("src", "dst", "w"),
-      F.col("x") + F.col("w"), maxIter)
-      .filter(F.col("x") < INF)
-      .select(F.col("vid"), F.col("x").as("d"))
-  }
+                   maxIter: Int = 60): DataFrame =
+    distances(vertices, weighted0.select("src", "dst", "w"),
+      F.col("vid") === sourceVid, F.col("w"), maxIter)
 
   /** Community detection by synchronous label propagation, `iters` fixed
     * rounds (sync + deterministic tie-break = reproducible across
@@ -207,14 +172,12 @@ object GraphAlgs {
     * vertex adopts its neighbors' most frequent label, ties to the
     * smallest label; isolated vertices keep their own. */
   def labelPropagation(vertices: DataFrame, undirected0: DataFrame,
-                       iters: Int = 5): DataFrame = {
+                       iters: Int = 5): DataFrame = Superstep.run { loop =>
     // src-partitioned once: each round's edge⋈labels join reuses it and
     // exchanges only the label side (see Pregel)
-    val undirected = undirected0.repartition(F.col("src")).localCheckpoint()
-    var labels = vertices.select(F.col("vid"), F.col("vid").as("lbl"))
-      .localCheckpoint()
-    var prevCkpt = labels
-    for (it <- 1 to iters) {
+    val undirected = loop.input(undirected0.repartition(F.col("src")))
+    loop.fixed(loop.initial(vertices.select(F.col("vid"), F.col("vid").as("lbl"))),
+      iters) { labels =>
       // most-frequent neighbor label, ties to smallest: max on the
       // (count, -lbl) struct — a second partial-aggregatable groupBy
       // instead of a window (drops the per-iteration window SORT; vids
@@ -225,18 +188,10 @@ object GraphAlgs {
         .groupBy("vid")
         .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).as("nl"))).as("t"))
         .select(F.col("vid"), (-F.col("t.nl")).as("new_lbl"))
-      labels = labels
+      labels
         .join(top, Seq("vid"), "left")
         .select(F.col("vid"), F.coalesce(F.col("new_lbl"), F.col("lbl")).as("lbl"))
-      // truncate lineage every 2nd round (and at the end) — plans stay
-      // shallow at half the materialization barriers (see pagerank)
-      if (it % 2 == 0 || it == iters) {
-        labels = labels.localCheckpoint()
-        if (prevCkpt != null) CheckpointGC.unpersist(prevCkpt)
-        prevCkpt = labels
-      }
     }
-    labels
   }
 
   /** k-core: `rounds` synchronous peeling rounds — each round drops every
@@ -250,34 +205,25 @@ object GraphAlgs {
     * round; survivor sets only shrink, so per-round work is monotone
     * non-increasing. */
   def kCore(vertices: DataFrame, undirected0: DataFrame, k: Int,
-            rounds: Int = 10): DataFrame = {
-    val edges = undirected0.select("src", "dst")
-      .repartition(F.col("src")).localCheckpoint()
-    var surv = vertices.select("vid").localCheckpoint()
-    var prevSurv = surv
-    var prev = surv.count()
-    var done = false
-    for (_ <- 1 to rounds if !done) {
+            rounds: Int = 10): DataFrame = Superstep.run { loop =>
+    val edges = loop.input(undirected0.select("src", "dst").repartition(F.col("src")))
+    val surv0 = loop.initial(vertices.select("vid"))
+    loop.probed((surv0, surv0.count()), rounds) { case ((surv, _), _) =>
       // alive edge = both endpoints survive; degree = alive out-edges per
       // src (the symmetric list counts each undirected edge at both ends)
-      surv = edges
+      edges
         .join(surv.select(F.col("vid").as("src")), "src", "left_semi")
         .join(surv.select(F.col("vid").as("dst")), "dst", "left_semi")
         .groupBy(F.col("src").as("vid")).agg(F.count(F.lit(1)).as("deg"))
         .filter(F.col("deg") >= k)
         .select("vid")
-        .localCheckpoint(false)
-      // the count doubles as the materialization probe (see Pregel) AND
-      // the early exit: a round that drops nobody leaves every degree
-      // unchanged, so all remaining rounds are no-ops — the result is
-      // identical to running the full fixed-round schedule
+    } { case ((_, prev), surv) =>
+      // the count is the probe: a round that drops nobody leaves every
+      // degree unchanged, so all remaining rounds are no-ops — the result
+      // is identical to running the full fixed-round schedule
       val c = surv.count()
-      CheckpointGC.unpersist(prevSurv) // superseded by the new survivors
-      prevSurv = surv
-      done = c == prev
-      prev = c
-    }
-    surv
+      ((surv, c), c == prev)
+    }._1
   }
 
   /** Full k-core DECOMPOSITION — coreness number per vertex — by the
@@ -292,17 +238,13 @@ object GraphAlgs {
     * so a no-change round proves all remaining rounds no-ops and the
     * result equals the full schedule (same argument as kCore). */
   def coreness(vertices: DataFrame, undirected0: DataFrame,
-               rounds: Int = 8): DataFrame = {
+               rounds: Int = 8): DataFrame = Superstep.run { loop =>
     import org.apache.spark.sql.expressions.Window
-    val edges = undirected0.select("src", "dst")
-      .repartition(F.col("src")).localCheckpoint()
-    var c = edges.groupBy(F.col("src").as("vid"))
-      .agg(F.count(F.lit(1)).as("c"))
-      .localCheckpoint()
-    var prevCkpt = c
-    var prevSum = c.agg(F.sum("c")).head().getLong(0)
-    var done = false
-    for (_ <- 1 to rounds if !done) {
+    val edges = loop.input(undirected0.select("src", "dst").repartition(F.col("src")))
+    val c0 = loop.initial(edges.groupBy(F.col("src").as("vid"))
+      .agg(F.count(F.lit(1)).as("c")))
+    val sum = (c: DataFrame) => c.agg(F.sum("c")).head().getLong(0)
+    val (c, _) = loop.probed((c0, sum(c0)), rounds) { case ((c, _), _) =>
       val nbr = edges
         .join(c.select(F.col("vid").as("dst"), F.col("c").as("cu")), "dst")
         .select(F.col("src").as("vid"), F.col("cu"))
@@ -310,16 +252,13 @@ object GraphAlgs {
       val h = nbr
         .select(F.col("vid"), F.least(F.col("cu"), F.row_number().over(w)).as("m"))
         .groupBy("vid").agg(F.max("m").cast("long").as("h"))
-      c = c.join(h, Seq("vid"))
+      c.join(h, Seq("vid"))
         .select(F.col("vid"), F.least(F.col("c"), F.col("h")).as("c"))
-        .localCheckpoint(false)
-      // one job: the sum materializes the checkpoint AND probes the
-      // fixpoint (values are non-increasing, so equal sums = no change)
-      val s = c.agg(F.sum("c")).head().getLong(0)
-      CheckpointGC.unpersist(prevCkpt)
-      prevCkpt = c
-      done = s == prevSum
-      prevSum = s
+    } { case ((_, prevSum), c) =>
+      // the sum is the probe: values are non-increasing, so equal sums =
+      // no change
+      val s = sum(c)
+      ((c, s), s == prevSum)
     }
     // isolated vertices (none in this graph's model, but the API
     // shouldn't lose them) have coreness 0
@@ -331,17 +270,8 @@ object GraphAlgs {
     * Identical frontier loop to sssp — the source set just seeds more
     * than one zero. Returns reachable (vid, d). */
   def nearestLandmark(vertices: DataFrame, undirected0: DataFrame,
-                      isSource: org.apache.spark.sql.Column,
-                      maxIter: Int = 10): DataFrame = {
-    val INF = Int.MaxValue.toLong
-    Pregel.minPropagate(
-      vertices.select(F.col("vid"), F.when(isSource, 0L).otherwise(INF).as("x")),
-      _.filter(F.col("x") < INF),
-      undirected0.select("src", "dst"),
-      F.col("x") + 1L, maxIter)
-      .filter(F.col("x") < INF)
-      .select(F.col("vid"), F.col("x").as("d"))
-  }
+                      isSource: Column, maxIter: Int = 10): DataFrame =
+    distances(vertices, undirected0.select("src", "dst"), isSource, F.lit(1L), maxIter)
 
   /** Multi-source BFS over a ≤64-landmark set in ONE frontier loop — the
     * MS-BFS pattern (Then et al., VLDB 2014): per-vertex state is a
@@ -359,10 +289,9 @@ object GraphAlgs {
     *   nreach = #landmarks reached at d ≥ 1.
     */
   def landmarkCentrality(vertices: DataFrame, undirected0: DataFrame,
-                         isLandmark: org.apache.spark.sql.Column,
-                         maxIter: Int = 10): DataFrame = {
-    val edges = undirected0.select("src", "dst")
-      .repartition(F.col("src")).localCheckpoint()
+                         isLandmark: Column,
+                         maxIter: Int = 10): DataFrame = Superstep.run { loop =>
+    val edges = loop.input(undirected0.select("src", "dst").repartition(F.col("src")))
     // landmark set is dimension-sized by contract (≤ 64 bits): the
     // driver-side collect assigns stable bit positions by vid order
     val lms = vertices.filter(isLandmark).select("vid")
@@ -372,36 +301,28 @@ object GraphAlgs {
     val mask0 = lms.zipWithIndex.foldLeft(F.lit(0L)) { case (acc, (v, i)) =>
       F.when(F.col("vid") === v, F.lit(1L << i)).otherwise(acc)
     }
-    var state = vertices.select(F.col("vid"), mask0.as("mask"),
-      F.lit(0L).as("h6"), F.lit(0L).as("ecc"), F.lit(0L).as("nr"))
-      .localCheckpoint()
-    var prevCkpt = state
-    var frontier = state.filter(F.col("mask") =!= 0L).select("vid", "mask")
-    var done = false
-    var r = 0
-    while (!done && r < maxIter) {
-      r += 1
-      val contrib = 1000000L / r // this round's per-new-landmark harmonic term
-      val cand = edges.join(frontier, edges("src") === frontier("vid"))
-        .select(F.col("dst").as("vid"), F.col("mask").as("m"))
-        .groupBy("vid").agg(F.expr("bit_or(m)").as("inm"))
-      val joined = state.join(cand, Seq("vid"), "left")
-        .select(F.col("vid"), F.col("mask"), F.col("h6"), F.col("ecc"), F.col("nr"),
-          (F.coalesce(F.col("inm"), F.lit(0L)).bitwiseAND(F.expr("~mask"))).as("nb"))
-        .localCheckpoint(false)
-      state = joined.select(F.col("vid"),
-        F.col("mask").bitwiseOR(F.col("nb")).as("mask"),
-        (F.col("h6") + F.expr("bit_count(nb)") * contrib).as("h6"),
-        F.when(F.col("nb") =!= 0L, r.toLong).otherwise(F.col("ecc")).as("ecc"),
-        (F.col("nr") + F.expr("bit_count(nb)")).as("nr"))
-      frontier = state.join(
-        joined.filter(F.col("nb") =!= 0L).select("vid"), "vid", "left_semi")
-        .select("vid", "mask")
-      // one job per round: the convergence count also materializes the
-      // lazy checkpoint (same pattern as Pregel.minPropagate)
-      done = joined.filter(F.col("nb") =!= 0L).count() == 0L
-      CheckpointGC.unpersist(prevCkpt) // superseded by joined's blocks
-      prevCkpt = joined
+    val state0 = loop.initial(vertices.select(F.col("vid"), mask0.as("mask"),
+      F.lit(0L).as("h6"), F.lit(0L).as("ecc"), F.lit(0L).as("nr")))
+    // a round's checkpoint is the next state plus nb, the landmark bits
+    // each vertex newly received; its nb != 0 rows are the next frontier
+    val (state, _) = loop.probed(
+      (state0, state0.filter(F.col("mask") =!= 0L).select("vid", "mask")), maxIter) {
+      case ((state, frontier), r) =>
+        val contrib = 1000000L / r // this round's per-new-landmark harmonic term
+        val cand = edges.join(frontier, edges("src") === frontier("vid"))
+          .select(F.col("dst").as("vid"), F.col("mask").as("m"))
+          .groupBy("vid").agg(F.expr("bit_or(m)").as("inm"))
+        state.join(cand, Seq("vid"), "left")
+          .withColumn("nb", F.coalesce(F.col("inm"), F.lit(0L)).bitwiseAND(F.expr("~mask")))
+          .select(F.col("vid"),
+            F.col("mask").bitwiseOR(F.col("nb")).as("mask"),
+            (F.col("h6") + F.expr("bit_count(nb)") * contrib).as("h6"),
+            F.when(F.col("nb") =!= 0L, r.toLong).otherwise(F.col("ecc")).as("ecc"),
+            (F.col("nr") + F.expr("bit_count(nb)")).as("nr"),
+            F.col("nb"))
+    } { (_, next) =>
+      val reached = next.filter(F.col("nb") =!= 0L)
+      ((next, reached.select("vid", "mask")), reached.count() == 0L)
     }
     state.select(F.col("vid"), F.col("h6"), F.col("ecc"), F.col("nr").as("nreach"))
   }
@@ -423,7 +344,7 @@ object GraphAlgs {
     * vertex id). Returns (vid, d, sigma, stress) for reachable vertices. */
   def stressCentrality(vertices: DataFrame, undirected0: DataFrame,
                        sourceVid: Long, maxIter: Int = 10): DataFrame = {
-    val dist = sssp(vertices, undirected0, sourceVid, maxIter).localCheckpoint()
+    val dist = sssp(vertices, undirected0, sourceVid, maxIter)
     // DAG edge (u,w): an undirected edge that advances the BFS by one hop
     val dag = undirected0.select("src", "dst")
       .join(dist.select(F.col("vid").as("src"), F.col("d").as("du")), "src")
@@ -478,34 +399,29 @@ object GraphAlgs {
     * surviving oriented edges (a, b). */
   def kTruss(undirected0: DataFrame, k: Int, rounds: Int = 5): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    var edges = undirected0.filter(F.col("src") < F.col("dst"))
-      .select(F.col("src").as("a"), F.col("dst").as("b"))
-      .localCheckpoint()
-    var prev = edges.count()
-    var done = false
-    for (_ <- 1 to rounds if !done) {
-      val tri = edges
-        .join(edges.select(F.col("a").as("b2"), F.col("b").as("c")),
-          F.col("b") === F.col("b2"))
-        .join(edges.select(F.col("a").as("a3"), F.col("b").as("c3")),
-          F.col("a") === F.col("a3") && F.col("c") === F.col("c3"))
-        .select("a", "b", "c")
-      val support = tri.select(F.col("a").as("x"), F.col("b").as("y"))
-        .unionByName(tri.select(F.col("a").as("x"), F.col("c").as("y")))
-        .unionByName(tri.select(F.col("b").as("x"), F.col("c").as("y")))
-        .groupBy("x", "y").agg(F.count(F.lit(1)).as("sup"))
-      val prevEdges = edges
-      edges = edges
-        .join(support, F.col("a") === F.col("x") && F.col("b") === F.col("y"))
-        .filter(F.col("sup") >= k - 2)
-        .select("a", "b")
-        .localCheckpoint(false)
-      val c = edges.count()
-      CheckpointGC.unpersist(prevEdges) // superseded by the new survivors
-      done = c == prev
-      prev = c
+    Superstep.run { loop =>
+      val edges0 = loop.initial(undirected0.filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").as("a"), F.col("dst").as("b")))
+      loop.probed((edges0, edges0.count()), rounds) { case ((edges, _), _) =>
+        val tri = edges
+          .join(edges.select(F.col("a").as("b2"), F.col("b").as("c")),
+            F.col("b") === F.col("b2"))
+          .join(edges.select(F.col("a").as("a3"), F.col("b").as("c3")),
+            F.col("a") === F.col("a3") && F.col("c") === F.col("c3"))
+          .select("a", "b", "c")
+        val support = tri.select(F.col("a").as("x"), F.col("b").as("y"))
+          .unionByName(tri.select(F.col("a").as("x"), F.col("c").as("y")))
+          .unionByName(tri.select(F.col("b").as("x"), F.col("c").as("y")))
+          .groupBy("x", "y").agg(F.count(F.lit(1)).as("sup"))
+        edges
+          .join(support, F.col("a") === F.col("x") && F.col("b") === F.col("y"))
+          .filter(F.col("sup") >= k - 2)
+          .select("a", "b")
+      } { case ((_, prev), edges) =>
+        val c = edges.count()
+        ((edges, c), c == prev)
+      }._1
     }
-    edges
   }
 
   /** Strongly connected components over the DIRECTED edge list — the
@@ -525,17 +441,15 @@ object GraphAlgs {
     * `maxOuter` is a backstop, the empty-remainder check exits early.
     * Returns (vid, scc = min vid of the component). */
   def scc(vertices: DataFrame, edges: DataFrame,
-          maxOuter: Int = 8, maxIter: Int = 10): DataFrame = {
-    val directed = edges.select("src", "dst").localCheckpoint()
-    var active = vertices.select(F.col("vid"), F.lit(0L).as("cf"), F.lit(0L).as("cr"))
-      .localCheckpoint()
-    var remaining = active.count()
+          maxOuter: Int = 8, maxIter: Int = 10): DataFrame = Superstep.run { loop =>
+    val directed = loop.input(edges.select("src", "dst"))
+    val active0 = loop.initial(
+      vertices.select(F.col("vid"), F.lit(0L).as("cf"), F.lit(0L).as("cr")))
     val found = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var outer = 0
-    while (remaining > 0 && outer < maxOuter) {
-      // round 0 has one color class covering everything — the color
+    val (_, assigned) = loop.probed((active0, false), maxOuter) { case ((active, _), round) =>
+      // round 1 has one color class covering everything — the color
       // filter would be a no-op join over the full edge list
-      val e = if (outer == 0) directed else directed
+      val e = if (round == 1) directed else directed
         .join(active.select(F.col("vid").as("src"), F.col("cf").as("scf"),
           F.col("cr").as("scr")), "src")
         .join(active.select(F.col("vid").as("dst"), F.col("cf").as("dcf"),
@@ -556,24 +470,17 @@ object GraphAlgs {
       val res = Pregel.minPropagate(init, identity, eBoth, F.col("x"), maxIter)
         .select(F.expr("vid div 2").as("vid"), (F.col("vid") % 2).as("side"), F.col("x"))
       // one materialization serves the SCC slice, the re-color, and the probe
-      val joined = res.filter(F.col("side") === 0).select(F.col("vid"), F.col("x").as("bv"))
+      res.filter(F.col("side") === 0).select(F.col("vid"), F.col("x").as("bv"))
         .join(res.filter(F.col("side") === 1).select(F.col("vid"), F.col("x").as("fv")), "vid")
-        .localCheckpoint(false)
-      found += joined.filter(F.col("bv") === F.col("fv"))
-        .select(F.col("vid"), F.col("bv").as("scc"))
-      val prevActive = active
-      active = joined.filter(F.col("bv") =!= F.col("fv"))
-        .select(F.col("vid"), F.col("fv").as("cf"), F.col("bv").as("cr"))
-        .localCheckpoint(false)
-      remaining = active.count() // materializes joined + active
-      // joined's blocks now carry this round's slice in `found`; the
-      // inner Pregel's final checkpoint (behind res) and the previous
-      // round's active set have no remaining consumer
-      CheckpointGC.unpersist(res)
-      if (prevActive != null) CheckpointGC.unpersist(prevActive)
-      outer += 1
+    } { (_, joined) =>
+      // the slice stays live to the result; the rest re-colors
+      found += loop.keep(joined.filter(F.col("bv") === F.col("fv"))
+        .select(F.col("vid"), F.col("bv").as("scc")))
+      val rest = joined.filter(F.col("bv") =!= F.col("fv"))
+      val done = rest.count() == 0L
+      ((rest.select(F.col("vid"), F.col("fv").as("cf"), F.col("bv").as("cr")), done), done)
     }
-    require(remaining == 0, s"scc: $remaining vertices unassigned after $maxOuter rounds")
+    require(assigned, s"scc: vertices unassigned after $maxOuter rounds")
     found.reduce(_ unionByName _)
   }
 

@@ -826,13 +826,15 @@ object GraphQueries {
   }
 
   val gKcoreSql: String = {
+    // MATERIALIZED: each round reads s(r-1) twice, and DuckDB inlines a
+    // plain CTE per reference, so its plan grew about threefold per round
     val round = (r: Int) =>
-      s"""d$r AS (
+      s"""d$r AS MATERIALIZED (
          |  SELECT e.src AS vid, count(*) AS n FROM uedges e
          |  JOIN s${r - 1} a ON a.vid = e.src
          |  JOIN s${r - 1} b ON b.vid = e.dst
          |  GROUP BY 1),
-         |s$r AS (SELECT vid FROM d$r WHERE n >= 3)""".stripMargin
+         |s$r AS MATERIALIZED (SELECT vid FROM d$r WHERE n >= 3)""".stripMargin
     s"""WITH $sqlPrelude,
        |s0 AS (SELECT vid FROM verts),
        |${(1 to 10).map(round).mkString(",\n")}

@@ -211,12 +211,30 @@ class KVBatchWrite(path: String, truncate: Boolean, layout: String,
 
   // a committed TASK already wrote its segments, and a commit that
   // failed midway some sidecars; a job-level abort sweeps both, or failed
-  // writes leak them
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+  // writes leak them. Beyond the segments `messages` names, the sweep
+  // takes every file named with this write's queryId: a task that
+  // committed while its job was failing is reported killed, and its
+  // message never arrives. A task still running after the abort can
+  // still write one.
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val conf = confW.value
     messages.foreach {
-      case m: KVCommit => m.segments.foreach { case (seg, _) => deleteSegment(confW.value, seg.file) }
+      case m: KVCommit => m.segments.foreach { case (seg, _) => deleteSegment(conf, seg.file) }
       case _ => ()
     }
+    val fs = GraftFs.fs(path, conf)
+    def ls(dir: String): Seq[String] = {
+      val p = new Path(dir)
+      if (fs.exists(p)) fs.listStatus(p).toSeq.map(_.getPath.getName) else Nil
+    }
+    val dirs = ("", path) +: ls(path).filter(_.startsWith(KVSegmentStore.BucketDirPrefix))
+      .map(b => (s"$b/", GraftFs.child(path, b)))
+    for {
+      (prefix, dir) <- dirs
+      name <- (ls(dir) ++ ls(GraftFs.child(dir, KVSegmentStore.BloomDir))).distinct
+      if name.endsWith(s"-$queryId.parquet")
+    } deleteSegment(conf, prefix + name)
+  }
 }
 
 case class KVWriterFactory(path: String, queryId: String, buckets: Int,

@@ -383,4 +383,65 @@ class GraphSpec extends SparkSpec {
         s"$sf still merging at level $last — raise LouvainMergeLevels")
     }
   }
+
+  /** Runs `call` and returns its Spark job count and the ids of the
+    * persisted RDDs it created that its result's plan does not read
+    * (the result's checkpoints plus the lineage of any not yet
+    * materialized, which is what a checkpoint still depends on). */
+  private def jobsAndLeftovers(call: => DataFrame): (Int, Seq[Int]) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.BusDrain(sc)
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val res = try { val r = call; org.apache.spark.graftspec.BusDrain(sc); r }
+      finally sc.removeSparkListener(listener)
+    val read = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Unit = if (read.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+    res.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRDD => l.rdd }
+      .foreach(walk)
+    (jobs.get, (sc.getPersistentRDDs.keySet -- before -- read).toSeq.sorted)
+  }
+
+  test("every superstep loop stays within its job budget and keeps only checkpoints its result reads") {
+    import spark.implicits._
+    // the scc spec's directed graph: two cycles, a one-way bridge, a singleton
+    val dv = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L).toDF("vid")
+    val de = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (4L, 5L), (5L, 4L), (7L, 8L)).toDF("src", "dst")
+    val lm = F.col("vid") === 1L || F.col("vid") === 10L
+    // Spark jobs per call on these graphs (local[4], shuffle.partitions 4,
+    // AQE on), measured before the loops shared one superstep driver;
+    // pagerank's is two lower because it counts the vertices once now (a
+    // count under AQE is a map-stage job and a result job)
+    val loops: Seq[(String, Int, () => DataFrame)] = Seq(
+      ("pagerank", 28, () => GraphAlgs.pagerank(verts, undirected, iters = 10)),
+      ("personalizedPagerank", 26, () => GraphAlgs.personalizedPagerank(verts, undirected, 1L, iters = 10)),
+      ("connectedComponents", 13, () => GraphAlgs.connectedComponents(verts, undirected)),
+      ("sssp", 13, () => GraphAlgs.sssp(verts, undirected, 1L)),
+      ("labelPropagation", 27, () => GraphAlgs.labelPropagation(verts, undirected, iters = 5)),
+      ("kCore", 13, () => GraphAlgs.kCore(verts, undirected, k = 2)),
+      ("coreness", 11, () => GraphAlgs.coreness(verts, undirected)),
+      ("kTruss", 15, () => GraphAlgs.kTruss(undirected, k = 3, rounds = 3)),
+      ("landmarkCentrality", 17, () => GraphAlgs.landmarkCentrality(verts, undirected, lm)),
+      ("stressCentrality", 22, () => GraphAlgs.stressCentrality(verts, undirected, 1L)),
+      ("shortestPathTree", 16, () => GraphAlgs.shortestPathTree(verts, undirected, 1L)),
+      ("scc", 63, () => GraphAlgs.scc(dv, de)))
+    val faults = loops.flatMap { case (name, budget, call) =>
+      val (jobs, leftovers) = jobsAndLeftovers(call())
+      info(s"$name: $jobs jobs, leftover RDDs ${leftovers.mkString("[", ",", "]")}")
+      (if (jobs > budget) Seq(s"$name ran $jobs jobs, budget $budget") else Nil) ++
+        (if (leftovers.nonEmpty)
+          Seq(s"$name left ${leftovers.size} persisted RDDs its result does not read")
+        else Nil)
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
+  }
 }

@@ -185,6 +185,24 @@ class KVSegmentWriterSpec extends SparkSpec {
       s"left behind: ${written.filter(_.exists()).mkString(", ")}")
   }
 
+  test("job abort sweeps every segment named with its queryId, reported or not") {
+    val dir = Files.createTempDirectory("graft_kvsweep").toString
+    def plant(name: String): Seq[java.io.File] = {
+      val files = Seq(new java.io.File(dir, name),
+        new java.io.File(KVSegmentStore.sidecarPath(dir, name)))
+      files.foreach { f => f.getParentFile.mkdirs(); Files.write(f.toPath, Array[Byte](1)) }
+      files
+    }
+    // what the tasks of write "q" left: one at the root, one in a bucket;
+    // their commit messages never reached the driver
+    val orphans = plant("part-00000-7-q.parquet") ++ plant("__b=3/part-00001-8-q.parquet")
+    // another write's committed segment, and a name that only contains "q"
+    val others = plant("__b=3/part-00002-9-q2.parquet") ++ plant("part-00003-4-qq.parquet")
+    new KVBatchWrite(dir, truncate = false, "bucket", 8, "q").abort(Array.empty)
+    assert(orphans.forall(!_.exists()), s"left behind: ${orphans.filter(_.exists())}")
+    assert(others.forall(_.exists()), s"swept: ${others.filterNot(_.exists())}")
+  }
+
   test("a bucketed write whose input throws in one task leaves no sidecar behind") {
     val dir = Files.createTempDirectory("graft_kvfail").toString
     // one cell with a null c: the write task that receives it fails

@@ -15,14 +15,21 @@ def norm(df):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
+# DuckDB spills a query that outgrows memory to disk; capping the spill
+# makes a runaway oracle fail as its own ORACLE-ERROR instead of filling
+# the disk under everything else running beside it
+SPILL_LIMIT = "4GB"
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{os.path.join(out_dir, '.duckdb_tmp')}'")
+    con.execute(f"SET max_temp_directory_size = '{SPILL_LIMIT}'")
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         t = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     names = [d for d in sorted(os.listdir(out_dir))
-             if os.path.isdir(os.path.join(out_dir, d))]
+             if os.path.isdir(os.path.join(out_dir, d)) and not d.startswith(".")]
     failed = []
     for name in names:
         # Read the Spark side with pandas (as the driver does): decimal
