@@ -128,11 +128,6 @@ object Bench {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // unpersisting a superseded localCheckpoint is deliberate (Superstep,
-    // the between-run sweep): silence the per-RDD lineage warning
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
     // Warm up the JVM/codegen/shuffle/parquet paths so per-query numbers
     // measure the query, not first-job setup (steady-state is what a
     // long-lived cluster sees).
@@ -187,7 +182,8 @@ object Bench {
     // long-lived cluster's steady state). Safe: every query builds its plan
     // from parquet — nothing persisted by one run is referenced by the next.
     def sweep(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(org.apache.spark.sql.graftbridge.GraftSqlBridge.release(_))
     sweep()
     val (load0, rss0) = waitQuiet()
     // A rep that throws records NO time (timing the exception path would

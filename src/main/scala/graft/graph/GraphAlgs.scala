@@ -46,10 +46,11 @@ object GraphAlgs {
     * vector `pr0` (vid, pr in 1e-12 units) — the incremental-maintenance
     * entry: after an edge delta, a few rounds from the previous fixed
     * point re-converge instead of restarting from uniform (the recurrence
-    * is a contraction toward the same fixed point from any start). */
-  def pagerankFrom(vertices: DataFrame, pr0: DataFrame, edges: DataFrame,
-                   iters: Int): DataFrame =
-    rank(vertices, pr0, edges, F.lit((15L * (One / vertices.count())) / 100L), iters)
+    * is a contraction toward the same fixed point from any start). `n`
+    * is `vertices`' row count, which the caller has already counted. */
+  private[graft] def pagerankFrom(vertices: DataFrame, n: Long, pr0: DataFrame,
+                                  edges: DataFrame, iters: Int): DataFrame =
+    rank(vertices, pr0, edges, F.lit((15L * (One / n)) / 100L), iters)
 
   /** Personalized PageRank: teleport mass returns to `srcVid` only —
     * pr0 = 1e12·e_src; pr'(v) = [v = src]·(15·1e12)/100 + (85·Σ_in pr(u)

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.{functions => F}
 
 /** The superstep driver: every iterative loop of [[GraphAlgs]] and
@@ -78,7 +79,7 @@ private[graph] final class Superstep private () {
   private def release(live: Seq[DataFrame]): Unit = {
     val read = Superstep.reads(live)
     val (stay, go) = owned.partition(r => read(r.id))
-    go.foreach(_.unpersist(blocking = false))
+    go.foreach(GraftSqlBridge.release(_))
     owned = stay
   }
 }

@@ -1,8 +1,10 @@
 package graft.kv
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
@@ -23,21 +25,20 @@ import org.apache.spark.sql.{functions => F}
   * delete-before-add upsert order. Keep it if it is an addition.
   *
   * Scale: appendMutation writes ONLY the batch (no snapshot rewrite —
-  * that is what makes high-frequency mutation viable at 100 TB);
-  * merge-on-read is one window over (k, c) which co-locates with a
-  * k-bucketed layout; compact() folds the log back into base/ exactly
-  * like a MergeTree background merge.
+  * that is what makes high-frequency mutation viable at 100 TB) in one
+  * write through a round-robin rebalance (the shuffle's map stage and
+  * the write: two Spark jobs under AQE), so one hot key's
+  * mega-mutation still spreads across write tasks (the reference chunks
+  * its statements the same way via BATCH_MUTATION_SIZE,
+  * QueryHelper.java:51,87); merge-on-read is one window over (k, c)
+  * which co-locates with a k-bucketed layout; compact() folds the log
+  * back into base/ exactly like a MergeTree background merge.
   *
-  * `maxEntriesPerTask` bounds how many entries any single delta-write
-  * task carries — the reference chunks its insert/delete statements the
-  * same way via BATCH_MUTATION_SIZE (QueryHelper.java:51,87) — so one hot
-  * key's mega-mutation cannot concentrate in a single task however skewed
-  * the batch's upstream partitioning is.
+  * Only COMPLETE parts (parquet `_SUCCESS`) are read: the files of a
+  * crashed or still-running append never expose half a batch.
   */
-final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
-                         maxEntriesPerTask: Long = 1000000L) {
-
-  require(maxEntriesPerTask > 0, "maxEntriesPerTask must be positive")
+final class KVDeltaStore(spark: SparkSession, warehouseDir: String) {
+  import KVDeltaStore._
 
   // wts = cell write time (millis), the MergeTree-TTL age column: stamped
   // per batch, carried by the winning row through merge-on-read AND
@@ -59,13 +60,13 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     if (fs.exists(bp)) bp else new Path(dir(name), "base__old")
   }
 
-  // numeric sort: a lexicographic sort of the names would order
-  // delta_100000 before delta_99999 once ids outgrow the name padding
-  private def deltaPaths(name: String): Seq[Path] =
-    if (!fs.exists(dir(name))) Seq.empty
-    else fs.listStatus(dir(name)).map(_.getPath)
-      .filter(_.getName.startsWith("delta_"))
-      .sortBy(_.getName.stripPrefix("delta_").toLong).toSeq
+  /** The complete delta parts of `name`'s log, ascending. */
+  private def complete(name: String): Seq[Part] = parts(fs, dir(name)).filter(_.complete)
+
+  /** The sequence the next append takes: one past every part on disk,
+    * complete or not, so an append never lands on a crashed part's seq. */
+  private[kv] def nextSeq(name: String): Long =
+    parts(fs, dir(name)).lastOption.map(_.seq + 1).getOrElse(1L)
 
   /** Append one mutate batch as a new delta part — no snapshot rewrite.
     * Within the batch, an addition of (k,c) supersedes its deletion
@@ -76,11 +77,8 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     * clock (a scenario stamps constants; a streaming sink derives it
     * from the batch id so replays re-stamp identically). */
   def appendMutation(name: String, additions: DataFrame, deletions: DataFrame,
-                     wts: Long): Unit = {
-    val next = deltaPaths(name).lastOption
-      .map(_.getName.stripPrefix("delta_").toLong + 1).getOrElse(1L)
-    appendMutationAt(name, next, additions, deletions, wts)
-  }
+                     wts: Long): Unit =
+    appendMutationAt(name, nextSeq(name), additions, deletions, wts)
 
   /** Append a mutate batch at an EXPLICIT log sequence — the streaming
     * sink's hook: delta ids derived from the micro-batch id stay stable
@@ -95,43 +93,30 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
       .unionByName(deletions.select(F.col("k"), F.col("c"),
         F.lit(null).cast(BinaryType).as("v"), F.lit(wts).as("wts"),
         F.lit(0).as("op")))
-    // Size write parallelism to the batch, not the cluster: a typical
-    // mutation lands as ONE task (full-width writes are all task/commit
-    // overhead), and a mega-batch spreads round-robin — key-OBLIVIOUS, so
-    // even a single hot key's mutation splits across tasks — at
-    // maxEntriesPerTask per task. The sizing count used to be a second
-    // full computation of the batch (mutation frames carry joins —
-    // vertexDeletions, traversal-authored property frames); persisting
-    // across count→write computes the batch ONCE and the write drains
-    // the cache (bounded by the batch size, spilling to disk — cheaper
-    // than re-running the upstream joins at any scale).
-    batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = batch.count()
-      val parts = math.max(1L, (n + maxEntriesPerTask - 1) / maxEntriesPerTask).toInt
-      batch.repartition(parts).write.mode(SaveMode.ErrorIfExists)
-        .parquet(new Path(dir(name), f"delta_$seq%05d").toString)
-    // blocking: a lingering batch cache raises GC pressure on whatever
-    // runs next (non-blocking unpersists measurably slowed co-resident
-    // queries — r15 regression cluster)
-    } finally batch.unpersist(true)
+    // One write, the upstream joins run once: the rebalance is
+    // round-robin — key-OBLIVIOUS, so even a single hot key's mutation
+    // splits across tasks — and AQE sizes its tasks from the shuffle
+    // statistics it collects anyway, so a typical mutation lands as one
+    // task.
+    batch.hint("rebalance").write.mode(SaveMode.ErrorIfExists)
+      .parquet(partPath(dir(name), seq).toString)
   }
 
   /** Whether `delta_<seq>` exists as a COMPLETE part (parquet _SUCCESS);
     * an incomplete part (crashed write) is deleted so the caller can
     * rewrite it — the streaming sink's replay path. */
-  def deltaCompleteOrClear(name: String, seq: Long): Boolean = {
-    val p = new Path(dir(name), f"delta_$seq%05d")
-    if (!fs.exists(p)) false
-    else if (fs.exists(new Path(p, "_SUCCESS"))) true
-    else { fs.delete(p, true); false }
-  }
+  def deltaCompleteOrClear(name: String, seq: Long): Boolean =
+    parts(fs, dir(name)).find(_.seq == seq) match {
+      case Some(p) if p.complete => true
+      case Some(p) => fs.delete(p.path, true); false
+      case None => false
+    }
 
   /** The merged view: base ∪ deltas resolved per (k, c) by latest
     * (seq, op). This is the DataFrame every KVStore op (slice/keyScan/
     * mutate) runs against — merge-on-read, nothing materialized. */
   def openDatabase(name: String): DataFrame =
-    mergedView(name, deltaPaths(name))
+    mergedView(name, complete(name))
 
   /** Time-travel read: the merged view as of delta `version` (inclusive)
     * — later-appended deltas are invisible, so a reader can pin the store
@@ -141,18 +126,17 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     * VACUUM). Same merge-on-read plan as openDatabase, just over a
     * filtered delta list — no extra work at any scale. */
   def openDatabaseAsOf(name: String, version: Long): DataFrame =
-    mergedView(name, deltaPaths(name)
-      .filter(_.getName.stripPrefix("delta_").toLong <= version))
+    mergedView(name, complete(name).filter(_.seq <= version))
 
   /** The merged view over an EXPLICIT delta list — compact() folds and
     * later deletes exactly one snapshot of the log, so a delta appended
     * concurrently is neither half-read nor swept unfolded. */
-  private def mergedView(name: String, deltas: Seq[Path]): DataFrame =
+  private def mergedView(name: String, deltas: Seq[Part]): DataFrame =
     mergedWithMeta(name, deltas).select("k", "c", "v")
 
   /** The merged view INCLUDING the winning row's write time — what
     * compact() persists and expire() filters on. */
-  private def mergedWithMeta(name: String, deltas: Seq[Path]): DataFrame = {
+  private def mergedWithMeta(name: String, deltas: Seq[Part]): DataFrame = {
     val base =
       if (fs.exists(basePath(name)))
         spark.read.schema(baseSchema).parquet(basePath(name).toString)
@@ -162,19 +146,10 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(deltaSchema.fields :+ StructField("seq", LongType)))
     val log = deltas.foldLeft(base) { (acc, p) =>
-      val seq = p.getName.stripPrefix("delta_").toLong
-      acc.unionByName(spark.read.schema(deltaSchema).parquet(p.toString)
-        .withColumn("seq", F.lit(seq)))
+      acc.unionByName(spark.read.schema(deltaSchema).parquet(p.path.toString)
+        .withColumn("seq", F.lit(p.seq)))
     }
-    val w = Window.partitionBy("k", "c")
-      .orderBy(F.col("seq").desc, F.col("op").desc)
-    // rank, not row_number: duplicate additions of one (k,c) within the
-    // winning batch all tie at rank 1 and ALL survive — exactly what the
-    // snapshot path (KVStore.mutate) keeps, and deterministic where
-    // row_number would pick an arbitrary duplicate
-    log.withColumn("rn", F.rank().over(w))
-      .filter(F.col("rn") === 1 && F.col("op") === 1)
-      .select("k", "c", "v", "wts")
+    latest(log).filter(F.col("op") === 1).select("k", "c", "v", "wts")
   }
 
   /** MergeTree-TTL expiry (`TTL <col> + INTERVAL ...` / materialized
@@ -186,7 +161,7 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     * Returns the number of expired cells. */
   def expire(name: String, olderThan: Long,
              wts: Long = System.currentTimeMillis()): Long = {
-    val doomed = mergedWithMeta(name, deltaPaths(name))
+    val doomed = mergedWithMeta(name, complete(name))
       .filter(F.col("wts").isNotNull && F.col("wts") < olderThan)
       .select("k", "c")
       .localCheckpoint() // pin the victim set: the append below must not re-resolve it
@@ -198,7 +173,8 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
         appendMutation(name, none, doomed, wts)
       }
       n
-    } finally doomed.unpersist(false)
+    } finally doomed.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd }.foreach(GraftSqlBridge.release(_))
   }
 
   /** Fold the mutation log into a fresh base snapshot and drop the
@@ -211,7 +187,7 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     // snapshot the log ONCE: this exact list is folded and, at the end,
     // this exact list is deleted — a delta appended concurrently is left
     // in place for the next compact instead of being swept unfolded
-    val deltas = deltaPaths(name)
+    val deltas = complete(name)
     val merged = mergedWithMeta(name, deltas) // wts survives the merge
     val tmp = new Path(dir(name), "base__tmp")
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -230,14 +206,14 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     // deltas, which re-resolve idempotently over the folded base — the
     // reverse order could resurrect a cell an already-deleted newer
     // delta had removed
-    deltas.foreach(p => fs.delete(p, true))
+    deltas.foreach(p => fs.delete(p.path, true))
     if (fs.exists(old)) fs.delete(old, true)
   }
 
   def exists(name: String): Boolean = fs.exists(dir(name))
 
   /** The number of un-compacted delta batches in `name`'s log. */
-  def logDepth(name: String): Int = deltaPaths(name).size
+  def logDepth(name: String): Int = complete(name).size
 
   /** Size-tiered auto-compaction — the MergeTree background-merge POLICY
     * (parts accumulate until the engine folds them) as an explicit,
@@ -250,7 +226,38 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String,
     * whether a compaction ran. */
   def maybeCompact(name: String, threshold: Int = 8): Boolean = {
     require(threshold > 0, "threshold must be positive")
-    if (deltaPaths(name).size >= threshold) { compact(name); true }
+    if (logDepth(name) >= threshold) { compact(name); true }
     else false
+  }
+}
+
+object KVDeltaStore {
+  /** One delta part of a store's log: `delta_<seq>/` under the store
+    * directory, complete once its parquet `_SUCCESS` marker landed. */
+  private[graft] final case class Part(seq: Long, path: Path, complete: Boolean)
+
+  private[graft] def partPath(store: Path, seq: Long): Path = new Path(store, f"delta_$seq%05d")
+
+  /** Every delta part under `store`, complete or not, ascending by seq
+    * (numeric: a lexicographic sort would order delta_100000 before
+    * delta_99999 once ids outgrow the name padding). */
+  private[graft] def parts(fs: FileSystem, store: Path): Seq[Part] =
+    if (!fs.exists(store)) Seq.empty
+    else fs.listStatus(store).map(_.getPath)
+      .filter(_.getName.startsWith("delta_"))
+      .map(p => Part(p.getName.stripPrefix("delta_").toLong, p,
+        fs.exists(new Path(p, "_SUCCESS"))))
+      .sortBy(_.seq).toSeq
+
+  /** The merge-on-read rule over mutation rows (k, c, seq, op, ...): per
+    * (k, c), the rows with the greatest (seq, op) — later batches win,
+    * and within one batch an addition beats a deletion of the same cell.
+    * rank, not row_number: duplicate additions of one (k,c) within the
+    * winning batch all tie and ALL survive — exactly what the snapshot
+    * path (KVStore.mutate) keeps, and deterministic where row_number
+    * would pick an arbitrary duplicate. */
+  private[graft] def latest(log: DataFrame): DataFrame = {
+    val w = Window.partitionBy("k", "c").orderBy(F.col("seq").desc, F.col("op").desc)
+    log.withColumn("__rank", F.rank().over(w)).filter(F.col("__rank") === 1).drop("__rank")
   }
 }

@@ -202,8 +202,8 @@ object KVQueries {
   }
 
   /** kv_streamdelta: the SAME scenario driven through the STREAMING
-    * delta-log sink (KVStreamSink.applyBatchDelta — O(batch) I/O per
-    * micro-batch instead of the snapshot mode's O(store) rewrite):
+    * delta-log sink (KVStreamSink.applyBatch — O(batch) I/O per
+    * micro-batch, no store rewrite):
     * micro-batch 0 = the full event store as additions, micro-batch 1 =
     * the deletions+upserts, batch 1 REDELIVERED (replay must be a
     * no-op), and compactThreshold=2 forces a fold mid-stream (compaction
@@ -222,10 +222,10 @@ object KVQueries {
     val b0 = asMutations(eventStore(s, dir), noDel)
     val (additions, deletions) = mutationScenario(s, dir)
     val b1 = asMutations(additions, deletions)
-    KVStreamSink.applyBatchDelta(b0, wh, "events", 0L, compactThreshold = 2)
-    KVStreamSink.applyBatchDelta(b1, wh, "events", 1L, compactThreshold = 2)
-    KVStreamSink.applyBatchDelta(b1, wh, "events", 1L, compactThreshold = 2)
-    readBackMutated(s, KVStreamSink.readDelta(s, wh, "events"))
+    KVStreamSink.applyBatch(b0, wh, "events", 0L, compactThreshold = 2)
+    KVStreamSink.applyBatch(b1, wh, "events", 1L, compactThreshold = 2)
+    KVStreamSink.applyBatch(b1, wh, "events", 1L, compactThreshold = 2)
+    readBackMutated(s, KVStreamSink.read(s, wh, "events"))
       .localCheckpoint(true)
   }
 
@@ -262,11 +262,8 @@ object KVQueries {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("k", "c").orderBy(F.col("seq").desc, F.col("op").desc)
-    val resolved = s.read.parquet(out)
-      .withColumn("rn", F.rank().over(w))
-      .filter(F.col("rn") === 1 && F.col("op") === 1)
+    val resolved = KVDeltaStore.latest(s.read.parquet(out))
+      .filter(F.col("op") === 1)
       .select("k", "c", "v")
     readBackMutated(s, resolved).localCheckpoint(true)
   }
@@ -274,7 +271,7 @@ object KVQueries {
   /** kv_cdc_replica: LOG-SHIPPED REPLICATION — the CDC source composed
     * with the delta-log sink: a second store FOLLOWS the primary's
     * change feed (readStream graft-kv-log → foreachBatch
-    * applyBatchDelta) and must resolve cell-for-cell identical. This is
+    * applyBatch) and must resolve cell-for-cell identical. This is
     * the replication story every production KCV deployment runs
     * (ClickHouse replicas pull each other's part log the same way);
     * with graft it is ten lines of composition because both halves
@@ -302,13 +299,13 @@ object KVQueries {
       // cdcMutations passes it through without foldCdc's rank window (a
       // full shuffle+sort of the store per batch)
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        KVStreamSink.applyBatchDelta(
+        KVStreamSink.applyBatch(
           KVStreamSink.cdcMutations(batch), wh, "replica", batchId))
       .option("checkpointLocation", s"$wh/repl_ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    readBackMutated(s, KVStreamSink.readDelta(s, wh, "replica"))
+    readBackMutated(s, KVStreamSink.read(s, wh, "replica"))
       .localCheckpoint(true)
   }
 

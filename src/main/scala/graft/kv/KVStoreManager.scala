@@ -1,11 +1,10 @@
 package graft.kv
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Store-manager lifecycle over named KCV stores — the reference's
   * `KeyColumnValueStoreManager` (ClickhouseStoreManager.java:49) as a thin
-  * catalog of parquet-backed `(k, c, v)` tables.
+  * catalog of [[KVDeltaStore]] mutation logs.
   *
   * Feature parity with the reference's StandardStoreFeatures
   * (ClickhouseStoreManager.java:59): orderedScan + keyOrdered (Spark
@@ -14,31 +13,25 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   * in the reference; locality here is the bucketed layout instead,
   * KVStore.writeBucketed).
   *
+  * Mutations append one delta part per store and batch, the way the
+  * reference's MergeTree backend stores them; readers see the store's
+  * merge-on-read view, and size-tiered compaction bounds the log.
+  *
   * `transactional = true` is the analogue of the reference's
   * STORAGE_TRANSACTIONAL mode (ClickhouseKeyColumnValueStore.java:222
   * acquires the store lock before mutating): mutateMany then holds a
   * warehouse-level lease — a lock file carrying owner + epoch, created
   * through the same Hadoop FileSystem as the data so hdfs:///s3a://
-  * warehouses serialize identically — for the whole read-snapshot →
-  * write-snapshot → swap sequence. Two racing writers serialize instead
-  * of interleaving snapshot swaps (last-writer-wins lost updates, the
-  * dirty-write hazard the reference's README warns about for
-  * multi-instance use). A crashed holder's lease is taken over once it
+  * warehouses serialize identically — across each store's append and
+  * compaction. Two racing writers serialize instead of both taking the
+  * same log sequence. A crashed holder's lease is taken over once it
   * outlives `leaseTimeoutMs`.
-  *
-  * Mutations rewrite the store snapshot — at scale you'd land mutation
-  * batches as delta files and compact, but the read semantics
-  * (delete-before-add, KVStore.mutate) are identical.
   */
 final class KVStoreManager(spark: SparkSession, warehouseDir: String,
                            transactional: Boolean = false,
                            leaseTimeoutMs: Long = 60000L,
                            acquireTimeoutMs: Long = 120000L) {
   import org.apache.hadoop.fs.{FileSystem, Path}
-
-  private val schema = StructType(Seq(
-    StructField("k", BinaryType), StructField("c", BinaryType),
-    StructField("v", BinaryType)))
 
   private def path(name: String) = new Path(warehouseDir, name)
 
@@ -47,12 +40,12 @@ final class KVStoreManager(spark: SparkSession, warehouseDir: String,
   private def fs: FileSystem =
     new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** openDatabase: returns the named store (empty if never written). */
-  def openDatabase(name: String): DataFrame =
-    if (exists(name)) spark.read.schema(schema).parquet(path(name).toString)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private val log = new KVDeltaStore(spark, warehouseDir)
 
-  def exists(name: String): Boolean = fs.exists(path(name))
+  /** openDatabase: the named store's merged view (empty if never written). */
+  def openDatabase(name: String): DataFrame = log.openDatabase(name)
+
+  def exists(name: String): Boolean = log.exists(name)
 
   // ---- named SEGMENT stores (the connector-backed store-per-family form)
 
@@ -138,23 +131,17 @@ final class KVStoreManager(spark: SparkSession, warehouseDir: String,
     catch { case _: java.io.IOException => () }
 
   /** mutateMany: batch mutation across stores, each store's deletions
-    * strictly before its additions (ref ClickhouseStoreManager.java:89).
-    * In transactional mode the whole batch runs under the warehouse
-    * lease: the snapshot read happens at write time (KVStore.mutate is
-    * lazy), so holding the lease across read→write→swap makes racing
-    * writers serialize rather than both reading the same base snapshot
-    * and dropping one another's cells.
+    * strictly before its additions (ref ClickhouseStoreManager.java:89):
+    * one delta part per store, stamped with its log sequence as its
+    * write time, then the store's size-tiered compaction. In
+    * transactional mode the whole batch runs under the warehouse lease.
     */
   def mutateMany(mutations: Map[String, (DataFrame, DataFrame)]): Unit = {
     if (transactional) acquireLease()
     try mutations.foreach { case (name, (additions, deletions)) =>
-      val mutated = KVStore.mutate(openDatabase(name), additions, deletions)
-      // write via temp path: the new snapshot reads the old files
-      val tmp = new Path(warehouseDir, name + "__tmp_" + owner.take(8))
-      mutated.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val dst = path(name)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      require(fs.rename(tmp, dst), s"rename failed for $name")
+      val seq = log.nextSeq(name)
+      log.appendMutationAt(name, seq, additions, deletions, wts = seq)
+      log.maybeCompact(name)
     } finally if (transactional) releaseLease()
   }
 

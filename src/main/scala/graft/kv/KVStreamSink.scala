@@ -4,89 +4,46 @@ import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{BinaryType, BooleanType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.{GraftFs, Version, VersionedState}
+import graft.GraftFs
 
 /** Streaming mutation ingestion for the KV store — the reference's
   * `mutateMany` (ClickhouseStoreManager.java:49) fed from an unbounded
   * stream instead of a batch call.
   *
-  * Each micro-batch of `(k, c, v, is_delete)` mutations folds into a new
-  * versioned snapshot via the SAME batch semantics (`KVStore.mutate`:
-  * deletes strictly before adds, add upserts its own cell), so the
-  * streaming path provably agrees with the batch path cell for cell
-  * (the spec asserts it).
+  * Each micro-batch of `(k, c, v, is_delete)` mutations appends ONE
+  * [[KVDeltaStore]] delta part — O(batch) I/O — with the batch
+  * semantics of `KVStore.mutate` (deletes strictly before adds, add
+  * upserts its own cell), and size-tiered maybeCompact bounds the log
+  * depth; readers go through the store's merge-on-read view, where
+  * compaction is invisible by contract.
   *
-  * Exactly-once, crash safety and retention of the snapshots are
-  * [[graft.VersionedState]]'s: superseded snapshots are dropped like
-  * MergeTree part generations.
+  * Exactly-once across replays:
+  *   - delta ids are derived from the batchId (seq = batchId + 1), so a
+  *     replayed batch re-targets ITS OWN part: complete part → skip;
+  *     incomplete part (crashed write) → deleted and rewritten;
+  *   - compaction deletes folded parts, so part-presence alone cannot
+  *     dedupe a replay whose delta was already folded — the high-water
+  *     mark file (_stream_hwm, atomically renamed into place after each
+  *     applied batch) records the last applied batchId and wins first.
+  *   - a crash between the delta write and the hwm rename replays into
+  *     the complete-part skip; a crash between hwm and maybeCompact
+  *     only defers compaction, which is invisible anyway.
   */
 object KVStreamSink {
-  val MutationSchema: StructType = StructType(Seq(
-    StructField("k", BinaryType), StructField("c", BinaryType),
-    StructField("v", BinaryType), StructField("is_delete", BooleanType)))
-
-  /** Start the ingestion query (micro-batch foreachBatch sink). */
-  def start(mutations: DataFrame, dir: String): StreamingQuery =
-    VersionedState.start(mutations)(applyBatch(_, dir, _))
-
-  /** Fold one micro-batch into snapshot_v{batchId}. Idempotent. */
-  def applyBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
-    VersionedState(dir, "snapshot").fold(batch, batchId) { prev =>
-      val adds = batch.filter(!F.col("is_delete")).select("k", "c", "v")
-      val dels = batch.filter(F.col("is_delete")).select("k", "c")
-      KVStore.mutate(stored(batch.sparkSession, prev), adds, dels)
-    }
-
-  /** The current readable store: latest complete snapshot. */
-  def read(spark: SparkSession, dir: String): DataFrame =
-    stored(spark, VersionedState(dir, "snapshot").latest(spark))
-
-  /** A snapshot's cells, or an empty store before the first one. */
-  private def stored(s: SparkSession, snapshot: Option[Version]): DataFrame =
-    snapshot match {
-      case Some(p) => s.read.parquet(p.path)
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(MutationSchema.fields.take(3)))
-    }
-
-  // ---- delta-log mode ------------------------------------------------
-  //
-  // The snapshot mode above rewrites the WHOLE store every micro-batch
-  // (KVStore.mutate folds onto the previous snapshot) — O(store) I/O per
-  // batch, which at 100 TB makes the stream writer the bottleneck. Delta
-  // mode appends each micro-batch as ONE KVDeltaStore delta part —
-  // O(batch) I/O — and lets size-tiered maybeCompact bound the log depth;
-  // readers go through the store's merge-on-read view, where compaction
-  // is invisible by contract.
-  //
-  // Exactly-once across replays:
-  //   - delta ids are derived from the batchId (seq = batchId + 1), so a
-  //     replayed batch re-targets ITS OWN part: complete part → skip;
-  //     incomplete part (crashed write) → deleted and rewritten;
-  //   - compaction deletes folded parts, so part-presence alone cannot
-  //     dedupe a replay whose delta was already folded — the high-water
-  //     mark file (_stream_hwm, atomically renamed into place after each
-  //     applied batch) records the last applied batchId and wins first.
-  //   - a crash between the delta write and the hwm rename replays into
-  //     the complete-part skip; a crash between hwm and maybeCompact
-  //     only defers compaction, which is invisible anyway.
-
-  /** Start delta-log ingestion into `warehouseDir/name` (micro-batch
-    * foreachBatch sink over KVDeltaStore.appendMutationAt). */
-  def startDelta(mutations: DataFrame, warehouseDir: String, name: String,
-                 compactThreshold: Int = 8): StreamingQuery =
+  /** Start ingestion into `warehouseDir/name` (micro-batch foreachBatch
+    * sink over KVDeltaStore.appendMutationAt). */
+  def start(mutations: DataFrame, warehouseDir: String, name: String,
+            compactThreshold: Int = 8): StreamingQuery =
     mutations.writeStream
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        applyBatchDelta(batch, warehouseDir, name, batchId, compactThreshold))
+        applyBatch(batch, warehouseDir, name, batchId, compactThreshold))
       .start()
 
   /** Append one micro-batch as delta_{batchId+1}. Idempotent by batchId. */
-  def applyBatchDelta(batch: DataFrame, warehouseDir: String, name: String,
-                      batchId: Long, compactThreshold: Int = 8): Unit = {
+  def applyBatch(batch: DataFrame, warehouseDir: String, name: String,
+                 batchId: Long, compactThreshold: Int = 8): Unit = {
     val conf = batch.sparkSession.sparkContext.hadoopConfiguration
     if (readHwm(conf, warehouseDir, name) >= batchId)
       return // applied (maybe folded)
@@ -103,30 +60,25 @@ object KVStreamSink {
     store.maybeCompact(name, compactThreshold): Unit
   }
 
-  /** The current readable store in delta mode: the merge-on-read view. */
-  def readDelta(spark: SparkSession, warehouseDir: String, name: String): DataFrame =
+  /** The current readable store: the merge-on-read view. */
+  def read(spark: SparkSession, warehouseDir: String, name: String): DataFrame =
     new KVDeltaStore(spark, warehouseDir).openDatabase(name)
 
   /** Fold a graft-kv-log CDC micro-batch down to its mutation set: one
     * batch may span SEVERAL source log parts (admission control permits
     * it; AvailableNow without maxSeqsPerBatch drains the whole log as
-    * one batch), and applyBatchDelta writes the whole batch under ONE
+    * one batch), and applyBatch writes the whole batch under ONE
     * replica sequence — so cross-part ordering must resolve BEFORE the
     * fold or a cell added in part N and deleted in part N+1 would
     * resurrect (the replica's same-seq tie-break prefers additions).
-    * Resolution is the store's own merge-on-read rule: latest
-    * (seq, op) per (k, c), ties all kept. Output (k, c, v, is_delete) —
-    * applyBatchDelta's input shape. */
-  def foldCdc(batch: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("k", "c").orderBy(F.col("seq").desc, F.col("op").desc)
-    batch.withColumn("__rn", F.rank().over(w))
-      .filter(F.col("__rn") === 1)
-      .select(F.col("k"), F.col("c"), F.col("v"),
-        (F.col("op") === 0).as("is_delete"))
-  }
+    * Resolution is the store's own merge-on-read rule,
+    * [[KVDeltaStore.latest]]. Output (k, c, v, is_delete) — applyBatch's
+    * input shape. */
+  def foldCdc(batch: DataFrame): DataFrame =
+    KVDeltaStore.latest(batch).select(F.col("k"), F.col("c"), F.col("v"),
+      (F.col("op") === 0).as("is_delete"))
 
-  /** A graft-kv-log CDC micro-batch as applyBatchDelta's mutations. A
+  /** A graft-kv-log CDC micro-batch as applyBatch's mutations. A
     * batch read from one log seq passes through: the replica's
     * merge-on-read applies the same same-seq resolution (op desc:
     * addition beats deletion), with no rank window. Any other batch

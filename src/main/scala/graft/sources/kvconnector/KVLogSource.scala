@@ -17,6 +17,8 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.kv.KVDeltaStore
+
 /** `spark.readStream.format("graft-kv-log").load(storeDir)` — the
   * CHANGE-DATA-FEED of a [[graft.kv.KVDeltaStore]] store as a
   * Structured Streaming SOURCE.
@@ -113,24 +115,15 @@ class KVLogMicroBatchStream(storeDir: String, maxSeqsPerBatch: Long,
   // KVSegmentStore.activeConf is the connector-wide discipline)
   private def fs = new Path(storeDir).getFileSystem(KVSegmentStore.activeConf)
 
-  /** Delta sequences on disk with their completeness, ascending. */
-  private def seqStates(): Seq[(Long, Boolean)] = {
-    val dir = new Path(storeDir)
-    val f = fs
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("delta_"))
-      .map(p => (p.getName.stripPrefix("delta_").toLong,
-        f.exists(new Path(p, "_SUCCESS"))))
-      .sortBy(_._1).toSeq
-  }
+  /** Delta parts on disk with their completeness, ascending. */
+  private def parts(): Seq[KVDeltaStore.Part] = KVDeltaStore.parts(fs, new Path(storeDir))
 
   /** The newest seq every part UP TO it is complete for — an in-flight
     * (or crashed) part blocks advancement past itself instead of being
     * skipped: the sink's replay may still complete it, and a committed
     * offset range must never cover uncommitted log. */
   private def newestComplete(): Long =
-    seqStates().takeWhile(_._2).lastOption.map(_._1).getOrElse(0L)
+    parts().takeWhile(_.complete).lastOption.map(_.seq).getOrElse(0L)
 
   // Trigger.AvailableNow pins the backlog at start: the run drains to
   // exactly this point (in maxSeqsPerBatch steps) and stops, however
@@ -163,8 +156,8 @@ class KVLogMicroBatchStream(storeDir: String, maxSeqsPerBatch: Long,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[KVLogOffset].seq
     val ceiling = availableNowTarget.getOrElse(Long.MaxValue)
-    val states = seqStates()
-    val complete = states.filter(_._2).map(_._1).toSet
+    val states = parts()
+    val complete = states.filter(_.complete).map(_.seq).toSet
     var target = s
     var steps = 0L
     while (steps < maxSeqsPerBatch && target < ceiling &&
@@ -177,8 +170,8 @@ class KVLogMicroBatchStream(storeDir: String, maxSeqsPerBatch: Long,
     // compaction floor, or log was deleted externally — fail loudly
     // now, a contiguity stall would hide it forever. A PRESENT but
     // incomplete next part stalls legitimately (replay may finish it).
-    if (target == s && states.exists(_._1 > s) &&
-        !states.exists(_._1 == s + 1))
+    if (target == s && states.exists(_.seq > s) &&
+        !states.exists(_.seq == s + 1))
       throw new IllegalStateException(
         s"graft-kv-log: delta part ${s + 1} of $storeDir is gone " +
           s"(compacted or deleted) but the stream's next offset needs it " +
@@ -195,7 +188,7 @@ class KVLogMicroBatchStream(storeDir: String, maxSeqsPerBatch: Long,
     val lo = start.asInstanceOf[KVLogOffset].seq
     val hi = end.asInstanceOf[KVLogOffset].seq
     (lo + 1 to hi).flatMap { seq =>
-      val part = new Path(storeDir, f"delta_$seq%05d")
+      val part = KVDeltaStore.partPath(new Path(storeDir), seq)
       // a part a committed offset range covers must be complete on disk:
       // missing = compacted/deleted log (the checkpoint fell below the
       // retention floor), present-but-incomplete = demoted between

@@ -60,7 +60,7 @@ object RankSink {
             RefreshIters)
         case None => (vertices.select(F.col("vid"), F.lit(init).as("pr")), ColdIters)
       }
-      GraphAlgs.pagerankFrom(vertices, pr0, edges.select("src", "dst"), iters)
+      GraphAlgs.pagerankFrom(vertices, n, pr0, edges.select("src", "dst"), iters)
     }
 
   /** The current readable ranking: latest complete snapshot. */

@@ -6,9 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` Column↔Expression conversions, so
   * graft's custom Catalyst expressions can be used as `Column`s without
-  * going through the SQL parser. This is the standard shape for Spark
-  * extension libraries; nothing else in graft lives outside the `graft`
-  * package. */
+  * going through the SQL parser, and into the `private[spark]` block
+  * release. This is the standard shape for Spark extension libraries;
+  * nothing else in graft lives outside the `graft` package. */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -21,6 +21,16 @@ object GraftSqlBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Drops `rdd`'s blocks without blocking. A locally checkpointed RDD
+    * goes through `SparkContext.unpersistRDD` (private[spark]):
+    * `RDD.unpersist` logs a WARN on every such call that the truncated
+    * lineage cannot be recomputed, which a caller releasing its own
+    * checkpoint knows. */
+  def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
 
   def registerFunction(
       spark: org.apache.spark.sql.SparkSession,

@@ -91,10 +91,10 @@ class GraftFsSpec extends SparkSpec {
           F.col("cs").cast("binary").as("c"),
           F.col("vs").cast("binary").as("v"), F.col("is_delete"))
     graft.kv.KVStreamSink.applyBatch(
-      mut(("k1", "c1", "v1", false), ("k1", "c2", "v2", false)), dir, 0L)
+      mut(("k1", "c1", "v1", false), ("k1", "c2", "v2", false)), dir, "s", 0L)
     graft.kv.KVStreamSink.applyBatch(
-      mut(("k1", "c1", "", true), ("k2", "c1", "v3", false)), dir, 1L)
-    val got = graft.kv.KVStreamSink.read(spark, dir)
+      mut(("k1", "c1", "", true), ("k2", "c1", "v3", false)), dir, "s", 1L)
+    val got = graft.kv.KVStreamSink.read(spark, dir, "s")
       .select(F.col("k").cast("string"), F.col("c").cast("string"),
         F.col("v").cast("string"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))

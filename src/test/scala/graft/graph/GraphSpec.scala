@@ -444,4 +444,23 @@ class GraphSpec extends SparkSpec {
     }
     assert(faults.isEmpty, faults.mkString("\n"))
   }
+
+  test("pagerank logs no lineage-truncation warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-lineage-warn", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try GraphAlgs.pagerank(verts, undirected, iters = 10).collect()
+    finally { root.removeAppender(appender); appender.stop() }
+    val warned = lines.toArray.map(_.toString).filter(_.contains("was locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+  }
 }

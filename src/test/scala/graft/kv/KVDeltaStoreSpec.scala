@@ -142,23 +142,83 @@ class KVDeltaStoreSpec extends SparkSpec {
     assert(decode(ds.openDatabase("s")) == expected + ((9L, 9L, 99L)))
   }
 
-  test("maxEntriesPerTask bounds per-task rows even for one hot key") {
+  test("one hot key's batch is written by several tasks") {
     import org.apache.spark.sql.{functions => FF}
     val wh = java.nio.file.Files.createTempDirectory("kvdelta_hot")
-    val ds = new KVDeltaStore(spark, wh.toString, maxEntriesPerTask = 100L)
+    val ds = new KVDeltaStore(spark, wh.toString)
     // a single key's mega-mutation: 1000 cells of k=7, arriving as ONE
     // upstream partition (the worst-case skew a key-hash layout produces)
     val hot = kcv((1L to 1000L).map(c => (7L, c, c * 2))).coalesce(1)
-    ds.appendMutation("s", hot, kcv(Nil).select("k", "c"), wts = 12000L)
-    // each write task emits one file: the bound is visible as per-file rows
+    // AQE would coalesce a batch this small into one task; with that off,
+    // the round-robin rebalance deals it over every shuffle partition
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    try ds.appendMutation("s", hot, kcv(Nil).select("k", "c"), wts = 12000L)
+    finally prev.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
+    // each write task emits one file: the spread is visible as per-file rows
     val perFile = spark.read
       .parquet(wh.resolve("s").resolve("delta_00001").toString)
       .groupBy(FF.input_file_name()).count()
       .select("count").collect().map(_.getLong(0))
-    assert(perFile.length == 10, s"expected 10 write tasks, got ${perFile.length}")
-    assert(perFile.forall(_ <= 100L), s"per-task rows exceed the bound: ${perFile.mkString(",")}")
-    // and the bounded write changes nothing semantically
+    assert(perFile.length > 1, s"one write task carried the whole hot key: ${perFile.mkString(",")}")
+    assert(perFile.sum == 1000L && perFile.max < 1000L, perFile.mkString(","))
+    // and the spread write changes nothing semantically
     assert(decode(ds.openDatabase("s")) == (1L to 1000L).map(c => (7L, c, c * 2)).toSet)
+  }
+
+  test("appendMutation runs at most 2 Spark jobs") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val wh = java.nio.file.Files.createTempDirectory("kvdelta_jobs").toString
+    val ds = new KVDeltaStore(spark, wh)
+    ds.appendMutation("s", kcv((1L to 200L).map(i => (i % 20, i, i))), kcv(Nil).select("k", "c"),
+      wts = 1L)
+    // a batch shaped like a driver-held mutation: upserts, fresh cells
+    // and deletions, some of cells the same batch re-adds
+    val adds = kcv((1L to 300L).map(i => (i % 30, i, -i)))
+    val dels = kcv((1L to 200L).filter(_ % 7 == 0).map(i => (i % 20, i, 0L))).select("k", "c")
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.BusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      ds.appendMutation("s", adds, dels, wts = 2L)
+      org.apache.spark.graftspec.BusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 2, s"appendMutation ran ${jobs.get} jobs")
+    assert(ds.logDepth("s") == 2)
+  }
+
+  test("readers skip a delta part whose write never completed") {
+    val wh = java.nio.file.Files.createTempDirectory("kvdelta_partial")
+    val ds = new KVDeltaStore(spark, wh.toString)
+    val none = kcv(Nil).select("k", "c")
+    ds.appendMutation("s", kcv(Seq((1, 1, 10), (2, 1, 20))), none, wts = 1L)
+    ds.compact("s") // both cells now live in base/
+    ds.appendMutation("s", kcv(Seq((3, 1, 30))), none, wts = 2L)
+    ds.appendMutation("s", kcv(Seq((4, 1, 40))), none, wts = 3L)
+    // a crashed (or still running) append: delta_00003's files deleting
+    // the base cell (1,1) landed, its _SUCCESS marker did not
+    val planted = wh.resolve("s").resolve("delta_00003")
+    kcv(Seq((1, 1, 0))).select(F.col("k"), F.col("c"),
+        F.lit(null).cast("binary").as("v"), F.lit(4L).as("wts"), F.lit(0).as("op"))
+      .write.parquet(planted.toString)
+    java.nio.file.Files.delete(planted.resolve("_SUCCESS"))
+    val expected = Set((1L, 1L, 10L), (2L, 1L, 20L), (3L, 1L, 30L), (4L, 1L, 40L))
+    assert(decode(ds.openDatabase("s")) == expected)
+    assert(decode(ds.openDatabaseAsOf("s", 3)) == expected)
+    assert(ds.logDepth("s") == 2)
+    // the next append takes the seq past the incomplete part
+    ds.appendMutation("s", kcv(Seq((5, 1, 50))), none, wts = 5L)
+    assert(java.nio.file.Files.exists(wh.resolve("s").resolve("delta_00004").resolve("_SUCCESS")))
+    // compaction folds the complete parts and leaves the incomplete one
+    ds.compact("s")
+    assert(decode(ds.openDatabase("s")) == expected + ((5L, 1L, 50L)))
+    assert(java.nio.file.Files.exists(planted) && ds.logDepth("s") == 0)
   }
 
   test("openDatabaseAsOf pins each version; compaction moves the horizon") {

@@ -24,47 +24,12 @@ class KVStreamSinkSpec extends SparkSpec {
     df.select(KVStore.decLong(F.col("k"), 1), KVStore.decLong(F.col("c"), 1),
       F.col("v").cast("string")).collect().map(_.toSeq).toSet
 
-  test("streamed mutation batches fold to the same store as sequential batch mutate") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_kvsink").toString
-    val in = MemoryStream[MutRow]
-    val q = KVStreamSink.start(toMutations(in.toDF()), dir)
-    try {
-      in.addData(MutRow(1, 10, "a", false), MutRow(1, 11, "b", false),
-        MutRow(2, 10, "c", false))
-      q.processAllAvailable()
-      // delete (1,10), upsert (1,11)->B, add (3,10)
-      in.addData(MutRow(1, 10, "", true), MutRow(1, 11, "B", false),
-        MutRow(3, 10, "d", false))
-      q.processAllAvailable()
-      val got = decodedSet(KVStreamSink.read(spark, dir))
-      assert(got == Set(Seq(1L, 11L, "B"), Seq(2L, 10L, "c"), Seq(3L, 10L, "d")), got)
-    } finally q.stop()
-  }
-
-  test("a replayed batch is a no-op (idempotent by batchId)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_kvsink2").toString
-    val b0 = toMutations(Seq(MutRow(1, 1, "x", false)).toDF())
-    val b1 = toMutations(Seq(MutRow(1, 1, "y", false), MutRow(2, 1, "z", false)).toDF())
-    KVStreamSink.applyBatch(b0, dir, 0L)
-    KVStreamSink.applyBatch(b1, dir, 1L)
-    val before = decodedSet(KVStreamSink.read(spark, dir))
-    KVStreamSink.applyBatch(b1, dir, 1L) // redelivery
-    KVStreamSink.applyBatch(b0, dir, 0L) // stale redelivery
-    assert(decodedSet(KVStreamSink.read(spark, dir)) == before)
-    assert(before == Set(Seq(1L, 1L, "y"), Seq(2L, 1L, "z")))
-  }
-
-  // ---- delta-log mode -------------------------------------------------
-
   test("delta mode: streamed batches read back like sequential batch mutate") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_kvsinkd").toString
     val in = MemoryStream[MutRow]
-    val q = KVStreamSink.startDelta(toMutations(in.toDF()), wh, "ev",
+    val q = KVStreamSink.start(toMutations(in.toDF()), wh, "ev",
       compactThreshold = 100) // no compaction in this test
     try {
       in.addData(MutRow(1, 10, "a", false), MutRow(1, 11, "b", false),
@@ -73,7 +38,7 @@ class KVStreamSinkSpec extends SparkSpec {
       in.addData(MutRow(1, 10, "", true), MutRow(1, 11, "B", false),
         MutRow(3, 10, "d", false))
       q.processAllAvailable()
-      val got = decodedSet(KVStreamSink.readDelta(spark, wh, "ev"))
+      val got = decodedSet(KVStreamSink.read(spark, wh, "ev"))
       assert(got == Set(Seq(1L, 11L, "B"), Seq(2L, 10L, "c"), Seq(3L, 10L, "d")), got)
       // O(batch) writer: NO base snapshot was ever written — the stream
       // appended exactly one delta part per micro-batch
@@ -91,16 +56,16 @@ class KVStreamSinkSpec extends SparkSpec {
     val b1 = toMutations(Seq(MutRow(1, 1, "y", false), MutRow(2, 1, "", true)).toDF())
     // threshold 2: applying batch 1 folds both deltas into base and
     // DELETES the parts — replay dedupe must ride the high-water mark
-    KVStreamSink.applyBatchDelta(b0, wh, "ev", 0L, compactThreshold = 2)
-    KVStreamSink.applyBatchDelta(b1, wh, "ev", 1L, compactThreshold = 2)
+    KVStreamSink.applyBatch(b0, wh, "ev", 0L, compactThreshold = 2)
+    KVStreamSink.applyBatch(b1, wh, "ev", 1L, compactThreshold = 2)
     val root = java.nio.file.Paths.get(wh, "ev")
     assert(Files.exists(root.resolve("base")), "threshold 2 should have compacted")
     assert(!Files.exists(root.resolve("delta_00002")), "compaction sweeps parts")
-    val before = decodedSet(KVStreamSink.readDelta(spark, wh, "ev"))
+    val before = decodedSet(KVStreamSink.read(spark, wh, "ev"))
     assert(before == Set(Seq(1L, 1L, "y")), before)
-    KVStreamSink.applyBatchDelta(b1, wh, "ev", 1L, compactThreshold = 2) // replay
-    KVStreamSink.applyBatchDelta(b0, wh, "ev", 0L, compactThreshold = 2) // stale
-    assert(decodedSet(KVStreamSink.readDelta(spark, wh, "ev")) == before)
+    KVStreamSink.applyBatch(b1, wh, "ev", 1L, compactThreshold = 2) // replay
+    KVStreamSink.applyBatch(b0, wh, "ev", 0L, compactThreshold = 2) // stale
+    assert(decodedSet(KVStreamSink.read(spark, wh, "ev")) == before)
     assert(!Files.exists(root.resolve("delta_00001")) &&
       !Files.exists(root.resolve("delta_00002")), "replay re-appended a folded part")
   }
@@ -117,11 +82,11 @@ class KVStreamSinkSpec extends SparkSpec {
       Seq(MutRow(4, 1, "D", false), MutRow(1, 2, "e", false)))
     batches.zipWithIndex.foreach { case (rows, i) =>
       val m = toMutations(rows.toDF())
-      KVStreamSink.applyBatchDelta(m, whA, "ev", i.toLong, compactThreshold = 2)
-      KVStreamSink.applyBatchDelta(m, whB, "ev", i.toLong, compactThreshold = 100)
+      KVStreamSink.applyBatch(m, whA, "ev", i.toLong, compactThreshold = 2)
+      KVStreamSink.applyBatch(m, whB, "ev", i.toLong, compactThreshold = 100)
     }
-    val a = decodedSet(KVStreamSink.readDelta(spark, whA, "ev"))
-    val b = decodedSet(KVStreamSink.readDelta(spark, whB, "ev"))
+    val a = decodedSet(KVStreamSink.read(spark, whA, "ev"))
+    val b = decodedSet(KVStreamSink.read(spark, whB, "ev"))
     assert(a == b, s"compacted $a != uncompacted $b")
     assert(a == Set(Seq(1L, 1L, "A"), Seq(1L, 2L, "e"), Seq(3L, 1L, "c"),
       Seq(4L, 1L, "D")))

@@ -84,7 +84,7 @@ class KVLogSourceSpec extends SparkSpec {
         .load(s"$wh/t")
         .writeStream
         .foreachBatch((batch: DataFrame, batchId: Long) =>
-          KVStreamSink.applyBatchDelta(
+          KVStreamSink.applyBatch(
             KVStreamSink.foldCdc(batch), wh, "r", batchId))
         .option("checkpointLocation", s"$wh/rckpt")
         .trigger(Trigger.AvailableNow())
@@ -96,13 +96,13 @@ class KVLogSourceSpec extends SparkSpec {
       .map(r => (be(r.getAs[Array[Byte]]("k")), be(r.getAs[Array[Byte]]("c")))).toSet
     replicate()
     val primary = snap(ds.openDatabase("t"))
-    val replica = snap(KVStreamSink.readDelta(spark, wh, "r"))
+    val replica = snap(KVStreamSink.read(spark, wh, "r"))
     assert(replica == primary && primary.size == 18, s"sizes: ${primary.size}/${replica.size}")
     // incremental: a later primary mutation flows through the SAME
     // checkpoint on the next drain
     ds.appendMutationAt("t", 3L, cells(100, 103), noDel, wts = 7000L)
     replicate()
-    assert(snap(KVStreamSink.readDelta(spark, wh, "r")) == snap(ds.openDatabase("t")))
+    assert(snap(KVStreamSink.read(spark, wh, "r")) == snap(ds.openDatabase("t")))
   }
 
   test("replication survives a micro-batch spanning several log parts") {
@@ -120,14 +120,14 @@ class KVLogSourceSpec extends SparkSpec {
       .load(s"$wh/t")
       .writeStream
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        KVStreamSink.applyBatchDelta(
+        KVStreamSink.applyBatch(
           KVStreamSink.foldCdc(batch), wh, "r", batchId))
       .option("checkpointLocation", s"$wh/rckpt")
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     def be(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b).getLong
-    val replica = KVStreamSink.readDelta(spark, wh, "r").collect()
+    val replica = KVStreamSink.read(spark, wh, "r").collect()
       .map(r => be(r.getAs[Array[Byte]]("k"))).toSet
     val primary = ds.openDatabase("t").collect()
       .map(r => be(r.getAs[Array[Byte]]("k"))).toSet
@@ -154,7 +154,7 @@ class KVLogSourceSpec extends SparkSpec {
           val mutations = KVStreamSink.cdcMutations(batch)
           folded += mutations.queryExecution.analyzed.exists(
             _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window])
-          KVStreamSink.applyBatchDelta(mutations, wh, "r", batchId)
+          KVStreamSink.applyBatch(mutations, wh, "r", batchId)
         }
         .option("checkpointLocation", s"$wh/rckpt")
         .trigger(Trigger.AvailableNow())
@@ -162,7 +162,7 @@ class KVLogSourceSpec extends SparkSpec {
       q.awaitTermination()
       assert(folded == folds, s"maxSeqsPerBatch $perBatch")
       def be(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b).getLong
-      val replica = KVStreamSink.readDelta(spark, wh, "r").collect()
+      val replica = KVStreamSink.read(spark, wh, "r").collect()
         .map(r => be(r.getAs[Array[Byte]]("k"))).toSet
       assert(replica == Set(1L, 2L, 3L, 4L), s"maxSeqsPerBatch $perBatch: $replica")
     }

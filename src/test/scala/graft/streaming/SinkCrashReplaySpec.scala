@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.sql.{functions => F}
 
 import graft.{GraftFs, SparkSpec}
-import graft.kv.{KVStore, KVStreamSink}
+import graft.kv.KVStore
 
 /** The crash/replay contract every maintained view owes, checked on all
-  * eleven snapshot sinks over one synthetic five-batch stream:
+  * ten snapshot sinks over one synthetic five-batch stream:
   *
   *   (a) after 5 batches at most two complete versions remain (retention);
   *   (b) a version whose tables landed but whose `_SUCCESS` marker did not
@@ -77,9 +77,7 @@ class SinkCrashReplaySpec extends SparkSpec {
       (b, d, id) => JourneyStream.applyBatch(b, s"$d/journey", id, s"$d/topk"),
       d => rows(JourneyStream.readTop(spark, s"$d/journey", s"$d/topk"))),
     Sink("SessionFunnelStream", own("funnel_v"), SessionFunnelStream.applyBatch(_, _, _),
-      d => rows(SessionFunnelStream.readLevels(spark, d))),
-    Sink("KVStreamSink", own("snapshot_v"), KVStreamSink.applyBatch,
-      d => rows(KVStreamSink.read(spark, d))))
+      d => rows(SessionFunnelStream.readLevels(spark, d))))
 
   /** Entry names of one version family, complete or not. */
   private def versions(dir: String, family: (String, String)): Seq[String] = {
