@@ -22,7 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plus column pruning through the custom node (Catalyst's own
     // ColumnPruning stops at nodes it doesn't know)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.AutoIntervalJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinPruning)
     // ASOF [LEFT] JOIN SQL syntax: token rewrite in the injected parser,
@@ -30,21 +29,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // before the optimizer constant-folds the marker conjunct away)
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     ext.injectResolutionRule(_ => graft.plans.ResolveAsofJoin)
-    // Scale defaults ride the check-rule builder: it runs once per
+    // Session defaults ride the check-rule builder: it runs once per
     // session, when the session state (analyzer) is first built — i.e.
     // before the first query's optimization/planning reads any of these
-    // confs. This way EVERY session carrying graft's extensions gets the
-    // safe aggregation regime, not just graft's own mains (the returned
-    // rule itself is a no-op).
+    // confs. This way EVERY session carrying graft's extensions gets
+    // them, not just graft's own mains (the returned rule itself is a
+    // no-op).
     ext.injectCheckRule { session =>
-      GraftExtensions.applyScaleDefaults(session)
+      GraftExtensions.applySessionDefaults(session)
       _ => ()
     }
   }
 }
 
 object GraftExtensions {
-  /** Session-conf defaults graft's operators are designed against.
+  /** The session confs graft depends on, declared once. A key the user
+    * set — in the SparkConf, or in the session before the first query —
+    * is left alone. Nothing in graft sets a session conf around a query.
     *
     * `objectHashAggregate.sortBased.fallbackThreshold`: all of graft's
     * TypedImperativeAggregates (TopKPairs, Misra-Gries, Roaring
@@ -52,38 +53,34 @@ object GraftExtensions {
     * aggregation is safe at any group count — Spark's default threshold
     * (128 groups) silently falls back to SORT-based aggregation and
     * sorts the whole fact stream (measured: s_knn_graph 44.8 s → 19.7 s
-    * at 3×·sf0.1 when raised). A conf the user set explicitly (via
-    * --conf / the session builder, i.e. present in the SparkConf) wins.
+    * at 3×·sf0.1 when raised). The conf is global to the session, and a
+    * user query running an UNBOUNDED TypedImperativeAggregate
+    * (collect_list / percentile over millions of groups) holds that many
+    * groups in the hash map before falling back to sort, so the default
+    * is only 65536 (64 Ki bounded-state groups ≈ a few MB). graft's own
+    * mains (Bench/Verify), whose aggregates are all bounded-state, set
+    * 1000000 in their builders; other deployments opt in the same way.
     *
-    * SESSION-WIDE SIDE EFFECT, deliberately bounded: the conf is global
-    * to the session, and a user query running an UNBOUNDED
-    * TypedImperativeAggregate (collect_list / percentile over millions
-    * of groups) holds that many groups in the hash map before falling
-    * back to sort. Merely loading the extensions therefore raises the
-    * threshold only to 65536 (64 Ki bounded-state groups ≈ a few MB;
-    * even pathological 1 KB-per-group user state stays under ~64 MB
-    * per task). graft's own mains (Bench/Verify), whose aggregates are
-    * all bounded-state, set the full 1000000 in their builders; other
-    * deployments opt in the same way, or via
-    * `spark.graft.scaleDefaults=full` in the SparkConf. */
-  /** (key, graft default, Spark's own default). A user value — set in the
-    * SparkConf, or session-set to anything but Spark's default before the
-    * first query — is left alone. */
-  val scaleDefaults: Seq[(String, String, String)] = Seq(
-    ("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "65536", "128"))
+    * `catalog.graftkv`: [[graft.sources.kvconnector.KVCatalog]], so
+    * `spark.table("graftkv.`<store path>`")` resolves in every session.
+    *
+    * `v2.bucketing.shuffle.enabled`: lets ONE side of a join shuffle to
+    * the other side's key-grouped partitioning (storage-partitioned
+    * join), so it never adds an exchange. Only catalog reads of
+    * `bucket`-layout graft-kv stores report that partitioning; path reads
+    * through `format("graft-kv")` have no function catalog. */
+  val sessionDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+    "spark.sql.catalog.graftkv" ->
+      classOf[graft.sources.kvconnector.KVCatalog].getName,
+    "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
 
-  /** Full-throttle value for sessions running only bounded-state
-    * aggregates (graft's mains; opt-in via spark.graft.scaleDefaults=full). */
-  val fullFallbackThreshold = "1000000"
-
-  def applyScaleDefaults(session: SparkSession): Unit = {
-    val full =
-      session.sparkContext.getConf.get("spark.graft.scaleDefaults", "") == "full"
-    scaleDefaults.foreach { case (k, v, sparkDefault) =>
-      if (!session.sparkContext.getConf.contains(k) &&
-          session.conf.get(k, sparkDefault) == sparkDefault)
-        session.conf.set(k, if (full) fullFallbackThreshold else v)
+  def applySessionDefaults(session: SparkSession): Unit = {
+    // the SparkConf is merged into the session conf before this runs
+    val conf = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    sessionDefaults.foreach { case (k, v) =>
+      if (!conf.contains(k)) session.conf.set(k, v)
     }
   }
 

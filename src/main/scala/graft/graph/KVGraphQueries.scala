@@ -874,7 +874,8 @@ object KVGraphQueries {
     * entries). The adjacency persists HASH-BUCKETED
     * (KVSegmentStore.write's `bucket` layout), its scans report
     * KeyGroupedPartitioning(bucket(8, k)) through the graftkv catalog,
-    * and with the one-side-shuffle SPJ conf each hop plans as a
+    * and with the one-side-shuffle SPJ conf (a graft session default)
+    * each hop plans as a
     * storage-partitioned join where ONLY the frontier moves: the
     * frontier side shuffles BY THE STORE'S OWN BUCKET FUNCTION
     * (KVBucketFunction.produceResult gives Spark the true bucket id)
@@ -888,39 +889,24 @@ object KVGraphQueries {
     val seg = graft.ScenarioDirs.fresh("graft_kvspjadj")
     KVSegmentStore.write(adjacency(s, dir), seg.toString, 8, "bucket")
     val g = PropertyGraph(s, dir)
-    // snapshot-and-restore the SPJ planning confs (kv_spj_join's
-    // discipline: they alter how ANY partition-reporting DSv2 scan joins
-    // for the rest of the session; plans below are checkpointed eagerly)
-    val spjConfs = Seq("spark.sql.catalog.graftkv",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled")
-    val saved = spjConfs.map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.catalog.graftkv",
-      classOf[graft.sources.kvconnector.KVCatalog].getName)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-    try {
-      val adj = s.table(s"graftkv.`$seg`")
-      val start = g.vertices
-        .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
-        .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
-      val hop1 = adj.hint("merge").join(start, Seq("k"))
-        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
-      val hop2 = adj.hint("merge").join(
-          hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
-        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-      hop2
-        .join(F.broadcast(g.vertices.select(F.col("vid").as("dst_vid"),
-          F.col("name").as("dst_name"))), "dst_vid")
-        .select(F.col("src_vid"), F.col("dst_vid"), F.col("dst_name"))
-        .distinct()
-        .localCheckpoint(true)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    // the session carries the graftkv catalog and the one-side-shuffle
+    // SPJ conf (GraftExtensions); the eager checkpoint lets the result
+    // outlive the entry's store dir
+    val adj = s.table(s"graftkv.`$seg`")
+    val start = g.vertices
+      .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
+      .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
+    val hop1 = adj.hint("merge").join(start, Seq("k"))
+      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
+    val hop2 = adj.hint("merge").join(
+        hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
+      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
+    hop2
+      .join(F.broadcast(g.vertices.select(F.col("vid").as("dst_vid"),
+        F.col("name").as("dst_name"))), "dst_vid")
+      .select(F.col("src_vid"), F.col("dst_vid"), F.col("dst_name"))
+      .distinct()
+      .localCheckpoint(true)
   }
 
   /** g_kv_degree_mv: an INCREMENTAL GRAPH VIEW following the graph

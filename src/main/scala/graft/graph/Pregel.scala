@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.{functions => F}
 
@@ -31,7 +30,7 @@ private[graph] final class Superstep private () {
   private var owned = Vector.empty[RDD[_]]
   private var kept = Vector.empty[DataFrame]
 
-  private def own(ckpt: DataFrame): DataFrame = { owned ++= Superstep.checkpoints(ckpt); ckpt }
+  private def own(ckpt: DataFrame): DataFrame = { owned ++= GraftSqlBridge.checkpoints(ckpt); ckpt }
 
   /** Keeps `df` — and every checkpoint it reads — live until return. */
   def keep(df: DataFrame): DataFrame = { kept :+= df; df }
@@ -99,15 +98,12 @@ private[graph] object Superstep {
     res
   }
 
-  private def checkpoints(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRDD => l.rdd }
-
   /** Ids of the RDDs `frames` read: their checkpoints and, until those
     * are materialized, their lineage. */
   private def reads(frames: Seq[DataFrame]): Set[Int] = {
     val seen = scala.collection.mutable.Set.empty[Int]
     def walk(r: RDD[_]): Unit = if (seen.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
-    frames.flatMap(checkpoints).foreach(walk)
+    frames.flatMap(GraftSqlBridge.checkpoints).foreach(walk)
     seen.toSet
   }
 }

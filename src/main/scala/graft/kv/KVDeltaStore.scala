@@ -2,7 +2,6 @@ package graft.kv
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
@@ -173,8 +172,7 @@ final class KVDeltaStore(spark: SparkSession, warehouseDir: String) {
         appendMutation(name, none, doomed, wts)
       }
       n
-    } finally doomed.queryExecution.analyzed
-      .collect { case l: LogicalRDD => l.rdd }.foreach(GraftSqlBridge.release(_))
+    } finally GraftSqlBridge.releaseCheckpoints(doomed)
   }
 
   /** Fold the mutation log into a fresh base snapshot and drop the

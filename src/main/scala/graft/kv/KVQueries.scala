@@ -559,37 +559,20 @@ object KVQueries {
       .select(F.col("k"), encLong(F.lit(0L)).as("c"), encLong(F.col("n")).as("v"))
     graft.sources.kvconnector.KVSegmentStore.write(
       roll, rollDir.toString, 8, "bucket")
-    // snapshot-and-restore the SPJ planning confs: they apply to the
-    // whole shared session, and leaking them would silently change the
-    // planning environment of every LATER entry in a run (the bucketing
-    // flags alter how any partition-reporting DSv2 scan joins). The
-    // catalog registration is restored the same way — plans built below
-    // are localCheckpoint-ed eagerly, so nothing re-resolves it later.
-    val spjConfs = Seq("spark.sql.catalog.graftkv",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-    val saved = spjConfs.map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.catalog.graftkv",
-      classOf[graft.sources.kvconnector.KVCatalog].getName)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    try {
-      val cells = s.table(s"graftkv.`$cellsDir`")
-        .filter(F.col("k") < encLong(F.lit(50L)))
-      val totals = s.table(s"graftkv.`$rollDir`")
-        .select(F.col("k"), decLong(F.col("v"), 1).as("user_total"))
-      cells.hint("merge").join(totals, Seq("k"))
-        .select(
-          decLong(F.col("k"), 1).as("user_id"),
-          decLong(F.col("c"), 1).as("us"),
-          decLong(F.col("c"), 9).as("event_id"),
-          F.col("v").cast("string").as("v_str"),
-          F.col("user_total"))
-        .localCheckpoint(true)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    // the session carries the graftkv catalog (GraftExtensions); the
+    // eager checkpoint lets the result outlive the entry's store dirs
+    val cells = s.table(s"graftkv.`$cellsDir`")
+      .filter(F.col("k") < encLong(F.lit(50L)))
+    val totals = s.table(s"graftkv.`$rollDir`")
+      .select(F.col("k"), decLong(F.col("v"), 1).as("user_total"))
+    cells.hint("merge").join(totals, Seq("k"))
+      .select(
+        decLong(F.col("k"), 1).as("user_id"),
+        decLong(F.col("c"), 1).as("us"),
+        decLong(F.col("c"), 9).as("event_id"),
+        F.col("v").cast("string").as("v_str"),
+        F.col("user_total"))
+      .localCheckpoint(true)
   }
 
   /** kv_runtime_prune: runtime (join-key) segment pruning through the

@@ -618,10 +618,10 @@ object OlapQueries {
       |  AND tu - last_otu <= 852000000000000""".stripMargin
 
   /** q_range_sql: the band join written as a PLAIN declarative SQL
-    * theta join, planned to IntervalJoinExec by the opt-in
-    * `spark.graft.autoIntervalJoin` strategy — the SQL-visible face of
-    * the interval operator (shares q_range_join's oracle; the conf is
-    * set only around plan materialization and restored after). */
+    * theta join, planned to IntervalJoinExec by AutoIntervalJoinStrategy
+    * (the band side is a small range, so it is broadcastable) — the
+    * SQL-visible face of the interval operator (shares q_range_join's
+    * oracle). */
   def qRangeSql(s: SparkSession, dir: String): DataFrame = {
     val maxBand = t(s, dir, "orders")
       .agg(F.floor(F.max("o_totalprice") / 10000.0).cast("long")).head().getLong(0)
@@ -633,16 +633,11 @@ object OlapQueries {
       .select(F.col("o_totalprice"),
         (dec2(F.col("o_totalprice")) * 100).cast("long").as("vc"))
       .createOrReplaceTempView("rsql_pts")
-    val prev = s.conf.get("spark.graft.autoIntervalJoin", "false")
-    s.conf.set("spark.graft.autoIntervalJoin", "true")
-    try
-      s.sql(
-        """SELECT band, COUNT(*) AS n_orders,
-          |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-          |FROM rsql_pts JOIN rsql_bands ON vc >= lo AND vc < hi
-          |GROUP BY band""".stripMargin)
-        .localCheckpoint(true) // materialize while the auto conf is on
-    finally s.conf.set("spark.graft.autoIntervalJoin", prev)
+    s.sql(
+      """SELECT band, COUNT(*) AS n_orders,
+        |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
+        |FROM rsql_pts JOIN rsql_bands ON vc >= lo AND vc < hi
+        |GROUP BY band""".stripMargin)
   }
 
   val qRangeJoinSql: String =

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.{functions => F}
 
 import graft.Tables
@@ -74,12 +75,12 @@ object BpeTrainer {
         out += ((rank, l, r, c))
         val next = cur.select(F.col("freq"),
           F.expr(applyMerge(l, r)).as("syms")).localCheckpoint()
-        cur.unpersist(false)
+        GraftSqlBridge.releaseCheckpoints(cur)
         cur = next
         rank += 1
       }
     }
-    cur.unpersist(false)
+    GraftSqlBridge.releaseCheckpoints(cur)
     out.result()
   }
 

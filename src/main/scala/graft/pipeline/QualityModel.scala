@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.{functions => F}
 
 import graft.Tables
@@ -95,7 +96,7 @@ object QualityModel {
   def train(feats: DataFrame): Array[Double] = {
     val cached = feats.localCheckpoint()
     try (1 to Steps).foldLeft(Array.fill(4)(0.0))((b, _) => step(cached, b))
-    finally cached.unpersist(false)
+    finally GraftSqlBridge.releaseCheckpoints(cached)
   }
 
   /** Per-source scoring audit of the trained classifier: docs,

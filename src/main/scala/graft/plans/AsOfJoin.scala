@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, JoinedRo
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.LongType
 
@@ -67,28 +68,17 @@ object AsOfJoinPruning
   import org.apache.spark.sql.catalyst.expressions.{AttributeSet, NamedExpression}
   import org.apache.spark.sql.catalyst.plans.logical.Project
 
-  private def pruneChildren(projList: Seq[NamedExpression],
-                            joinAttrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-                            l: LogicalPlan, r: LogicalPlan): Option[(LogicalPlan, LogicalPlan)] = {
-    val used = AttributeSet(projList.flatMap(_.references)) ++ AttributeSet(joinAttrs)
-    def prune(child: LogicalPlan): LogicalPlan = {
-      val keep: Seq[NamedExpression] = child.output.filter(used.contains)
-      if (keep.length == child.output.length) child else Project(keep, child)
-    }
-    val (nl, nr) = (prune(l), prune(r))
-    if ((nl eq l) && (nr eq r)) None else Some((nl, nr))
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case p @ Project(projList, j: AsOfJoinNode) =>
-      pruneChildren(projList, Seq(j.lKey, j.lTime, j.rKey, j.rTime, j.rTie),
-        j.left, j.right)
-        .map { case (nl, nr) => Project(projList, j.copy(left = nl, right = nr)) }
-        .getOrElse(p)
-    case p @ Project(projList, j: IntervalJoinNode) =>
-      pruneChildren(projList, Seq(j.pVal, j.iLo, j.iHi), j.left, j.right)
-        .map { case (nl, nr) => Project(projList, j.copy(left = nl, right = nr)) }
-        .getOrElse(p)
+      val used = AttributeSet(projList.flatMap(_.references)) ++
+        AttributeSet(Seq(j.lKey, j.lTime, j.rKey, j.rTime, j.rTie))
+      def prune(child: LogicalPlan): LogicalPlan = {
+        val keep: Seq[NamedExpression] = child.output.filter(used.contains)
+        if (keep.length == child.output.length) child else Project(keep, child)
+      }
+      val (nl, nr) = (prune(j.left), prune(j.right))
+      if ((nl eq j.left) && (nr eq j.right)) p
+      else Project(projList, j.copy(left = nl, right = nr))
   }
 }
 
@@ -110,6 +100,9 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   override def output: Seq[Attribute] =
     if (leftOuter) left.output ++ right.output.map(_.withNullability(true))
     else left.output ++ right.output
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(lKey)) :: ClusteredDistribution(Seq(rKey)) :: Nil
@@ -133,6 +126,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     val schema = output // capture serializable fields, not `this`, in the closure
     val outer = leftOuter
     val rWidth = right.output.size
+    val numOutputRows = longMetric("numOutputRows")
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
       val joiner = new JoinedRow
       val resultProj = UnsafeProjection.create(schema.map(_.dataType).toArray)
@@ -176,6 +170,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 
         override def next(): InternalRow = {
           if (!hasNext) throw new NoSuchElementException
+          numOutputRows += 1
           val r = out; out = null; r
         }
       }

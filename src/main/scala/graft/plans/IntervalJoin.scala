@@ -4,10 +4,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.LongType
 
 /** INTERVAL (range) JOIN as a first-class operator — the second tier-(c)
@@ -31,19 +31,12 @@ import org.apache.spark.sql.types.LongType
   * regime where the nested-loop scan per row is the bottleneck and a
   * shuffle would be waste.
   *
-  * Contract (AsOfJoin's discipline): v/lo/hi are non-null BIGINTs —
-  * the helper enforces types and narrows nullable inputs; inner
-  * semantics (points matching no interval drop).
+  * Planning: a plain inner join whose condition is the band
+  * `v >= lo AND v < hi` plans to this exec ([[AutoIntervalJoinStrategy]])
+  * whenever Spark would broadcast the interval side; [[IntervalJoin.join]]
+  * is that join with a broadcast hint. Contract: v/lo/hi are BIGINTs;
+  * inner semantics (points matching no interval drop).
   */
-case class IntervalJoinNode(left: LogicalPlan, right: LogicalPlan,
-                            pVal: Attribute, iLo: Attribute, iHi: Attribute)
-  extends BinaryNode {
-  override def output: Seq[Attribute] = left.output ++ right.output
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): IntervalJoinNode =
-    copy(left = newLeft, right = newRight)
-}
-
 /** The probe-side index: intervals sorted by (lo, hi) with a prefix-max
   * of hi. The SORT happens ONCE, driver-side, inside the broadcast
   * exchange ([[IntervalIndexMode]] — its payload must stay
@@ -112,19 +105,14 @@ case class IntervalIndexMode(loIdx: Int, hiIdx: Int)
     this
 }
 
-object IntervalJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case IntervalJoinNode(l, r, v, lo, hi) =>
-      IntervalJoinExec(planLater(l), planLater(r), v, lo, hi) :: Nil
-    case _ => Nil
-  }
-}
-
 case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
                             pVal: Attribute, iLo: Attribute, iHi: Attribute)
   extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ right.output
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   private def loIdx = right.output.indexWhere(_.exprId == iLo.exprId)
   private def hiIdx = right.output.indexWhere(_.exprId == iHi.exprId)
@@ -146,6 +134,7 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
     val schema = output
     val lIdx = loIdx
     val rel = right.executeBroadcast[Array[InternalRow]]()
+    val numOutputRows = longMetric("numOutputRows")
     left.execute().mapPartitions { li =>
       // rows arrive (lo, hi)-sorted from the broadcast exchange; the
       // prefix arrays build at most once per executor via the cache
@@ -167,7 +156,10 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
           var p = k
           while (p >= 0 && maxHi(p) > v && rows(p).getLong(hiIdx) <= v) p -= 1
           if (p < 0 || maxHi(p) <= v) None
-          else Some((proj(joiner(l, rows(p))), p - 1))
+          else {
+            numOutputRows += 1
+            Some((proj(joiner(l, rows(p))), p - 1))
+          }
         }
         out
       }
@@ -179,27 +171,27 @@ case class IntervalJoinExec(left: SparkPlan, right: SparkPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** OPT-IN auto-selection (`spark.graft.autoIntervalJoin=true`): a PLAIN
-  * inner join whose whole condition is the band sandwich
+/** Plans a PLAIN inner join whose whole condition is the band sandwich
   * `v >= lo AND v < hi` (BIGINT attributes, one side the point, the
-  * other the interval) plans straight to [[IntervalJoinExec]] — the user
-  * writes the declarative theta join, the planner picks the indexed
-  * operator instead of BroadcastNestedLoopJoin. Fires only on the exact
-  * two-conjunct shape (anything else falls through to Spark's own
-  * planning untouched); null semantics preserved by IsNotNull filters
-  * on both children (a null in any band column excludes the row in the
-  * plain join too). Default OFF — an auto-rewrite that changes physical
-  * strategy is something a user should turn on knowingly. */
+  * other the interval) to [[IntervalJoinExec]] — the user writes the
+  * declarative theta join, the planner picks the indexed operator
+  * instead of BroadcastNestedLoopJoin. It fires only on the exact
+  * two-conjunct shape, and only when the interval side is broadcastable
+  * (a broadcast hint, or a size estimate within
+  * `spark.sql.autoBroadcastJoinThreshold`) — exactly when Spark would
+  * broadcast that side for the nested-loop join. Anything else falls
+  * through to Spark's own planning untouched. Null semantics are
+  * preserved by IsNotNull filters on both children (a null in any band
+  * column excludes the row in the plain join too). */
 object AutoIntervalJoinStrategy extends SparkStrategy
-  with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
+  with org.apache.spark.sql.catalyst.expressions.PredicateHelper
+  with org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper {
   import org.apache.spark.sql.catalyst.expressions.{And => EAnd, Attribute => EAttr, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
   import org.apache.spark.sql.catalyst.plans.Inner
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint}
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Join(l, r, Inner, Some(cond), _)
-        if org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("spark.graft.autoIntervalJoin", "false") == "true" =>
+    case Join(l, r, Inner, Some(cond), hint) =>
       val conj = splitConjunctivePredicates(cond)
       if (conj.size != 2) return Nil
       // normalize each conjunct to (v, bound, isLowerBound)
@@ -214,16 +206,16 @@ object AutoIntervalJoinStrategy extends SparkStrategy
       (norm(conj(0)), norm(conj(1))) match {
         case (Some((v1, lo, true)), Some((v2, hi, false)))
             if v1.exprId == v2.exprId =>
-          build(l, r, v1, lo, hi)
+          build(l, r, hint, v1, lo, hi)
         case (Some((v1, hi, false)), Some((v2, lo, true)))
             if v1.exprId == v2.exprId =>
-          build(l, r, v2, lo, hi)
+          build(l, r, hint, v2, lo, hi)
         case _ => Nil
       }
     case _ => Nil
   }
 
-  private def build(l: LogicalPlan, r: LogicalPlan,
+  private def build(l: LogicalPlan, r: LogicalPlan, hint: JoinHint,
                     v: EAttr, lo: EAttr, hi: EAttr): Seq[SparkPlan] = {
     val allLong = Seq(v, lo, hi).forall(_.dataType == LongType)
     val fromL = l.outputSet.contains(v) &&
@@ -231,9 +223,21 @@ object AutoIntervalJoinStrategy extends SparkStrategy
     val fromR = r.outputSet.contains(v) &&
       l.outputSet.contains(lo) && l.outputSet.contains(hi)
     if (!allLong || (!fromL && !fromR)) return Nil
-    def narrowed(p: LogicalPlan, as: Seq[EAttr]) =
-      Filter(as.map(IsNotNull(_): org.apache.spark.sql.catalyst.expressions.Expression)
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val broadcastable =
+      if (fromL) hintToBroadcastRight(hint) || canBroadcastBySize(r, conf)
+      else hintToBroadcastLeft(hint) || canBroadcastBySize(l, conf)
+    if (!broadcastable) return Nil
+    // a child the optimizer already narrowed (its inferred IsNotNull
+    // filters make the attributes non-nullable) stays as it is: a Filter
+    // added here is not in the logical plan, so AQE could not match the
+    // child's query stage when it re-plans the join
+    def narrowed(p: LogicalPlan, as: Seq[EAttr]) = {
+      val nullable = as.filter(a => p.output.exists(o => o.exprId == a.exprId && o.nullable))
+      if (nullable.isEmpty) p
+      else Filter(nullable.map(IsNotNull(_): org.apache.spark.sql.catalyst.expressions.Expression)
         .reduce(EAnd(_, _)), p)
+    }
     if (fromL)
       IntervalJoinExec(planLater(narrowed(l, Seq(v))),
         planLater(narrowed(r, Seq(lo, hi))), v, lo, hi) :: Nil
@@ -251,24 +255,22 @@ object AutoIntervalJoinStrategy extends SparkStrategy
 object IntervalJoin {
   /** Public API: join `points` to every `intervals` row with
     * lo ≤ v < hi. All three columns BIGINT; output = points columns ++
-    * interval columns (names must not collide); inner semantics. */
+    * interval columns (names must not collide); inner semantics. The
+    * intervals are broadcast, so the join plans to [[IntervalJoinExec]]. */
   def join(points: DataFrame, intervals: DataFrame,
            v: String, lo: String, hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{broadcast, col}
     val pf = points.filter(col(v).isNotNull)
     val rf = intervals.filter(col(lo).isNotNull && col(hi).isNotNull)
-    val lp = pf.queryExecution.analyzed
-    val rp = rf.queryExecution.analyzed
-    def attr(p: LogicalPlan, n: String): Attribute =
-      p.output.find(_.name == n).getOrElse(
+    def field(df: DataFrame, n: String) =
+      df.schema.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(
-          s"column $n not found among ${p.output.map(_.name).mkString(", ")}"))
-    val attrs = Seq(attr(lp, v), attr(rp, lo), attr(rp, hi))
-    attrs.foreach(a => require(a.dataType == LongType,
-      s"interval-join column ${a.name} must be BIGINT, got ${a.dataType.sql}"))
-    val dup = lp.output.map(_.name).toSet intersect rp.output.map(_.name).toSet
+          s"column $n not found among ${df.columns.mkString(", ")}"))
+    Seq(field(pf, v), field(rf, lo), field(rf, hi)).foreach(f =>
+      require(f.dataType == LongType,
+        s"interval-join column ${f.name} must be BIGINT, got ${f.dataType.sql}"))
+    val dup = pf.columns.toSet intersect rf.columns.toSet
     require(dup.isEmpty, s"output name collision: ${dup.mkString(", ")}")
-    GraftSqlBridge.ofRows(points.sparkSession,
-      IntervalJoinNode(lp, rp, attrs(0), attrs(1), attrs(2)))
+    pf.join(broadcast(rf), pf(v) >= rf(lo) && pf(v) < rf(hi))
   }
 }

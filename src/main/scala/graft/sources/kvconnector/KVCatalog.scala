@@ -18,11 +18,8 @@ import graft.GraftFs
   * and Spark resolves a scan's reported `bucket(n, k)` transform through
   * the relation's FunctionCatalog — without one, the reported
   * KeyGroupedPartitioning silently degrades to unknown and every
-  * store-to-store join still plans two exchanges. Registering
-  *
-  * {{{ spark.conf.set("spark.sql.catalog.graftkv",
-  *                    classOf[KVCatalog].getName) }}}
-  *
+  * store-to-store join still plans two exchanges. Every graft session
+  * registers this catalog as `graftkv` (`GraftExtensions.sessionDefaults`),
   * and reading `spark.table("graftkv.`/warehouse/store`")` gives the
   * same KVTable the format() path builds, plus the function identity
   * both join sides must share: with

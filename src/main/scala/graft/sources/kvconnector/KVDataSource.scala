@@ -504,8 +504,8 @@ case class KVReaderFactory(
 
 /** Row reader over one parquet segment via the parquet-mr Group API,
   * projecting only the pruned columns (the projection reaches the
-  * parquet column reader — unread columns are never decoded). `conf` is
-  * the driver's Hadoop conf shipped through the factory — never a bare
+  * parquet column reader — unread columns are never decoded). `baseConf`
+  * is the driver's Hadoop conf shipped through the factory — never a bare
   * executor-side Configuration(), which would miss spark.hadoop.*
   * filesystem credentials. */
 class KVSegmentReader(file: String, columns: Array[String], limit: Int,
@@ -514,19 +514,19 @@ class KVSegmentReader(file: String, columns: Array[String], limit: Int,
   // empty projection (e.g. a bare count) still needs a column to drive
   // row iteration; read the narrow key column and emit empty rows
   private val cols = if (columns.isEmpty) Array("k") else columns
-  private val conf = new Configuration(baseConf)
+  private val hadoopConf = new Configuration(baseConf)
   // projection fields must carry the file's own repetition (required vs
   // optional varies with writer nullability), so project the footer schema
   private val fileSchema = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), hadoopConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
-  conf.set(ReadSupport.PARQUET_READ_SCHEMA,
+  hadoopConf.set(ReadSupport.PARQUET_READ_SCHEMA,
     new org.apache.parquet.schema.MessageType("graft_kv",
       cols.map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*).toString)
   private val reader =
-    ParquetReader.builder(new GroupReadSupport(), new Path(file)).withConf(conf).build()
+    ParquetReader.builder(new GroupReadSupport(), new Path(file)).withConf(hadoopConf).build()
 
   private var current: org.apache.parquet.example.data.Group = _
   private var emitted = 0

@@ -241,18 +241,18 @@ case class KVLogReaderFactory(
   * is the driver's Hadoop conf shipped through the factory. */
 class KVLogFileReader(file: String, seq: Long, baseConf: Configuration)
   extends PartitionReader[InternalRow] {
-  private val conf = new Configuration(baseConf)
+  private val hadoopConf = new Configuration(baseConf)
   private val fileSchema = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), hadoopConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
   private val cols = Seq("k", "c", "v", "wts", "op")
-  conf.set(ReadSupport.PARQUET_READ_SCHEMA,
+  hadoopConf.set(ReadSupport.PARQUET_READ_SCHEMA,
     new org.apache.parquet.schema.MessageType("graft_kv_log",
       cols.map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*).toString)
   private val reader =
-    ParquetReader.builder(new GroupReadSupport(), new Path(file)).withConf(conf).build()
+    ParquetReader.builder(new GroupReadSupport(), new Path(file)).withConf(hadoopConf).build()
 
   private var current: org.apache.parquet.example.data.Group = _
 

@@ -32,6 +32,18 @@ object GraftSqlBridge {
       rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
     else rdd.unpersist(blocking = false)
 
+  /** The local checkpoints `df` reads: the RDDs of its plan's
+    * LogicalRDD leaves, subqueries included. */
+  def checkpoints(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
+  /** Releases every local checkpoint `df` reads. `Dataset.unpersist`
+    * frees none of them: it only drops CacheManager entries. */
+  def releaseCheckpoints(df: org.apache.spark.sql.DataFrame): Unit =
+    checkpoints(df).foreach(release)
+
   def registerFunction(
       spark: org.apache.spark.sql.SparkSession,
       id: org.apache.spark.sql.catalyst.FunctionIdentifier,

@@ -20,32 +20,39 @@ class PlanHygieneSpec extends SparkSpec {
     case _ => p +: p.children.flatMap(flatten)
   }
 
-  test("no driver entry plans a CartesianProductExec or an unpartitioned window") {
+  /** Per entry: which of the marks below its executed plan carries, or the
+    * failure building it. Built once, shared by both tests. */
+  private lazy val marks: Seq[(String, Either[String, Set[String]])] = {
     import org.apache.spark.sql.execution.window.WindowExec
-    val cartesian = Seq.newBuilder[String]
-    val windows = Seq.newBuilder[String]
-    val failures = Seq.newBuilder[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, SF).queryExecution.executedPlan
-        val nodes = flatten(plan)
-        if (nodes.exists(_.isInstanceOf[CartesianProductExec]))
-          cartesian += name
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> (try Right(flatten(fn(spark, SF).queryExecution.executedPlan).collect {
+        case _: CartesianProductExec => "cartesian"
         // an EMPTY partitionSpec moves the whole input to one task —
         // Spark logs "No Partition Defined for Window operation!";
         // provably-tiny inputs must say so via partitionBy(lit(0))
-        nodes.foreach {
-          case w: WindowExec if w.partitionSpec.isEmpty => windows += name
-          case _ => ()
-        }
-      } catch {
-        case e: Throwable => failures += s"$name: ${e.getMessage.take(120)}"
-      }
+        case w: WindowExec if w.partitionSpec.isEmpty => "window"
+        case _: graft.plans.IntervalJoinExec => "interval"
+      }.toSet)
+      catch { case e: Throwable => Left(e.getMessage.take(120)) })
     }
-    assert(failures.result().isEmpty, failures.result().mkString("; "))
-    assert(cartesian.result().isEmpty,
-      s"cartesian product planned in: ${cartesian.result().mkString(", ")}")
-    assert(windows.result().isEmpty,
-      s"unpartitioned WindowExec planned in: ${windows.result().distinct.mkString(", ")}")
+  }
+
+  private def marked(mark: String): Seq[String] =
+    marks.collect { case (name, Right(m)) if m(mark) => name }
+
+  test("no driver entry plans a CartesianProductExec or an unpartitioned window") {
+    val failures = marks.collect { case (name, Left(msg)) => s"$name: $msg" }
+    assert(failures.isEmpty, failures.mkString("; "))
+    assert(marked("cartesian").isEmpty,
+      s"cartesian product planned in: ${marked("cartesian").mkString(", ")}")
+    assert(marked("window").isEmpty,
+      s"unpartitioned WindowExec planned in: ${marked("window").mkString(", ")}")
+  }
+
+  test("only the interval-join entries plan an IntervalJoinExec") {
+    // AutoIntervalJoinStrategy sees every inner join with a condition:
+    // no other entry may pick the indexed exec up by accident
+    assert(marked("interval").toSet == Set("q_range_phys", "q_range_sql"),
+      marked("interval"))
   }
 }

@@ -72,51 +72,36 @@ class KVSpjHopSpec extends SparkSpec {
     val seg = java.nio.file.Files.createTempDirectory("graft_spjhopspec").toString
     graft.sources.kvconnector.KVSegmentStore.write(
       KVGraphQueries.adjacency(spark, SF), seg, 8, "bucket")
-    val saved = Seq("spark.sql.catalog.graftkv",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.catalog.graftkv",
-      classOf[graft.sources.kvconnector.KVCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-    try {
-      import org.apache.spark.sql.{functions => F}
-      import graft.kv.KVStore.{decLong, encLong}
-      val g = PropertyGraph(spark, SF)
-      val adj = spark.table(s"graftkv.`$seg`")
-      val start = g.vertices
-        .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
-        .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
-      val hop1 = adj.hint("merge").join(start, Seq("k"))
-        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
-      val hop2 = adj.hint("merge").join(
-          hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
-        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-      hop2.collect()
-      // both hops' adjacency scans present...
-      val scans = kvScansIn(hop2.queryExecution.executedPlan)
-      assert(scans.size == 2, s"expected 2 kv scans:\n${hop2.queryExecution.executedPlan}")
-      // ...and NO shuffle on the path from either kv scan UP TO ITS OWN
-      // JOIN — the store side reads in place. (hop1's scan legitimately
-      // sits inside hop2's FRONTIER shuffle subtree: its OUTPUT moves as
-      // the next frontier, the scan itself is never re-partitioned.)
-      val offending = scanJoinPaths(hop2)
-        .filter(_.exists(_.isInstanceOf[ShuffleExchangeLike]))
-      assert(offending.isEmpty,
-        s"shuffle between an adjacency scan and its join:\n${hop2.queryExecution.executedPlan}")
-      // the frontier DOES move, and by the store's own bucket function
-      // (the one-side-shuffle SPJ, not a broadcast trivially satisfying
-      // the store-side claim)
-      val shuffles = shuffleSubtrees(hop2)
-      assert(shuffles.size == 2 &&
-        shuffles.forall(_.toString.contains("keygroupedpartitioning")),
-        s"expected 2 frontier keygroupedpartitioning shuffles:\n${hop2.queryExecution.executedPlan}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    import org.apache.spark.sql.{functions => F}
+    import graft.kv.KVStore.{decLong, encLong}
+    val g = PropertyGraph(spark, SF)
+    val adj = spark.table(s"graftkv.`$seg`")
+    val start = g.vertices
+      .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
+      .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
+    val hop1 = adj.hint("merge").join(start, Seq("k"))
+      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
+    val hop2 = adj.hint("merge").join(
+        hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
+      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
+    hop2.collect()
+    // both hops' adjacency scans present...
+    val scans = kvScansIn(hop2.queryExecution.executedPlan)
+    assert(scans.size == 2, s"expected 2 kv scans:\n${hop2.queryExecution.executedPlan}")
+    // ...and NO shuffle on the path from either kv scan UP TO ITS OWN
+    // JOIN — the store side reads in place. (hop1's scan legitimately
+    // sits inside hop2's FRONTIER shuffle subtree: its OUTPUT moves as
+    // the next frontier, the scan itself is never re-partitioned.)
+    val offending = scanJoinPaths(hop2)
+      .filter(_.exists(_.isInstanceOf[ShuffleExchangeLike]))
+    assert(offending.isEmpty,
+      s"shuffle between an adjacency scan and its join:\n${hop2.queryExecution.executedPlan}")
+    // the frontier DOES move, and by the store's own bucket function
+    // (the one-side-shuffle SPJ, not a broadcast trivially satisfying
+    // the store-side claim)
+    val shuffles = shuffleSubtrees(hop2)
+    assert(shuffles.size == 2 &&
+      shuffles.forall(_.toString.contains("keygroupedpartitioning")),
+      s"expected 2 frontier keygroupedpartitioning shuffles:\n${hop2.queryExecution.executedPlan}")
   }
 }

@@ -47,6 +47,14 @@ class BpeSpec extends SparkSpec {
     assert(got.exists { case (_, l, r, _) => (l + r).length > 2 })
   }
 
+  test("training leaves none of its checkpoints persisted") {
+    val words = BpeTrainer.wordFreqs(spark, SF)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(BpeTrainer.train(words, 5).size == 5)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs left persisted: $left")
+  }
+
   /** Fold-apply reference: the per-symbol left-to-right merge. */
   private def refTokenize(word: String, merges: Seq[(Int, String, String, Long)]): Vector[String] =
     merges.foldLeft(word.map(_.toString).toVector) { case (syms, (_, l, r, _)) =>

@@ -48,4 +48,12 @@ class QualityModelSpec extends SparkSpec {
     val majority = math.max(pos, n - pos)
     assert(correct >= majority, s"correct=$correct majority=$majority n=$n")
   }
+
+  test("training leaves none of its checkpoints persisted") {
+    val feats = QualityModel.features(spark, SF)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(QualityModel.train(feats).length == 4)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs left persisted: $left")
+  }
 }

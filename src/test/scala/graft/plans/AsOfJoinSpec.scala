@@ -37,6 +37,19 @@ class AsOfJoinSpec extends SparkSpec {
       s"expected 2 exchanges, got $shuffles:\n${j.queryExecution.executedPlan}")
   }
 
+  test("AsOfJoinExec reports its output rows") {
+    import spark.implicits._
+    val l = Seq((1L, 10L, "a"), (1L, 3L, "b"), (2L, 20L, "c"), (3L, 9L, "d"))
+      .toDF("k", "t", "pay")
+    val r = Seq((1L, 5L, 100L), (2L, 6L, 200L)).toDF("rk", "rt", "rid")
+    for (leftOuter <- Seq(false, true)) {
+      val j = AsOfJoin.asof(l, r, "k", "t", "rk", "rt", "rid", leftOuter)
+      val n = j.collect().length
+      val counted = collectExec(j) { case e: AsOfJoinExec => e.metrics("numOutputRows").value }
+      assert(n == (if (leftOuter) 4 else 2) && counted == Seq(n.toLong), counted)
+    }
+  }
+
   test("equals the union+window q_asof formulation on sf0.001") {
     val viaWindow = graft.olap.OlapQueries.qAsof(spark, SF)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -5,9 +5,9 @@ import org.apache.spark.sql.{functions => F}
 import graft.SparkSpec
 
 /** The custom interval-join operator: plan shape (IntervalJoinExec +
-  * broadcast, NO shuffle of the point side), equality with the
-  * conditional-join formulation on overlapping interval sets, the
-  * half-open contract, and a randomized brute-force reference. */
+  * broadcast, NO shuffle of the point side), the half-open contract on
+  * overlapping interval sets, a randomized brute-force reference, and
+  * when a plain band join plans to it. */
 class IntervalJoinSpec extends SparkSpec {
 
   private def flatten(p: org.apache.spark.sql.execution.SparkPlan)
@@ -30,7 +30,8 @@ class IntervalJoinSpec extends SparkSpec {
     assert(nodes.exists(_.isInstanceOf[IntervalJoinExec]),
       j.queryExecution.executedPlan.toString)
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeExec]))
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      j.queryExecution.executedPlan.toString)
     assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeExec]),
       "the point side must not shuffle")
   }
@@ -58,17 +59,22 @@ class IntervalJoinSpec extends SparkSpec {
   test("matches the conditional-join formulation on random data") {
     import spark.implicits._
     val rng = new scala.util.Random(42)
-    val pts = (1 to 500).map(i => (rng.nextInt(1000).toLong, i.toLong))
-      .toDF("vc", "pid")
-    val ivs = (1 to 200).map { i =>
+    val ptRows = (1 to 500).map(i => (rng.nextInt(1000).toLong, i.toLong))
+    val ivRows = (1 to 200).map { i =>
       val lo = rng.nextInt(950).toLong
       (lo, lo + 1 + rng.nextInt(80), i.toLong)
-    }.toDF("lo", "hi", "iid")
-    val viaExec = IntervalJoin.join(pts, ivs, "vc", "lo", "hi")
+    }
+    val viaExec = IntervalJoin.join(ptRows.toDF("vc", "pid"),
+        ivRows.toDF("lo", "hi", "iid"), "vc", "lo", "hi")
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaCond = pts.join(ivs, F.col("vc") >= F.col("lo") && F.col("vc") < F.col("hi"))
-      .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaExec == viaCond)
+    // the reference is a brute force on the driver: a plain band join
+    // would plan through the same strategy
+    val bruteForce = (for {
+      (vc, pid) <- ptRows
+      (lo, hi, iid) <- ivRows
+      if vc >= lo && vc < hi
+    } yield (pid, iid)).toSet
+    assert(viaExec == bruteForce)
     assert(viaExec.nonEmpty)
   }
 
@@ -78,40 +84,43 @@ class IntervalJoinSpec extends SparkSpec {
     val ivs = Seq((0L, 10L, 100L), (10L, 20L, 200L)).toDF("lo", "hi", "iid")
     def run() = pts.join(ivs, F.col("vc") >= F.col("lo") && F.col("vc") < F.col("hi"))
       .select("pid", "iid")
-    val prev = spark.conf.getOption("spark.graft.autoIntervalJoin")
+    def planned(df: org.apache.spark.sql.DataFrame) =
+      flatten(df.queryExecution.executedPlan).exists(_.isInstanceOf[IntervalJoinExec])
+    val expected = Set((1L, 100L), (2L, 200L))
+    val on = run()
+    assert(on.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == expected)
+    assert(planned(on), on.queryExecution.executedPlan.toString)
+    // swapped sides: points on the RIGHT still work, column order kept
+    val swapped = ivs.join(pts, F.col("vc") >= F.col("lo") && F.col("vc") < F.col("hi"))
+    swapped.collect()
+    assert(planned(swapped))
+    assert(swapped.columns.toSeq == Seq("lo", "hi", "iid", "vc", "pid"))
+    assert(swapped.collect().map(r => (r.getLong(2), r.getLong(4))).toSet ==
+      Set((100L, 1L), (200L, 2L)))
+    // a NON-band condition is left to Spark's own planning
+    val other = pts.join(ivs, F.col("vc") >= F.col("lo"))
+    other.collect()
+    assert(!planned(other))
+    // an interval side over the broadcast threshold, with no hint, is
+    // left to Spark's own planning too
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(threshold)
+    spark.conf.set(threshold, "1")
     try {
-      spark.conf.set("spark.graft.autoIntervalJoin", "true")
-      val on = run()
-      on.collect()
-      assert(flatten(on.queryExecution.executedPlan)
-        .exists(_.isInstanceOf[IntervalJoinExec]),
-        on.queryExecution.executedPlan.toString)
-      assert(on.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        Set((1L, 100L), (2L, 200L)))
-      // swapped sides: points on the RIGHT still work, column order kept
-      val swapped = ivs.join(pts, F.col("vc") >= F.col("lo") && F.col("vc") < F.col("hi"))
-      swapped.collect()
-      assert(flatten(swapped.queryExecution.executedPlan)
-        .exists(_.isInstanceOf[IntervalJoinExec]))
-      assert(swapped.columns.toSeq == Seq("lo", "hi", "iid", "vc", "pid"))
-      assert(swapped.collect().map(r => (r.getLong(2), r.getLong(4))).toSet ==
-        Set((100L, 1L), (200L, 2L)))
-      // a NON-band condition is left to Spark's own planning
-      val other = pts.join(ivs, F.col("vc") >= F.col("lo"))
-      other.collect()
-      assert(!flatten(other.queryExecution.executedPlan)
-        .exists(_.isInstanceOf[IntervalJoinExec]))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.autoIntervalJoin", v)
-        case None => spark.conf.unset("spark.graft.autoIntervalJoin")
-      }
-    }
-    // and with the flag off (default), the plain join stays Spark-planned
-    val off = run()
-    off.collect()
-    assert(!flatten(off.queryExecution.executedPlan)
-      .exists(_.isInstanceOf[IntervalJoinExec]))
+      val off = run()
+      assert(off.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == expected)
+      assert(!planned(off), off.queryExecution.executedPlan.toString)
+    } finally spark.conf.set(threshold, prev)
+  }
+
+  test("IntervalJoinExec reports its output rows") {
+    import spark.implicits._
+    val pts = Seq((0L, 1L), (5L, 2L), (19L, 3L), (40L, 4L)).toDF("vc", "pid")
+    val ivs = Seq((0L, 10L, 100L), (5L, 20L, 200L)).toDF("lo", "hi", "iid")
+    val j = IntervalJoin.join(pts, ivs, "vc", "lo", "hi")
+    val n = j.collect().length
+    val counted = collectExec(j) { case e: IntervalJoinExec => e.metrics("numOutputRows").value }
+    assert(n == 4 && counted == Seq(n.toLong), counted)
   }
 
   test("q_range_phys equals q_range_join on sf0.001") {
@@ -123,6 +132,7 @@ class IntervalJoinSpec extends SparkSpec {
   }
 
   test("column pruning narrows both sides through the custom node") {
+    // IntervalJoin.join builds a plain Join: Catalyst's own ColumnPruning applies
     import spark.implicits._
     val pts = Seq((5L, "a", "wide1"), (15L, "b", "wide2"))
       .toDF("vc", "pay", "unused_p")
