@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
 import graft.Tables
+import graft.streaming.{JourneyStream, SessionFold}
 
 /** Business-analytics staples of the ClickHouse deployment surface that
   * were still missing from §2C: revenue concentration (Pareto/ABC),
@@ -191,36 +192,18 @@ object OlapBizQueries {
 
   /** q_journey: the top-20 session journeys — the first three event
     * types of each 30-min-gap session joined as 'a>b>c' (ClickHouse's
-    * sequence / path analysis reporting). Sessionization is the shared
-    * q_sessionize spelling (both windows key on user_id: one shuffle);
-    * the final top-20 is orderBy+limit, which Spark plans as
+    * sequence / path analysis reporting). Sessionization and the path
+    * are the maintained JourneyStream's own rules (SessionFold's
+    * sessionize windows and the path window all key on user_id: one
+    * shuffle); the final top-20 is orderBy+limit, which Spark plans as
     * TakeOrderedAndProject — per-partition heaps, no global sort. */
-  def qJourney(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(s, dir, "events")
+  def qJourney(s: SparkSession, dir: String): DataFrame =
+    JourneyStream.pathsOf(SessionFold.sessionized(Tables(s, dir, "events")
       .select(F.col("user_id"), F.col("event_id"), F.col("event_type"),
-        F.unix_micros(F.col("ts")).as("us"))
-    val byU = Window.partitionBy("user_id").orderBy(F.col("us").asc, F.col("event_id").asc)
-    val cum = byU.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = ev
-      .withColumn("prev_us", F.lag("us", 1).over(byU))
-      .withColumn("new_sess",
-        F.when(F.col("prev_us").isNull || F.col("us") - F.col("prev_us") > 1800L * 1000000L, 1L)
-          .otherwise(0L))
-      .withColumn("sess_idx", F.sum("new_sess").over(cum))
-    val bySess = Window.partitionBy("user_id", "sess_idx")
-      .orderBy(F.col("us").asc, F.col("event_id").asc)
-    sess.withColumn("rn", F.row_number().over(bySess))
-      .filter(F.col("rn") <= 3)
-      .groupBy("user_id", "sess_idx")
-      .agg(
-        F.min(F.when(F.col("rn") === 1, F.col("event_type"))).as("s1"),
-        F.min(F.when(F.col("rn") === 2, F.col("event_type"))).as("s2"),
-        F.min(F.when(F.col("rn") === 3, F.col("event_type"))).as("s3"))
-      .withColumn("path", F.concat_ws(">", F.col("s1"), F.col("s2"), F.col("s3")))
+        F.unix_micros(F.col("ts")).as("us"))))
       .groupBy("path").agg(F.count(F.lit(1)).as("n_sess"))
       .orderBy(F.col("n_sess").desc, F.col("path").asc)
       .limit(20)
-  }
 
   val qJourneySql: String =
     """WITH ev AS (

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.Tables
 import graft.Tables.{dec2, out2}
+import graft.streaming.{SessionFold, SessionFunnelStream}
 
 /** Additional OLAP shapes beyond the core set: correlated-min subquery
   * (TPC-H Q2 shape) and semi/anti-join existence queries (EXISTS / NOT
@@ -841,37 +842,14 @@ object OlapExtraQueries {
     * strict-contiguous funnel depth (q_funnel_strict's step-string
     * probe), i.e. "did the user click→view→purchase within one visit",
     * the composition a product-analytics user actually asks for.
-    * Session assignment = one lag + running-sum window per user; the
-    * funnel = one ordered string per (user, session); per-level session
-    * counts. Two window passes + one aggregate — no joins at all. */
-  def qSessionFunnel(s: SparkSession, dir: String): DataFrame = {
-    val GapUs = 30L * 60L * 1000000L
-    val ev = Tables(s, dir, "events")
-      .filter(F.col("event_type").isin("click", "view", "purchase"))
-      .select(F.col("user_id"), F.unix_micros(F.col("ts")).as("tu"),
-        F.col("event_id"),
-        F.when(F.col("event_type") === "click", "c")
-          .when(F.col("event_type") === "view", "v")
-          .otherwise("p").as("st"))
-    val wSeq = Window.partitionBy("user_id").orderBy("tu", "event_id")
-    val sessions = ev
-      .withColumn("prev", F.lag("tu", 1).over(wSeq))
-      .withColumn("brk",
-        F.when(F.col("prev").isNull || F.col("tu") - F.col("prev") > GapUs, 1L)
-          .otherwise(0L))
-      .withColumn("sess", F.sum("brk").over(
-        wSeq.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    sessions.groupBy("user_id", "sess")
-      .agg(F.concat_ws("", F.expr(
-        "transform(sort_array(collect_list(struct(tu, event_id, st))), x -> x.st)"))
-        .as("seq"))
-      .select(
-        F.when(F.instr(F.col("seq"), "cvp") > 0, 3L)
-          .when(F.instr(F.col("seq"), "cv") > 0, 2L)
-          .when(F.instr(F.col("seq"), "c") > 0, 1L)
-          .otherwise(0L).as("level"))
-      .groupBy("level").agg(F.count(F.lit(1)).as("n_sessions"))
-  }
+    * Session assignment = SessionFold's lag + running-sum windows per
+    * user; the funnel = one ordered string per (user, session); per-level
+    * session counts — the maintained SessionFunnelStream's own step
+    * projection and level rule. Two window passes + one aggregate — no
+    * joins at all. */
+  def qSessionFunnel(s: SparkSession, dir: String): DataFrame =
+    SessionFunnelStream.levelCounts(SessionFold.sessionized(
+      SessionFunnelStream.steps(Tables(s, dir, "events"))))
 
   /** q_session_funnel_inc: the SAME per-level session histogram, but
     * MAINTAINED by SessionFunnelStream.applyBatch (watermark-buffered

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.Tables
 import graft.Tables.{dec2, out2, out4, revenue}
+import graft.streaming.SessionFold
 
 /** OLAP / relational query library — the ClickHouse-OLAP side of the
   * reference's capability surface, declared with the DataFrame API so
@@ -187,21 +188,14 @@ object OlapQueries {
       |FROM w GROUP BY 1, 2""".stripMargin
 
   /** Sessionization: 30-min-gap sessions per user + per-session aggregates. */
-  def qSessionize(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").withColumn("us", F.unix_micros(F.col("ts")))
-    val byUser = Window.partitionBy("user_id").orderBy(F.col("us").asc, F.col("event_id").asc)
-    val cum = Window.partitionBy("user_id").orderBy(F.col("us").asc, F.col("event_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev.withColumn("prev_us", F.lag("us", 1).over(byUser))
-      .withColumn("new_sess",
-        F.when(F.col("prev_us").isNull || F.col("us") - F.col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("sess_idx", F.sum("new_sess").over(cum))
+  def qSessionize(s: SparkSession, dir: String): DataFrame =
+    SessionFold.sessionized(
+      t(s, dir, "events").withColumn("us", F.unix_micros(F.col("ts"))))
       .groupBy("user_id", "sess_idx")
       .agg(
         F.count(F.lit(1)).as("n_events"),
         out2(F.sum(dec2(F.col("value")))).as("total_value"),
         (F.max("us") - F.min("us")).as("dur_us"))
-  }
 
   val qSessionizeSql: String =
     """WITH ev AS (

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
 import graft.Tables
+import graft.streaming.SessionFold
 
 /** Ordered time-series aggregates (ClickHouse `deltaSum` and
   * `intervalLengthSum`) — both are "fold the group's time-sorted rows"
@@ -1546,17 +1547,8 @@ object OlapSeriesQueries {
     * analytics headline over q_sessionize's 30-min-gap sessions — same
     * gap fold, one more rollup keyed by start day). */
   def qBounceRate(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id")
-      .orderBy(F.col("us").asc, F.col("event_id").asc)
-    val cum = Window.partitionBy("user_id")
-      .orderBy(F.col("us").asc, F.col("event_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sessions = Tables(s, dir, "events")
-      .withColumn("us", F.unix_micros(F.col("ts")))
-      .withColumn("prev_us", F.lag("us", 1).over(byUser))
-      .withColumn("new_sess", F.when(F.col("prev_us").isNull ||
-        F.col("us") - F.col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("sess_idx", F.sum("new_sess").over(cum))
+    val sessions = SessionFold.sessionized(Tables(s, dir, "events")
+      .withColumn("us", F.unix_micros(F.col("ts"))))
       .groupBy("user_id", "sess_idx")
       .agg(F.count(F.lit(1)).as("n_events"),
         F.expr("min(us) div 86400000000").as("day"))

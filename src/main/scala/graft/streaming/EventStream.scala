@@ -12,7 +12,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * unbounded plans: watermark + tumbling-window aggregation (state store
   * evicts closed windows), and sessionization as typed state on
   * `flatMapGroupsWithState` with event-time timeout (state per user is
-  * O(1) — only the open session, never buffered events). At scale both
+  * one aggregate row per session the watermark has not closed, never
+  * buffered events). At scale both
   * partition by the grouping key; state store size is bounded by
   * |active users| + |open windows|, independent of stream length.
   */
@@ -21,8 +22,9 @@ object EventStream {
   final case class Ev(user_id: Long, ts: Timestamp, event_type: String, value: Double)
   final case class Session(user_id: Long, start: Timestamp, end: Timestamp,
                            n_events: Long, total_value: Double)
-  // not private: the state encoder's generated code must construct it
+  // not private: the state encoder's generated code must construct them
   final case class SessState(start: Long, end: Long, n: Long, total: Double)
+  final case class OpenSessions(open: Seq[SessState])
 
   /** Streaming tumbling-window counts per event type, 1-hour windows,
     * 30-minute watermark. Append mode emits a window once the watermark
@@ -45,53 +47,41 @@ object EventStream {
       .agg(F.count(F.lit(1)).as("n_events"))
       .select(F.col("w.start").as("window_start"), F.col("event_type"), F.col("n_events"))
 
-  val SessionGapMs: Long = 30 * 60 * 1000L
-
-  /** Streaming sessionization (30-min inactivity gap). A session closes
-    * either when a later event from the same user arrives past the gap
-    * (emitted immediately) or when the event-time watermark passes
-    * end + gap (timeout). */
+  /** Streaming sessionization (30-min inactivity gap), watermark-gated:
+    * a session is emitted only once the watermark passes end + gap —
+    * every admissible later event has t > watermark, so nothing can
+    * extend it or bridge it to another. Until then the user's pending
+    * sessions stay in state (bounded by the watermark delay + gap of
+    * activity); an arrival merges every pending session within the gap
+    * of it, so an admissible late event that bridges two sessions makes
+    * them one, as the batch q_sessionize does. The timeout is the
+    * earliest pending end + gap. */
   def sessionize(events: Dataset[Ev]): Dataset[Session] = {
     import events.sparkSession.implicits._
     events
       .withWatermark("ts", "30 minutes")
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
+      .flatMapGroupsWithState[OpenSessions, Session](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, evs: Iterator[Ev], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(Session(user, new Timestamp(st.start), new Timestamp(st.end), st.n, st.total))
-          } else {
-            val sorted = evs.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { e =>
+        (user: Long, evs: Iterator[Ev], state: GroupState[OpenSessions]) =>
+          val pending = evs.foldLeft(state.getOption.fold(Seq.empty[SessState])(_.open)) {
+            (open, e) =>
               val t = e.ts.getTime
-              cur match {
-                case Some(st) if t > st.end + SessionGapMs =>
-                  // later than the open session by more than the gap
-                  closed += Session(user, new Timestamp(st.start), new Timestamp(st.end), st.n, st.total)
-                  cur = Some(SessState(t, t, 1L, e.value))
-                case Some(st) if t < st.start - SessionGapMs =>
-                  // out-of-order: earlier than the open session by more
-                  // than the gap — a distinct, already-ended session
-                  closed += Session(user, new Timestamp(t), new Timestamp(t), 1L, e.value)
-                case Some(st) =>
-                  // within gap of the open session on either side
-                  cur = Some(SessState(math.min(st.start, t), math.max(st.end, t),
-                    st.n + 1, st.total + e.value))
-                case None =>
-                  cur = Some(SessState(t, t, 1L, e.value))
+              val (near, far) = open.partition(st =>
+                t >= st.start - SessionFold.GapMs && t <= st.end + SessionFold.GapMs)
+              far :+ near.foldLeft(SessState(t, t, 1L, e.value)) { (a, b) =>
+                SessState(math.min(a.start, b.start), math.max(a.end, b.end),
+                  a.n + b.n, a.total + b.total)
               }
-            }
-            cur.foreach { st =>
-              state.update(st)
-              state.setTimeoutTimestamp(st.end + SessionGapMs)
-            }
-            closed.result().iterator
           }
+          val wm = state.getCurrentWatermarkMs()
+          val (done, open) = pending.partition(wm > _.end + SessionFold.GapMs)
+          if (open.nonEmpty) {
+            state.update(OpenSessions(open))
+            state.setTimeoutTimestamp(open.map(_.end).min + SessionFold.GapMs)
+          } else if (state.exists) state.remove()
+          done.sortBy(_.start).iterator.map(st => Session(user,
+            new Timestamp(st.start), new Timestamp(st.end), st.n, st.total))
       }
   }
 

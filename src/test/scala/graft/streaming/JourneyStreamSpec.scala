@@ -8,48 +8,61 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.{functions => F}
 
 import graft.SparkSpec
-import graft.streaming.JourneyStream.{JEv, SessionPath}
+import JourneyStreamSpec.{JEv, SessionPath}
 
-/** Streaming journeys must equal the batch sessionize+path replica
-  * (including the cross-batch out-of-order gap-boundary case), and the
-  * applyBatch/readTop composition (journey buffer fold → TopKSink) must
-  * maintain the exact journey counts through empty batches, in-delay
-  * late arrivals and batch replays. */
+object JourneyStreamSpec {
+  final case class JEv(user_id: Long, ts: Timestamp, event_id: Long,
+                       event_type: String)
+  final case class SessionPath(user_id: Long, start_us: Long, end_us: Long,
+                               n_events: Long, path: String)
+}
+
+/** The live journey fold ([[JourneyStream.start]]) and its applyBatch /
+  * readTop composition (journey buffer fold → TopKSink) must maintain
+  * the exact journey counts of the batch sessionize+path replica —
+  * through the cross-batch out-of-order gap-boundary case, empty
+  * batches, in-delay late arrivals and batch replays. */
 class JourneyStreamSpec extends SparkSpec {
 
   private def ts(ms: Long) = new Timestamp(ms)
 
-  /** Timestamp → epoch µs (the getNanos carry — main's usOf contract). */
+  /** Timestamp → epoch µs (getTime is ms-rounded; the µs live in
+    * getNanos). */
   private def usOf(t: Timestamp): Long =
     math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
-  private def runBatches(batches: Seq[Seq[JEv]]): Seq[SessionPath] = {
+  /** Drive the live form over MemoryStream batches (arrival order ≠ time
+    * order allowed); returns (journey dir, top-k dir). */
+  private def runLive(batches: Seq[Seq[JEv]]): (String, String) = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
+    val snap = Files.createTempDirectory("jlive")
+    val (jDir, tDir) = (snap.resolve("j").toString, snap.resolve("t").toString)
     val in = MemoryStream[JEv]
-    val q = JourneyStream.paths(in.toDF())
-      .writeStream.format("memory").queryName("j_paths")
-      .outputMode("append").start()
-    try {
-      batches.foreach { g => in.addData(g: _*); q.processAllAvailable() }
-      val maxT = batches.flatten.map(_.ts.getTime).max
-      (1 to 3).foreach { i =>
-        in.addData(JEv(-1, ts(maxT + i * 7_200_000L), -i, "click"))
-        q.processAllAvailable()
-      }
-      spark.table("j_paths").as[SessionPath].collect().toSeq
-        .filter(_.user_id >= 0)
-    } finally { q.stop(); spark.catalog.dropTempView("j_paths") }
+    val q = JourneyStream.start(in.toDF(), jDir, tDir)
+    try batches.foreach { g => in.addData(g: _*); q.processAllAvailable() }
+    finally q.stop()
+    (jDir, tDir)
   }
 
+  /** A far-future event: its batch's watermark closes every session of
+    * `evs`, so their paths must reach the durable top-k. */
+  private def sentinel(evs: Seq[JEv]): JEv =
+    JEv(-1, ts(evs.map(_.ts.getTime).max + 7_200_000L), -1, "click")
+
+  /** The durable top-k: closed sessions only. */
+  private def closedCounts(tDir: String): Map[String, Long] =
+    TopKSink.read(spark, tDir).collect()
+      .map(r => (r.getString(1), r.getLong(2))).toMap
+
   /** Batch replica: µs-exact (t, id) sort per user, gap fold, 3-prefix
-    * path — the same contract as main's flatMapGroupsWithState fold. */
+    * path — q_journey's contract. */
   private def expected(evs: Seq[JEv]): Seq[SessionPath] =
     evs.groupBy(_.user_id).toSeq.flatMap { case (u, es) =>
       val sorted = es.sortBy(e => (usOf(e.ts), e.event_id))
       val sessions = sorted.foldLeft(Vector.empty[Vector[JEv]]) { (acc, e) =>
         if (acc.nonEmpty &&
-            usOf(e.ts) - usOf(acc.last.last.ts) <= JourneyStream.GapUs)
+            usOf(e.ts) - usOf(acc.last.last.ts) <= SessionFold.GapUs)
           acc.init :+ (acc.last :+ e)
         else acc :+ Vector(e)
       }
@@ -65,14 +78,17 @@ class JourneyStreamSpec extends SparkSpec {
 
   test("cross-batch out-of-order event near a gap boundary keeps one path") {
     val base = 1_700_000_000_000L
-    val G = JourneyStream.GapMs
+    val G = SessionFold.GapMs
     val b1 = Seq(JEv(1, ts(base), 1, "view"), JEv(1, ts(base + 60_000), 2, "click"))
     val b2 = Seq(JEv(1, ts(base + 60_000 + G + 120_000), 3, "purchase"))
     val b3 = Seq(JEv(1, ts(base + 200_000), 4, "signup")) // admissible, merges all
-    val got = runBatches(Seq(b1, b2, b3))
-    val exp = expected(b1 ++ b2 ++ b3)
+    val all = b1 ++ b2 ++ b3
+    val exp = expected(all)
     assert(exp.size == 1 && exp.head.path == "view>click>signup", exp)
-    assert(got.toSet === exp.toSet, got.sortBy(_.start_us))
+    val (jDir, tDir) = runLive(Seq(b1, b2, b3, Seq(sentinel(all))))
+    assert(readCounts(jDir, tDir) == expectedCounts(all :+ sentinel(all)))
+    // the merged session closed once, through the top-k
+    assert(closedCounts(tDir) == Map("view>click>signup" -> 1L))
   }
 
   test("replayed sf0.001 history matches the batch paths; TopKSink maintains exact journey counts") {
@@ -82,24 +98,13 @@ class JourneyStreamSpec extends SparkSpec {
       .map(r => JEv(r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getString(3)))
       .toSeq
     val sorted = evs.sortBy(e => (usOf(e.ts), e.event_id))
-    val got = runBatches(sorted.grouped(math.max(1, sorted.size / 5)).toSeq)
-    val exp = expected(evs)
-    assert(got.size == exp.size && got.toSet === exp.toSet)
-
-    // compose: emitted paths → TopKSink(termCol = "path"), 3 batches + replay
-    import spark.implicits._
-    val dir = Files.createTempDirectory("journeys").toString
-    val chunks = got.grouped(math.max(1, got.size / 3)).toSeq
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      TopKSink.applyBatch(c.toDF(), dir, i.toLong, capacity = 256, termCol = "path")
-    }
-    TopKSink.applyBatch(chunks.head.toDF(), dir, 0L, capacity = 256, termCol = "path")
-    val maintained = TopKSink.read(spark, dir).collect()
-      .map(r => (r.getString(1), r.getLong(2))).toMap
-    val true_ = got.groupBy(_.path).view.mapValues(_.size.toLong).toMap
+    val chunks = sorted.grouped(math.max(1, sorted.size / 5)).toSeq
+    val exp = expectedCounts(evs)
     // distinct paths ≤ capacity → Misra-Gries is exact
-    assert(true_.size <= 256)
-    assert(maintained == true_)
+    assert(exp.size <= 512)
+    val (jDir, tDir) = runLive(chunks :+ Seq(sentinel(evs)))
+    assert(readCounts(jDir, tDir) == expectedCounts(evs :+ sentinel(evs)))
+    assert(closedCounts(tDir) == exp)
   }
 
   // ── applyBatch (foreachBatch DataFrame fold) ──────────────────────────
@@ -128,7 +133,7 @@ class JourneyStreamSpec extends SparkSpec {
     val snap = Files.createTempDirectory("jinc_ooo")
     val (jDir, tDir) = (snap.resolve("j").toString, snap.resolve("t").toString)
     val base = 1_700_000_000_000L
-    val G = JourneyStream.GapMs
+    val G = SessionFold.GapMs
     // b0: user 1 session start; user 2 lone event
     val b0 = Seq(JEv(1, ts(base), 1, "view"), JEv(2, ts(base + 10_000), 2, "cart"))
     // b1: advances time far enough to CLOSE b0's sessions (> gap + delay)

@@ -73,6 +73,30 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("sessionize keeps one session when an admissible late event bridges the gap") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[Ev]
+    val q = EventStream.sessionize(in.toDS())
+      .writeStream.format("memory").queryName("sess_bridge")
+      .outputMode(OutputMode.Append).start()
+    try {
+      // user 1 at minutes 0 and 40 (past the gap: two candidate sessions),
+      // then 20 — admissible (the watermark is 40 - 30 = 10) and within the
+      // gap of both, so q_sessionize's rule makes ONE 3-event session
+      in.addData(Ev(1, ts(0), "click", 1.0)); q.processAllAvailable()
+      in.addData(Ev(1, ts(40), "click", 2.0)); q.processAllAvailable()
+      in.addData(Ev(1, ts(20), "click", 4.0)); q.processAllAvailable()
+      in.addData(Ev(2, ts(600), "click", 1.0)); q.processAllAvailable()
+      in.addData(Ev(2, ts(1200), "click", 1.0)); q.processAllAvailable()
+      val sessions = spark.table("sess_bridge").as[Session].collect()
+        .filter(_.user_id == 1L)
+        .map(s => (mins(s.start), mins(s.end), s.n_events, s.total_value))
+        .toSet
+      assert(sessions == Set((0L, 40L, 3L, 7.0)), s"got $sessions")
+    } finally q.stop()
+  }
+
   test("streaming dedup drops repeated event_ids within the watermark") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

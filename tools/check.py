@@ -4,7 +4,10 @@
 Usage: python3 tools/check.py <sfDir> <outDir>
 Reads each <outDir>/<name>/ parquet (Spark result), runs
 <outDir>/oracle_sql.json[name] in DuckDB against <sfDir>/*.parquet views,
-sorts columns by name + rows, and compares values.
+sorts columns by name + rows, and compares values. When graft.Verify
+wrote <outDir>/entries.json (the entries it ran), only the listed
+entries are compared: each one with no result dir is reported MISSING
+and counts as failed, and dirs of unlisted entries are ignored.
 """
 import sys, json, glob, os
 import duckdb
@@ -28,9 +31,23 @@ def main(sf_dir, out_dir):
         t = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    names = [d for d in sorted(os.listdir(out_dir))
-             if os.path.isdir(os.path.join(out_dir, d)) and not d.startswith(".")]
-    failed = []
+    dirs = [d for d in sorted(os.listdir(out_dir))
+            if os.path.isdir(os.path.join(out_dir, d)) and not d.startswith(".")]
+    listed = os.path.join(out_dir, "entries.json")
+    if os.path.exists(listed):
+        # compare only this run's entries: a dir left by an earlier run
+        # for an entry this run did not select is not a result of it
+        selected = json.load(open(listed))
+        names = [n for n in selected if n in dirs]
+        missing = [n for n in selected if n not in dirs]
+        stale = [d for d in dirs if d not in selected]
+        if stale:
+            print(f"ignoring {len(stale)} result dir(s) not in entries.json")
+    else:
+        names, missing = dirs, []
+    for name in missing:
+        print(f"{name:24s} MISSING (no result dir)")
+    failed = list(missing)
     for name in names:
         # Read the Spark side with pandas (as the driver does): decimal
         # columns surface as Decimal objects ('493670.20'), NOT float64 —
@@ -72,7 +89,8 @@ def main(sf_dir, out_dir):
             failed.append(name)
             continue
         print(f"{name:24s} OK rows={len(g)}")
-    print(f"\n{len(names)-len(failed)}/{len(names)} pass")
+    total = len(names) + len(missing)
+    print(f"\n{total-len(failed)}/{total} pass")
     return 1 if failed else 0
 
 if __name__ == "__main__":
