@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
+import graft.ScenarioDirs
 import graft.kv.KVStore.{decLong, encLong}
 import graft.sources.kvconnector.KVSegmentStore
 
@@ -77,23 +78,20 @@ object KVGraphQueries {
     * k (runtime segment pruning), the label slice is a pushed c range
     * (zone-map pruning), and the nation names resolve exactly as the
     * frame entry does. Shares g_onehop's oracle hash-for-hash. */
-  def gKvOneHop(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvadj1")
+  def gKvOneHop(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvadj1") { seg =>
     KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
     val g = PropertyGraph(s, dir)
     val start = g.vertices
       .filter(F.col("vlabel") === "customer" && F.col("mktsegment") === "BUILDING")
       .select(encLong(F.col("vid")).as("k"), F.col("vid").as("c_vid"))
     inNationHop(s.read.format("graft-kv").load(seg.toString), start, g.vertices)
-      .localCheckpoint(true)
   }
 
   /** g_kv_twohop: TWO successive slice rounds off the same adjacency
     * store — the JanusGraph multi-hop OLTP pattern (hop 2's key list
     * is hop 1's endpoint set, exactly the reference's repeated
     * multi-key getSlice). Shares g_twohop's oracle. */
-  def gKvTwoHop(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvadj2")
+  def gKvTwoHop(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvadj2") { seg =>
     KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
     val g = PropertyGraph(s, dir)
     val adj = s.read.format("graft-kv").load(seg.toString)
@@ -110,7 +108,6 @@ object KVGraphQueries {
         F.col("name").as("dst_name")), "dst_vid")
       .select(F.col("src_vid"), F.col("dst_vid"), F.col("dst_name"))
       .distinct()
-      .localCheckpoint(true)
   }
 
   /** The kv store decoded back to a [[PropertyGraph.G]]: vertices stay
@@ -153,26 +150,25 @@ object KVGraphQueries {
     * adjacency store. One adapter makes the whole DSL (and every
     * frame-shaped graph operator) storage-model-portable; shares
     * g_motif's oracle hash-for-hash. */
-  def gKvDslMotif(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvadj3")
-    KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
-    val g = kvBackedGraph(s, dir, seg.toString)
-    // the EXACT chain gDslMotif writes — same DSL shape, different
-    // storage is the whole claim (no extra hasLabel: peer edges only
-    // connect suppliers, and the frame twin omits it too)
-    Traversal.V(g)
-      .hasLabel("supplier").value("acctbal", "a_bal")
-      .as("a_vid")
-      .out("peer")
-      .value("acctbal", "b_bal")
-      .as("b_vid")
-      .where(F.col("a_bal") > F.col("b_bal"))
-      .out("in_nation")
-      .value("name", "n_name")
-      .select("a_vid", "b_vid", "n_name")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvDslMotif(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvadj3") { seg =>
+      KVSegmentStore.write(adjacency(s, dir), seg.toString, 0)
+      val g = kvBackedGraph(s, dir, seg.toString)
+      // the EXACT chain gDslMotif writes — same DSL shape, different
+      // storage is the whole claim (no extra hasLabel: peer edges only
+      // connect suppliers, and the frame twin omits it too)
+      Traversal.V(g)
+        .hasLabel("supplier").value("acctbal", "a_bal")
+        .as("a_vid")
+        .out("peer")
+        .value("acctbal", "b_bal")
+        .as("b_vid")
+        .where(F.col("a_bal") > F.col("b_bal"))
+        .out("in_nation")
+        .value("name", "n_name")
+        .select("a_vid", "b_vid", "n_name")
+        .df
+    }
 
   /** The VERTEX-CENTRIC INDEX layout (JanusGraph's signature edge
     * index, buildEdgeIndex(...sort keys...): within each (vertex,
@@ -211,8 +207,7 @@ object KVGraphQueries {
     * plain layout (c = label ++ dst) the same query decodes v for
     * every peer edge and filters afterwards. Shares g_dsl_edge_w's
     * full-SQL oracle hash-for-hash. */
-  def gKvVci(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvci")
+  def gKvVci(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvvci") { seg =>
     KVSegmentStore.write(vciAdjacency(s, dir), seg.toString, 0)
     val peer = LabelIds.toMap.apply("peer")
     // w <= 2 with w >= 1 by derivation: c in [(peer,0,0), (peer,3,0))
@@ -220,7 +215,6 @@ object KVGraphQueries {
         peer, "peer", upTo = 2L)
       .select(F.col("src").as("a_vid"), F.col("dst").as("b_vid"),
         F.col("w").as("w_e"))
-      .localCheckpoint(true)
   }
 
   // ---- VCI INDEX SELECTION (r12 verdict #7) -------------------------
@@ -331,18 +325,17 @@ object KVGraphQueries {
     * routing (missed bound, double-counted family, wrong decode
     * offsets) breaks the gate; KVDslVciSpec proves the route both ways
     * (index rows flow through, non-bound predicates fall back). */
-  def gKvDslVci(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvdslvci")
-    KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
-    val g = kvBackedGraphDual(s, dir, seg.toString)
-    Traversal.V(g)
-      .hasLabel("supplier").as("a_vid")
-      .outE("peer").has("w", Traversal.P.lte(2L)).value("w", "w_e")
-      .inV().as("b_vid")
-      .select("a_vid", "b_vid", "w_e")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvDslVci(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdslvci") { seg =>
+      KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
+      val g = kvBackedGraphDual(s, dir, seg.toString)
+      Traversal.V(g)
+        .hasLabel("supplier").as("a_vid")
+        .outE("peer").has("w", Traversal.P.lte(2L)).value("w", "w_e")
+        .inV().as("b_vid")
+        .select("a_vid", "b_vid", "w_e")
+        .df
+    }
 
   /** g_kv_dsl_vci_rng: RANGE routing through the DSL's index rule —
     * `outE("peer").has("w", gte(2)).has("w", lte(3))` combines both
@@ -353,21 +346,20 @@ object KVGraphQueries {
     * (BETWEEN on the derived weight); KVDslVciSpec proves the
     * combining rule behaviorally (range, equality, pure lower bound,
     * contradictory-interval emptiness). */
-  def gKvDslVciRng(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvcirng")
-    KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
-    val g = kvBackedGraphDual(s, dir, seg.toString)
-    Traversal.V(g)
-      .hasLabel("supplier").as("a_vid")
-      .outE("peer")
-      .has("w", Traversal.P.gte(2L))
-      .has("w", Traversal.P.lte(3L))
-      .value("w", "w_e")
-      .inV().as("b_vid")
-      .select("a_vid", "b_vid", "w_e")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvDslVciRng(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvvcirng") { seg =>
+      KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
+      val g = kvBackedGraphDual(s, dir, seg.toString)
+      Traversal.V(g)
+        .hasLabel("supplier").as("a_vid")
+        .outE("peer")
+        .has("w", Traversal.P.gte(2L))
+        .has("w", Traversal.P.lte(3L))
+        .value("w", "w_e")
+        .inV().as("b_vid")
+        .select("a_vid", "b_vid", "w_e")
+        .df
+    }
 
   val gKvDslVciRngSql: String =
     s"""WITH ${PropertyGraph.sqlPrelude}
@@ -387,24 +379,23 @@ object KVGraphQueries {
     * nations (only the incoming orientation has rows — exactly the case
     * both() exists for). Own full-SQL oracle; KVGraphRevSpec asserts
     * the runtime key filter + row equality with the frame both(). */
-  def gKvDslBoth(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvboth")
-    val e = PropertyGraph(s, dir).edges
-    KVSegmentStore.write(
-      KVGraphMutations.edgeAdditions(e)
-        .unionByName(KVGraphMutations.edgeRevAdditions(e)),
-      seg.toString, 0)
-    val g = kvBackedGraphBoth(s, dir, seg.toString)
-    Traversal.V(g)
-      .hasLabel("region")
-      .has("name", Traversal.P.within("ASIA", "EUROPE", "AFRICA"))
-      .value("name", "r_name").as("r_vid")
-      .both("in_region")
-      .as("n_vid")
-      .select("r_vid", "r_name", "n_vid")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvDslBoth(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvboth") { seg =>
+      val e = PropertyGraph(s, dir).edges
+      KVSegmentStore.write(
+        KVGraphMutations.edgeAdditions(e)
+          .unionByName(KVGraphMutations.edgeRevAdditions(e)),
+        seg.toString, 0)
+      val g = kvBackedGraphBoth(s, dir, seg.toString)
+      Traversal.V(g)
+        .hasLabel("region")
+        .has("name", Traversal.P.within("ASIA", "EUROPE", "AFRICA"))
+        .value("name", "r_name").as("r_vid")
+        .both("in_region")
+        .as("n_vid")
+        .select("r_vid", "r_name", "n_vid")
+        .df
+    }
 
   val gKvDslBothSql: String =
     s"""WITH ${PropertyGraph.sqlPrelude},
@@ -420,12 +411,11 @@ object KVGraphQueries {
     * would route to the dst-sorted primary); shares g_dsl_edge_w's
     * full-SQL oracle hash-for-hash, so a wrong routing (double-counted
     * families, wrong decode offsets) breaks the gate. */
-  def gKvVciPick(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvcipk")
-    KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
-    edgeSlice(s.read.format("graft-kv").load(seg.toString), "peer", Some(2L))
-      .localCheckpoint(true)
-  }
+  def gKvVciPick(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvvcipk") { seg =>
+      KVSegmentStore.write(dualAdjacency(s, dir), seg.toString, 0)
+      edgeSlice(s.read.format("graft-kv").load(seg.toString), "peer", Some(2L))
+    }
 
   /** Both-direction adjacency decoded to a [[PropertyGraph.G]] (r13
     * verdict #3 — JanusGraph writes every edge into BOTH endpoints'
@@ -474,8 +464,7 @@ object KVGraphQueries {
     * r13 verdict #3). Own full-SQL oracle; KVGraphRevSpec asserts the
     * runtime key filter + segment drop on the reverse hop and row
     * equality with the frame traversal. */
-  def gKvDslRev(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvrev")
+  def gKvDslRev(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvrev") { seg =>
     val e = PropertyGraph(s, dir).edges
     KVSegmentStore.write(
       KVGraphMutations.edgeAdditions(e)
@@ -497,7 +486,6 @@ object KVGraphQueries {
       .as("s_vid")
       .select("n_vid", "n_name", "s_vid")
       .df
-      .localCheckpoint(true)
   }
 
   val gKvDslRevSql: String =
@@ -529,25 +517,24 @@ object KVGraphQueries {
     * backend store per column family, edgestore vs graphindex), and
     * what graft's named-store KVStoreManager already models. Own
     * full-SQL oracle (dec2 string bytes keep the value oracle-stable). */
-  def gKvVprops(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvvprop")
-    val g = PropertyGraph(s, dir)
-    KVSegmentStore.write(
-      KVGraphMutations.vertexAdditions(g.vertices)
-        .unionByName(KVGraphMutations.vertexPropAdditions(g.vertices)),
-      seg.toString, 0)
-    val store = s.read.format("graft-kv").load(seg.toString)
-    val (mLo, mHi) = KVGraphMutations.vpropSlice("mktsegment")
-    val (bLo, bHi) = KVGraphMutations.vpropSlice("acctbal")
-    val building = store.filter(F.col("c") >= mLo && F.col("c") < mHi)
-      .filter(F.col("v").cast("string") === "BUILDING")
-      .select(F.col("k"))
-    val bal = store.filter(F.col("c") >= bLo && F.col("c") < bHi)
-      .select(F.col("k"), F.col("v").cast("string").as("bal_str"))
-    bal.join(building, "k")
-      .select(decLong(F.col("k"), 1).as("c_vid"), F.col("bal_str"))
-      .localCheckpoint(true)
-  }
+  def gKvVprops(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvvprop") { seg =>
+      val g = PropertyGraph(s, dir)
+      KVSegmentStore.write(
+        KVGraphMutations.vertexAdditions(g.vertices)
+          .unionByName(KVGraphMutations.vertexPropAdditions(g.vertices)),
+        seg.toString, 0)
+      val store = s.read.format("graft-kv").load(seg.toString)
+      val (mLo, mHi) = KVGraphMutations.vpropSlice("mktsegment")
+      val (bLo, bHi) = KVGraphMutations.vpropSlice("acctbal")
+      val building = store.filter(F.col("c") >= mLo && F.col("c") < mHi)
+        .filter(F.col("v").cast("string") === "BUILDING")
+        .select(F.col("k"))
+      val bal = store.filter(F.col("c") >= bLo && F.col("c") < bHi)
+        .select(F.col("k"), F.col("v").cast("string").as("bal_str"))
+      bal.join(building, "k")
+        .select(decLong(F.col("k"), 1).as("c_vid"), F.col("bal_str"))
+    }
 
   val gKvVpropsSql: String =
     """SELECT CAST(c_custkey * 4 AS BIGINT) AS c_vid,
@@ -574,31 +561,30 @@ object KVGraphQueries {
     * opens the property store's manifest). Scale: a property-majority
     * read over 10¹² vertices touches ~1/|props| of the property
     * store's segments and none of the (much larger) edgestore. */
-  def gKvVpropsSplit(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvsplit")
-    val mgr = new graft.kv.KVStoreManager(s, wh.toString)
-    val g = PropertyGraph(s, dir)
-    // only the property store is written here: the entry never reads the
-    // adjacency, and paying a full edgestore write per run would charge a
-    // property-read entry for I/O it does not exercise (r14 review #5);
-    // the edgestore/vertexprops isolation is KVFamilySplitSpec's claim,
-    // and g_kv_split_graph composes the two-store layout for real
-    mgr.writeSegmentStore("vertexprops",
-      KVGraphMutations.vertexAdditions(g.vertices)
-        .unionByName(KVGraphMutations.vertexPropAdditions(g.vertices)),
-      0, familyRanged = true)
-    val props = mgr.openSegmentStore("vertexprops")
-    val (mLo, mHi) = KVGraphMutations.vpropSlice("mktsegment")
-    val (bLo, bHi) = KVGraphMutations.vpropSlice("acctbal")
-    val building = props.filter(F.col("c") >= mLo && F.col("c") < mHi)
-      .filter(F.col("v").cast("string") === "BUILDING")
-      .select(F.col("k"))
-    val bal = props.filter(F.col("c") >= bLo && F.col("c") < bHi)
-      .select(F.col("k"), F.col("v").cast("string").as("bal_str"))
-    bal.join(building, "k")
-      .select(decLong(F.col("k"), 1).as("c_vid"), F.col("bal_str"))
-      .localCheckpoint(true)
-  }
+  def gKvVpropsSplit(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvsplit") { wh =>
+      val mgr = new graft.kv.KVStoreManager(s, wh.toString)
+      val g = PropertyGraph(s, dir)
+      // only the property store is written here: the entry never reads the
+      // adjacency, and paying a full edgestore write per run would charge a
+      // property-read entry for I/O it does not exercise;
+      // the edgestore/vertexprops isolation is KVFamilySplitSpec's claim,
+      // and g_kv_split_graph composes the two-store layout for real
+      mgr.writeSegmentStore("vertexprops",
+        KVGraphMutations.vertexAdditions(g.vertices)
+          .unionByName(KVGraphMutations.vertexPropAdditions(g.vertices)),
+        0, familyRanged = true)
+      val props = mgr.openSegmentStore("vertexprops")
+      val (mLo, mHi) = KVGraphMutations.vpropSlice("mktsegment")
+      val (bLo, bHi) = KVGraphMutations.vpropSlice("acctbal")
+      val building = props.filter(F.col("c") >= mLo && F.col("c") < mHi)
+        .filter(F.col("v").cast("string") === "BUILDING")
+        .select(F.col("k"))
+      val bal = props.filter(F.col("c") >= bLo && F.col("c") < bHi)
+        .select(F.col("k"), F.col("v").cast("string").as("bal_str"))
+      bal.join(building, "k")
+        .select(decLong(F.col("k"), 1).as("c_vid"), F.col("bal_str"))
+    }
 
   /** g_kv_mutate_hop: the GRAPH WRITE LOOP end-to-end (r12 verdict #1 —
     * the last uncomposed reference behavior). JanusGraph commits
@@ -625,49 +611,48 @@ object KVGraphQueries {
     * definition. Scale: the mutation is one bounded delta append — no
     * snapshot rewrite — and the read is the store's merge-on-read;
     * KVGraphMutateSpec asserts log path ≡ snapshot path cell for cell. */
-  def gKvMutateHop(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvgmut")
-    val ds = new graft.kv.KVDeltaStore(s, wh.toString)
-    val g = PropertyGraph(s, dir)
-    val e = g.edges
-    // both batches derive only from the input frames and land in
-    // distinct delta_<seq> dirs — append them concurrently (guide §2.6);
-    // explicit seqs keep the log order the merge-on-read resolves
-    graft.Par.jobs(
-      // base state (delta 1): vertices minus nations; stale peers; in_region
-      () => KVGraphMutations.mutateLogAt(ds, "graph", 1L,
-        addV = g.vertices.filter(F.col("vlabel") =!= "nation"),
-        addE = e.filter(F.col("elabel") === "peer")
-          .withColumn("w", F.col("w") + 1)
-          .unionByName(e.filter(F.col("elabel") === "in_region")),
-        dropE = e.limit(0), wts = 1000L),
-      // THE mutation batch (delta 2): addV + addE + supersede + drop at once
-      () => KVGraphMutations.mutateLogAt(ds, "graph", 2L,
-        addV = g.vertices.filter(F.col("vlabel") === "nation"),
-        addE = e.filter(F.col("elabel") === "in_nation")
-          .unionByName(e.filter(F.col("elabel") === "peer")),
-        dropE = e.filter(F.col("elabel").isin("in_region", "peer")), wts = 2000L))
-    // the mutated state served BACK THROUGH THE CONNECTOR: fold the
-    // merged view into a segment store (the compaction a long-lived
-    // deployment runs anyway) and drive the onehop through the pruned
-    // g_kv_onehop path — start-set runtime key pruning + the in_nation
-    // label slice as a pushed c range. "Mutate, then re-read by the
-    // existing g_kv_* plans", literally.
-    val seg = graft.ScenarioDirs.fresh("graft_kvgmseg")
-    KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
-    val store = s.read.format("graft-kv").load(seg.toString)
-    val lid = decLong(F.col("c"), 1)
-    val scalars = store.agg(
-      F.sum(F.when(lid === 3L, decLong(F.col("v"), 1))).as("peer_w_sum"),
-      F.count(F.when(lid === 2L, F.lit(1))).as("rem_region_edges"),
-      F.count(F.when(lid === 0L, F.lit(1))).as("n_vertex_cells"))
-    val start = g.vertices
-      .filter(F.col("vlabel") === "customer" && F.col("mktsegment") === "BUILDING")
-      .select(encLong(F.col("vid")).as("k"), F.col("vid").as("c_vid"))
-    inNationHop(store, start, g.vertices)
-      .crossJoin(F.broadcast(scalars))
-      .localCheckpoint(true)
-  }
+  def gKvMutateHop(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvgmut") { wh =>
+      val ds = new graft.kv.KVDeltaStore(s, s"$wh/log")
+      val g = PropertyGraph(s, dir)
+      val e = g.edges
+      // both batches derive only from the input frames and land in
+      // distinct delta_<seq> dirs — append them concurrently;
+      // explicit seqs keep the log order the merge-on-read resolves
+      graft.Par.jobs(
+        // base state (delta 1): vertices minus nations; stale peers; in_region
+        () => KVGraphMutations.mutateLogAt(ds, "graph", 1L,
+          addV = g.vertices.filter(F.col("vlabel") =!= "nation"),
+          addE = e.filter(F.col("elabel") === "peer")
+            .withColumn("w", F.col("w") + 1)
+            .unionByName(e.filter(F.col("elabel") === "in_region")),
+          dropE = e.limit(0), wts = 1000L),
+        // THE mutation batch (delta 2): addV + addE + supersede + drop at once
+        () => KVGraphMutations.mutateLogAt(ds, "graph", 2L,
+          addV = g.vertices.filter(F.col("vlabel") === "nation"),
+          addE = e.filter(F.col("elabel") === "in_nation")
+            .unionByName(e.filter(F.col("elabel") === "peer")),
+          dropE = e.filter(F.col("elabel").isin("in_region", "peer")), wts = 2000L))
+      // the mutated state served BACK THROUGH THE CONNECTOR: fold the
+      // merged view into a segment store (the compaction a long-lived
+      // deployment runs anyway) and drive the onehop through the pruned
+      // g_kv_onehop path — start-set runtime key pruning + the in_nation
+      // label slice as a pushed c range. "Mutate, then re-read by the
+      // existing g_kv_* plans", literally.
+      val seg = wh.resolve("seg")
+      KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
+      val store = s.read.format("graft-kv").load(seg.toString)
+      val lid = decLong(F.col("c"), 1)
+      val scalars = store.agg(
+        F.sum(F.when(lid === 3L, decLong(F.col("v"), 1))).as("peer_w_sum"),
+        F.count(F.when(lid === 2L, F.lit(1))).as("rem_region_edges"),
+        F.count(F.when(lid === 0L, F.lit(1))).as("n_vertex_cells"))
+      val start = g.vertices
+        .filter(F.col("vlabel") === "customer" && F.col("mktsegment") === "BUILDING")
+        .select(encLong(F.col("vid")).as("k"), F.col("vid").as("c_vid"))
+      inNationHop(store, start, g.vertices)
+        .crossJoin(F.broadcast(scalars))
+    }
 
   val gKvMutateHopSql: String =
     s"""WITH ${PropertyGraph.sqlPrelude}
@@ -702,62 +687,61 @@ object KVGraphQueries {
     * Scale: the traversals are projections over frames already in hand
     * (zero added shuffles) and the mutation is one bounded delta
     * append — the g_kv_mutate_hop write story, now DSL-authored. */
-  def gKvDslMutate(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvdslmut")
-    val ds = new graft.kv.KVDeltaStore(s, wh.toString)
-    val fg = PropertyGraph(s, dir)
-    val e = fg.edges
-    val none = adjacency(s, dir).limit(0)
-    // base state (delta 1): all vertices EXCEPT nations, their property
-    // cells, and the peer + in_region adjacency — no in_nation edges
-    val baseVerts = fg.vertices.filter(F.col("vlabel") =!= "nation")
-    // THE DSL-authored batch (delta 2)
-    val addedNations = Traversal.V(fg)
-      .hasLabel("nation").value("name", "nm").as("n")
-      .addV("nation", F.col("n"), "name" -> F.col("nm"))
-    val reseg = Traversal.V(fg)
-      .hasLabel("customer").has("mktsegment", "AUTOMOBILE")
-      .property("mktsegment", F.lit("BUILDING"))
-    val newEdges = Traversal.V(fg)
-      .hasLabel("customer").as("c")
-      .out("in_nation").as("n")
-      .addE("in_nation", "c", "n", (F.col("c") + F.col("n")) % 5 + 1)
-    val doomed = Traversal.V(fg)
-      .hasLabel("nation").outE("in_region").drop()
-    // both batches derive only from the input frames (the traversal
-    // authors read fg, never the store) — append concurrently (guide
-    // §2.6); explicit seqs keep the log order
-    graft.Par.jobs(
-      () => ds.appendMutationAt("graph", 1L,
-        KVGraphMutations.vertexAdditions(baseVerts)
-          .unionByName(KVGraphMutations.vertexPropAdditions(baseVerts))
-          .unionByName(KVGraphMutations.edgeAdditions(
-            e.filter(F.col("elabel").isin("peer", "in_region")))),
-        none.select("k", "c"), wts = 1000L),
-      () => ds.appendMutationAt("graph", 2L,
-        KVGraphMutations.vertexAdditions(addedNations)
-          .unionByName(KVGraphMutations.vertexPropAdditions(addedNations))
-          .unionByName(KVGraphMutations.vertexPropAdditions(reseg))
-          .unionByName(KVGraphMutations.edgeAdditions(newEdges)),
-        KVGraphMutations.edgeDeletions(doomed), wts = 2000L))
-    // fold + re-read through the pruned connector path
-    val seg = graft.ScenarioDirs.fresh("graft_kvdslmseg")
-    KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
-    val store = s.read.format("graft-kv").load(seg.toString)
-    val lid = decLong(F.col("c"), 1)
-    val scalars = store.agg(
-      F.count(F.when(lid === 2L, F.lit(1))).as("rem_region_edges"),
-      F.count(F.when(F.col("c") === F.concat(encLong(F.lit(0L)), encLong(F.lit(0L)))
-        && F.pmod(decLong(F.col("k"), 1), F.lit(4L)) === 2L, F.lit(1)))
-        .as("n_nation_cells"))
-    val (mLo, mHi) = KVGraphMutations.vpropSlice("mktsegment")
-    val start = store.filter(F.col("c") >= mLo && F.col("c") < mHi)
-      .filter(F.col("v").cast("string") === "BUILDING")
-      .select(F.col("k"), decLong(F.col("k"), 1).as("c_vid"))
-    inNationHop(store, start, fg.vertices)
-      .crossJoin(F.broadcast(scalars))
-      .localCheckpoint(true)
-  }
+  def gKvDslMutate(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdslmut") { wh =>
+      val ds = new graft.kv.KVDeltaStore(s, s"$wh/log")
+      val fg = PropertyGraph(s, dir)
+      val e = fg.edges
+      val none = adjacency(s, dir).limit(0)
+      // base state (delta 1): all vertices EXCEPT nations, their property
+      // cells, and the peer + in_region adjacency — no in_nation edges
+      val baseVerts = fg.vertices.filter(F.col("vlabel") =!= "nation")
+      // THE DSL-authored batch (delta 2)
+      val addedNations = Traversal.V(fg)
+        .hasLabel("nation").value("name", "nm").as("n")
+        .addV("nation", F.col("n"), "name" -> F.col("nm"))
+      val reseg = Traversal.V(fg)
+        .hasLabel("customer").has("mktsegment", "AUTOMOBILE")
+        .property("mktsegment", F.lit("BUILDING"))
+      val newEdges = Traversal.V(fg)
+        .hasLabel("customer").as("c")
+        .out("in_nation").as("n")
+        .addE("in_nation", "c", "n", (F.col("c") + F.col("n")) % 5 + 1)
+      val doomed = Traversal.V(fg)
+        .hasLabel("nation").outE("in_region").drop()
+      // both batches derive only from the input frames (the traversal
+      // authors read fg, never the store) — append concurrently;
+      // explicit seqs keep the log order
+      graft.Par.jobs(
+        () => ds.appendMutationAt("graph", 1L,
+          KVGraphMutations.vertexAdditions(baseVerts)
+            .unionByName(KVGraphMutations.vertexPropAdditions(baseVerts))
+            .unionByName(KVGraphMutations.edgeAdditions(
+              e.filter(F.col("elabel").isin("peer", "in_region")))),
+          none.select("k", "c"), wts = 1000L),
+        () => ds.appendMutationAt("graph", 2L,
+          KVGraphMutations.vertexAdditions(addedNations)
+            .unionByName(KVGraphMutations.vertexPropAdditions(addedNations))
+            .unionByName(KVGraphMutations.vertexPropAdditions(reseg))
+            .unionByName(KVGraphMutations.edgeAdditions(newEdges)),
+          KVGraphMutations.edgeDeletions(doomed), wts = 2000L))
+      // fold + re-read through the pruned connector path
+      val seg = wh.resolve("seg")
+      KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
+      val store = s.read.format("graft-kv").load(seg.toString)
+      val lid = decLong(F.col("c"), 1)
+      val scalars = store.agg(
+        F.count(F.when(lid === 2L, F.lit(1))).as("rem_region_edges"),
+        F.count(F.when(F.col("c") === F.concat(encLong(F.lit(0L)), encLong(F.lit(0L)))
+          && F.pmod(decLong(F.col("k"), 1), F.lit(4L)) === 2L, F.lit(1)))
+          .as("n_nation_cells"))
+      val (mLo, mHi) = KVGraphMutations.vpropSlice("mktsegment")
+      val start = store.filter(F.col("c") >= mLo && F.col("c") < mHi)
+        .filter(F.col("v").cast("string") === "BUILDING")
+        .select(F.col("k"), decLong(F.col("k"), 1).as("c_vid"))
+      inNationHop(store, start, fg.vertices)
+        .crossJoin(F.broadcast(scalars))
+    }
 
   val gKvDslMutateSql: String =
     """SELECT CAST(c.c_custkey*4 AS BIGINT) AS c_vid, n.n_name AS n_name,
@@ -849,25 +833,24 @@ object KVGraphQueries {
     * hash-for-hash; KVFullGraphSpec asserts the decoded vertex frame
     * equals the source frame and the traversal's scans are store
     * scans only. */
-  def gKvFullGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvfull")
-    val g0 = PropertyGraph(s, dir)
-    KVSegmentStore.write(
-      KVGraphMutations.vertexAdditions(g0.vertices)
-        .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices))
-        .unionByName(KVGraphMutations.edgeAdditions(g0.edges)),
-      seg.toString, 0)
-    val g = kvBackedGraph(s, dir, seg.toString)
-      .copy(vertices = storeVertices(s.read.format("graft-kv").load(seg.toString)),
-        vertexProps = Some(kvVertexPropSource(s, seg.toString)))
-    Traversal.V(g)
-      .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
-      .out("in_nation")
-      .value("name", "n_name")
-      .select("c_vid", "n_name")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvFullGraph(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvfull") { seg =>
+      val g0 = PropertyGraph(s, dir)
+      KVSegmentStore.write(
+        KVGraphMutations.vertexAdditions(g0.vertices)
+          .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices))
+          .unionByName(KVGraphMutations.edgeAdditions(g0.edges)),
+        seg.toString, 0)
+      val g = kvBackedGraph(s, dir, seg.toString)
+        .copy(vertices = storeVertices(s.read.format("graft-kv").load(seg.toString)),
+          vertexProps = Some(kvVertexPropSource(s, seg.toString)))
+      Traversal.V(g)
+        .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
+        .out("in_nation")
+        .value("name", "n_name")
+        .select("c_vid", "n_name")
+        .df
+    }
 
   /** g_kv_twohop_spj: the two-hop with a SHUFFLE-FREE STORE SIDE (r13
     * verdict #4 — kv_spj_join's machinery adopted by the graph
@@ -885,29 +868,27 @@ object KVGraphQueries {
     * adjacency store per hop and moving only the frontier: the store
     * side is O(probed buckets) reads, the exchange cost is O(frontier).
     * Shares g_twohop's oracle hash-for-hash. */
-  def gKvTwoHopSpj(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvspjadj")
-    KVSegmentStore.write(adjacency(s, dir), seg.toString, 8, "bucket")
-    val g = PropertyGraph(s, dir)
-    // the session carries the graftkv catalog and the one-side-shuffle
-    // SPJ conf (GraftExtensions); the eager checkpoint lets the result
-    // outlive the entry's store dir
-    val adj = s.table(s"graftkv.`$seg`")
-    val start = g.vertices
-      .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
-      .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
-    val hop1 = adj.hint("merge").join(start, Seq("k"))
-      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
-    val hop2 = adj.hint("merge").join(
-        hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
-      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-    hop2
-      .join(F.broadcast(g.vertices.select(F.col("vid").as("dst_vid"),
-        F.col("name").as("dst_name"))), "dst_vid")
-      .select(F.col("src_vid"), F.col("dst_vid"), F.col("dst_name"))
-      .distinct()
-      .localCheckpoint(true)
-  }
+  def gKvTwoHopSpj(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvspjadj") { seg =>
+      KVSegmentStore.write(adjacency(s, dir), seg.toString, 8, "bucket")
+      val g = PropertyGraph(s, dir)
+      // the session carries the graftkv catalog and the one-side-shuffle
+      // SPJ conf (GraftExtensions)
+      val adj = s.table(s"graftkv.`$seg`")
+      val start = g.vertices
+        .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
+        .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
+      val hop1 = adj.hint("merge").join(start, Seq("k"))
+        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
+      val hop2 = adj.hint("merge").join(
+          hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
+        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
+      hop2
+        .join(F.broadcast(g.vertices.select(F.col("vid").as("dst_vid"),
+          F.col("name").as("dst_name"))), "dst_vid")
+        .select(F.col("src_vid"), F.col("dst_vid"), F.col("dst_name"))
+        .distinct()
+    }
 
   /** g_kv_degree_mv: an INCREMENTAL GRAPH VIEW following the graph
     * store's CDC feed (r13 verdict #7 — kv_mv_follow composed with the
@@ -925,61 +906,60 @@ object KVGraphQueries {
     * entry rides verbatim. Scale: each micro-batch folds O(batch) plus
     * one O(|vertices-with-degree|) snapshot merge, independent of
     * stream length — the kv_mv_follow cost model on the graph store. */
-  def gKvDegreeMv(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdegmv")
-    val wh = whPath.toString
-    val ds = new graft.kv.KVDeltaStore(s, wh)
-    val e = PropertyGraph(s, dir).edges
-    val noDel = adjacency(s, dir).select("k", "c").limit(0)
-    val peerCells = KVGraphMutations.edgeAdditions(
-      e.filter(F.col("elabel") === "peer")).localCheckpoint(true)
-    // the two delta batches are frame-derived and land in distinct
-    // delta_<seq> dirs — append concurrently (guide §2.6)
-    graft.Par.jobs(
-      () => ds.appendMutationAt("graph", 1L,
-        KVGraphMutations.edgeAdditions(e.filter(F.col("elabel") =!= "peer")),
-        noDel, wts = 1000L),
-      () => ds.appendMutationAt("graph", 2L, peerCells, noDel, wts = 2000L))
-    val outDir = s"$wh/mv_out"
-    val inDir = s"$wh/mv_in"
-    // CDC rows → the two degree folds: additions in the adjacency
-    // families only (vertex-existence and index families would not be
-    // edges); the value column is a constant — the view consumes n
-    def fold(batch: DataFrame, batchId: Long): Unit = {
-      val lid = decLong(F.col("c"), 1)
-      val edgesOnly = batch.filter(F.col("op") === 1 &&
-        lid >= 1L && lid < VciBase).localCheckpoint(true)
-      graft.streaming.RollupSink.applyBatch(
-        edgesOnly.select(decLong(F.col("k"), 1).cast("string").as("event_type"),
-          F.lit("1.00").as("value")),
-        outDir, batchId)
-      graft.streaming.RollupSink.applyBatch(
-        edgesOnly.select(decLong(F.col("c"), 9).cast("string").as("event_type"),
-          F.lit("1.00").as("value")),
-        inDir, batchId)
+  def gKvDegreeMv(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdegmv") { whPath =>
+      val wh = whPath.toString
+      val ds = new graft.kv.KVDeltaStore(s, wh)
+      val e = PropertyGraph(s, dir).edges
+      val noDel = adjacency(s, dir).select("k", "c").limit(0)
+      val peerCells = KVGraphMutations.edgeAdditions(
+        e.filter(F.col("elabel") === "peer")).localCheckpoint(true)
+      // the two delta batches are frame-derived and land in distinct
+      // delta_<seq> dirs — append concurrently
+      graft.Par.jobs(
+        () => ds.appendMutationAt("graph", 1L,
+          KVGraphMutations.edgeAdditions(e.filter(F.col("elabel") =!= "peer")),
+          noDel, wts = 1000L),
+        () => ds.appendMutationAt("graph", 2L, peerCells, noDel, wts = 2000L))
+      val outDir = s"$wh/mv_out"
+      val inDir = s"$wh/mv_in"
+      // CDC rows → the two degree folds: additions in the adjacency
+      // families only (vertex-existence and index families would not be
+      // edges); the value column is a constant — the view consumes n
+      def fold(batch: DataFrame, batchId: Long): Unit = {
+        val lid = decLong(F.col("c"), 1)
+        val edgesOnly = batch.filter(F.col("op") === 1 &&
+          lid >= 1L && lid < VciBase).localCheckpoint(true)
+        graft.streaming.RollupSink.applyBatch(
+          edgesOnly.select(decLong(F.col("k"), 1).cast("string").as("event_type"),
+            F.lit("1.00").as("value")),
+          outDir, batchId)
+        graft.streaming.RollupSink.applyBatch(
+          edgesOnly.select(decLong(F.col("c"), 9).cast("string").as("event_type"),
+            F.lit("1.00").as("value")),
+          inDir, batchId)
+      }
+      val q = s.readStream.format("graft-kv-log")
+        .option("maxSeqsPerBatch", "1")
+        .load(s"$wh/graph")
+        .writeStream
+        .foreachBatch((batch: DataFrame, batchId: Long) => fold(batch, batchId))
+        .option("checkpointLocation", s"$wh/mv_ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // REPLAY the peer batch under its original batchId: both rollups are
+      // complete on disk, so the sink must skip the fold
+      fold(peerCells.withColumn("op", F.lit(1)), 1L)
+      def roll(d: String, as: String) = graft.streaming.RollupSink.read(s, d)
+        .select(F.col("event_type").cast("long").as("vid"), F.col("n").as(as))
+      PropertyGraph(s, dir).vertices.select("vid", "vlabel")
+        .join(roll(outDir, "o"), Seq("vid"), "left")
+        .join(roll(inDir, "i"), Seq("vid"), "left")
+        .select(F.col("vid"), F.col("vlabel"),
+          F.coalesce(F.col("o"), F.lit(0L)).as("out_deg"),
+          F.coalesce(F.col("i"), F.lit(0L)).as("in_deg"))
     }
-    val q = s.readStream.format("graft-kv-log")
-      .option("maxSeqsPerBatch", "1")
-      .load(s"$wh/graph")
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => fold(batch, batchId))
-      .option("checkpointLocation", s"$wh/mv_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // REPLAY the peer batch under its original batchId: both rollups are
-    // complete on disk, so the sink must skip the fold
-    fold(peerCells.withColumn("op", F.lit(1)), 1L)
-    def roll(d: String, as: String) = graft.streaming.RollupSink.read(s, d)
-      .select(F.col("event_type").cast("long").as("vid"), F.col("n").as(as))
-    PropertyGraph(s, dir).vertices.select("vid", "vlabel")
-      .join(roll(outDir, "o"), Seq("vid"), "left")
-      .join(roll(inDir, "i"), Seq("vid"), "left")
-      .select(F.col("vid"), F.col("vlabel"),
-        F.coalesce(F.col("o"), F.lit(0L)).as("out_deg"),
-        F.coalesce(F.col("i"), F.lit(0L)).as("in_deg"))
-      .localCheckpoint(true)
-  }
 
   /** The FULLY-RESIDENT adapter: one store carrying the vertex family
     * (existence + properties), the primary adjacency, the mirror
@@ -1021,36 +1001,35 @@ object KVGraphQueries {
     * (much larger) edgestore entirely, and the whole graph still lives
     * in the manager's named stores — the reference's deployment shape,
     * not a single-file demo. Shares g_onehop's oracle hash-for-hash. */
-  def gKvSplitGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvsplitg")
-    val mgr = new graft.kv.KVStoreManager(s, wh.toString)
-    val g0 = PropertyGraph(s, dir)
-    // both named stores derive only from the input frames — write them
-    // concurrently (guide §2.6)
-    graft.Par.jobs(
-      () => mgr.writeSegmentStore("edgestore",
-        KVGraphMutations.edgeAdditions(g0.edges)
-          .unionByName(KVGraphMutations.edgeRevAdditions(g0.edges))
-          .unionByName(vciFamily(g0.edges)),
-        0),
-      () => mgr.writeSegmentStore("vertexprops",
-        KVGraphMutations.vertexAdditions(g0.vertices)
-          .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices)),
-        0, familyRanged = true))
-    val g = kvBackedGraphFull(s, dir, s"$wh/edgestore")
-      .copy(vertices = storeVertices(mgr.openSegmentStore("vertexprops")),
-        // the vertex family lives in the OTHER named store — the
-        // edgestore-pointed hook kvBackedGraphFull set would read an
-        // empty slice and silently drop every tap
-        vertexProps = Some(kvVertexPropSource(s, s"$wh/vertexprops")))
-    Traversal.V(g)
-      .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
-      .out("in_nation")
-      .value("name", "n_name")
-      .select("c_vid", "n_name")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvSplitGraph(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvsplitg") { wh =>
+      val mgr = new graft.kv.KVStoreManager(s, wh.toString)
+      val g0 = PropertyGraph(s, dir)
+      // both named stores derive only from the input frames — write them
+      // concurrently
+      graft.Par.jobs(
+        () => mgr.writeSegmentStore("edgestore",
+          KVGraphMutations.edgeAdditions(g0.edges)
+            .unionByName(KVGraphMutations.edgeRevAdditions(g0.edges))
+            .unionByName(vciFamily(g0.edges)),
+          0),
+        () => mgr.writeSegmentStore("vertexprops",
+          KVGraphMutations.vertexAdditions(g0.vertices)
+            .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices)),
+          0, familyRanged = true))
+      val g = kvBackedGraphFull(s, dir, s"$wh/edgestore")
+        .copy(vertices = storeVertices(mgr.openSegmentStore("vertexprops")),
+          // the vertex family lives in the OTHER named store — the
+          // edgestore-pointed hook kvBackedGraphFull set would read an
+          // empty slice and silently drop every tap
+          vertexProps = Some(kvVertexPropSource(s, s"$wh/vertexprops")))
+      Traversal.V(g)
+        .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
+        .out("in_nation")
+        .value("name", "n_name")
+        .select("c_vid", "n_name")
+        .df
+    }
 
   /** g_kv_dsl_full: ONE traversal exercising every storage hook in one
     * plan — five nations (predicate on STORED name bytes) pulled
@@ -1061,23 +1040,22 @@ object KVGraphQueries {
     * the same store, no frame table in the plan's vertex or edge path.
     * Own full-SQL oracle (peer edges exist from sf0.01 up; the sf0.001
     * gate holds on emptiness). */
-  def gKvDslFull(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvfulldsl")
-    KVSegmentStore.write(fullStoreCells(s, dir), seg.toString, 0)
-    val g = kvBackedGraphFull(s, dir, seg.toString)
-    Traversal.V(g)
-      .hasLabel("nation")
-      .has("name", Traversal.P.within(RevNations: _*))
-      .value("name", "n_name").as("n")
-      .in("in_nation")
-      .hasLabel("supplier")
-      .as("a_vid")
-      .outE("peer").has("w", Traversal.P.lte(2L)).value("w", "w_e")
-      .inV().as("b_vid")
-      .select("n_name", "a_vid", "b_vid", "w_e")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvDslFull(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvfulldsl") { seg =>
+      KVSegmentStore.write(fullStoreCells(s, dir), seg.toString, 0)
+      val g = kvBackedGraphFull(s, dir, seg.toString)
+      Traversal.V(g)
+        .hasLabel("nation")
+        .has("name", Traversal.P.within(RevNations: _*))
+        .value("name", "n_name").as("n")
+        .in("in_nation")
+        .hasLabel("supplier")
+        .as("a_vid")
+        .outE("peer").has("w", Traversal.P.lte(2L)).value("w", "w_e")
+        .inV().as("b_vid")
+        .select("n_name", "a_vid", "b_vid", "w_e")
+        .df
+    }
 
   val gKvDslFullSql: String =
     s"""WITH ${PropertyGraph.sqlPrelude}
@@ -1187,38 +1165,37 @@ object KVGraphQueries {
     * hash-for-hash; KVIndexSpec asserts the index-store segment drop,
     * the runtime key filter on the vertex store, and row equality with
     * the eager plan. */
-  def gKvIndexGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvidx")
-    val mgr = new graft.kv.KVStoreManager(s, wh.toString)
-    val g0 = PropertyGraph(s, dir)
-    // the three named stores derive only from the input frames — write
-    // them concurrently (guide §2.6: independent actions overlap)
-    graft.Par.jobs(
-      () => mgr.writeSegmentStore("edgestore",
-        KVGraphMutations.edgeAdditions(g0.edges), 0),
-      () => mgr.writeSegmentStore("vertexprops",
-        KVGraphMutations.vertexAdditions(g0.vertices)
-          .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices)),
-        0, familyRanged = true),
-      () => mgr.writeSegmentStore(indexStoreName("customer", "mktsegment"),
-        KVGraphMutations.indexAdditions(
-          g0.vertices.filter(F.col("vlabel") === "customer"), "mktsegment"),
-        0))
-    val vpPath = s"$wh/vertexprops"
-    val g = kvBackedGraph(s, dir, s"$wh/edgestore").copy(
-      vertices = storeVertices(mgr.openSegmentStore("vertexprops")),
-      vertexIndex = Some(kvVertexIndex(s, vpPath,
-        Map(("customer", "mktsegment") ->
-          s"$wh/${indexStoreName("customer", "mktsegment")}"))),
-      vertexProps = Some(kvVertexPropSource(s, vpPath)))
-    Traversal.V(g)
-      .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
-      .out("in_nation")
-      .value("name", "n_name")
-      .select("c_vid", "n_name")
-      .df
-      .localCheckpoint(true)
-  }
+  def gKvIndexGraph(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvidx") { wh =>
+      val mgr = new graft.kv.KVStoreManager(s, wh.toString)
+      val g0 = PropertyGraph(s, dir)
+      // the three named stores derive only from the input frames — write
+      // them concurrently (independent actions overlap)
+      graft.Par.jobs(
+        () => mgr.writeSegmentStore("edgestore",
+          KVGraphMutations.edgeAdditions(g0.edges), 0),
+        () => mgr.writeSegmentStore("vertexprops",
+          KVGraphMutations.vertexAdditions(g0.vertices)
+            .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices)),
+          0, familyRanged = true),
+        () => mgr.writeSegmentStore(indexStoreName("customer", "mktsegment"),
+          KVGraphMutations.indexAdditions(
+            g0.vertices.filter(F.col("vlabel") === "customer"), "mktsegment"),
+          0))
+      val vpPath = s"$wh/vertexprops"
+      val g = kvBackedGraph(s, dir, s"$wh/edgestore").copy(
+        vertices = storeVertices(mgr.openSegmentStore("vertexprops")),
+        vertexIndex = Some(kvVertexIndex(s, vpPath,
+          Map(("customer", "mktsegment") ->
+            s"$wh/${indexStoreName("customer", "mktsegment")}"))),
+        vertexProps = Some(kvVertexPropSource(s, vpPath)))
+      Traversal.V(g)
+        .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
+        .out("in_nation")
+        .value("name", "n_name")
+        .select("c_vid", "n_name")
+        .df
+    }
 
   /** g_kv_idx_mutate: the graphindex COMPOSED WITH MUTATION (r14
     * verdict #8) — index cells ride the same delete-before-add batches
@@ -1236,70 +1213,68 @@ object KVGraphQueries {
     * BUILDING + re-segmented AUTOMOBILE). Own full-SQL oracle. Scale:
     * the mutation is two bounded delta appends; the index store's
     * delta is O(re-valued vertices). */
-  def gKvIdxMutate(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvidxmut")
-    val ds = new graft.kv.KVDeltaStore(s, wh.toString)
-    val fg = PropertyGraph(s, dir)
-    val customers = fg.vertices.filter(F.col("vlabel") === "customer")
-    val none = adjacency(s, dir).limit(0)
-    // base state (delta 1): vertices + props + in_nation adjacency in
-    // `graph`; the customer-mktsegment composite index in `gidx`
-    // THE mutation batch (delta 2): re-segment AUTOMOBILE → BUILDING.
-    // Property cells upsert in place ((k, c) collision); index cells
-    // MOVE — the old-value tombstone comes from the PRE-mutation frame
-    // (the only place the old value still exists), the new-value cell
-    // from the re-segmented frame, one batch, delete-before-add.
-    val auto = customers.filter(F.col("mktsegment") === "AUTOMOBILE")
-    val reseg = Traversal.V(fg)
-      .hasLabel("customer").has("mktsegment", "AUTOMOBILE")
-      .property("mktsegment", F.lit("BUILDING"))
-    // all four delta batches derive only from the input frames (never
-    // from store state) and land in distinct delta_<seq> dirs — append
-    // them concurrently (guide §2.6); explicit seqs keep the log order
-    graft.Par.jobs(
-      () => ds.appendMutationAt("graph", 1L,
-        KVGraphMutations.vertexAdditions(fg.vertices)
-          .unionByName(KVGraphMutations.vertexPropAdditions(fg.vertices))
-          .unionByName(KVGraphMutations.edgeAdditions(
-            fg.edges.filter(F.col("elabel") === "in_nation"))),
-        none.select("k", "c"), wts = 1000L),
-      () => ds.appendMutationAt("gidx", 1L,
-        KVGraphMutations.indexAdditions(customers, "mktsegment"),
-        none.select("k", "c"), wts = 1000L),
-      () => ds.appendMutationAt("graph", 2L,
-        KVGraphMutations.vertexPropAdditions(reseg),
-        none.select("k", "c"), wts = 2000L),
-      () => ds.appendMutationAt("gidx", 2L,
-        KVGraphMutations.indexAdditions(reseg, "mktsegment"),
-        KVGraphMutations.indexDeletions(auto, "mktsegment"), wts = 2000L))
-    // fold both stores and serve the start set FROM the index; the two
-    // folds are independent of each other — overlap them too
-    val seg = graft.ScenarioDirs.fresh("graft_kvidxmseg")
-    val idxSeg = graft.ScenarioDirs.fresh("graft_kvidxmidx")
-    graft.Par.jobs(
-      () => KVSegmentStore.write(
-        ds.openDatabase("graph"), seg.toString, 0, "familyranged"),
-      () => KVSegmentStore.write(ds.openDatabase("gidx"), idxSeg.toString, 0))
-    val idxStore = s.read.format("graft-kv").load(idxSeg.toString)
-    val scalars = idxStore.agg(
-      F.count(F.when(F.col("k") === F.lit(indexKeyBytes("AUTOMOBILE", false)),
-        F.lit(1))).as("n_stale_idx"),
-      F.count(F.when(F.col("k") === F.lit(indexKeyBytes("BUILDING", false)),
-        F.lit(1))).as("n_building_idx"))
-    val g = kvBackedGraph(s, dir, seg.toString).copy(
-      vertices = storeVertices(s.read.format("graft-kv").load(seg.toString)),
-      vertexIndex = Some(kvVertexIndex(s, seg.toString,
-        Map(("customer", "mktsegment") -> idxSeg.toString))),
-      vertexProps = Some(kvVertexPropSource(s, seg.toString)))
-    Traversal.V(g)
-      .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
-      .out("in_nation")
-      .value("name", "n_name")
-      .select("c_vid", "n_name")
-      .df
-      .crossJoin(F.broadcast(scalars))
-      .localCheckpoint(true)
-  }
+  def gKvIdxMutate(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvidxmut") { wh =>
+      val ds = new graft.kv.KVDeltaStore(s, s"$wh/log")
+      val fg = PropertyGraph(s, dir)
+      val customers = fg.vertices.filter(F.col("vlabel") === "customer")
+      val none = adjacency(s, dir).limit(0)
+      // base state (delta 1): vertices + props + in_nation adjacency in
+      // `graph`; the customer-mktsegment composite index in `gidx`
+      // THE mutation batch (delta 2): re-segment AUTOMOBILE → BUILDING.
+      // Property cells upsert in place ((k, c) collision); index cells
+      // MOVE — the old-value tombstone comes from the PRE-mutation frame
+      // (the only place the old value still exists), the new-value cell
+      // from the re-segmented frame, one batch, delete-before-add.
+      val auto = customers.filter(F.col("mktsegment") === "AUTOMOBILE")
+      val reseg = Traversal.V(fg)
+        .hasLabel("customer").has("mktsegment", "AUTOMOBILE")
+        .property("mktsegment", F.lit("BUILDING"))
+      // all four delta batches derive only from the input frames (never
+      // from store state) and land in distinct delta_<seq> dirs — append
+      // them concurrently; explicit seqs keep the log order
+      graft.Par.jobs(
+        () => ds.appendMutationAt("graph", 1L,
+          KVGraphMutations.vertexAdditions(fg.vertices)
+            .unionByName(KVGraphMutations.vertexPropAdditions(fg.vertices))
+            .unionByName(KVGraphMutations.edgeAdditions(
+              fg.edges.filter(F.col("elabel") === "in_nation"))),
+          none.select("k", "c"), wts = 1000L),
+        () => ds.appendMutationAt("gidx", 1L,
+          KVGraphMutations.indexAdditions(customers, "mktsegment"),
+          none.select("k", "c"), wts = 1000L),
+        () => ds.appendMutationAt("graph", 2L,
+          KVGraphMutations.vertexPropAdditions(reseg),
+          none.select("k", "c"), wts = 2000L),
+        () => ds.appendMutationAt("gidx", 2L,
+          KVGraphMutations.indexAdditions(reseg, "mktsegment"),
+          KVGraphMutations.indexDeletions(auto, "mktsegment"), wts = 2000L))
+      // fold both stores and serve the start set FROM the index; the two
+      // folds are independent of each other — overlap them too
+      val (seg, idxSeg) = (wh.resolve("seg"), wh.resolve("idx"))
+      graft.Par.jobs(
+        () => KVSegmentStore.write(
+          ds.openDatabase("graph"), seg.toString, 0, "familyranged"),
+        () => KVSegmentStore.write(ds.openDatabase("gidx"), idxSeg.toString, 0))
+      val idxStore = s.read.format("graft-kv").load(idxSeg.toString)
+      val scalars = idxStore.agg(
+        F.count(F.when(F.col("k") === F.lit(indexKeyBytes("AUTOMOBILE", false)),
+          F.lit(1))).as("n_stale_idx"),
+        F.count(F.when(F.col("k") === F.lit(indexKeyBytes("BUILDING", false)),
+          F.lit(1))).as("n_building_idx"))
+      val g = kvBackedGraph(s, dir, seg.toString).copy(
+        vertices = storeVertices(s.read.format("graft-kv").load(seg.toString)),
+        vertexIndex = Some(kvVertexIndex(s, seg.toString,
+          Map(("customer", "mktsegment") -> idxSeg.toString))),
+        vertexProps = Some(kvVertexPropSource(s, seg.toString)))
+      Traversal.V(g)
+        .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
+        .out("in_nation")
+        .value("name", "n_name")
+        .select("c_vid", "n_name")
+        .df
+        .crossJoin(F.broadcast(scalars))
+    }
 
   val gKvIdxMutateSql: String =
     """SELECT CAST(c.c_custkey*4 AS BIGINT) AS c_vid, n.n_name AS n_name,
@@ -1323,44 +1298,43 @@ object KVGraphQueries {
     * cells, surviving in_nation mirror cells. Own full-SQL oracle.
     * Scale: the doomed⋈edges joins are doomed-sized; the mutation is
     * one bounded delta append. */
-  def gKvDslDropV(s: SparkSession, dir: String): DataFrame = synchronized {
-    val wh = graft.ScenarioDirs.fresh("graft_kvdropv")
-    val ds = new graft.kv.KVDeltaStore(s, wh.toString)
-    val fg = PropertyGraph(s, dir)
-    val e = fg.edges
-    val noAdd = adjacency(s, dir).limit(0)
-    val doomed = Traversal.V(fg)
-      .hasLabel("customer").has("mktsegment", "AUTOMOBILE").dropV()
-    // both delta batches derive only from the input frames and land in
-    // distinct delta_<seq> dirs — append them concurrently (guide §2.6)
-    graft.Par.jobs(
-      () => ds.appendMutationAt("graph", 1L,
-        KVGraphMutations.vertexAdditions(fg.vertices)
-          .unionByName(KVGraphMutations.vertexPropAdditions(fg.vertices))
-          .unionByName(KVGraphMutations.edgeAdditions(e))
-          .unionByName(KVGraphMutations.edgeRevAdditions(e)),
-        noAdd.select("k", "c"), wts = 1000L),
-      () => ds.appendMutationAt("graph", 2L, noAdd,
-        KVGraphMutations.vertexDeletions(doomed, e), wts = 2000L))
-    val seg = graft.ScenarioDirs.fresh("graft_kvdropvseg")
-    KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
-    val store = s.read.format("graft-kv").load(seg.toString)
-    val existQ = F.concat(encLong(F.lit(0L)), encLong(F.lit(0L)))
-    val lid = decLong(F.col("c"), 1)
-    val kMod = F.pmod(decLong(F.col("k"), 1), F.lit(4L))
-    val scalars = store.agg(
-      F.count(F.when(F.col("c") === existQ && kMod === 0L, F.lit(1)))
-        .as("n_cust_cells"),
-      F.count(F.when(lid === 1L, F.lit(1))).as("n_in_nation_cells"),
-      F.count(F.when(lid === KVGraphMutations.RevBase + 1L, F.lit(1)))
-        .as("n_rev_in_nation_cells"))
-    val start = store.filter(F.col("c") === existQ)
-      .filter(kMod === 0L)
-      .select(F.col("k"), decLong(F.col("k"), 1).as("c_vid"))
-    inNationHop(store, start, fg.vertices)
-      .crossJoin(F.broadcast(scalars))
-      .localCheckpoint(true)
-  }
+  def gKvDslDropV(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdropv") { wh =>
+      val ds = new graft.kv.KVDeltaStore(s, s"$wh/log")
+      val fg = PropertyGraph(s, dir)
+      val e = fg.edges
+      val noAdd = adjacency(s, dir).limit(0)
+      val doomed = Traversal.V(fg)
+        .hasLabel("customer").has("mktsegment", "AUTOMOBILE").dropV()
+      // both delta batches derive only from the input frames and land in
+      // distinct delta_<seq> dirs — append them concurrently
+      graft.Par.jobs(
+        () => ds.appendMutationAt("graph", 1L,
+          KVGraphMutations.vertexAdditions(fg.vertices)
+            .unionByName(KVGraphMutations.vertexPropAdditions(fg.vertices))
+            .unionByName(KVGraphMutations.edgeAdditions(e))
+            .unionByName(KVGraphMutations.edgeRevAdditions(e)),
+          noAdd.select("k", "c"), wts = 1000L),
+        () => ds.appendMutationAt("graph", 2L, noAdd,
+          KVGraphMutations.vertexDeletions(doomed, e), wts = 2000L))
+      val seg = wh.resolve("seg")
+      KVSegmentStore.write(ds.openDatabase("graph"), seg.toString, 0)
+      val store = s.read.format("graft-kv").load(seg.toString)
+      val existQ = F.concat(encLong(F.lit(0L)), encLong(F.lit(0L)))
+      val lid = decLong(F.col("c"), 1)
+      val kMod = F.pmod(decLong(F.col("k"), 1), F.lit(4L))
+      val scalars = store.agg(
+        F.count(F.when(F.col("c") === existQ && kMod === 0L, F.lit(1)))
+          .as("n_cust_cells"),
+        F.count(F.when(lid === 1L, F.lit(1))).as("n_in_nation_cells"),
+        F.count(F.when(lid === KVGraphMutations.RevBase + 1L, F.lit(1)))
+          .as("n_rev_in_nation_cells"))
+      val start = store.filter(F.col("c") === existQ)
+        .filter(kMod === 0L)
+        .select(F.col("k"), decLong(F.col("k"), 1).as("c_vid"))
+      inNationHop(store, start, fg.vertices)
+        .crossJoin(F.broadcast(scalars))
+    }
 
   val gKvDslDropVSql: String =
     """SELECT CAST(c.c_custkey*4 AS BIGINT) AS c_vid, n.n_name AS n_name,

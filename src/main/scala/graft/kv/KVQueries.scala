@@ -3,7 +3,7 @@ package graft.kv
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
-import graft.Tables
+import graft.{ScenarioDirs, Tables}
 import graft.Tables.dec2
 import KVStore._
 
@@ -178,27 +178,28 @@ object KVQueries {
     deltaScenario(s, dir, compactFirst = true)
 
   private def deltaScenario(s: SparkSession, dir: String,
-                            compactFirst: Boolean): DataFrame = synchronized {
-    // The merged view reads its files lazily, so the CURRENT warehouse
-    // must outlive this call; the previous invocation's (fully consumed
-    // by now) is swept, bounding accumulation at one warehouse per JVM.
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
-    val ds = new KVDeltaStore(s, whPath.toString)
+                            compactFirst: Boolean): DataFrame =
+    ScenarioDirs.run("graft_kvdelta") { wh =>
+      val ds = mutationLog(s, dir, wh.toString)
+      if (compactFirst) ds.compact("events")
+      readBackMutated(s, ds.openDatabase("events"))
+    }
+
+  /** The kv_mutate scenario as a two-part mutation log under `wh`: part 1
+    * = the full event store, part 2 = kv_mutate's deletions+upserts, or
+    * `adds` alone when given. Both parts derive from the input frames
+    * only — appended concurrently at explicit seqs. */
+  private def mutationLog(s: SparkSession, dir: String, wh: String,
+                          adds: Option[DataFrame] = None): KVDeltaStore = {
+    val ds = new KVDeltaStore(s, wh)
     val noDel = eventStore(s, dir).select("k", "c").limit(0)
-    val (additions, deletions) = mutationScenario(s, dir)
-    // both batches derive from the input frames only — append
-    // concurrently at explicit seqs (guide §2.6)
+    val (additions, deletions) = adds.fold(mutationScenario(s, dir))(a => (a, noDel))
     graft.Par.jobs(
       () => ds.appendMutationAt("events", 1L, eventStore(s, dir), noDel,
         wts = 1000L),
       () => ds.appendMutationAt("events", 2L, additions, deletions,
         wts = 2000L))
-    if (compactFirst) ds.compact("events")
-    // eager localCheckpoint: the returned DataFrame must stay re-evaluable
-    // AFTER a later call sweeps this warehouse, so cut its lineage to the
-    // parquet files now (blocks live in this JVM's block manager, not
-    // under whPath)
-    readBackMutated(s, ds.openDatabase("events")).localCheckpoint(true)
+    ds
   }
 
   /** kv_streamdelta: the SAME scenario driven through the STREAMING
@@ -210,24 +211,23 @@ object KVQueries {
     * must be invisible). Shares kv_mutate's oracle — the streaming log
     * path, the batch log path, and the snapshot path all agree cell for
     * cell. */
-  def kvStreamDelta(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
-    val wh = whPath.toString
-    def asMutations(adds: DataFrame, dels: DataFrame): DataFrame =
-      adds.withColumn("is_delete", F.lit(false))
-        .unionByName(dels
-          .select(F.col("k"), F.col("c"),
-            F.lit(null).cast("binary").as("v"), F.lit(true).as("is_delete")))
-    val noDel = eventStore(s, dir).select("k", "c").limit(0)
-    val b0 = asMutations(eventStore(s, dir), noDel)
-    val (additions, deletions) = mutationScenario(s, dir)
-    val b1 = asMutations(additions, deletions)
-    KVStreamSink.applyBatch(b0, wh, "events", 0L, compactThreshold = 2)
-    KVStreamSink.applyBatch(b1, wh, "events", 1L, compactThreshold = 2)
-    KVStreamSink.applyBatch(b1, wh, "events", 1L, compactThreshold = 2)
-    readBackMutated(s, KVStreamSink.read(s, wh, "events"))
-      .localCheckpoint(true)
-  }
+  def kvStreamDelta(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdelta") { whPath =>
+      val wh = whPath.toString
+      def asMutations(adds: DataFrame, dels: DataFrame): DataFrame =
+        adds.withColumn("is_delete", F.lit(false))
+          .unionByName(dels
+            .select(F.col("k"), F.col("c"),
+              F.lit(null).cast("binary").as("v"), F.lit(true).as("is_delete")))
+      val noDel = eventStore(s, dir).select("k", "c").limit(0)
+      val b0 = asMutations(eventStore(s, dir), noDel)
+      val (additions, deletions) = mutationScenario(s, dir)
+      val b1 = asMutations(additions, deletions)
+      KVStreamSink.applyBatch(b0, wh, "events", 0L, compactThreshold = 2)
+      KVStreamSink.applyBatch(b1, wh, "events", 1L, compactThreshold = 2)
+      KVStreamSink.applyBatch(b1, wh, "events", 1L, compactThreshold = 2)
+      readBackMutated(s, KVStreamSink.read(s, wh, "events"))
+    }
 
   /** kv_stream_source: the delta log read BACK as a Structured
     * Streaming SOURCE (graft-kv-log — the store's change-data-feed,
@@ -241,32 +241,23 @@ object KVQueries {
     * (seq, op) per (k, c)) and the same slice reads back. Shares
     * kv_mutate's oracle: the feed must carry EVERYTHING the store
     * knows, cell for cell. */
-  def kvStreamSource(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
-    val wh = whPath.toString
-    val ds = new KVDeltaStore(s, wh)
-    val noDel = eventStore(s, dir).select("k", "c").limit(0)
-    val (additions, deletions) = mutationScenario(s, dir)
-    // frame-derived batches at explicit seqs — append concurrently
-    graft.Par.jobs(
-      () => ds.appendMutationAt("events", 1L, eventStore(s, dir), noDel,
-        wts = 1000L),
-      () => ds.appendMutationAt("events", 2L, additions, deletions,
-        wts = 2000L))
-    val out = s"$wh/cdc_out"
-    val q = s.readStream.format("graft-kv-log")
-      .option("maxSeqsPerBatch", "1")
-      .load(s"$wh/events")
-      .writeStream.format("parquet")
-      .option("checkpointLocation", s"$wh/cdc_ckpt").option("path", out)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val resolved = KVDeltaStore.latest(s.read.parquet(out))
-      .filter(F.col("op") === 1)
-      .select("k", "c", "v")
-    readBackMutated(s, resolved).localCheckpoint(true)
-  }
+  def kvStreamSource(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdelta") { wh =>
+      mutationLog(s, dir, wh.toString)
+      val out = s"$wh/cdc_out"
+      val q = s.readStream.format("graft-kv-log")
+        .option("maxSeqsPerBatch", "1")
+        .load(s"$wh/events")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", s"$wh/cdc_ckpt").option("path", out)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val resolved = KVDeltaStore.latest(s.read.parquet(out))
+        .filter(F.col("op") === 1)
+        .select("k", "c", "v")
+      readBackMutated(s, resolved)
+    }
 
   /** kv_cdc_replica: LOG-SHIPPED REPLICATION — the CDC source composed
     * with the delta-log sink: a second store FOLLOWS the primary's
@@ -279,35 +270,26 @@ object KVQueries {
     * replays unacknowledged offsets, the sink's high-water mark + part
     * completeness dedupe them. Shares kv_mutate's oracle (read back off
     * the REPLICA). */
-  def kvCdcReplica(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
-    val wh = whPath.toString
-    val ds = new KVDeltaStore(s, wh)
-    val noDel = eventStore(s, dir).select("k", "c").limit(0)
-    val (additions, deletions) = mutationScenario(s, dir)
-    // frame-derived batches at explicit seqs — append concurrently
-    graft.Par.jobs(
-      () => ds.appendMutationAt("events", 1L, eventStore(s, dir), noDel,
-        wts = 1000L),
-      () => ds.appendMutationAt("events", 2L, additions, deletions,
-        wts = 2000L))
-    val q = s.readStream.format("graft-kv-log")
-      .option("maxSeqsPerBatch", "1")
-      .load(s"$wh/events")
-      .writeStream
-      // maxSeqsPerBatch=1: every micro-batch is ONE source log part, so
-      // cdcMutations passes it through without foldCdc's rank window (a
-      // full shuffle+sort of the store per batch)
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        KVStreamSink.applyBatch(
-          KVStreamSink.cdcMutations(batch), wh, "replica", batchId))
-      .option("checkpointLocation", s"$wh/repl_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    readBackMutated(s, KVStreamSink.read(s, wh, "replica"))
-      .localCheckpoint(true)
-  }
+  def kvCdcReplica(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdelta") { whPath =>
+      val wh = whPath.toString
+      mutationLog(s, dir, wh)
+      val q = s.readStream.format("graft-kv-log")
+        .option("maxSeqsPerBatch", "1")
+        .load(s"$wh/events")
+        .writeStream
+        // maxSeqsPerBatch=1: every micro-batch is ONE source log part, so
+        // cdcMutations passes it through without foldCdc's rank window (a
+        // full shuffle+sort of the store per batch)
+        .foreachBatch((batch: DataFrame, batchId: Long) =>
+          KVStreamSink.applyBatch(
+            KVStreamSink.cdcMutations(batch), wh, "replica", batchId))
+        .option("checkpointLocation", s"$wh/repl_ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      readBackMutated(s, KVStreamSink.read(s, wh, "replica"))
+    }
 
   /** kv_mv_follow: a MAINTAINED VIEW FOLLOWING THE STORE LIVE — the
     * ClickHouse MATERIALIZED VIEW-over-MergeTree story (an MV's SELECT
@@ -325,51 +307,43 @@ object KVQueries {
     * gate must skip it — a double-fold would break the oracle hash.
     * Scale: each micro-batch folds O(batch) plus one O(|keys|) snapshot
     * merge, independent of stream length. */
-  def kvMvFollow(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvdelta")
-    val wh = whPath.toString
-    val ds = new KVDeltaStore(s, wh)
-    val noDel = eventStore(s, dir).select("k", "c").limit(0)
-    // batch 2: pure additions — a 1.00-valued bonus cell per user < 5
-    val bonus = Tables(s, dir, "events").select("user_id").distinct()
-      .filter(F.col("user_id") < 5)
-      .select(
-        encLong(F.col("user_id")).as("k"),
-        F.concat(encLong(F.lit(0L)), encLong(F.lit(888888L))).as("c"),
-        F.lit("1.00").cast("binary").as("v"))
-      .localCheckpoint(true)
-    // frame-derived batches at explicit seqs — append concurrently
-    graft.Par.jobs(
-      () => ds.appendMutationAt("events", 1L, eventStore(s, dir), noDel,
-        wts = 1000L),
-      () => ds.appendMutationAt("events", 2L, bonus, noDel, wts = 2000L))
-    val mvDir = s"$wh/mv"
-    // CDC rows → RollupSink's (event_type, value) contract: the user id
-    // keys the rollup, the cell value is the summed measure — the sink
-    // is reused UNCHANGED, only this projection is new
-    def fold(batch: DataFrame, batchId: Long): Unit =
-      graft.streaming.RollupSink.applyBatch(
-        batch.filter(F.col("op") === 1)
-          .select(decLong(F.col("k"), 1).cast("string").as("event_type"),
-            F.col("v").cast("string").as("value")),
-        mvDir, batchId)
-    val q = s.readStream.format("graft-kv-log")
-      .option("maxSeqsPerBatch", "1")
-      .load(s"$wh/events")
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) => fold(batch, batchId))
-      .option("checkpointLocation", s"$wh/mv_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // REPLAY batch 1 (the bonus additions) under its original batchId:
-    // rollup_v1 is complete on disk, so the sink must skip the fold
-    fold(bonus.withColumn("op", F.lit(1)), 1L)
-    graft.streaming.RollupSink.read(s, mvDir)
-      .select(F.col("event_type").cast("long").as("user_id"),
-        F.col("n").as("n_cells"), F.col("sum_c"))
-      .localCheckpoint(true)
-  }
+  def kvMvFollow(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvdelta") { wh =>
+      // batch 2: pure additions — a 1.00-valued bonus cell per user < 5
+      val bonus = Tables(s, dir, "events").select("user_id").distinct()
+        .filter(F.col("user_id") < 5)
+        .select(
+          encLong(F.col("user_id")).as("k"),
+          F.concat(encLong(F.lit(0L)), encLong(F.lit(888888L))).as("c"),
+          F.lit("1.00").cast("binary").as("v"))
+        .localCheckpoint(true)
+      mutationLog(s, dir, wh.toString, Some(bonus))
+      val mvDir = s"$wh/mv"
+      // CDC rows → RollupSink's (event_type, value) contract: the user id
+      // keys the rollup, the cell value is the summed measure — the sink
+      // is reused UNCHANGED, only this projection is new
+      def fold(batch: DataFrame, batchId: Long): Unit =
+        graft.streaming.RollupSink.applyBatch(
+          batch.filter(F.col("op") === 1)
+            .select(decLong(F.col("k"), 1).cast("string").as("event_type"),
+              F.col("v").cast("string").as("value")),
+          mvDir, batchId)
+      val q = s.readStream.format("graft-kv-log")
+        .option("maxSeqsPerBatch", "1")
+        .load(s"$wh/events")
+        .writeStream
+        .foreachBatch((batch: DataFrame, batchId: Long) => fold(batch, batchId))
+        .option("checkpointLocation", s"$wh/mv_ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // REPLAY batch 1 (the bonus additions) under its original batchId:
+      // rollup_v1 is complete on disk, so the sink must skip the fold
+      fold(bonus.withColumn("op", F.lit(1)), 1L)
+      graft.streaming.RollupSink.read(s, mvDir)
+        .select(F.col("event_type").cast("long").as("user_id"),
+          F.col("n").as("n_cells"), F.col("sum_c"))
+    }
 
   val kvMvFollowSql: String =
     """SELECT user_id,
@@ -387,7 +361,7 @@ object KVQueries {
     * this is the difference between a join that moves both stores and one
     * that moves nothing: both sides' bucket files are read co-located.
     * Read back: every cell of users < 50 enriched with that user's total
-    * cell count. */
+    * cell count. Locked: its two catalog table names are session-global. */
   def kvBucketJoin(s: SparkSession, dir: String): DataFrame = synchronized {
     val store = eventStore(s, dir)
     KVStore.writeBucketed(store, "graft_kvbj_cells", numBuckets = 8)
@@ -429,19 +403,10 @@ object KVQueries {
     * pre-mutation event store, so the version pin is hash-gated cell for
     * cell (while kv_deltalog gates the post-mutation view of the very
     * same log). */
-  def kvTimetravel(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvtravel")
-    val ds = new KVDeltaStore(s, whPath.toString)
-    val noDel = eventStore(s, dir).select("k", "c").limit(0)
-    val (additions, deletions) = mutationScenario(s, dir)
-    // frame-derived batches at explicit seqs — append concurrently
-    graft.Par.jobs(
-      () => ds.appendMutationAt("events", 1L, eventStore(s, dir), noDel,
-        wts = 1000L),
-      () => ds.appendMutationAt("events", 2L, additions, deletions,
-        wts = 2000L))
-    readBackMutated(s, ds.openDatabaseAsOf("events", 1L)).localCheckpoint(true)
-  }
+  def kvTimetravel(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvtravel") { wh =>
+      readBackMutated(s, mutationLog(s, dir, wh.toString).openDatabaseAsOf("events", 1L))
+    }
 
   val kvTimetravelSql: String =
     """SELECT user_id, epoch_us(ts) AS us, event_id,
@@ -457,8 +422,7 @@ object KVQueries {
     * — KVTtlSpec proves that independently) and the slice read of users
     * 0..19 must see precisely the young half. Oracle = the plain time
     * filter, so expiry exactness is hash-gated cell for cell. */
-  def kvTtl(s: SparkSession, dir: String): DataFrame = synchronized {
-    val whPath = graft.ScenarioDirs.fresh("graft_kvttl")
+  def kvTtl(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvttl") { whPath =>
     val ds = new KVDeltaStore(s, whPath.toString)
     val es = eventStore(s, dir)
     val cut = colBound("2024-01-15 00:00:00")
@@ -476,7 +440,6 @@ object KVQueries {
       F.lit(Array.emptyByteArray),
       F.concat(encLong(F.lit(Long.MaxValue)), encLong(F.lit(Long.MaxValue))),
       Int.MaxValue))
-      .localCheckpoint(true) // outlive the warehouse sweep, like kv_deltalog
   }
 
   val kvTtlSql: String =
@@ -494,15 +457,13 @@ object KVQueries {
     * the pruned plan), then the identical slice. Shares kv_slice's
     * oracle: the connector path must reproduce the direct path cell for
     * cell. */
-  def kvDsv2(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvseg")
+  def kvDsv2(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvseg") { seg =>
     graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
     val store = s.read.format("graft-kv").load(seg.toString)
       .filter(F.col("k") < encLong(F.lit(10L))) // pushed → manifest pruning
     val keys = s.range(0, 10).select(encLong(F.col("id")).as("k"))
     decoded(slice(store, F.broadcast(keys),
       colBound("2024-01-10 00:00:00"), colBound("2024-01-20 00:00:00"), 50))
-      .localCheckpoint(true)
   }
 
   /** kv_dsv2_multi: the kv_multislice key set driven through the DSv2
@@ -520,23 +481,22 @@ object KVQueries {
     * against the key set as a DataFrame; the IN literal list exists
     * purely to carry the pushdown — both forms express the same SPI
     * call. */
-  def kvDsv2Multi(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegm")
-    graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
-    val keyIds = Tables(s, dir, "events")
-      .select(F.col("user_id")).distinct()
-      .filter(F.col("user_id") % 10 === 0)
-      .orderBy("user_id").limit(64)
-      .collect().map(_.getLong(0))
-    val enc: Array[Array[Byte]] = keyIds.map(beLong)
-    val store = s.read.format("graft-kv").load(seg.toString)
-      .filter(F.col("k").isin(enc.toSeq: _*))
-    val keys = s.createDataset(keyIds.toSeq)(org.apache.spark.sql.Encoders.scalaLong)
-      .select(encLong(F.col("value")).as("k"))
-    decoded(slice(store, F.broadcast(keys),
-      colBound("2024-01-10 00:00:00"), colBound("2024-01-11 00:00:00"), 20))
-      .localCheckpoint(true)
-  }
+  def kvDsv2Multi(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvsegm") { seg =>
+      graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
+      val keyIds = Tables(s, dir, "events")
+        .select(F.col("user_id")).distinct()
+        .filter(F.col("user_id") % 10 === 0)
+        .orderBy("user_id").limit(64)
+        .collect().map(_.getLong(0))
+      val enc: Array[Array[Byte]] = keyIds.map(beLong)
+      val store = s.read.format("graft-kv").load(seg.toString)
+        .filter(F.col("k").isin(enc.toSeq: _*))
+      val keys = s.createDataset(keyIds.toSeq)(org.apache.spark.sql.Encoders.scalaLong)
+        .select(encLong(F.col("value")).as("k"))
+      decoded(slice(store, F.broadcast(keys),
+        colBound("2024-01-10 00:00:00"), colBound("2024-01-11 00:00:00"), 20))
+    }
 
   /** kv_spj_join: the STORAGE-PARTITIONED join (r11 verdict #5) —
     * kv_bucket_join's zero-exchange co-location made native to the DSv2
@@ -549,31 +509,29 @@ object KVQueries {
     * hash-gates the joined values against the plain SQL join). At
     * 100 TB this is the story of two co-bucketed stores joining without
     * moving either — through the connector, not a parquet side-channel. */
-  def kvSpjJoin(s: SparkSession, dir: String): DataFrame = synchronized {
-    val cellsDir = graft.ScenarioDirs.fresh("graft_kvspjc")
-    val rollDir = graft.ScenarioDirs.fresh("graft_kvspjr")
-    val store = eventStore(s, dir)
-    graft.sources.kvconnector.KVSegmentStore.write(
-      store, cellsDir.toString, 8, "bucket")
-    val roll = store.groupBy("k").agg(F.count(F.lit(1)).as("n"))
-      .select(F.col("k"), encLong(F.lit(0L)).as("c"), encLong(F.col("n")).as("v"))
-    graft.sources.kvconnector.KVSegmentStore.write(
-      roll, rollDir.toString, 8, "bucket")
-    // the session carries the graftkv catalog (GraftExtensions); the
-    // eager checkpoint lets the result outlive the entry's store dirs
-    val cells = s.table(s"graftkv.`$cellsDir`")
-      .filter(F.col("k") < encLong(F.lit(50L)))
-    val totals = s.table(s"graftkv.`$rollDir`")
-      .select(F.col("k"), decLong(F.col("v"), 1).as("user_total"))
-    cells.hint("merge").join(totals, Seq("k"))
-      .select(
-        decLong(F.col("k"), 1).as("user_id"),
-        decLong(F.col("c"), 1).as("us"),
-        decLong(F.col("c"), 9).as("event_id"),
-        F.col("v").cast("string").as("v_str"),
-        F.col("user_total"))
-      .localCheckpoint(true)
-  }
+  def kvSpjJoin(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvspj") { wh =>
+      val (cellsDir, rollDir) = (wh.resolve("cells"), wh.resolve("roll"))
+      val store = eventStore(s, dir)
+      graft.sources.kvconnector.KVSegmentStore.write(
+        store, cellsDir.toString, 8, "bucket")
+      val roll = store.groupBy("k").agg(F.count(F.lit(1)).as("n"))
+        .select(F.col("k"), encLong(F.lit(0L)).as("c"), encLong(F.col("n")).as("v"))
+      graft.sources.kvconnector.KVSegmentStore.write(
+        roll, rollDir.toString, 8, "bucket")
+      // the session carries the graftkv catalog (GraftExtensions)
+      val cells = s.table(s"graftkv.`$cellsDir`")
+        .filter(F.col("k") < encLong(F.lit(50L)))
+      val totals = s.table(s"graftkv.`$rollDir`")
+        .select(F.col("k"), decLong(F.col("v"), 1).as("user_total"))
+      cells.hint("merge").join(totals, Seq("k"))
+        .select(
+          decLong(F.col("k"), 1).as("user_id"),
+          decLong(F.col("c"), 1).as("us"),
+          decLong(F.col("c"), 9).as("event_id"),
+          F.col("v").cast("string").as("v_str"),
+          F.col("user_total"))
+    }
 
   /** kv_runtime_prune: runtime (join-key) segment pruning through the
     * DSv2 connector (r11 verdict #4) — the star-join shape: the event
@@ -587,35 +545,32 @@ object KVQueries {
     * plain SQL join (kv_bucket_join's), so pruning exactness is
     * hash-gated cell for cell; KVRuntimeFilterSpec asserts the
     * scheduled-segment drop itself. */
-  def kvRuntimePrune(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegr")
-    graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 16)
-    val cells = s.read.format("graft-kv").load(seg.toString)
-    val totals = Tables(s, dir, "events")
-      .filter(F.col("user_id") < 50)
-      .groupBy("user_id").agg(F.count(F.lit(1)).as("user_total"))
-      .select(encLong(F.col("user_id")).as("k"), F.col("user_total"))
-    cells.join(totals, Seq("k"))
-      .select(
-        decLong(F.col("k"), 1).as("user_id"),
-        decLong(F.col("c"), 1).as("us"),
-        decLong(F.col("c"), 9).as("event_id"),
-        F.col("v").cast("string").as("v_str"),
-        F.col("user_total"))
-      .localCheckpoint(true)
-  }
+  def kvRuntimePrune(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvsegr") { seg =>
+      graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 16)
+      val cells = s.read.format("graft-kv").load(seg.toString)
+      val totals = Tables(s, dir, "events")
+        .filter(F.col("user_id") < 50)
+        .groupBy("user_id").agg(F.count(F.lit(1)).as("user_total"))
+        .select(encLong(F.col("user_id")).as("k"), F.col("user_total"))
+      cells.join(totals, Seq("k"))
+        .select(
+          decLong(F.col("k"), 1).as("user_id"),
+          decLong(F.col("c"), 1).as("us"),
+          decLong(F.col("c"), 9).as("event_id"),
+          F.col("v").cast("string").as("v_str"),
+          F.col("user_total"))
+    }
 
   /** kv_topn: the smallest 100 cells of the whole store in (k, c) order
     * through the DSv2 connector's TopN PUSHDOWN — `ORDER BY k, c LIMIT
     * 100` rides the (k, c)-sorted segment layout (each reader returns
     * its first 100 rows, Spark merges: the read-in-order optimization),
     * so the scan decodes ≤ 100 rows per segment at any store size. */
-  def kvTopn(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegt")
+  def kvTopn(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvsegt") { seg =>
     graft.sources.kvconnector.KVSegmentStore.write(eventStore(s, dir), seg.toString, 8)
     decoded(s.read.format("graft-kv").load(seg.toString)
         .orderBy(F.col("k").asc, F.col("c").asc).limit(100))
-      .localCheckpoint(true)
   }
 
   val kvTopnSql: String =
@@ -635,22 +590,21 @@ object KVQueries {
     * prunes best. Shares kv_topn's oracle: same rows, different layout,
     * pushed read-in-order on both (KVZOrderSpec asserts the push and
     * the per-segment decode bound). */
-  def kvTopnZorder(s: SparkSession, dir: String): DataFrame = synchronized {
-    val zo = graft.ScenarioDirs.fresh("graft_kvsegtz")
-    val ev = Tables(s, dir, "events")
-    graft.sources.kvconnector.KVZOrder.write(
-      ev.select(
-        encLong(F.col("user_id")).as("k"),
-        F.concat(encLong(F.unix_micros(F.col("ts"))),
-          encLong(F.col("event_id"))).as("c"),
-        dec2(F.col("value")).cast("string").cast("binary").as("v"),
-        F.col("user_id").as("zka"),
-        F.unix_micros(F.col("ts")).as("zca")),
-      F.col("zka"), F.col("zca"), zo.toString, 16)
-    decoded(s.read.format("graft-kv").load(zo.toString)
-        .orderBy(F.col("k").asc, F.col("c").asc).limit(100))
-      .localCheckpoint(true)
-  }
+  def kvTopnZorder(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvsegtz") { zo =>
+      val ev = Tables(s, dir, "events")
+      graft.sources.kvconnector.KVZOrder.write(
+        ev.select(
+          encLong(F.col("user_id")).as("k"),
+          F.concat(encLong(F.unix_micros(F.col("ts"))),
+            encLong(F.col("event_id"))).as("c"),
+          dec2(F.col("value")).cast("string").cast("binary").as("v"),
+          F.col("user_id").as("zka"),
+          F.unix_micros(F.col("ts")).as("zca")),
+        F.col("zka"), F.col("zca"), zo.toString, 16)
+      decoded(s.read.format("graft-kv").load(zo.toString)
+          .orderBy(F.col("k").asc, F.col("c").asc).limit(100))
+    }
 
   /** kv_dsv2_write: the kv_slice scenario with the store persisted
     * through the connector's DSv2 WRITE path
@@ -659,17 +613,16 @@ object KVQueries {
     * manifest assembled from task commit messages) and read back via the
     * same manifest-pruned DSv2 read. Shares kv_slice's oracle: the write
     * protocol is hash-gated end to end. */
-  def kvDsv2Write(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvsegw")
-    eventStore(s, dir).write.format("graft-kv")
-      .option("segments", 8).mode("overwrite").save(seg.toString)
-    val store = s.read.format("graft-kv").load(seg.toString)
-      .filter(F.col("k") < encLong(F.lit(10L)))
-    val keys = s.range(0, 10).select(encLong(F.col("id")).as("k"))
-    decoded(slice(store, F.broadcast(keys),
-      colBound("2024-01-10 00:00:00"), colBound("2024-01-20 00:00:00"), 50))
-      .localCheckpoint(true)
-  }
+  def kvDsv2Write(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvsegw") { seg =>
+      eventStore(s, dir).write.format("graft-kv")
+        .option("segments", 8).mode("overwrite").save(seg.toString)
+      val store = s.read.format("graft-kv").load(seg.toString)
+        .filter(F.col("k") < encLong(F.lit(10L)))
+      val keys = s.range(0, 10).select(encLong(F.col("id")).as("k"))
+      decoded(slice(store, F.broadcast(keys),
+        colBound("2024-01-10 00:00:00"), colBound("2024-01-20 00:00:00"), 50))
+    }
 
   /** kv_bloom_skip: the per-segment key BLOOM skip index end-to-end
     * under the HASH GATE — the store holds only EVEN user ids, and a
@@ -680,25 +633,24 @@ object KVQueries {
     * and either breaks the oracle hash. The odd keys' segments are
     * skipped at PLAN time (KVBloomSpec asserts kept.isEmpty on the
     * same shape). */
-  def kvBloomSkip(s: SparkSession, dir: String): DataFrame = synchronized {
-    val seg = graft.ScenarioDirs.fresh("graft_kvbloom")
-    graft.sources.kvconnector.KVSegmentStore.write(
-      Tables(s, dir, "events")
-        .filter(F.pmod(F.col("user_id"), F.lit(2L)) === 0L)
-        .select(encLong(F.col("user_id")).as("k"),
-          F.concat(encLong(F.unix_micros(F.col("ts"))),
-            encLong(F.col("event_id"))).as("c"),
-          dec2(F.col("value")).cast("string").cast("binary").as("v")),
-      seg.toString, 8)
-    val hit = s.read.format("graft-kv").load(seg.toString)
-      .filter(F.col("k").isin((0L until 20L).map(beLong): _*))
-      .select(decLong(F.col("k"), 1).as("user_id"))
-      .groupBy("user_id").agg(F.count(F.lit(1)).as("n_rows"))
-    s.range(0, 20).select(F.col("id").as("user_id"))
-      .join(hit, Seq("user_id"), "left")
-      .na.fill(0L, Seq("n_rows"))
-      .localCheckpoint(true)
-  }
+  def kvBloomSkip(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_kvbloom") { seg =>
+      graft.sources.kvconnector.KVSegmentStore.write(
+        Tables(s, dir, "events")
+          .filter(F.pmod(F.col("user_id"), F.lit(2L)) === 0L)
+          .select(encLong(F.col("user_id")).as("k"),
+            F.concat(encLong(F.unix_micros(F.col("ts"))),
+              encLong(F.col("event_id"))).as("c"),
+            dec2(F.col("value")).cast("string").cast("binary").as("v")),
+        seg.toString, 8)
+      val hit = s.read.format("graft-kv").load(seg.toString)
+        .filter(F.col("k").isin((0L until 20L).map(beLong): _*))
+        .select(decLong(F.col("k"), 1).as("user_id"))
+        .groupBy("user_id").agg(F.count(F.lit(1)).as("n_rows"))
+      s.range(0, 20).select(F.col("id").as("user_id"))
+        .join(hit, Seq("user_id"), "left")
+        .na.fill(0L, Seq("n_rows"))
+    }
 
   /** kv_zorder: the Z-ORDER segment layout end-to-end under the HASH
     * GATE (r9 verdict #5) — the SAME event rows written twice through
@@ -712,9 +664,8 @@ object KVQueries {
     * the linear layout (ok = 1): linear's key-stripes each span all
     * thirty days so the time predicate prunes nothing, while zorder's
     * rectangles cut both ways. */
-  def kvZorder(s: SparkSession, dir: String): DataFrame = synchronized {
-    val lin = graft.ScenarioDirs.fresh("graft_kvzlin")
-    val zo = graft.ScenarioDirs.fresh("graft_kvzord")
+  def kvZorder(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_kvz") { wh =>
+    val (lin, zo) = (wh.resolve("linear"), wh.resolve("zorder"))
     val ev = Tables(s, dir, "events")
     eventStore(s, dir).write.format("graft-kv")
       .option("segments", 16).mode("overwrite").save(lin.toString)
@@ -762,7 +713,6 @@ object KVQueries {
         val tieOk = nZo <= nLin && nLin <= 2 && (nZo < zoTotal || zoTotal <= 1)
         if (nZo < nLin || tieOk) 1L else 0L
       })
-      .localCheckpoint(true)
   }
 
   val kvZorderSql: String =

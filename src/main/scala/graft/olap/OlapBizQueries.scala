@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
-import graft.Tables
+import graft.{ScenarioDirs, Tables}
 import graft.streaming.{JourneyStream, SessionFold}
 
 /** Business-analytics staples of the ClickHouse deployment surface that
@@ -89,19 +89,18 @@ object OlapBizQueries {
     * onto graft.VersionedState snapshots; the read runs the shared
     * two-level concentrate over the snapshot. Gated under q_pareto's own
     * batch oracle: maintained state must equal the batch groupBy. */
-  def qParetoInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_pareto")
-    val o = Tables(s, dir, "orders").select("o_custkey", "o_totalprice")
-    val b0 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 0L)
-    val b1 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 1L)
-    val b2 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 2L)
-    graft.streaming.ParetoSink.applyBatch(b0, snap.toString, 0L)
-    graft.streaming.ParetoSink.applyBatch(b1, snap.toString, 1L)
-    graft.streaming.ParetoSink.applyBatch(b1, snap.toString, 1L) // replay
-    graft.streaming.ParetoSink.applyBatch(b2, snap.toString, 2L)
-    concentrate(graft.streaming.ParetoSink.read(s, snap.toString))
-      .localCheckpoint(true)
-  }
+  def qParetoInc(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_pareto") { snap =>
+      val o = Tables(s, dir, "orders").select("o_custkey", "o_totalprice")
+      val b0 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 0L)
+      val b1 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 1L)
+      val b2 = o.filter(F.pmod(F.col("o_custkey"), F.lit(3L)) === 2L)
+      graft.streaming.ParetoSink.applyBatch(b0, snap.toString, 0L)
+      graft.streaming.ParetoSink.applyBatch(b1, snap.toString, 1L)
+      graft.streaming.ParetoSink.applyBatch(b1, snap.toString, 1L) // replay
+      graft.streaming.ParetoSink.applyBatch(b2, snap.toString, 2L)
+      concentrate(graft.streaming.ParetoSink.read(s, snap.toString))
+    }
 
   val qParetoSql: String =
     """WITH rc AS (
@@ -245,30 +244,29 @@ object OlapBizQueries {
     * equal the batch sessionization exactly (5-type journey alphabet
     * ≤ 155 distinct paths ≪ the 512 sketch capacity, so Misra-Gries is
     * in its exact regime). */
-  def qJourneyInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_journey")
-    val jDir = snap.resolve("journey").toString
-    val tDir = snap.resolve("topk").toString
-    val ev = Tables(s, dir, "events")
-      .select("user_id", "ts", "event_id", "event_type")
-    val us = F.unix_micros(F.col("ts"))
-    val Array(lo, hi) = ev.select(us.as("tu"))
-      .stat.approxQuantile("tu", Array(0.33, 0.66), 0.0)
-    // the (hi−15min, hi] slice arrives one batch late: behind b1's max
-    // but ahead of its derived watermark (delay 30min), so nothing
-    // drops (max(lo,·) keeps the three slices disjoint on a corpus
-    // whose 33rd–66th percentile span is under 15 minutes)
-    val lateLo = math.max(lo, hi - 900e6)
-    val b0 = ev.filter(us <= lo)
-    val b1 = ev.filter(us > lo && us <= lateLo)
-    val b2 = ev.filter(us > hi || (us > lateLo && us <= hi))
-    graft.streaming.JourneyStream.applyBatch(b0, jDir, 0L, tDir)
-    graft.streaming.JourneyStream.applyBatch(b1, jDir, 1L, tDir)
-    graft.streaming.JourneyStream.applyBatch(b1, jDir, 1L, tDir) // replay
-    graft.streaming.JourneyStream.applyBatch(b2, jDir, 2L, tDir)
-    graft.streaming.JourneyStream.readTop(s, jDir, tDir, 20)
-      .localCheckpoint(true)
-  }
+  def qJourneyInc(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_journey") { snap =>
+      val jDir = snap.resolve("journey").toString
+      val tDir = snap.resolve("topk").toString
+      val ev = Tables(s, dir, "events")
+        .select("user_id", "ts", "event_id", "event_type")
+      val us = F.unix_micros(F.col("ts"))
+      val Array(lo, hi) = ev.select(us.as("tu"))
+        .stat.approxQuantile("tu", Array(0.33, 0.66), 0.0)
+      // the (hi−15min, hi] slice arrives one batch late: behind b1's max
+      // but ahead of its derived watermark (delay 30min), so nothing
+      // drops (max(lo,·) keeps the three slices disjoint on a corpus
+      // whose 33rd–66th percentile span is under 15 minutes)
+      val lateLo = math.max(lo, hi - 900e6)
+      val b0 = ev.filter(us <= lo)
+      val b1 = ev.filter(us > lo && us <= lateLo)
+      val b2 = ev.filter(us > hi || (us > lateLo && us <= hi))
+      graft.streaming.JourneyStream.applyBatch(b0, jDir, 0L, tDir)
+      graft.streaming.JourneyStream.applyBatch(b1, jDir, 1L, tDir)
+      graft.streaming.JourneyStream.applyBatch(b1, jDir, 1L, tDir) // replay
+      graft.streaming.JourneyStream.applyBatch(b2, jDir, 2L, tDir)
+      graft.streaming.JourneyStream.readTop(s, jDir, tDir, 20)
+    }
 
   /** q_theil_sen: the Theil–Sen robust trend estimator over each event
     * type's daily cents-sum series — the discrete median of all pairwise

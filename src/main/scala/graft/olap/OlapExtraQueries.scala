@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
-import graft.Tables
+import graft.{ScenarioDirs, Tables}
 import graft.Tables.{dec2, out2}
 import graft.streaming.{SessionFold, SessionFunnelStream}
 
@@ -858,26 +858,25 @@ object OlapExtraQueries {
     * replayed and the last 15 minutes of the middle slice DELAYED into
     * the final batch (the q_journey_inc scenario exactly). Gated under
     * q_session_funnel's own batch oracle. */
-  def qSessionFunnelInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_funnel")
-    val fDir = snap.resolve("funnel").toString
-    val ev = Tables(s, dir, "events")
-      .select("user_id", "ts", "event_id", "event_type")
-    val us = F.unix_micros(F.col("ts"))
-    val Array(lo, hi) = ev.select(us.as("tu"))
-      .stat.approxQuantile("tu", Array(0.33, 0.66), 0.0)
-    val lateLo = math.max(lo, hi - 900e6)
-    graft.streaming.SessionFunnelStream.applyBatch(
-      ev.filter(us <= lo), fDir, 0L)
-    graft.streaming.SessionFunnelStream.applyBatch(
-      ev.filter(us > lo && us <= lateLo), fDir, 1L)
-    graft.streaming.SessionFunnelStream.applyBatch(
-      ev.filter(us > lo && us <= lateLo), fDir, 1L) // replay
-    graft.streaming.SessionFunnelStream.applyBatch(
-      ev.filter(us > hi || (us > lateLo && us <= hi)), fDir, 2L)
-    graft.streaming.SessionFunnelStream.readLevels(s, fDir)
-      .localCheckpoint(true)
-  }
+  def qSessionFunnelInc(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_funnel") { snap =>
+      val fDir = snap.resolve("funnel").toString
+      val ev = Tables(s, dir, "events")
+        .select("user_id", "ts", "event_id", "event_type")
+      val us = F.unix_micros(F.col("ts"))
+      val Array(lo, hi) = ev.select(us.as("tu"))
+        .stat.approxQuantile("tu", Array(0.33, 0.66), 0.0)
+      val lateLo = math.max(lo, hi - 900e6)
+      graft.streaming.SessionFunnelStream.applyBatch(
+        ev.filter(us <= lo), fDir, 0L)
+      graft.streaming.SessionFunnelStream.applyBatch(
+        ev.filter(us > lo && us <= lateLo), fDir, 1L)
+      graft.streaming.SessionFunnelStream.applyBatch(
+        ev.filter(us > lo && us <= lateLo), fDir, 1L) // replay
+      graft.streaming.SessionFunnelStream.applyBatch(
+        ev.filter(us > hi || (us > lateLo && us <= hi)), fDir, 2L)
+      graft.streaming.SessionFunnelStream.readLevels(s, fDir)
+    }
 
   val qSessionFunnelSql: String =
     """WITH ev AS (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
-import graft.Tables
+import graft.{ScenarioDirs, Tables}
 import graft.streaming.SessionFold
 
 /** Ordered time-series aggregates (ClickHouse `deltaSum` and
@@ -1034,19 +1034,8 @@ object OlapSeriesQueries {
     * first-seen = bitmap_andnot against the OR of earlier weeks, each
     * cell one AND-cardinality. Gated under q_cohort_matrix's batch
     * oracle with time-split batches + a replayed batch. */
-  def qCohortInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_cohort")
-    val ev = Tables(s, dir, "events").select("user_id", "ts")
-    val Array(lo, hi) = ev.stat.approxQuantile("user_id", Array(0.33, 0.66), 0.0)
-    val b0 = ev.filter(F.col("user_id") <= lo)
-    val b1 = ev.filter(F.col("user_id") > lo && F.col("user_id") <= hi)
-    val b2 = ev.filter(F.col("user_id") > hi)
-    graft.streaming.ActiveUsersSink.applyBatch(b0, snap.toString, 0L)
-    graft.streaming.ActiveUsersSink.applyBatch(b1, snap.toString, 1L)
-    graft.streaming.ActiveUsersSink.applyBatch(b1, snap.toString, 1L) // replay
-    graft.streaming.ActiveUsersSink.applyBatch(b2, snap.toString, 2L)
-    graft.streaming.ActiveUsersSink.cohortRead(s, snap.toString).localCheckpoint(true)
-  }
+  def qCohortInc(s: SparkSession, dir: String): DataFrame =
+    activeUsersReplay(s, dir, "graft_cohort")(graft.streaming.ActiveUsersSink.cohortRead)
 
   /** q_active_users_inc: the INCREMENTALLY-MAINTAINED DAU/WAU/MAU
     * (graft.streaming.ActiveUsersSink — one Roaring bitmap per day,
@@ -1056,19 +1045,26 @@ object OlapSeriesQueries {
     * hash-gated under q_active_users' own oracle — the bitmap-algebra
     * maintenance path and the batch explode path must agree count for
     * count. */
-  def qActiveUsersInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_ausnap")
-    val ev = Tables(s, dir, "events").select("user_id", "ts")
-    val Array(lo, hi) = ev.stat.approxQuantile("user_id", Array(0.33, 0.66), 0.0)
-    val b0 = ev.filter(F.col("user_id") <= lo)
-    val b1 = ev.filter(F.col("user_id") > lo && F.col("user_id") <= hi)
-    val b2 = ev.filter(F.col("user_id") > hi)
-    graft.streaming.ActiveUsersSink.applyBatch(b0, snap.toString, 0L)
-    graft.streaming.ActiveUsersSink.applyBatch(b1, snap.toString, 1L)
-    graft.streaming.ActiveUsersSink.applyBatch(b1, snap.toString, 1L) // replay
-    graft.streaming.ActiveUsersSink.applyBatch(b2, snap.toString, 2L)
-    graft.streaming.ActiveUsersSink.read(s, snap.toString).localCheckpoint(true)
-  }
+  def qActiveUsersInc(s: SparkSession, dir: String): DataFrame =
+    activeUsersReplay(s, dir, "graft_ausnap")(graft.streaming.ActiveUsersSink.read)
+
+  /** The replay q_cohort_inc and q_active_users_inc share: the events as
+    * three user-quantile batches folded into one ActiveUsersSink state,
+    * batch 1 redelivered (must be a no-op), then `read` of that state. */
+  private def activeUsersReplay(s: SparkSession, dir: String, tag: String)
+                               (read: (SparkSession, String) => DataFrame): DataFrame =
+    ScenarioDirs.run(tag) { snap =>
+      val ev = Tables(s, dir, "events").select("user_id", "ts")
+      val Array(lo, hi) = ev.stat.approxQuantile("user_id", Array(0.33, 0.66), 0.0)
+      val b0 = ev.filter(F.col("user_id") <= lo)
+      val b1 = ev.filter(F.col("user_id") > lo && F.col("user_id") <= hi)
+      val b2 = ev.filter(F.col("user_id") > hi)
+      graft.streaming.ActiveUsersSink.applyBatch(b0, snap.toString, 0L)
+      graft.streaming.ActiveUsersSink.applyBatch(b1, snap.toString, 1L)
+      graft.streaming.ActiveUsersSink.applyBatch(b1, snap.toString, 1L) // replay
+      graft.streaming.ActiveUsersSink.applyBatch(b2, snap.toString, 2L)
+      read(s, snap.toString)
+    }
 
   /** q_trend_mk: the Mann-Kendall trend test over each event type's
     * daily cents-sum series (the standard nonparametric "is this metric
@@ -1469,28 +1465,28 @@ object OlapSeriesQueries {
     * discard wholesale — counted nowhere rather than double-counted,
     * which pins the watermark drop semantics under the hash gate, not
     * just in MarkovSinkSpec. */
-  def qMarkovInc(s: SparkSession, dir: String): DataFrame = synchronized {
-    val snap = graft.ScenarioDirs.fresh("graft_mksnap")
-    val ev = Tables(s, dir, "events")
-      .select("user_id", "ts", "event_id", "event_type")
-    val Array(lo, hi, top) = ev.select(F.unix_micros(F.col("ts")).as("tu"))
-      .stat.approxQuantile("tu", Array(0.33, 0.66, 1.0), 0.0)
-    val b0 = ev.filter(F.unix_micros(F.col("ts")) <= lo)
-    val b1 = ev.filter(F.unix_micros(F.col("ts")) > lo &&
-      F.unix_micros(F.col("ts")) <= hi)
-    val b2 = ev.filter(F.unix_micros(F.col("ts")) > hi)
-    graft.streaming.MarkovSink.applyBatch(b0, snap.toString, 0L)
-    graft.streaming.MarkovSink.applyBatch(b1, snap.toString, 1L)
-    graft.streaming.MarkovSink.applyBatch(b1, snap.toString, 1L) // replay
-    graft.streaming.MarkovSink.applyBatch(b2, snap.toString, 2L)
-    // beyond-delay redelivery: everything here is ≥ 2 delays behind the
-    // stream max, hence SEALED and at-or-behind its user's frontier —
-    // the drop rule must discard all of it or the oracle hash breaks
-    val bLate = ev.filter(F.unix_micros(F.col("ts")) <=
-      math.min(lo, top - 2 * graft.streaming.MarkovSink.DefaultDelayMs * 1000.0))
-    graft.streaming.MarkovSink.applyBatch(bLate, snap.toString, 3L)
-    graft.streaming.MarkovSink.read(s, snap.toString).localCheckpoint(true)
-  }
+  def qMarkovInc(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_mksnap") { snap =>
+      val ev = Tables(s, dir, "events")
+        .select("user_id", "ts", "event_id", "event_type")
+      val Array(lo, hi, top) = ev.select(F.unix_micros(F.col("ts")).as("tu"))
+        .stat.approxQuantile("tu", Array(0.33, 0.66, 1.0), 0.0)
+      val b0 = ev.filter(F.unix_micros(F.col("ts")) <= lo)
+      val b1 = ev.filter(F.unix_micros(F.col("ts")) > lo &&
+        F.unix_micros(F.col("ts")) <= hi)
+      val b2 = ev.filter(F.unix_micros(F.col("ts")) > hi)
+      graft.streaming.MarkovSink.applyBatch(b0, snap.toString, 0L)
+      graft.streaming.MarkovSink.applyBatch(b1, snap.toString, 1L)
+      graft.streaming.MarkovSink.applyBatch(b1, snap.toString, 1L) // replay
+      graft.streaming.MarkovSink.applyBatch(b2, snap.toString, 2L)
+      // beyond-delay redelivery: everything here is ≥ 2 delays behind the
+      // stream max, hence SEALED and at-or-behind its user's frontier —
+      // the drop rule must discard all of it or the oracle hash breaks
+      val bLate = ev.filter(F.unix_micros(F.col("ts")) <=
+        math.min(lo, top - 2 * graft.streaming.MarkovSink.DefaultDelayMs * 1000.0))
+      graft.streaming.MarkovSink.applyBatch(bLate, snap.toString, 3L)
+      graft.streaming.MarkovSink.read(s, snap.toString)
+    }
 
   /** q_spc: STATISTICAL PROCESS CONTROL breaches — per event type, days
     * whose daily total deviates more than 3σ from the type's mean (the

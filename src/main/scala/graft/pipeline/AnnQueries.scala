@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
-import graft.Tables
+import graft.{ScenarioDirs, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -1271,16 +1271,11 @@ object AnnQueries {
     * SAME rows as s_ann_ivf, audited per query under the same oracle
     * (AnnSpec asserts row equality with s_ann_ivf AND that the probe
     * scheduled fewer segments than the store holds). */
-  def sAnnIvfKv(s: SparkSession, dir: String): DataFrame = synchronized {
-    import graft.kv.KVStore.{decLong, encLong}
-    val seg = graft.ScenarioDirs.fresh("graft_ivfkv")
+  def sAnnIvfKv(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_ivfkv") { seg =>
+    import graft.kv.KVStore.decLong
     val e = withNorm(Tables(s, dir, "embeddings")).localCheckpoint()
     val cents = ivfCentroids(e)
-    val postings = e.select(
-      encLong(nearestCid(F.col("embedding"), cents).cast("long")).as("k"),
-      encLong(F.col("vec_id")).as("c"),
-      F.lit(Array.emptyByteArray).as("v"))
-    graft.sources.kvconnector.KVSegmentStore.write(postings, seg.toString, 8)
+    graft.sources.kvconnector.KVSegmentStore.write(ivfPostings(e, cents), seg.toString, 8)
     val probes = e.filter(F.col("vec_id") < NQueries)
       .select(F.col("vec_id").as("q_id"), F.col("embedding").as("eq"),
         F.col("nrm").as("nq"))
@@ -1301,8 +1296,25 @@ object AnnQueries {
       .filter(F.col("vec_id") =!= F.col("q_id"))
       .select(F.col("q_id"), F.col("vec_id").as("n_id"),
         (dot(F.col("eq"), F.col("embedding")) / (F.col("nq") * F.col("nrm"))).as("cs"))
-    rankTopK(scored).localCheckpoint(true)
+    rankTopK(scored)
   }
+
+  /** s_ann_ivf_kv's inverted file: one cell per posting, k = the vector's
+    * nearest centroid id, c = its vec id, v empty unless given. */
+  private[graft] def ivfPostings(e: DataFrame, cents: Array[Array[Float]],
+                                 v: Column = F.lit(Array.emptyByteArray)): DataFrame =
+    e.select(
+      graft.kv.KVStore.encLong(nearestCid(F.col("embedding"), cents).cast("long")).as("k"),
+      graft.kv.KVStore.encLong(F.col("vec_id")).as("c"),
+      v.as("v"))
+
+  /** s_ann_pq_kv's code store: the inverted file with v = the vector's
+    * PqM PQ codes, one byte per subspace code (PqK = 16 < 256). */
+  private[graft] def pqPostings(e: DataFrame, cents: Array[Array[Float]],
+                                books: Array[Array[Array[Float]]]): DataFrame =
+    ivfPostings(e.select(F.col("vec_id") +: F.col("embedding") +: pqCodeCols(books): _*),
+      cents, F.unhex(F.concat(
+        (0 until PqM).map(m => F.lpad(F.hex(F.col(s"c$m")), 2, "0")): _*)))
 
   /** s_ann_ivf_kv driver entry: the same per-query audit as s_ann_ivf. */
   def sAnnIvfKvChecked(s: SparkSession, dir: String): DataFrame =
@@ -1324,23 +1336,13 @@ object AnnQueries {
     * scans. Same deterministic centroids + codebooks as s_ann_ivf /
     * s_ann_pq; AnnPqKvSpec asserts row equality with the frame-computed
     * IVFADC twin and that only probed-list segments schedule. */
-  def sAnnPqKv(s: SparkSession, dir: String): DataFrame = synchronized {
-    import graft.kv.KVStore.{decLong, encLong}
+  def sAnnPqKv(s: SparkSession, dir: String): DataFrame = ScenarioDirs.run("graft_pqkv") { seg =>
+    import graft.kv.KVStore.decLong
     import org.apache.spark.sql.types.DecimalType
-    val seg = graft.ScenarioDirs.fresh("graft_pqkv")
     val e = withNorm(Tables(s, dir, "embeddings")).localCheckpoint()
     val cents = ivfCentroids(e)
     val books = pqBooks(e)
-    // one byte per subspace code (PqK = 16 < 256): 16 hex chars → 8 bytes
-    val codeBytes = F.unhex(F.concat(
-      (0 until PqM).map(m => F.lpad(F.hex(F.col(s"c$m")), 2, "0")): _*))
-    val postings = e.select(
-        F.col("vec_id") +: F.col("embedding") +: pqCodeCols(books): _*)
-      .select(
-        encLong(nearestCid(F.col("embedding"), cents).cast("long")).as("k"),
-        encLong(F.col("vec_id")).as("c"),
-        codeBytes.as("v"))
-    graft.sources.kvconnector.KVSegmentStore.write(postings, seg.toString, 8)
+    graft.sources.kvconnector.KVSegmentStore.write(pqPostings(e, cents, books), seg.toString, 8)
     val probes = e.filter(F.col("vec_id") < NQueries)
       .select(F.col("vec_id").as("q_id"),
         F.explode(topCids(F.col("embedding"), cents, NProbe)).as("cid"))
@@ -1361,7 +1363,7 @@ object AnnQueries {
       .filter(F.col("vec_id") =!= F.col("q_id"))
       .groupBy("q_id", "vec_id")
       .agg(F.sum(F.col("pdot").cast(DecimalType(30, 12))).as("adot"))
-    pqRerank(e, adc).localCheckpoint(true)
+    pqRerank(e, adc)
   }
 
   /** s_ann_pq_kv driver entry: the same per-query audit as the other

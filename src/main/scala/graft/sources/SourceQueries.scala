@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
-import graft.Tables
+import graft.{ScenarioDirs, Tables}
 import graft.Tables.{dec2, out2}
 
 /** Driver-checked queries that push data THROUGH the interchange formats
@@ -21,21 +21,19 @@ object SourceQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private def roundtrip(s: SparkSession, dir: String,
-                        fmt: TableSource.Format): DataFrame = synchronized {
-    // one tag for every roundtrip and qPartitionPrune: one live dir
-    val tmp = graft.ScenarioDirs.fresh("graft_src")
-    val subset = Tables(s, dir, "lineitem")
-      .filter(F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
-      .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-    TableSource.write(subset, s"$tmp/li", fmt)
-    val back = TableSource.read(s, s"$tmp/li", fmt, subset.schema)
-    back.groupBy("l_returnflag")
-      .agg(F.count(F.lit(1)).as("n"),
-        F.sum(F.col("l_orderkey")).as("sum_key"),
-        out2(F.sum(dec2(F.col("l_quantity")))).as("sum_qty"),
-        out2(F.sum(dec2(F.col("l_extendedprice")))).as("sum_price"))
-      .localCheckpoint(true)
-  }
+                        fmt: TableSource.Format): DataFrame =
+    ScenarioDirs.run("graft_src") { tmp =>
+      val subset = Tables(s, dir, "lineitem")
+        .filter(F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
+        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
+      TableSource.write(subset, s"$tmp/li", fmt)
+      val back = TableSource.read(s, s"$tmp/li", fmt, subset.schema)
+      back.groupBy("l_returnflag")
+        .agg(F.count(F.lit(1)).as("n"),
+          F.sum(F.col("l_orderkey")).as("sum_key"),
+          out2(F.sum(dec2(F.col("l_quantity")))).as("sum_qty"),
+          out2(F.sum(dec2(F.col("l_extendedprice")))).as("sum_price"))
+    }
 
   /** q_csv_roundtrip: lineitem subset → CSV → read back → aggregate. */
   def qCsvRoundtrip(s: SparkSession, dir: String): DataFrame =
@@ -59,20 +57,19 @@ object SourceQueries {
     * first-line data-skipping mechanism for any 100 TB table layout.
     * Oracle = the same filter+aggregate straight off the unpartitioned
     * table: pruning must be result-invisible. */
-  def qPartitionPrune(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tmp = graft.ScenarioDirs.fresh("graft_src")
-    Tables(s, dir, "lineitem")
-      .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
-      .write.partitionBy("l_returnflag").parquet(s"$tmp/li")
-    s.read.parquet(s"$tmp/li")
-      .filter(F.col("l_returnflag") === "R")
-      .groupBy("l_returnflag")
-      .agg(F.count(F.lit(1)).as("n"),
-        F.sum(F.col("l_orderkey")).as("sum_key"),
-        out2(F.sum(dec2(F.col("l_quantity")))).as("sum_qty"),
-        out2(F.sum(dec2(F.col("l_extendedprice")))).as("sum_price"))
-      .localCheckpoint(true)
-  }
+  def qPartitionPrune(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_src") { tmp =>
+      Tables(s, dir, "lineitem")
+        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
+        .write.partitionBy("l_returnflag").parquet(s"$tmp/li")
+      s.read.parquet(s"$tmp/li")
+        .filter(F.col("l_returnflag") === "R")
+        .groupBy("l_returnflag")
+        .agg(F.count(F.lit(1)).as("n"),
+          F.sum(F.col("l_orderkey")).as("sum_key"),
+          out2(F.sum(dec2(F.col("l_quantity")))).as("sum_qty"),
+          out2(F.sum(dec2(F.col("l_extendedprice")))).as("sum_price"))
+    }
 
   val qPartitionPruneSql: String =
     """SELECT l_returnflag, COUNT(*) AS n,
@@ -103,22 +100,21 @@ object SourceQueries {
     * hash gate proves the two-level rollup invisible. This is the
     * pattern that lets a 100 TB daily pipeline maintain pre-aggregated
     * state and serve final aggregates from state-sized scans. */
-  def qStateMerge(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tmp = graft.ScenarioDirs.fresh("graft_state")
-    val partials = Tables(s, dir, "events")
-      .select(F.col("event_type"),
-        F.expr("unix_micros(ts) div 86400000000").as("d"),
-        (dec2(F.col("value")) * 100).cast("long").as("vc"))
-      .groupBy("event_type", "d")
-      .agg(F.count(F.lit(1)).as("pn"), F.sum("vc").as("ps"),
-        F.min("vc").as("pmn"), F.max("vc").as("pmx"))
-    partials.write.mode("overwrite").parquet(s"$tmp/state")
-    s.read.parquet(s"$tmp/state")
-      .groupBy("event_type")
-      .agg(F.sum("pn").cast("long").as("n"), F.sum("ps").cast("long").as("sum_c"),
-        F.min("pmn").as("min_c"), F.max("pmx").as("max_c"))
-      .localCheckpoint(true)
-  }
+  def qStateMerge(s: SparkSession, dir: String): DataFrame =
+    ScenarioDirs.run("graft_state") { tmp =>
+      val partials = Tables(s, dir, "events")
+        .select(F.col("event_type"),
+          F.expr("unix_micros(ts) div 86400000000").as("d"),
+          (dec2(F.col("value")) * 100).cast("long").as("vc"))
+        .groupBy("event_type", "d")
+        .agg(F.count(F.lit(1)).as("pn"), F.sum("vc").as("ps"),
+          F.min("vc").as("pmn"), F.max("vc").as("pmx"))
+      partials.write.mode("overwrite").parquet(s"$tmp/state")
+      s.read.parquet(s"$tmp/state")
+        .groupBy("event_type")
+        .agg(F.sum("pn").cast("long").as("n"), F.sum("ps").cast("long").as("sum_c"),
+          F.min("pmn").as("min_c"), F.max("pmx").as("max_c"))
+    }
 
   val qStateMergeSql: String =
     """SELECT event_type, COUNT(*) AS n,

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.time.Instant
+import java.time.temporal.ChronoUnit.MICROS
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.{functions => F}
@@ -55,7 +57,9 @@ object EventStream {
     * activity); an arrival merges every pending session within the gap
     * of it, so an admissible late event that bridges two sessions makes
     * them one, as the batch q_sessionize does. The timeout is the
-    * earliest pending end + gap. */
+    * earliest pending end + gap. Event times are compared in µs, as the
+    * batch rule does; the watermark and the timeout are the only ms
+    * values. */
   def sessionize(events: Dataset[Ev]): Dataset[Session] = {
     import events.sparkSession.implicits._
     events
@@ -66,22 +70,23 @@ object EventStream {
         (user: Long, evs: Iterator[Ev], state: GroupState[OpenSessions]) =>
           val pending = evs.foldLeft(state.getOption.fold(Seq.empty[SessState])(_.open)) {
             (open, e) =>
-              val t = e.ts.getTime
+              val t = usOf(e.ts)
               val (near, far) = open.partition(st =>
-                t >= st.start - SessionFold.GapMs && t <= st.end + SessionFold.GapMs)
+                t >= st.start - SessionFold.GapUs && t <= st.end + SessionFold.GapUs)
               far :+ near.foldLeft(SessState(t, t, 1L, e.value)) { (a, b) =>
                 SessState(math.min(a.start, b.start), math.max(a.end, b.end),
                   a.n + b.n, a.total + b.total)
               }
           }
-          val wm = state.getCurrentWatermarkMs()
-          val (done, open) = pending.partition(wm > _.end + SessionFold.GapMs)
+          val wmMs = state.getCurrentWatermarkMs()
+          val (done, open) = pending.partition(wmMs * 1000 > _.end + SessionFold.GapUs)
           if (open.nonEmpty) {
             state.update(OpenSessions(open))
-            state.setTimeoutTimestamp(open.map(_.end).min + SessionFold.GapMs)
+            state.setTimeoutTimestamp(
+              Math.floorDiv(open.map(_.end).min + SessionFold.GapUs, 1000L))
           } else if (state.exists) state.remove()
           done.sortBy(_.start).iterator.map(st => Session(user,
-            new Timestamp(st.start), new Timestamp(st.end), st.n, st.total))
+            tsOf(st.start), tsOf(st.end), st.n, st.total))
       }
   }
 
@@ -131,12 +136,15 @@ object EventStream {
   // not private: encoders (see SessState)
   final case class FunnelState(t1: Long, t2: Long, t3: Long)
 
-  val FunnelWindowMs: Long = 60 * 60 * 1000L
+  val FunnelWindowUs: Long = 60 * 60 * 1000L * 1000L
+
+  private def usOf(t: Timestamp): Long = MICROS.between(Instant.EPOCH, t.toInstant)
+  private def tsOf(us: Long): Timestamp = Timestamp.from(Instant.EPOCH.plus(us, MICROS))
 
   /** Streaming funnel (the streaming form of q_funnel): per user, track
     * the earliest click → view → purchase progression completed within
     * 1 hour of the first click, emitting the user's funnel depth every
-    * time it deepens (update-mode output). State is three timestamps per
+    * time it deepens (update-mode output). State is three µs times per
     * user — O(1), watermark-evicted via event-time timeout. */
   def funnel(events: Dataset[Ev]): Dataset[FunnelLevel] = {
     import events.sparkSession.implicits._
@@ -151,15 +159,14 @@ object EventStream {
           else {
             var st = state.getOption.getOrElse(FunnelState(NoT, NoT, NoT))
             val before = Seq(st.t1, st.t2, st.t3).count(_ != NoT)
-            evs.toSeq.sortBy(_.ts.getTime).foreach { e =>
-              val t = e.ts.getTime
-              e.event_type match {
+            evs.map(e => (usOf(e.ts), e.event_type)).toSeq.sortBy(_._1).foreach { case (t, et) =>
+              et match {
                 case "click" if t < st.t1 => st = FunnelState(t, st.t2, st.t3)
                 case "view" if st.t1 != NoT && t > st.t1 &&
-                  t <= st.t1 + FunnelWindowMs && t < st.t2 =>
+                  t <= st.t1 + FunnelWindowUs && t < st.t2 =>
                   st = FunnelState(st.t1, t, st.t3)
                 case "purchase" if st.t2 != NoT && t > st.t2 &&
-                  t <= st.t1 + FunnelWindowMs && t < st.t3 =>
+                  t <= st.t1 + FunnelWindowUs && t < st.t3 =>
                   st = FunnelState(st.t1, st.t2, t)
                 case _ => ()
               }
@@ -170,7 +177,7 @@ object EventStream {
             // the state store by one entry per clickless user, forever.
             if (st.t1 != NoT) {
               state.update(st)
-              state.setTimeoutTimestamp(st.t1 + FunnelWindowMs)
+              state.setTimeoutTimestamp(Math.floorDiv(st.t1 + FunnelWindowUs, 1000L))
             } else if (state.exists) state.remove()
             if (after > before) Iterator.single(FunnelLevel(user, after))
             else Iterator.empty

@@ -1,54 +1,65 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CyclicBarrier, TimeUnit}
 
-import scala.jdk.CollectionConverters._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 
-/** ScenarioDirs keeps one live dir per tag: `fresh` sweeps only its own
-  * tag's previous dir. Tags carry a per-run suffix so leftovers of other
-  * runs cannot leak into the on-disk counts. */
-class ScenarioDirsSpec extends AnyFunSuite {
+/** ScenarioDirs.run: one dir per call, the result detached from it, the
+  * dir deleted before the call returns — whether the body returns or
+  * throws. */
+class ScenarioDirsSpec extends SparkSpec {
 
-  private val run = System.nanoTime()
-  private def tag(name: String) = s"sdspec_${name}_${run}_"
-
-  test("a second fresh(t) deletes the first dir") {
-    val t = tag("sweep")
-    val first = ScenarioDirs.fresh(t)
-    Files.writeString(first.resolve("f"), "x")
-    val second = ScenarioDirs.fresh(t)
-    assert(second != first && Files.isDirectory(second))
-    assert(!Files.exists(first))
+  /** A scenario body: writes `n` rows under its dir and reads them back
+    * lazily, so the result depends on the dir until it is detached. */
+  private def body(n: Long)(dir: Path): DataFrame = {
+    spark.range(0, n).write.parquet(s"$dir/t")
+    spark.read.parquet(s"$dir/t")
   }
 
-  test("fresh(t1) never touches t2's dir") {
-    val (t1, t2) = (tag("t1"), tag("t2"))
-    val other = ScenarioDirs.fresh(t2)
-    Files.writeString(other.resolve("f"), "x")
-    ScenarioDirs.fresh(t1)
-    ScenarioDirs.fresh(t1)
-    assert(Files.readString(other.resolve("f")) == "x")
-    assert(ScenarioDirs.current(t2).contains(other))
+  test("the dir is gone after run returns, and the result still collects") {
+    var seen: Path = null
+    val df = ScenarioDirs.run("sdspec_ret") { d => seen = d; body(100)(d) }
+    assert(seen != null && !Files.exists(seen), s"$seen survived the call")
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
   }
 
-  test("current(t) is the newest dir") {
-    val t = tag("current")
-    assert(ScenarioDirs.current(t).isEmpty)
-    ScenarioDirs.fresh(t)
-    val newest = ScenarioDirs.fresh(t)
-    assert(ScenarioDirs.current(t).contains(newest))
-  }
-
-  test("the live set holds one dir per tag") {
-    val tags = Seq(tag("l1"), tag("l2"))
-    for (_ <- 1 to 3; t <- tags) ScenarioDirs.fresh(t)
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    for (t <- tags) {
-      val onDisk = Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.startsWith(t)).toSeq
-      assert(onDisk == ScenarioDirs.current(t).toSeq, s"$t: $onDisk")
+  test("the dir is gone after the body throws, and the body's exception surfaces") {
+    var seen: Path = null
+    val e = intercept[IllegalStateException] {
+      ScenarioDirs.run("sdspec_throw") { d =>
+        seen = d
+        Files.writeString(d.resolve("f"), "x")
+        throw new IllegalStateException("body failed")
+      }
     }
+    assert(e.getMessage == "body failed")
+    assert(seen != null && !Files.exists(seen), s"$seen survived the failed call")
+  }
+
+  test("two concurrent runs of one tag both succeed") {
+    // both bodies wait for each other, so the two dirs are live at once
+    val both = new CyclicBarrier(2)
+    def one(n: Long) = Future {
+      ScenarioDirs.run("sdspec_conc") { d =>
+        both.await(60, TimeUnit.SECONDS)
+        body(n)(d)
+      }.collect().map(_.getLong(0)).sorted.toSeq
+    }
+    val (a, b) = (one(10), one(20))
+    assert(Await.result(a, 2.minutes) == (0L until 10L))
+    assert(Await.result(b, 2.minutes) == (0L until 20L))
+  }
+
+  test("a run costs exactly one Spark job more than its body") {
+    val bare = withTempDir("sdspec_bare")(d => jobsOf(body(1000)(Paths.get(d))))
+    val run = jobsOf(ScenarioDirs.run("sdspec_jobs")(body(1000)))
+    // the detach is the one eager checkpoint; any further materialization
+    // in run would be paid by every scenario entry
+    assert(run == bare + 1, s"run took $run jobs, its body $bare")
   }
 }

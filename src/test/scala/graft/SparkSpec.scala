@@ -31,6 +31,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
   }
 
+  /** The Spark jobs `f` starts: the listener bus is drained before and
+    * after, so the count belongs to `f` alone. */
+  def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.BusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.graftspec.BusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** `f` over a new temp dir, deleted afterwards. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    try f(d.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+  }
+
   override def afterAll(): Unit = () // shared session: never stop per-suite
 }
 

@@ -168,8 +168,6 @@ class KVDeltaStoreSpec extends SparkSpec {
   }
 
   test("appendMutation runs at most 2 Spark jobs") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val wh = java.nio.file.Files.createTempDirectory("kvdelta_jobs").toString
     val ds = new KVDeltaStore(spark, wh)
     ds.appendMutation("s", kcv((1L to 200L).map(i => (i % 20, i, i))), kcv(Nil).select("k", "c"),
@@ -178,18 +176,8 @@ class KVDeltaStoreSpec extends SparkSpec {
     // and deletions, some of cells the same batch re-adds
     val adds = kcv((1L to 300L).map(i => (i % 30, i, -i)))
     val dels = kcv((1L to 200L).filter(_ % 7 == 0).map(i => (i % 20, i, 0L))).select("k", "c")
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.graftspec.BusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      ds.appendMutation("s", adds, dels, wts = 2L)
-      org.apache.spark.graftspec.BusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 2, s"appendMutation ran ${jobs.get} jobs")
+    val jobs = jobsOf(ds.appendMutation("s", adds, dels, wts = 2L))
+    assert(jobs <= 2, s"appendMutation ran $jobs jobs")
     assert(ds.logDepth("s") == 2)
   }
 

@@ -15,12 +15,8 @@ import graft.sources.kvconnector.{KVScan, KVSegmentStore}
   * prune the store's segments at plan time. */
 class AnnPqKvSpec extends SparkSpec {
 
-  // one shared run of the entry: both tests force it, so neither depends
-  // on the other's side effects (test-filter safe)
-  private lazy val served = AnnQueries.sAnnPqKv(spark, SF)
-
   test("store-served IVFADC equals the frame-computed twin row-for-row") {
-    served.count()
+    val served = AnnQueries.sAnnPqKv(spark, SF)
     // the frame twin: identical pipeline, codes straight from the frame
     val e = AnnQueries.withNorm(Tables(spark, SF, "embeddings")).localCheckpoint()
     val cents = AnnQueries.ivfCentroids(e)
@@ -52,25 +48,28 @@ class AnnPqKvSpec extends SparkSpec {
   }
 
   test("the probed lists prune the code store's segments at plan time") {
-    // force the shared entry run, then re-issue the same IN probe
-    // directly (the entry itself localCheckpoints)
-    served.count()
-    val store = graft.ScenarioDirs.current("graft_pqkv").get.toString
-    val total = KVSegmentStore.readManifest(store).size
-    val probe = spark.read.format("graft-kv").load(store)
-      .filter(F.col("k").isin(Seq(graft.kv.KVStore.beLong(0L),
-        graft.kv.KVStore.beLong(1L), graft.kv.KVStore.beLong(2L)): _*))
-    probe.collect()
-    val kv = collectExec(probe) {
-      case b: BatchScanExec if b.scan.isInstanceOf[KVScan] =>
-        b.scan.asInstanceOf[KVScan]
-    }.head
-    assert(kv.lastPlanned < total,
-      s"list probe scheduled ${kv.lastPlanned}/$total segments — no pruning")
-    // and the values really are the 8-byte code payloads (not empty)
-    val lens = spark.read.format("graft-kv").load(store)
-      .select(F.length(F.col("v"))).distinct().collect().map(_.getInt(0)).toSeq
-    assert(lens == Seq(AnnQueries.PqM),
-      s"expected ${AnnQueries.PqM}-byte PQ codes in v, got lengths $lens")
+    // the entry's store lives only for its call: write the same code
+    // store into a dir of our own, then re-issue the entry's IN probe
+    val e = AnnQueries.withNorm(Tables(spark, SF, "embeddings")).localCheckpoint()
+    withTempDir("annspec_pqkv") { store =>
+      KVSegmentStore.write(AnnQueries.pqPostings(e, AnnQueries.ivfCentroids(e),
+        AnnQueries.pqBooks(e)), store, 8)
+      val total = KVSegmentStore.readManifest(store).size
+      val probe = spark.read.format("graft-kv").load(store)
+        .filter(F.col("k").isin(Seq(graft.kv.KVStore.beLong(0L),
+          graft.kv.KVStore.beLong(1L), graft.kv.KVStore.beLong(2L)): _*))
+      probe.collect()
+      val kv = collectExec(probe) {
+        case b: BatchScanExec if b.scan.isInstanceOf[KVScan] =>
+          b.scan.asInstanceOf[KVScan]
+      }.head
+      assert(kv.lastPlanned < total,
+        s"list probe scheduled ${kv.lastPlanned}/$total segments — no pruning")
+      // and the values really are the 8-byte code payloads (not empty)
+      val lens = spark.read.format("graft-kv").load(store)
+        .select(F.length(F.col("v"))).distinct().collect().map(_.getInt(0)).toSeq
+      assert(lens == Seq(AnnQueries.PqM),
+        s"expected ${AnnQueries.PqM}-byte PQ codes in v, got lengths $lens")
+    }
   }
 }

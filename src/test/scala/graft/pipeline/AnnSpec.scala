@@ -97,22 +97,26 @@ class AnnSpec extends SparkSpec {
       s"kv-served IVF diverged: ${got.size} vs ${frame.size} rows")
     // the probe's static IN set pruned inverted-list segments at plan
     // time (the whole point: the index read never touches the store).
-    // the entry localCheckpoints, so re-run the pruned read directly
-    val store = graft.ScenarioDirs.current("graft_ivfkv").get.toString
-    val total = KVSegmentStore.readManifest(store).size
-    // the SAME multi-key IN shape the entry issues (not a single ===):
-    // the claim is that the NProbe probed lists prune as an IN set
-    def be(v: Long): Array[Byte] = graft.kv.KVStore.beLong(v)
-    val probe = spark.read.format("graft-kv").load(store)
-      .filter(org.apache.spark.sql.functions.col("k")
-        .isin(Seq(be(0L), be(1L), be(2L)): _*))
-    probe.collect()
-    val kv = collectExec(probe) {
-      case b: BatchScanExec if b.scan.isInstanceOf[KVScan] =>
-        b.scan.asInstanceOf[KVScan]
-    }.head
-    assert(kv.lastPlanned < total,
-      s"list probe scheduled ${kv.lastPlanned}/$total segments — no pruning")
+    // the entry's store lives only for its call, so write the same
+    // postings into a dir of our own and re-run the pruned read there
+    val e = AnnQueries.withNorm(graft.Tables(spark, SF, "embeddings")).localCheckpoint()
+    withTempDir("annspec_ivfkv") { store =>
+      KVSegmentStore.write(AnnQueries.ivfPostings(e, AnnQueries.ivfCentroids(e)), store, 8)
+      val total = KVSegmentStore.readManifest(store).size
+      // the SAME multi-key IN shape the entry issues (not a single ===):
+      // the claim is that the NProbe probed lists prune as an IN set
+      def be(v: Long): Array[Byte] = graft.kv.KVStore.beLong(v)
+      val probe = spark.read.format("graft-kv").load(store)
+        .filter(org.apache.spark.sql.functions.col("k")
+          .isin(Seq(be(0L), be(1L), be(2L)): _*))
+      probe.collect()
+      val kv = collectExec(probe) {
+        case b: BatchScanExec if b.scan.isInstanceOf[KVScan] =>
+          b.scan.asInstanceOf[KVScan]
+      }.head
+      assert(kv.lastPlanned < total,
+        s"list probe scheduled ${kv.lastPlanned}/$total segments — no pruning")
+    }
   }
 
   test("ANN trio recall/scan-fraction table (one place, measured)") {

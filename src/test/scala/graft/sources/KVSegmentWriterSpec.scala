@@ -1,11 +1,9 @@
 package graft.sources.kvconnector
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 import org.scalacheck.Gen
@@ -147,20 +145,10 @@ class KVSegmentWriterSpec extends SparkSpec {
 
   test("a linear write with explicit segments runs at most 4 Spark jobs") {
     val dir = Files.createTempDirectory("graft_kvjobs").toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftspec.BusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      KVSegmentStore.write(cellsDf(20000), dir, segments = 8)
-      org.apache.spark.graftspec.BusDrain(sc)
-    } finally sc.removeSparkListener(listener)
+    val jobs = jobsOf(KVSegmentStore.write(cellsDf(20000), dir, segments = 8))
     // sample + shuffle + write; a read-back of the written files would
     // add at least one more
-    assert(jobs.get <= 4, s"${jobs.get} jobs for one write")
+    assert(jobs <= 4, s"$jobs jobs for one write")
     assert(KVSegmentStore.readManifest(dir).map(_.rows).sum == 20000)
   }
 

@@ -97,6 +97,35 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** `ts(minutes)` plus `us` microseconds. */
+  private def tsUs(minutes: Long, us: Int): Timestamp = {
+    val t = ts(minutes)
+    t.setNanos(us * 1000)
+    t
+  }
+
+  test("sessionize gaps in µs: events 30 min + 500 µs apart are two sessions") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[Ev]
+    val q = EventStream.sessionize(in.toDS())
+      .writeStream.format("memory").queryName("sess_us")
+      .outputMode(OutputMode.Append).start()
+    try {
+      // 30 min + 500 µs is past q_sessionize's gap, but the same ms
+      // distance as exactly 30 min
+      val (a, b) = (ts(0), tsUs(30, 500))
+      in.addData(Ev(1, a, "click", 1.0), Ev(1, b, "click", 2.0))
+      q.processAllAvailable()
+      in.addData(Ev(2, ts(600), "click", 1.0)); q.processAllAvailable()
+      in.addData(Ev(2, ts(1200), "click", 1.0)); q.processAllAvailable()
+      val sessions = spark.table("sess_us").as[Session].collect()
+        .filter(_.user_id == 1L)
+        .map(s => (s.start, s.end, s.n_events)).toSet
+      assert(sessions == Set((a, a, 1L), (b, b, 1L)), s"got $sessions")
+    } finally q.stop()
+  }
+
   test("streaming dedup drops repeated event_ids within the watermark") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -138,6 +167,23 @@ class StreamingSpec extends SparkSpec {
         .groupBy(_.user_id).view.mapValues(_.map(_.level).toSet).toMap
       assert(out(1L) == Set(2, 3), s"got $out")
       assert(out(2L) == Set(1), s"got $out")
+    } finally q.stop()
+  }
+
+  test("streaming funnel orders in µs: a view 0.5 ms after a click in its ms deepens it") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[Ev]
+    val q = EventStream.funnel(in.toDS())
+      .writeStream.format("memory").queryName("funnel_us")
+      .outputMode(OutputMode.Update).start()
+    try {
+      // both in the same millisecond: q_funnel's `tu > t1` holds in µs
+      in.addData(Ev(1, tsUs(0, 100), "click", 0), Ev(1, tsUs(0, 600), "view", 0))
+      q.processAllAvailable()
+      val out = spark.table("funnel_us").as[EventStream.FunnelLevel].collect()
+        .map(_.level).toSet
+      assert(out == Set(2), s"got $out")
     } finally q.stop()
   }
 
