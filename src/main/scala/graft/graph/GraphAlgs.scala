@@ -7,8 +7,10 @@ import org.apache.spark.sql.{functions => F}
   * joined with the edge list, messages aggregated by dst, state updated —
   * one shuffle per iteration, keyed on vid throughout so a vid-bucketed
   * graph never re-partitions. Every loop runs under the [[Superstep]]
-  * driver, which owns its checkpoint cadence and release; a loop states
-  * its per-round plan and, if it has one, its convergence probe — a
+  * driver, as do [[GraphQueries]]' gMis, gMatching and Louvain merge
+  * levels and [[Traversal]]'s `repeat().until()` frontier; the driver
+  * owns the checkpoint cadence and release, and a loop states its
+  * per-round plan and, if it has one, its convergence probe — a
   * driver-side count or sum over the checkpoint, not a collect of state.
   *
   * PageRank runs in scaled *integer* arithmetic (units of 1e-12): floor

@@ -777,8 +777,6 @@ object GraphQueries {
     // driver bench; Bench at sf0.1 on 4 cores, min of 3: 4.08-4.14 s
     // lazy, 3.83-3.85 s eager)
     val und = g.undirected.select("src", "dst").localCheckpoint()
-    // labelPropagation already returns a checkpointed frame — the extra
-    // eager localCheckpoint here was a pure copy job
     val labels = GraphAlgs.labelPropagation(g.vertices, und, iters = 5)
     val sTot = und.count() // S = 2m
     val within = und
@@ -1210,9 +1208,9 @@ object GraphQueries {
     * step joins only the 20 current positions against the src-keyed edge
     * list and picks the min (hash, dst) string per walk — frontier-sized
     * work per step, no |E| shuffle. */
-  def gWalks(s: SparkSession, dir: String): DataFrame = {
-    val ue = PropertyGraph(s, dir).undirected
-      .select("src", "dst").repartition(F.col("src")).localCheckpoint()
+  def gWalks(s: SparkSession, dir: String): DataFrame = Superstep.run { loop =>
+    val ue = loop.input(PropertyGraph(s, dir).undirected
+      .select("src", "dst").repartition(F.col("src")))
     var w = PropertyGraph(s, dir).vertices
       .filter(F.col("vlabel") === "supplier" && F.col("vid") <= 20L * 4 + 1)
       .select(F.col("vid").as("walk"), F.col("vid").as("cur"),
@@ -1268,9 +1266,9 @@ object GraphQueries {
     * (prev,dst) pair) and one frontier-keyed min-aggregate — never an
     * |E|-sized shuffle. The draw explode multiplies the candidate stream
     * by ≤ 4 before the map-side-combined min. */
-  def gNode2vec(s: SparkSession, dir: String): DataFrame = {
-    val ue = PropertyGraph(s, dir).undirected
-      .select("src", "dst").repartition(F.col("src")).localCheckpoint()
+  def gNode2vec(s: SparkSession, dir: String): DataFrame = Superstep.run { loop =>
+    val ue = loop.input(PropertyGraph(s, dir).undirected
+      .select("src", "dst").repartition(F.col("src")))
     val e2 = ue.select(F.col("src").as("p2"), F.col("dst").as("d2"),
       F.lit(1).as("adj"))
     var w = PropertyGraph(s, dir).vertices
@@ -1424,10 +1422,10 @@ object GraphQueries {
     * frontierless shape as pagerank, and like it the edge list is the
     * static side. Vertices without in-(out-)edges keep a = 0 (h = 0)
     * via left joins. */
-  def gHits(s: SparkSession, dir: String): DataFrame = {
+  def gHits(s: SparkSession, dir: String): DataFrame = Superstep.run { loop =>
     val g = PropertyGraph(s, dir)
-    val e = g.edges.select("src", "dst").localCheckpoint()
-    val verts = g.vertices.select("vid").localCheckpoint()
+    val e = loop.input(g.edges.select("src", "dst"))
+    val verts = loop.input(g.vertices.select("vid"))
     val d38 = "decimal(38,0)"
     var h = verts.select(F.col("vid"), F.lit(1L).cast(d38).as("h"))
     var a: DataFrame = null
@@ -1655,16 +1653,18 @@ object GraphQueries {
     * undecided set + one grouped min — linear in surviving edges, the
     * g_matching shuffle discipline. Output: (vid, r) the round each MIS
     * member joined. The oracle unrolls the identical rounds; the spec
-    * proves independence + maximality on the real graph. */
-  def gMis(s: SparkSession, dir: String): DataFrame = {
+    * proves independence + maximality on the real graph. The barriers
+    * stay per round (loop.initial): as one (v, r) state, loop.fixed was
+    * 1.8× slower at sf0.1 and loop.probed ran more jobs (CHANGES.md). */
+  def gMis(s: SparkSession, dir: String): DataFrame = Superstep.run { loop =>
     val g = PropertyGraph(s, dir)
-    val ue = g.undirected.localCheckpoint()
+    val ue = loop.input(g.undirected)
     def pri(r: Int, v: org.apache.spark.sql.Column) = F.concat(
       F.md5(F.concat_ws(":", F.lit(r), v).cast("binary")),
       F.lit(":"), v.cast("string"))
     // isolated vertices (none in this graph, but the algorithm must not
     // depend on that): they join in round 1 below via the left_anti path
-    var undec = g.vertices.select(F.col("vid").as("v")).localCheckpoint()
+    var undec = loop.initial(g.vertices.select(F.col("vid").as("v")))
     var mis: DataFrame = null
     for (r <- 1 to 3) {
       val uv = undec.select(F.col("v"), pri(r, F.col("v")).as("p"))
@@ -1673,17 +1673,16 @@ object GraphQueries {
         .join(uv.select(F.col("v").as("dst"), F.col("p").as("np")), Seq("dst"))
         .join(uv.select(F.col("v").as("src")), Seq("src"))
         .groupBy(F.col("src").as("v")).agg(F.min("np").as("mn"))
-      val winners = uv.join(nbrMin, Seq("v"), "left")
+      val winners = loop.initial(uv.join(nbrMin, Seq("v"), "left")
         .filter(F.col("mn").isNull || F.col("p") < F.col("mn"))
-        .select(F.col("v"), F.lit(r.toLong).as("r"))
-        .localCheckpoint()
+        .select(F.col("v"), F.lit(r.toLong).as("r")))
       mis = if (mis == null) winners else mis.unionByName(winners)
       if (r < 3) { // the final round's undecided set is never read
         val excluded = ue
           .join(winners.select(F.col("v").as("src")), Seq("src"))
           .select(F.col("dst").as("v"))
           .unionByName(winners.select(F.col("v"))).distinct()
-        undec = undec.join(excluded, Seq("v"), "left_anti").localCheckpoint()
+        undec = loop.initial(undec.join(excluded, Seq("v"), "left_anti"))
       }
     }
     mis.select(F.col("v").as("vid"), F.col("r"))
@@ -1727,9 +1726,9 @@ object GraphQueries {
     * neighbor-community aggregate + bounded-width joins (deg, Σtot) —
     * linear in |E|, the same shuffle shape as labelprop, scale-safe.
     * Output (vid, c1, c2) gates both rounds. */
-  def gLouvain(s: SparkSession, dir: String): DataFrame = {
+  def gLouvain(s: SparkSession, dir: String): DataFrame = Superstep.run { loop =>
     val g = PropertyGraph(s, dir)
-    val ue = g.undirected.localCheckpoint()
+    val ue = loop.input(g.undirected)
     val deg = ue.groupBy(F.col("src").as("v")).agg(F.count(F.lit(1)).as("k"))
     val m2 = ue.count() // 2m: one scalar job over the symmetric edge list
     // round 1 (singletons): best target = neighbor with min (k_j, j)
@@ -1742,14 +1741,13 @@ object GraphQueries {
       .select(F.col("v"),
         F.when(F.lit(m2) - F.col("k") * F.col("b.kj") > 0, F.col("b.dst"))
           .otherwise(F.col("v")).as("c"))
-    // checkpoints stay EAGER here on measured evidence (r16 A/B): the lazy
-    // form defers materialization into the terminal action, where AQE's
-    // concurrent stage jobs contend on the unmaterialized shared caches —
-    // same-window min-of-3 read 5.14 s eager vs 6.24 s lazy
-    val c1 = g.vertices.select(F.col("vid").as("v"))
+    // c1 and cf are loop.initial, so EAGER, on measured evidence: the
+    // lazy form defers materialization into the terminal action, where
+    // AQE's concurrent stage jobs contend on the unmaterialized shared
+    // caches — same-window min-of-3 read 5.14 s eager vs 6.24 s lazy
+    val c1 = loop.initial(g.vertices.select(F.col("vid").as("v"))
       .join(r1, Seq("v"), "left")
-      .select(F.col("v"), F.coalesce(F.col("c"), F.col("v")).as("c"))
-      .localCheckpoint()
+      .select(F.col("v"), F.coalesce(F.col("c"), F.col("v")).as("c")))
     // round 2: full gain against round-1 community masses
     val sigma = c1.join(deg, Seq("v"), "left")
       .groupBy("c").agg(F.sum(F.coalesce(F.col("k"), F.lit(0L))).as("st"))
@@ -1771,7 +1769,7 @@ object GraphQueries {
     val r2 = scored.groupBy("v")
       .agg(F.min(F.struct((-F.col("score")).as("ns"), F.col("c"))).as("p"))
       .select(F.col("v"), F.col("p.c").as("c2"))
-    val cf = c1.join(r2, Seq("v")).localCheckpoint()
+    val cf = loop.initial(c1.join(r2, Seq("v")))
     // ── MULTI-LEVEL rounds TO FIXPOINT (r10 verdict #4; single level
     // since r10, r9 verdict #6): contract the current partition into a
     // WEIGHTED quotient graph (node = community, Σtot = its weighted
@@ -1793,15 +1791,17 @@ object GraphQueries {
     // community-keyed edge contraction (the labelprop exchange) +
     // community-count-sized joins — the quotient is ≤ |V| and shrinks
     // per level, the Blondel et al. design.
+    // Each level keeps its barriers (loop.initial): loop.fixed leaves odd
+    // levels unmaterialized, which was 1.6× slower at sf0.1 or, with qe
+    // materialized, ran more jobs (CHANGES.md).
     var cur = cf.select(F.col("v"), F.col("c").as("c1"), F.col("c2"))
     for (lvl <- 3 to 2 + LouvainMergeLevels) {
       val prev = s"c${lvl - 1}"
       val next = s"c$lvl"
-      val qe = ue
+      val qe = loop.initial(ue
         .join(cur.select(F.col("v").as("src"), F.col(prev).as("qs")), Seq("src"))
         .join(cur.select(F.col("v").as("dst"), F.col(prev).as("qd")), Seq("dst"))
-        .groupBy("qs", "qd").agg(F.count(F.lit(1)).as("w"))
-        .localCheckpoint()
+        .groupBy("qs", "qd").agg(F.count(F.lit(1)).as("w")))
       val qdeg = qe.groupBy(F.col("qs").as("q")).agg(F.sum("w").as("qk"))
       // merge gain of adjacent communities (self-loops are interiors,
       // not merge candidates); w is the directed-symmetric count so the
@@ -1820,12 +1820,11 @@ object GraphQueries {
         .join(prop.select(F.col("d").as("q"), F.col("q").as("d2")), Seq("q"))
         .filter(F.col("d") === F.col("d2"))
         .select(F.col("q"), F.least(F.col("q"), F.col("d")).as("mq"))
-      cur = cur
+      cur = loop.initial(cur
         .join(mutual.withColumnRenamed("q", prev), Seq(prev), "left")
         // unmatched (or edgeless) communities keep their label
         .withColumn(next, F.coalesce(F.col("mq"), F.col(prev)))
-        .drop("mq")
-        .localCheckpoint()
+        .drop("mq"))
     }
     cur.select((F.col("v").as("vid") +:
       (1 to 2 + LouvainMergeLevels).map(i => F.col(s"c$i"))): _*)
@@ -1924,35 +1923,34 @@ object GraphQueries {
     * endpoint-keyed min aggregate plus one equi-join back to the edges —
     * linear in surviving edges, no all-pairs anywhere — and the
     * surviving-edge set shrinks monotonically, so at 100 TB each round is
-    * one bounded shuffle and the tail rounds are near-free. */
-  def gMatching(s: SparkSession, dir: String): DataFrame = {
-    var edges = PropertyGraph(s, dir).undirected
+    * one bounded shuffle and the tail rounds are near-free. The barriers
+    * stay per round (loop.initial): as one (a, b, pri, r) state, loop.fixed
+    * was 2× slower at sf0.1 and loop.probed ran more jobs (CHANGES.md). */
+  def gMatching(s: SparkSession, dir: String): DataFrame = Superstep.run { loop =>
+    var edges = loop.initial(PropertyGraph(s, dir).undirected
       .filter(F.col("src") < F.col("dst"))
       .select(F.col("src").as("a"), F.col("dst").as("b"))
       .withColumn("pri", F.concat(
         F.md5(F.concat_ws(":", F.col("a"), F.col("b")).cast("binary")),
         F.lit(":"), F.col("a").cast("string"),
-        F.lit(":"), F.col("b").cast("string")))
-      .localCheckpoint()
+        F.lit(":"), F.col("b").cast("string"))))
     var matched: DataFrame = null
     for (r <- 1 to 3) {
       val mins = edges.select(F.col("a").as("v"), F.col("pri"))
         .unionByName(edges.select(F.col("b").as("v"), F.col("pri")))
         .groupBy("v").agg(F.min("pri").as("mp"))
-      val mt = edges
+      val mt = loop.initial(edges
         .join(mins.select(F.col("v").as("a"), F.col("mp").as("ma")), Seq("a"))
         .join(mins.select(F.col("v").as("b"), F.col("mp").as("mb")), Seq("b"))
         .filter(F.col("pri") === F.col("ma") && F.col("pri") === F.col("mb"))
-        .select(F.col("a"), F.col("b"), F.lit(r.toLong).as("r"))
-        .localCheckpoint()
+        .select(F.col("a"), F.col("b"), F.lit(r.toLong).as("r")))
       matched = if (matched == null) mt else matched.unionByName(mt)
       if (r < 3) { // the final round's survivor set is never read
         val mv = mt.select(F.col("a").as("v"))
           .unionByName(mt.select(F.col("b").as("v"))).distinct()
-        edges = edges
+        edges = loop.initial(edges
           .join(mv.select(F.col("v").as("a")), Seq("a"), "left_anti")
-          .join(mv.select(F.col("v").as("b")), Seq("b"), "left_anti")
-          .localCheckpoint()
+          .join(mv.select(F.col("v").as("b")), Seq("b"), "left_anti"))
       }
     }
     matched

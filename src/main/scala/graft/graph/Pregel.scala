@@ -5,9 +5,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.{functions => F}
 
-/** The superstep driver: every iterative loop of [[GraphAlgs]] and
-  * [[Pregel.minPropagate]] runs through it, so an algorithm states only
-  * its per-round plan and, if it has one, its convergence probe.
+/** The superstep driver: every iterative loop of [[GraphAlgs]],
+  * [[Pregel.minPropagate]], the [[GraphQueries]] loops (gMis, gMatching,
+  * gLouvain's merge levels; gHits, gWalks and gNode2vec for their inputs)
+  * and [[Traversal]]'s `repeat().until()` runs through it, so an algorithm
+  * states only its per-round plan and, if it has one, its convergence
+  * probe.
   *
   * `localCheckpoint` truncates lineage (without it the plan doubles per
   * round and Catalyst analysis dominates). A loop without a probe
@@ -39,7 +42,8 @@ private[graph] final class Superstep private () {
     * eagerly and kept for every round. */
   def input(df: DataFrame): DataFrame = keep(own(df.localCheckpoint()))
 
-  /** A loop's first state, checkpointed eagerly; released once superseded. */
+  /** A loop's first state, or a barrier a hand-written loop places
+    * itself, checkpointed eagerly; released once no live frame reads it. */
   def initial(df: DataFrame): DataFrame = own(df.localCheckpoint())
 
   /** `rounds` applications of `round`, with no probe. */

@@ -607,74 +607,66 @@ final class Traversal private (
     case BothStep(ls) => symmetrized(ls)
   }
 
-  /** repeat(h).until(has(key, p)) — see [[Traversal.Repeat.until]].
-    * Frontier loop: `reached` guards against revisits (BFS set
-    * semantics), `frontier` holds the vertices still expanding, matched
-    * vertices leave the frontier the round they are reached. Every
-    * round's new-vertex set is checkpointed so the plan depth stays one
-    * join per level (the GraphAlgs discipline); the edge frame is
-    * src-partitioned once and reused so each round exchanges only the
-    * frontier side. */
-  private[graph] def untilFrontier(h: HopStep, key: String, p: P): DataFrame = {
-    val t = flushed
-    val srcName = if (t.onVertices) "vid" else t.curCol
-    val edges = stepEdges(h).repartition(F.col("src")).localCheckpoint(true)
-    // the stop predicate evaluated ONCE per vertex, joined per round
-    val marked = g.vertices
-      .select(F.col("vid"), p(F.col(key)).as("__m")).localCheckpoint(true)
-    val sources = t.frame.select(F.col(srcName).as("vid")).distinct()
-      .localCheckpoint(true)
-    var reached = sources
-    var frontier = reached // do-while: sources expand even when matched
-    var matched = reached.limit(0)
-    while (!frontier.isEmpty) {
-      val nxt = edges
-        .join(frontier.select(F.col("vid").as("src")), "src")
-        .select(F.col("dst").as("vid")).distinct()
-        .join(reached, Seq("vid"), "left_anti")
-        .join(marked, "vid")
-        .localCheckpoint(true)
-      matched = matched.unionAll(nxt.filter(F.col("__m")).select("vid"))
-      frontier = nxt.filter(!F.col("__m")).select("vid")
-      reached = reached.unionAll(nxt.select("vid")).localCheckpoint(true)
+  /** repeat(h).until(has(key, p)) — see [[Traversal.Repeat.until]]: a
+    * frontier BFS on [[Superstep.probed]] over one reached frame (vid,
+    * __m = the stop predicate, st = frontier / expanded / matched) that
+    * guards against revisits. Each round's probe counts the frontier,
+    * filling the round's checkpoint in the same job; the edge frame is
+    * src-partitioned once so each round exchanges only the frontier. */
+  private[graph] def untilFrontier(h: HopStep, key: String, p: P): DataFrame =
+    Superstep.run { loop =>
+      val t = flushed
+      val srcName = if (t.onVertices) "vid" else t.curCol
+      val edges = loop.input(stepEdges(h).repartition(F.col("src")))
+      // the stop predicate evaluated ONCE per vertex, joined per round
+      val marked = loop.input(g.vertices.select(F.col("vid"), p(F.col(key)).as("__m")))
+      val (frontier, expanded, matched) = (0, 1, 2)
+      val st = F.col("st")
+      // do-while: sources expand even when matched
+      val sources = loop.initial(t.frame.select(F.col(srcName).as("vid")).distinct()
+        .join(marked, Seq("vid"), "left").withColumn("st", F.lit(frontier)))
+      val reached = loop.probed(sources, Int.MaxValue) { (r, _) =>
+        val nxt = edges
+          .join(r.filter(st === frontier).select(F.col("vid").as("src")), "src")
+          .select(F.col("dst").as("vid")).distinct()
+          .join(r, Seq("vid"), "left_anti")
+          .join(marked, "vid")
+        r.withColumn("st", F.when(st === frontier, expanded).otherwise(st))
+          // a vertex whose predicate is null neither matches nor expands
+          .unionByName(nxt.withColumn("st", F.when(F.col("__m"), matched)
+            .when(!F.col("__m"), frontier).otherwise(expanded)))
+      } { (_, ckpt) => (ckpt, ckpt.filter(st === frontier).count() == 0L) }
+      val hits = reached.filter(st === matched).select("vid")
+      // Gremlin checks until() ON ARRIVAL, so a traverser stepping onto a
+      // SOURCE emits it — but the pre-seeded `reached` guard (which stops
+      // re-EXPANSION) also kept sources out of the matched set. Recover
+      // them: a source is re-reached iff some expanded (non-matched)
+      // vertex points at it. Only a source is expanded with `__m` set, so
+      // the common case — no source can match, e.g. g_dsl_until's regions
+      // vs a customer predicate — pays one filter and no edge pass.
+      // Oracle caveat (documented, not semantic): a recursive-CTE oracle
+      // seeding sources into its result emits a matching source even when
+      // NO traverser re-reaches it — pair such oracles with
+      // predicate-free or re-reachable sources.
+      val srcMatched = reached.filter(st === expanded && F.col("__m")).select("vid")
+      if (srcMatched.isEmpty) hits
+      else {
+        // the re-reach rule below is exact for the traversal itself, but a
+        // recursive-CTE oracle that SEEDS sources into its result set
+        // diverges when a matching source is never re-reached — surface
+        // the risky precondition instead of leaving it a doc-only caveat
+        // (r13 advice #5)
+        Traversal.logger.warn(
+          "repeat().until(): source vertices match the stop predicate; " +
+            "sources are emitted only when RE-REACHED — pair any oracle with " +
+            "the re-reach rule, not a source-seeding recursive CTE")
+        val reMatched = edges
+          .join(srcMatched.select(F.col("vid").as("dst")), "dst")
+          .join(reached.filter(st =!= matched).select(F.col("vid").as("src")), "src")
+          .select(F.col("dst").as("vid")).distinct()
+        hits.unionAll(reMatched)
+      }
     }
-    // Gremlin checks until() ON ARRIVAL, so a traverser stepping onto a
-    // SOURCE emits it like any other vertex — but the pre-seeded `reached`
-    // guard (which correctly stops re-EXPANSION: sources already expanded
-    // in round 1) also kept sources out of `matched` (r12 advice #1).
-    // Recover them here: a source is re-reached iff some expanded
-    // (non-matched) vertex points at it. Gated on the (usually empty)
-    // matching-source set FIRST, so the common case — no source can
-    // match, e.g. g_dsl_until's regions vs a customer predicate — pays
-    // one source-sized join and no edge pass; only when sources CAN
-    // match does the dst-restricted edge semi-join run (r13 review #2).
-    // Remaining oracle caveat (documented, not semantic): a
-    // recursive-CTE oracle seeding sources into its result set emits a
-    // matching source even when NO traverser re-reaches it — pair such
-    // oracles with predicate-free sources (g_dsl_until's regions can
-    // never be customers) or re-reachable ones.
-    val srcMatched = sources
-      .join(marked.filter(F.col("__m")).select("vid"), "vid")
-      .localCheckpoint(true)
-    if (srcMatched.isEmpty) matched
-    else {
-      // the re-reach rule below is exact for the traversal itself, but a
-      // recursive-CTE oracle that SEEDS sources into its result set
-      // diverges when a matching source is never re-reached — surface
-      // the risky precondition instead of leaving it a doc-only caveat
-      // (r13 advice #5)
-      Traversal.logger.warn(
-        "repeat().until(): source vertices match the stop predicate; " +
-          "sources are emitted only when RE-REACHED — pair any oracle with " +
-          "the re-reach rule, not a source-seeding recursive CTE")
-      val expanded = reached.join(matched, Seq("vid"), "left_anti")
-      val reMatched = edges
-        .join(srcMatched.select(F.col("vid").as("dst")), "dst")
-        .join(expanded.select(F.col("vid").as("src")), "src")
-        .select(F.col("dst").as("vid")).distinct()
-      matched.unionAll(reMatched)
-    }
-  }
 
   /** A branch result projected onto this traversal's chain + ONE new
     * vertex column `v<depth+1>` (the shared shape union/coalesce merge

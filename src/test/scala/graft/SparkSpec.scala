@@ -55,7 +55,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try f(d.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
   }
 
-  override def afterAll(): Unit = () // shared session: never stop per-suite
+  private val suiteDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A new temp dir deleted when the suite ends: for a fixture the
+    * suite's tests share (a lazy val), which [[withTempDir]] cannot scope. */
+  def suiteTempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    suiteDirs.add(d)
+    d.toString
+  }
+
+  // the session is shared: never stop it per suite
+  override def afterAll(): Unit =
+    suiteDirs.forEach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
 }
 
 object SparkSpec {

@@ -389,25 +389,17 @@ class GraphSpec extends SparkSpec {
     * (the result's checkpoints plus the lineage of any not yet
     * materialized, which is what a checkpoint still depends on). */
   private def jobsAndLeftovers(call: => DataFrame): (Int, Seq[Int]) = {
-    import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.LogicalRDD
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.graftspec.BusDrain(sc)
-    val before = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    val res = try { val r = call; org.apache.spark.graftspec.BusDrain(sc); r }
-      finally sc.removeSparkListener(listener)
+    var res: DataFrame = null
+    var before = Set.empty[Int]
+    val jobs = jobsOf { before = sc.getPersistentRDDs.keySet.toSet; res = call }
     val read = scala.collection.mutable.Set.empty[Int]
     def walk(r: RDD[_]): Unit = if (read.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
     res.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRDD => l.rdd }
       .foreach(walk)
-    (jobs.get, (sc.getPersistentRDDs.keySet -- before -- read).toSeq.sorted)
+    (jobs, (sc.getPersistentRDDs.keySet -- before -- read).toSeq.sorted)
   }
 
   test("every superstep loop stays within its job budget and keeps only checkpoints its result reads") {
@@ -433,7 +425,18 @@ class GraphSpec extends SparkSpec {
       ("landmarkCentrality", 17, () => GraphAlgs.landmarkCentrality(verts, undirected, lm)),
       ("stressCentrality", 22, () => GraphAlgs.stressCentrality(verts, undirected, 1L)),
       ("shortestPathTree", 16, () => GraphAlgs.shortestPathTree(verts, undirected, 1L)),
-      ("scc", 63, () => GraphAlgs.scc(dv, de)))
+      ("scc", 63, () => GraphAlgs.scc(dv, de)),
+      // the GraphQueries loops and repeat().until() on sf0.001: jobs per
+      // call measured while each placed its own checkpoints, the most of
+      // eight runs (AQE's concurrent stage submission varies gLouvain's
+      // count over 80-83 and gMatching's over 15-16 between runs)
+      ("gMis", 36, () => GraphQueries.gMis(spark, SF)),
+      ("gMatching", 16, () => GraphQueries.gMatching(spark, SF)),
+      ("gLouvain", 83, () => GraphQueries.gLouvain(spark, SF)),
+      ("gHits", 3, () => GraphQueries.gHits(spark, SF)),
+      ("gWalks", 4, () => GraphQueries.gWalks(spark, SF)),
+      ("gNode2vec", 4, () => GraphQueries.gNode2vec(spark, SF)),
+      ("gDslUntil", 32, () => GraphQueries.gDslUntil(spark, SF)))
     val faults = loops.flatMap { case (name, budget, call) =>
       val (jobs, leftovers) = jobsAndLeftovers(call())
       info(s"$name: $jobs jobs, leftover RDDs ${leftovers.mkString("[", ",", "]")}")

@@ -127,30 +127,31 @@ class KVDslVciSpec extends SparkSpec {
 
   test("the routed DSL step reads ONLY the vci family and prunes segments") {
     import graft.kv.KVStore.{decLong, encLong}
-    val seg = java.nio.file.Files.createTempDirectory("graft_dslvcispec").toString
-    graft.sources.kvconnector.KVSegmentStore.write(
-      KVGraphQueries.dualAdjacency(spark, SF), seg, 16)
-    val g = KVGraphQueries.kvBackedGraphDual(spark, SF, seg)
-    // in_nation exists at every SF (unlike peer); bound = every w.
-    // The BUILDING predicate keeps the frontier selective AFTER constant
-    // folding (hasLabel alone folds away), licensing the runtime filter.
-    def q(t: Traversal) = t
-      .hasLabel("customer").has("mktsegment", "BUILDING").as("a")
-      .outE("in_nation").has("w", Traversal.P.lte(5L)).value("w", "w_e")
-      .inV().as("b")
-      .select("a", "b", "w_e").df
-    val hop = q(Traversal.V(g))
-    val rows = hop.collect()
-    assert(rows.nonEmpty)
-    val frame = q(Traversal.V(spark, SF)).collect()
-    assert(rows.map(_.toString).sorted.toSeq == frame.map(_.toString).sorted.toSeq)
-    // the scan under the routed step got the frontier's runtime key
-    // filter (the dual layout keeps the store key on the index frame)
-    val scans = collectExec(hop) {
-      case bs: BatchScanExec if bs.scan.isInstanceOf[KVScan] => bs
+    withTempDir("graft_dslvcispec") { seg =>
+      graft.sources.kvconnector.KVSegmentStore.write(
+        KVGraphQueries.dualAdjacency(spark, SF), seg, 16)
+      val g = KVGraphQueries.kvBackedGraphDual(spark, SF, seg)
+      // in_nation exists at every SF (unlike peer); bound = every w.
+      // The BUILDING predicate keeps the frontier selective AFTER constant
+      // folding (hasLabel alone folds away), licensing the runtime filter.
+      def q(t: Traversal) = t
+        .hasLabel("customer").has("mktsegment", "BUILDING").as("a")
+        .outE("in_nation").has("w", Traversal.P.lte(5L)).value("w", "w_e")
+        .inV().as("b")
+        .select("a", "b", "w_e").df
+      val hop = q(Traversal.V(g))
+      val rows = hop.collect()
+      assert(rows.nonEmpty)
+      val frame = q(Traversal.V(spark, SF)).collect()
+      assert(rows.map(_.toString).sorted.toSeq == frame.map(_.toString).sorted.toSeq)
+      // the scan under the routed step got the frontier's runtime key
+      // filter (the dual layout keeps the store key on the index frame)
+      val scans = collectExec(hop) {
+        case bs: BatchScanExec if bs.scan.isInstanceOf[KVScan] => bs
+      }
+      assert(scans.size == 1)
+      assert(scans.head.runtimeFilters.nonEmpty,
+        s"routed DSL step handed no runtime key filter:\n${hop.queryExecution.executedPlan}")
     }
-    assert(scans.size == 1)
-    assert(scans.head.runtimeFilters.nonEmpty,
-      s"routed DSL step handed no runtime key filter:\n${hop.queryExecution.executedPlan}")
   }
 }

@@ -35,21 +35,23 @@ class KVFamilySplitSpec extends SparkSpec {
   }
 
   test("a property slice drops segments on the family-ranged store only") {
-    val mixed = java.nio.file.Files.createTempDirectory("graft_splm").toString
-    val famed = java.nio.file.Files.createTempDirectory("graft_splf").toString
-    KVSegmentStore.write(vertexCells, mixed, 16)
-    KVSegmentStore.write(vertexCells, famed, 16, "familyranged")
-    val (mixedPlanned, mixedTotal) = slicePlanned(mixed)
-    val (famPlanned, famTotal) = slicePlanned(famed)
-    // mixed store: every vertex writes all its cells, so every segment's
-    // c zone map spans the whole family — the slice CANNOT drop segments
-    assert(mixedPlanned == mixedTotal,
-      s"mixed store unexpectedly pruned: $mixedPlanned/$mixedTotal")
-    // family-ranged store: 4 qualifier values across 16 segments — the
-    // one-property slice must drop the other properties' segments
-    assert(famPlanned < famTotal,
-      s"family-ranged store pruned nothing: $famPlanned/$famTotal")
-    assert(famPlanned >= 1)
+    withTempDir("graft_splm") { mixed =>
+      withTempDir("graft_splf") { famed =>
+        KVSegmentStore.write(vertexCells, mixed, 16)
+        KVSegmentStore.write(vertexCells, famed, 16, "familyranged")
+        val (mixedPlanned, mixedTotal) = slicePlanned(mixed)
+        val (famPlanned, famTotal) = slicePlanned(famed)
+        // mixed store: every vertex writes all its cells, so every segment's
+        // c zone map spans the whole family — the slice CANNOT drop segments
+        assert(mixedPlanned == mixedTotal,
+          s"mixed store unexpectedly pruned: $mixedPlanned/$mixedTotal")
+        // family-ranged store: 4 qualifier values across 16 segments — the
+        // one-property slice must drop the other properties' segments
+        assert(famPlanned < famTotal,
+          s"family-ranged store pruned nothing: $famPlanned/$famTotal")
+        assert(famPlanned >= 1)
+      }
+    }
   }
 
   test("g_kv_vprops_split equals g_kv_vprops row-for-row") {
@@ -66,21 +68,22 @@ class KVFamilySplitSpec extends SparkSpec {
     // — its scan plans exclusively edgestore segments (input_file_name
     // is not populated by DSv2 custom readers, so the assertion reads
     // the scan's own description and the stores' manifests)
-    val wh = java.nio.file.Files.createTempDirectory("graft_splwh").toString
-    val mgr = new graft.kv.KVStoreManager(spark, wh)
-    mgr.writeSegmentStore("edgestore", KVGraphQueries.adjacency(spark, SF), 8)
-    mgr.writeSegmentStore("vertexprops", vertexCells, 8, familyRanged = true)
-    val edges = mgr.openSegmentStore("edgestore")
-    edges.collect()
-    val descs = collectExec(edges) {
-      case b: BatchScanExec if b.scan.isInstanceOf[KVScan] => b.scan.description()
+    withTempDir("graft_splwh") { wh =>
+      val mgr = new graft.kv.KVStoreManager(spark, wh)
+      mgr.writeSegmentStore("edgestore", KVGraphQueries.adjacency(spark, SF), 8)
+      mgr.writeSegmentStore("vertexprops", vertexCells, 8, familyRanged = true)
+      val edges = mgr.openSegmentStore("edgestore")
+      edges.collect()
+      val descs = collectExec(edges) {
+        case b: BatchScanExec if b.scan.isInstanceOf[KVScan] => b.scan.description()
+      }
+      assert(descs.size == 1 && descs.head.contains("edgestore") &&
+        !descs.head.contains("vertexprops"))
+      // and both named manifests exist independently
+      assert(KVSegmentStore.readManifest(s"$wh/edgestore").nonEmpty)
+      assert(KVSegmentStore.readManifest(s"$wh/vertexprops").nonEmpty)
+      assert(KVSegmentStore.readManifest(s"$wh/edgestore")
+        .forall(_.file.contains("edgestore")))
     }
-    assert(descs.size == 1 && descs.head.contains("edgestore") &&
-      !descs.head.contains("vertexprops"))
-    // and both named manifests exist independently
-    assert(KVSegmentStore.readManifest(s"$wh/edgestore").nonEmpty)
-    assert(KVSegmentStore.readManifest(s"$wh/vertexprops").nonEmpty)
-    assert(KVSegmentStore.readManifest(s"$wh/edgestore")
-      .forall(_.file.contains("edgestore")))
   }
 }

@@ -14,25 +14,26 @@ class KVFullGraphSpec extends SparkSpec {
 
   test("storeVertices round-trips the vertex frame exactly") {
     val g = PropertyGraph(spark, SF)
-    val seg = java.nio.file.Files.createTempDirectory("graft_fullvspec").toString
-    KVSegmentStore.write(
-      KVGraphMutations.vertexAdditions(g.vertices)
-        .unionByName(KVGraphMutations.vertexPropAdditions(g.vertices)),
-      seg, 8)
-    val decoded = KVGraphQueries.storeVertices(
-      spark.read.format("graft-kv").load(seg))
-    assert(decoded.columns.toSeq == g.vertices.columns.toSeq)
-    // acctbal goes through dec2 string bytes: compare the frame side
-    // through the same 2-decimal door (acctbal carries 2 decimals in the
-    // data, so this is exact, not lossy — the oracle gate proves it too)
-    def canon(df: org.apache.spark.sql.DataFrame) = df.select(
-      F.col("vid"), F.col("vlabel"), F.col("name"),
-      graft.Tables.dec2(F.col("acctbal")).cast("string").as("bal"),
-      F.col("mktsegment"))
-      .collect().map(_.toString).sorted.toSeq
-    val a = canon(decoded)
-    val b = canon(g.vertices)
-    assert(a == b && a.nonEmpty)
+    withTempDir("graft_fullvspec") { seg =>
+      KVSegmentStore.write(
+        KVGraphMutations.vertexAdditions(g.vertices)
+          .unionByName(KVGraphMutations.vertexPropAdditions(g.vertices)),
+        seg, 8)
+      val decoded = KVGraphQueries.storeVertices(
+        spark.read.format("graft-kv").load(seg))
+      assert(decoded.columns.toSeq == g.vertices.columns.toSeq)
+      // acctbal goes through dec2 string bytes: compare the frame side
+      // through the same 2-decimal door (acctbal carries 2 decimals in the
+      // data, so this is exact, not lossy — the oracle gate proves it too)
+      def canon(df: org.apache.spark.sql.DataFrame) = df.select(
+        F.col("vid"), F.col("vlabel"), F.col("name"),
+        graft.Tables.dec2(F.col("acctbal")).cast("string").as("bal"),
+        F.col("mktsegment"))
+        .collect().map(_.toString).sorted.toSeq
+      val a = canon(decoded)
+      val b = canon(g.vertices)
+      assert(a == b && a.nonEmpty)
+    }
   }
 
   test("g_kv_full_graph equals the frame one-hop and scans only the store") {
@@ -45,28 +46,29 @@ class KVFullGraphSpec extends SparkSpec {
   }
 
   test("the full-graph traversal plan reads no frame table") {
-    val seg = java.nio.file.Files.createTempDirectory("graft_fullpspec").toString
-    val g0 = PropertyGraph(spark, SF)
-    KVSegmentStore.write(
-      KVGraphMutations.vertexAdditions(g0.vertices)
-        .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices))
-        .unionByName(KVGraphMutations.edgeAdditions(g0.edges)),
-      seg, 8)
-    val g = KVGraphQueries.kvBackedGraph(spark, SF, seg)
-      .copy(vertices = KVGraphQueries.storeVertices(
-        spark.read.format("graft-kv").load(seg)))
-    val hop = Traversal.V(g)
-      .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
-      .out("in_nation").value("name", "n_name")
-      .select("c_vid", "n_name").df
-    hop.collect()
-    val scans = collectExec(hop) { case b: BatchScanExec => b }
-    assert(scans.nonEmpty && scans.forall(_.scan.isInstanceOf[KVScan]),
-      s"non-store scan in the fully-resident plan:\n${hop.queryExecution.executedPlan}")
-    // no parquet FileScan of the testdata tables anywhere
-    val asText = hop.queryExecution.executedPlan.toString
-    assert(!asText.contains("customer.parquet") && !asText.contains("nation.parquet"),
-      "frame table leaked into the fully-resident plan")
+    withTempDir("graft_fullpspec") { seg =>
+      val g0 = PropertyGraph(spark, SF)
+      KVSegmentStore.write(
+        KVGraphMutations.vertexAdditions(g0.vertices)
+          .unionByName(KVGraphMutations.vertexPropAdditions(g0.vertices))
+          .unionByName(KVGraphMutations.edgeAdditions(g0.edges)),
+        seg, 8)
+      val g = KVGraphQueries.kvBackedGraph(spark, SF, seg)
+        .copy(vertices = KVGraphQueries.storeVertices(
+          spark.read.format("graft-kv").load(seg)))
+      val hop = Traversal.V(g)
+        .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
+        .out("in_nation").value("name", "n_name")
+        .select("c_vid", "n_name").df
+      hop.collect()
+      val scans = collectExec(hop) { case b: BatchScanExec => b }
+      assert(scans.nonEmpty && scans.forall(_.scan.isInstanceOf[KVScan]),
+        s"non-store scan in the fully-resident plan:\n${hop.queryExecution.executedPlan}")
+      // no parquet FileScan of the testdata tables anywhere
+      val asText = hop.queryExecution.executedPlan.toString
+      assert(!asText.contains("customer.parquet") && !asText.contains("nation.parquet"),
+        "frame table leaked into the fully-resident plan")
+    }
   }
 
   test("g_kv_dsl_full equals its SQL shape on the frame graph (sf0.01)") {
@@ -132,51 +134,54 @@ class KVFullGraphSpec extends SparkSpec {
     val mutated = graft.kv.KVStore.mutate(cells,
       cells.limit(0),
       KVGraphMutations.vertexDeletions(victim, g0.edges))
-    val seg = java.nio.file.Files.createTempDirectory("graft_ghostspec").toString
-    KVSegmentStore.write(mutated, seg, 8)
-    val g = KVGraphQueries.kvBackedGraphFull(spark, SF, seg)
-    val vid = victim.collect()(0).getLong(0)
-    // primary path: no out-edges of the victim
-    val primary = Traversal.V(g).has("vid", Traversal.P.is(vid))
-      .outE("in_nation").inV().as("n").select("n").df.collect()
-    // index-routed path: also none (the VCI tombstones did their job)
-    val routed = Traversal.V(g).has("vid", Traversal.P.is(vid))
-      .outE("in_nation").has("w", Traversal.P.lte(5L)).inV().as("n")
-      .select("n").df.collect()
-    assert(primary.isEmpty && routed.isEmpty)
-    // and the victim's vertex row itself is gone
-    assert(g.vertices.filter(F.col("vid") === vid).count() == 0)
+    withTempDir("graft_ghostspec") { seg =>
+      KVSegmentStore.write(mutated, seg, 8)
+      val g = KVGraphQueries.kvBackedGraphFull(spark, SF, seg)
+      val vid = victim.collect()(0).getLong(0)
+      // primary path: no out-edges of the victim
+      val primary = Traversal.V(g).has("vid", Traversal.P.is(vid))
+        .outE("in_nation").inV().as("n").select("n").df.collect()
+      // index-routed path: also none (the VCI tombstones did their job)
+      val routed = Traversal.V(g).has("vid", Traversal.P.is(vid))
+        .outE("in_nation").has("w", Traversal.P.lte(5L)).inV().as("n")
+        .select("n").df.collect()
+      assert(primary.isEmpty && routed.isEmpty)
+      // and the victim's vertex row itself is gone
+      assert(g.vertices.filter(F.col("vid") === vid).count() == 0)
+    }
   }
 
   test("family-aware mutateLog keeps a dual-adjacency store consistent") {
     val g0 = PropertyGraph(spark, SF)
     val e = g0.edges
-    val wh = java.nio.file.Files.createTempDirectory("graft_fammut").toString
-    val ds = new graft.kv.KVDeltaStore(spark, wh)
-    // base: dual store (primary + mirror) of the in_region edges
-    KVGraphMutations.mutateLog(ds, "g", g0.vertices.limit(0),
-      addE = e.filter(F.col("elabel") === "in_region"),
-      dropE = e.limit(0), wts = 1000L, mirror = true)
-    // mutation: drop one edge, add one in_nation edge — BOTH families
-    val doomed = e.filter(F.col("elabel") === "in_region")
-      .orderBy("src", "dst").limit(1).localCheckpoint(true)
-    val added = e.filter(F.col("elabel") === "in_nation")
-      .orderBy("src", "dst").limit(1).localCheckpoint(true)
-    KVGraphMutations.mutateLog(ds, "g", g0.vertices.limit(0),
-      addE = added, dropE = doomed, wts = 2000L, mirror = true)
-    val seg = java.nio.file.Files.createTempDirectory("graft_fammutseg").toString
-    KVSegmentStore.write(ds.openDatabase("g"), seg, 4)
-    val g = KVGraphQueries.kvBackedGraphBoth(spark, SF, seg)
-    // the forward view and the mirror view must agree edge-for-edge
-    val fwd = g.edges.select("src", "dst", "elabel", "w")
-      .collect().map(_.toString).sorted.toSeq
-    val rev = g.revEdges.get.select("src", "dst", "elabel", "w")
-      .collect().map(_.toString).sorted.toSeq
-    assert(fwd == rev && fwd.nonEmpty)
-    // and the mutation is visible in both: doomed gone, added present
-    val doomedRow = doomed.collect()(0)
-    assert(!fwd.exists(_.contains(s"[${doomedRow.getLong(0)},${doomedRow.getLong(1)},in_region")))
-    assert(fwd.exists(_.contains("in_nation")))
+    withTempDir("graft_fammut") { wh =>
+      val ds = new graft.kv.KVDeltaStore(spark, wh)
+      // base: dual store (primary + mirror) of the in_region edges
+      KVGraphMutations.mutateLog(ds, "g", g0.vertices.limit(0),
+        addE = e.filter(F.col("elabel") === "in_region"),
+        dropE = e.limit(0), wts = 1000L, mirror = true)
+      // mutation: drop one edge, add one in_nation edge — BOTH families
+      val doomed = e.filter(F.col("elabel") === "in_region")
+        .orderBy("src", "dst").limit(1).localCheckpoint(true)
+      val added = e.filter(F.col("elabel") === "in_nation")
+        .orderBy("src", "dst").limit(1).localCheckpoint(true)
+      KVGraphMutations.mutateLog(ds, "g", g0.vertices.limit(0),
+        addE = added, dropE = doomed, wts = 2000L, mirror = true)
+      withTempDir("graft_fammutseg") { seg =>
+        KVSegmentStore.write(ds.openDatabase("g"), seg, 4)
+        val g = KVGraphQueries.kvBackedGraphBoth(spark, SF, seg)
+        // the forward view and the mirror view must agree edge-for-edge
+        val fwd = g.edges.select("src", "dst", "elabel", "w")
+          .collect().map(_.toString).sorted.toSeq
+        val rev = g.revEdges.get.select("src", "dst", "elabel", "w")
+          .collect().map(_.toString).sorted.toSeq
+        assert(fwd == rev && fwd.nonEmpty)
+        // and the mutation is visible in both: doomed gone, added present
+        val doomedRow = doomed.collect()(0)
+        assert(!fwd.exists(_.contains(s"[${doomedRow.getLong(0)},${doomedRow.getLong(1)},in_region")))
+        assert(fwd.exists(_.contains("in_nation")))
+      }
+    }
   }
 
   test("g_kv_dsl_dropv invariants hold at sf0.001") {

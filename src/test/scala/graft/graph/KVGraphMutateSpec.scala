@@ -41,34 +41,36 @@ class KVGraphMutateSpec extends SparkSpec {
       .unionByName(KVGraphMutations.edgeAdditions(baseE))
     val snap = KVGraphMutations.mutateSnapshot(baseStore, addV, addE, dropE)
     // log path: same two batches through a KVDeltaStore
-    val wh = java.nio.file.Files.createTempDirectory("graft_kvgmutspec")
-    val ds = new KVDeltaStore(spark, wh.toString)
-    KVGraphMutations.mutateLog(ds, "g", baseV, baseE, e.limit(0), wts = 1000L)
-    KVGraphMutations.mutateLog(ds, "g", addV, addE, dropE, wts = 2000L)
-    val log = ds.openDatabase("g")
-    val a = cells(snap)
-    val b = cells(log)
-    assert(a.nonEmpty && a == b,
-      s"snapshot ${a.size} cells vs log ${b.size}")
+    withTempDir("graft_kvgmutspec") { wh =>
+      val ds = new KVDeltaStore(spark, wh)
+      KVGraphMutations.mutateLog(ds, "g", baseV, baseE, e.limit(0), wts = 1000L)
+      KVGraphMutations.mutateLog(ds, "g", addV, addE, dropE, wts = 2000L)
+      val log = ds.openDatabase("g")
+      val a = cells(snap)
+      val b = cells(log)
+      assert(a.nonEmpty && a == b,
+        s"snapshot ${a.size} cells vs log ${b.size}")
+    }
   }
 
   test("a same-batch delete + re-add of one edge keeps the addition (upsert order)") {
     val (_, e, baseV, baseE, _, _, _) = scenario()
-    val wh = java.nio.file.Files.createTempDirectory("graft_kvgmutspec2")
-    val ds = new KVDeltaStore(spark, wh.toString)
-    KVGraphMutations.mutateLog(ds, "g", baseV, baseE, e.limit(0), wts = 1000L)
-    // one in_region edge (present at every SF — sf0.001 has no peer
-    // edges), deleted AND re-added (new w) in the same batch
-    val one = e.filter(F.col("elabel") === "in_region")
-      .orderBy("src", "dst").limit(1)
-      .localCheckpoint(true)
-    KVGraphMutations.mutateLog(ds, "g", baseV.limit(0),
-      addE = one.withColumn("w", F.lit(7L)), dropE = one, wts = 2000L)
-    val kc = KVGraphMutations.edgeDeletions(one)
-    val after = ds.openDatabase("g").join(kc, Seq("k", "c"))
-      .select(graft.kv.KVStore.decLong(F.col("v"), 1)).collect()
-    assert(after.length == 1 && after(0).getLong(0) == 7L,
-      s"expected the re-added cell at w=7, got ${after.mkString(",")}")
+    withTempDir("graft_kvgmutspec2") { wh =>
+      val ds = new KVDeltaStore(spark, wh)
+      KVGraphMutations.mutateLog(ds, "g", baseV, baseE, e.limit(0), wts = 1000L)
+      // one in_region edge (present at every SF — sf0.001 has no peer
+      // edges), deleted AND re-added (new w) in the same batch
+      val one = e.filter(F.col("elabel") === "in_region")
+        .orderBy("src", "dst").limit(1)
+        .localCheckpoint(true)
+      KVGraphMutations.mutateLog(ds, "g", baseV.limit(0),
+        addE = one.withColumn("w", F.lit(7L)), dropE = one, wts = 2000L)
+      val kc = KVGraphMutations.edgeDeletions(one)
+      val after = ds.openDatabase("g").join(kc, Seq("k", "c"))
+        .select(graft.kv.KVStore.decLong(F.col("v"), 1)).collect()
+      assert(after.length == 1 && after(0).getLong(0) == 7L,
+        s"expected the re-added cell at w=7, got ${after.mkString(",")}")
+    }
   }
 
   test("vertex cells live in family 0 and stay out of adjacency label slices") {
@@ -97,19 +99,20 @@ class KVGraphMutateSpec extends SparkSpec {
       .hasLabel("customer").has("mktsegment", "BUILDING").as("c_vid")
       .out("in_nation").as("n_vid")
       .addE("in_nation", "c_vid", "n_vid", F.lit(9L))
-    val wh = java.nio.file.Files.createTempDirectory("graft_kvgmutspec3")
-    val ds = new KVDeltaStore(spark, wh.toString)
-    // empty base, then the traversal-produced edges as one mutation
-    KVGraphMutations.mutateLog(ds, "g", noV, e.limit(0), e.limit(0), wts = 1000L)
-    KVGraphMutations.mutateLog(ds, "g", noV, newEdges, e.limit(0), wts = 2000L)
-    val back = ds.openDatabase("g")
-      .select(graft.kv.KVStore.decLong(F.col("k"), 1).as("src"),
-        graft.kv.KVStore.decLong(F.col("c"), 9).as("dst"),
-        graft.kv.KVStore.decLong(F.col("v"), 1).as("w"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val expect = walked.collect().map(r => (r.getLong(0), r.getLong(1), 9L))
-      .distinct.sorted.toSeq // upsert collapses duplicate (k, c) cells
-    assert(back.nonEmpty && back == expect)
+    withTempDir("graft_kvgmutspec3") { wh =>
+      val ds = new KVDeltaStore(spark, wh)
+      // empty base, then the traversal-produced edges as one mutation
+      KVGraphMutations.mutateLog(ds, "g", noV, e.limit(0), e.limit(0), wts = 1000L)
+      KVGraphMutations.mutateLog(ds, "g", noV, newEdges, e.limit(0), wts = 2000L)
+      val back = ds.openDatabase("g")
+        .select(graft.kv.KVStore.decLong(F.col("k"), 1).as("src"),
+          graft.kv.KVStore.decLong(F.col("c"), 9).as("dst"),
+          graft.kv.KVStore.decLong(F.col("v"), 1).as("w"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+      val expect = walked.collect().map(r => (r.getLong(0), r.getLong(1), 9L))
+        .distinct.sorted.toSeq // upsert collapses duplicate (k, c) cells
+      assert(back.nonEmpty && back == expect)
+    }
   }
 
   test("an unregistered edge label fails loudly instead of corrupting family 0") {

@@ -27,7 +27,7 @@ class KVIndexSpec extends SparkSpec {
 
   /** One shared indexed store layout per suite run. */
   private lazy val indexed: (PropertyGraph.G, String) = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_idxspec").toString
+    val wh = suiteTempDir("graft_idxspec")
     val mgr = new graft.kv.KVStoreManager(spark, wh)
     val g0 = PropertyGraph(spark, SF)
     mgr.writeSegmentStore("edgestore",

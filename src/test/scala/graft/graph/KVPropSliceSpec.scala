@@ -18,7 +18,7 @@ class KVPropSliceSpec extends SparkSpec {
   /** One full store; `hooked` carries the VertexPropSource, `pivot`
     * the r14 shape (same store, no hook). */
   private lazy val (hooked, pivot) = {
-    val seg = java.nio.file.Files.createTempDirectory("graft_pslice").toString
+    val seg = suiteTempDir("graft_pslice")
     KVSegmentStore.write(KVGraphQueries.fullStoreCells(spark, SF), seg, 8)
     val h = KVGraphQueries.kvBackedGraphFull(spark, SF, seg)
     (h, h.copy(vertexProps = None))

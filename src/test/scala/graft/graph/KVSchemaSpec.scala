@@ -35,56 +35,58 @@ class KVSchemaSpec extends SparkSpec {
 
   test("a two-label corpus round-trips through the descriptor-driven codecs") {
     val v = corpus2
-    val seg = java.nio.file.Files.createTempDirectory("graft_schspec").toString
-    KVSegmentStore.write(
-      KVGraphMutations.vertexAdditions(v, schema2)
-        .unionByName(KVGraphMutations.vertexPropAdditions(v, schema2)),
-      seg, 8)
-    val decoded = KVGraphQueries.storeVertices(
-      spark.read.format("graft-kv").load(seg), schema2)
-    assert(decoded.columns.toSeq == Seq("vid", "vlabel", "title", "score", "lang"))
-    def canon(df: org.apache.spark.sql.DataFrame) = df.select(
-      F.col("vid"), F.col("vlabel"), F.col("title"),
-      graft.Tables.dec2(F.col("score")).cast("string").as("sc"), F.col("lang"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(canon(decoded) == canon(v) && decoded.count() == 50)
-    // the property slice works under the second descriptor too: lang
-    // cells exist only where set (sites wrote none)
-    val (lo, hi) = KVGraphMutations.vpropSlice("lang", schema2)
-    val langCells = spark.read.format("graft-kv").load(seg)
-      .filter(F.col("c") >= lo && F.col("c") < hi)
-    assert(langCells.count() == 40)
+    withTempDir("graft_schspec") { seg =>
+      KVSegmentStore.write(
+        KVGraphMutations.vertexAdditions(v, schema2)
+          .unionByName(KVGraphMutations.vertexPropAdditions(v, schema2)),
+        seg, 8)
+      val decoded = KVGraphQueries.storeVertices(
+        spark.read.format("graft-kv").load(seg), schema2)
+      assert(decoded.columns.toSeq == Seq("vid", "vlabel", "title", "score", "lang"))
+      def canon(df: org.apache.spark.sql.DataFrame) = df.select(
+        F.col("vid"), F.col("vlabel"), F.col("title"),
+        graft.Tables.dec2(F.col("score")).cast("string").as("sc"), F.col("lang"))
+        .collect().map(_.toString).sorted.toSeq
+      assert(canon(decoded) == canon(v) && decoded.count() == 50)
+      // the property slice works under the second descriptor too: lang
+      // cells exist only where set (sites wrote none)
+      val (lo, hi) = KVGraphMutations.vpropSlice("lang", schema2)
+      val langCells = spark.read.format("graft-kv").load(seg)
+        .filter(F.col("c") >= lo && F.col("c") < hi)
+      assert(langCells.count() == 40)
+    }
   }
 
   test("the graphindex routes a start set over the second corpus") {
     val v = corpus2
-    val wh = java.nio.file.Files.createTempDirectory("graft_schidx").toString
-    val mgr = new graft.kv.KVStoreManager(spark, wh)
-    mgr.writeSegmentStore("vertexprops",
-      KVGraphMutations.vertexAdditions(v, schema2)
-        .unionByName(KVGraphMutations.vertexPropAdditions(v, schema2)),
-      8, familyRanged = true)
-    mgr.writeSegmentStore(KVGraphQueries.indexStoreName("doc", "lang"),
-      KVGraphMutations.indexAdditions(
-        v.filter(F.col("vlabel") === "doc"), "lang", schema2), 4)
-    // an edge-free graph: the start set is the whole query here
-    val g = PropertyGraph.G(
-      vertices = KVGraphQueries.storeVertices(
-        mgr.openSegmentStore("vertexprops"), schema2),
-      edges = corpus2.limit(0).select(
-        F.col("vid").as("src"), F.col("vid").as("dst"),
-        F.lit("x").as("elabel"), F.lit(1L).as("w")),
-      vertexIndex = Some(KVGraphQueries.kvVertexIndex(spark, s"$wh/vertexprops",
-        Map(("doc", "lang") -> s"$wh/${KVGraphQueries.indexStoreName("doc", "lang")}"),
-        schema2)))
-    val rows = Traversal.V(g)
-      .hasLabel("doc").has("lang", "en")
-      .value("title", "t").as("d")
-      .select("d", "t").df.collect()
-    val expect = v.filter(F.col("vlabel") === "doc" && F.col("lang") === "en")
-    assert(rows.length == expect.count() && rows.nonEmpty)
-    val titles = expect.select("title").collect().map(_.getString(0)).toSet
-    assert(rows.map(_.getString(1)).toSet == titles)
+    withTempDir("graft_schidx") { wh =>
+      val mgr = new graft.kv.KVStoreManager(spark, wh)
+      mgr.writeSegmentStore("vertexprops",
+        KVGraphMutations.vertexAdditions(v, schema2)
+          .unionByName(KVGraphMutations.vertexPropAdditions(v, schema2)),
+        8, familyRanged = true)
+      mgr.writeSegmentStore(KVGraphQueries.indexStoreName("doc", "lang"),
+        KVGraphMutations.indexAdditions(
+          v.filter(F.col("vlabel") === "doc"), "lang", schema2), 4)
+      // an edge-free graph: the start set is the whole query here
+      val g = PropertyGraph.G(
+        vertices = KVGraphQueries.storeVertices(
+          mgr.openSegmentStore("vertexprops"), schema2),
+        edges = corpus2.limit(0).select(
+          F.col("vid").as("src"), F.col("vid").as("dst"),
+          F.lit("x").as("elabel"), F.lit(1L).as("w")),
+        vertexIndex = Some(KVGraphQueries.kvVertexIndex(spark, s"$wh/vertexprops",
+          Map(("doc", "lang") -> s"$wh/${KVGraphQueries.indexStoreName("doc", "lang")}"),
+          schema2)))
+      val rows = Traversal.V(g)
+        .hasLabel("doc").has("lang", "en")
+        .value("title", "t").as("d")
+        .select("d", "t").df.collect()
+      val expect = v.filter(F.col("vlabel") === "doc" && F.col("lang") === "en")
+      assert(rows.length == expect.count() && rows.nonEmpty)
+      val titles = expect.select("title").collect().map(_.getString(0)).toSet
+      assert(rows.map(_.getString(1)).toSet == titles)
+    }
   }
 
   test("a frame/descriptor type disagreement fails loudly") {

@@ -69,39 +69,40 @@ class KVSpjHopSpec extends SparkSpec {
       plain.collect().map(_.toString).sorted.toSeq)
     // plan property is asserted on a rebuilt (pre-checkpoint) plan: the
     // entry consumes its own plan via localCheckpoint, so rebuild here
-    val seg = java.nio.file.Files.createTempDirectory("graft_spjhopspec").toString
-    graft.sources.kvconnector.KVSegmentStore.write(
-      KVGraphQueries.adjacency(spark, SF), seg, 8, "bucket")
-    import org.apache.spark.sql.{functions => F}
-    import graft.kv.KVStore.{decLong, encLong}
-    val g = PropertyGraph(spark, SF)
-    val adj = spark.table(s"graftkv.`$seg`")
-    val start = g.vertices
-      .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
-      .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
-    val hop1 = adj.hint("merge").join(start, Seq("k"))
-      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
-    val hop2 = adj.hint("merge").join(
-        hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
-      .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
-    hop2.collect()
-    // both hops' adjacency scans present...
-    val scans = kvScansIn(hop2.queryExecution.executedPlan)
-    assert(scans.size == 2, s"expected 2 kv scans:\n${hop2.queryExecution.executedPlan}")
-    // ...and NO shuffle on the path from either kv scan UP TO ITS OWN
-    // JOIN — the store side reads in place. (hop1's scan legitimately
-    // sits inside hop2's FRONTIER shuffle subtree: its OUTPUT moves as
-    // the next frontier, the scan itself is never re-partitioned.)
-    val offending = scanJoinPaths(hop2)
-      .filter(_.exists(_.isInstanceOf[ShuffleExchangeLike]))
-    assert(offending.isEmpty,
-      s"shuffle between an adjacency scan and its join:\n${hop2.queryExecution.executedPlan}")
-    // the frontier DOES move, and by the store's own bucket function
-    // (the one-side-shuffle SPJ, not a broadcast trivially satisfying
-    // the store-side claim)
-    val shuffles = shuffleSubtrees(hop2)
-    assert(shuffles.size == 2 &&
-      shuffles.forall(_.toString.contains("keygroupedpartitioning")),
-      s"expected 2 frontier keygroupedpartitioning shuffles:\n${hop2.queryExecution.executedPlan}")
+    withTempDir("graft_spjhopspec") { seg =>
+      graft.sources.kvconnector.KVSegmentStore.write(
+        KVGraphQueries.adjacency(spark, SF), seg, 8, "bucket")
+      import org.apache.spark.sql.{functions => F}
+      import graft.kv.KVStore.{decLong, encLong}
+      val g = PropertyGraph(spark, SF)
+      val adj = spark.table(s"graftkv.`$seg`")
+      val start = g.vertices
+        .filter(F.col("vlabel") === "customer" && F.col("acctbal") > 1000.0)
+        .select(encLong(F.col("vid")).as("k"), F.col("vid").as("src_vid"))
+      val hop1 = adj.hint("merge").join(start, Seq("k"))
+        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("mid"))
+      val hop2 = adj.hint("merge").join(
+          hop1.select(encLong(F.col("mid")).as("k"), F.col("src_vid")), Seq("k"))
+        .select(F.col("src_vid"), decLong(F.col("c"), 9).as("dst_vid"))
+      hop2.collect()
+      // both hops' adjacency scans present...
+      val scans = kvScansIn(hop2.queryExecution.executedPlan)
+      assert(scans.size == 2, s"expected 2 kv scans:\n${hop2.queryExecution.executedPlan}")
+      // ...and NO shuffle on the path from either kv scan UP TO ITS OWN
+      // JOIN — the store side reads in place. (hop1's scan legitimately
+      // sits inside hop2's FRONTIER shuffle subtree: its OUTPUT moves as
+      // the next frontier, the scan itself is never re-partitioned.)
+      val offending = scanJoinPaths(hop2)
+        .filter(_.exists(_.isInstanceOf[ShuffleExchangeLike]))
+      assert(offending.isEmpty,
+        s"shuffle between an adjacency scan and its join:\n${hop2.queryExecution.executedPlan}")
+      // the frontier DOES move, and by the store's own bucket function
+      // (the one-side-shuffle SPJ, not a broadcast trivially satisfying
+      // the store-side claim)
+      val shuffles = shuffleSubtrees(hop2)
+      assert(shuffles.size == 2 &&
+        shuffles.forall(_.toString.contains("keygroupedpartitioning")),
+        s"expected 2 frontier keygroupedpartitioning shuffles:\n${hop2.queryExecution.executedPlan}")
+    }
   }
 }

@@ -30,7 +30,7 @@ class KVSupernodeSpec extends SparkSpec {
         encLong(F.col("id")).as("k"),
         F.concat(encLong(F.lit(1L)), encLong(F.col("id") * 7 + F.col("j"))).as("c"),
         encLong(F.lit(1L)).as("v"))
-    val seg = java.nio.file.Files.createTempDirectory("graft_hubspec").toString
+    val seg = suiteTempDir("graft_hubspec")
     KVSegmentStore.write(hub.unionByName(bg), seg, 16)
     seg
   }
@@ -106,20 +106,21 @@ class KVSupernodeSpec extends SparkSpec {
     // same traversal, salt on vs off, row-identical
     import graft.kv.KVStore.encLong
     val e = PropertyGraph(spark, SF).edges
-    val seg = java.nio.file.Files.createTempDirectory("graft_saltdsl").toString
-    KVSegmentStore.write(
-      KVGraphMutations.edgeAdditions(e)
-        .unionByName(KVGraphMutations.edgeRevAdditions(e)),
-      seg, 8)
-    val g = KVGraphQueries.kvBackedGraphBoth(spark, SF, seg)
-    def run(g: PropertyGraph.G): Seq[String] = Traversal.V(g)
-      .hasLabel("nation").value("name", "n_name").as("n_vid")
-      .in("in_nation").hasLabel("supplier").as("s_vid")
-      .select("n_vid", "n_name", "s_vid")
-      .df.collect().map(_.toString).sorted.toSeq
-    val plain = run(g)
-    val salted = run(g.copy(saltBuckets = 4))
-    assert(plain.nonEmpty && salted == plain)
+    withTempDir("graft_saltdsl") { seg =>
+      KVSegmentStore.write(
+        KVGraphMutations.edgeAdditions(e)
+          .unionByName(KVGraphMutations.edgeRevAdditions(e)),
+        seg, 8)
+      val g = KVGraphQueries.kvBackedGraphBoth(spark, SF, seg)
+      def run(g: PropertyGraph.G): Seq[String] = Traversal.V(g)
+        .hasLabel("nation").value("name", "n_name").as("n_vid")
+        .in("in_nation").hasLabel("supplier").as("s_vid")
+        .select("n_vid", "n_name", "s_vid")
+        .df.collect().map(_.toString).sorted.toSeq
+      val plain = run(g)
+      val salted = run(g.copy(saltBuckets = 4))
+      assert(plain.nonEmpty && salted == plain)
+    }
   }
 
   test("the broadcast frontier hop has no reducer skew to salt away") {

@@ -19,7 +19,7 @@ class KVVciSelectSpec extends SparkSpec {
   private val sf01 = "/root/testdata/sf0.01"
 
   private lazy val seg = {
-    val d = java.nio.file.Files.createTempDirectory("graft_vcisel").toString
+    val d = suiteTempDir("graft_vcisel")
     KVSegmentStore.write(KVGraphQueries.dualAdjacency(spark, sf01), d, 16)
     d
   }
